@@ -4,10 +4,11 @@ Everything driver-certified runs at the test tables' dim=64; the reference
 encodes at 768 (``/root/reference/src/backend/database/qdrant.py:74``,
 ``all-mpnet-base-v2`` in ``app.py:17``). These builders widen the 64-dim
 corpus to 768 deterministically and re-run the flagship vector operators
-at full width, proving the wide-avg aggregate, the cosine expression, and
-the centroid-literal codegen hold at 12× the certified dimensionality
-(with the broadcast-join assignment fallback for k × dim beyond codegen
-comfort — ``operators/clustering.py`` ``nearest_centroid_join``).
+at full width, proving the (group, pos) mean-pool aggregate, the cosine
+expression, and the centroid-literal codegen hold at 12× the certified
+dimensionality (with the broadcast-join assignment fallback for k × dim
+beyond codegen comfort — ``operators/clustering.py``
+``nearest_centroid_join``).
 
 The widening is a TILING with per-tile scales:
 ``v768[t*64 + i] = v64[i] * s_t`` (s_t a fixed nonzero constant). Dot
@@ -75,7 +76,7 @@ def x768_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def x768_mean_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E3/A1 at dim=768: the wide grouped vector mean (768 avg aggregates)."""
+    """E3/A1 at dim=768: the grouped vector mean, one row per (label, pos)."""
     from ..operators.pooling import mean_pool_flat
 
     emb = corpus_768(spark, sf_dir)

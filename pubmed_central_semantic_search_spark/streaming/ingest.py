@@ -86,14 +86,16 @@ def start_ingest(
     ``article_id`` (the group key — chunk_id is derived from it, so the
     per-key-stable-bucket invariant holds), doc vectors on their
     ``article_id`` key."""
+    from ..encoder import DEFAULT_DIM
     from ..sources.catalog import upsert_parquet
 
     stream = read_article_stream(spark, source_path)
+    width = dim or DEFAULT_DIM
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         # same transform as the streaming-side article_stream_to_chunks —
         # call it so the two paths cannot drift
-        chunks = article_stream_to_chunks(batch_df, encoder=encoder, dim=dim)
+        chunks = article_stream_to_chunks(batch_df, encoder=encoder, dim=width)
         chunks.persist()
         try:
             # group-replacing, like the batch twin (api.upload_articles):
@@ -109,7 +111,10 @@ def start_ingest(
                 replace_group_col="article_id",
                 n_buckets=partition_buckets,
             )
-            vecs = mean_pool(chunks, group=["article_id"], vec_col="embedding")
+            # the batch twin's length guard, at the width encoded above
+            vecs = mean_pool(
+                chunks, group=["article_id"], vec_col="embedding", dim=width
+            )
             # keyed on article_id (the batch twin's key): keying on the
             # xxhash64 doc_pk made a 64-bit collision silently replace
             # another article's vector; doc_pk still rides along as payload

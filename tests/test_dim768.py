@@ -5,6 +5,7 @@ real arithmetic — every 768 result has a certified-at-64 twin to check
 against, and float noise is the only tolerated delta.
 """
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,8 +31,8 @@ def test_widen_preserves_cosine_topk(spark, sf_dir):
 
 def test_wide_mean_pool_is_tiled_64_mean(spark, sf_dir):
     """The 768-wide grouped mean must equal the 64-dim grouped mean scaled
-    per tile: mean768[t*64+i] = s_t * mean64[i]. Proves the 768-aggregate
-    wide hash-agg computes every component correctly."""
+    per tile: mean768[t*64+i] = s_t * mean64[i]. Proves the (label, pos)
+    hash aggregate computes every component correctly at full width."""
     from pubmed_central_semantic_search_spark.operators.pooling import mean_pool_flat
     from pubmed_central_semantic_search_spark.registry import load
 
@@ -147,3 +148,39 @@ def test_multiq_twins_agree(spark, sf_dir):
         map(tuple, x768_multiq_np(spark, sf_dir).select("query_id", "vec_id").collect())
     )
     assert hof == blas
+
+
+def test_mean_pool_768_matches_numpy_float64_mean(spark):
+    """mean_pool at the reference's width, with its dim=768 length guard:
+    float32 vectors pool to their float64 numpy mean (a NULL element is
+    skipped, a component NULL in every vector of a group stays NULL in
+    place), an all-NULL group pools to NULL, and a 767-long vector raises
+    by name."""
+    from pubmed_central_semantic_search_spark.operators.pooling import mean_pool
+
+    vecs = np.random.default_rng(7).standard_normal((12, DIM)).astype(np.float32)
+    mat = vecs.astype(np.float64)
+    mat[0, 5] = np.nan  # one NULL element in group g0
+    mat[9:, 0] = np.nan  # component 0 NULL in every vector of group n
+    groups = ["g0", "g1", "g2"] * 3 + ["n"] * 3
+    rows = [
+        (g, [None if np.isnan(x) else float(x) for x in v])
+        for g, v in zip(groups, mat)
+    ] + [("z", None), ("z", None)]
+    df = spark.createDataFrame(rows, "g string, embedding array<float>")
+    got = {r["g"]: r["embedding"] for r in mean_pool(df, ["g"], dim=DIM).collect()}
+
+    assert got.keys() == {"g0", "g1", "g2", "n", "z"}
+    for i, g in enumerate(["g0", "g1", "g2"]):
+        want = np.nanmean(mat[i:9:3], axis=0)
+        assert np.max(np.abs(np.array(got[g]) - want)) <= 1e-12, g
+    assert got["n"][0] is None
+    want = mat[9:, 1:].mean(axis=0)
+    assert np.max(np.abs(np.array(got["n"][1:]) - want)) <= 1e-12
+    assert got["z"] is None
+
+    short = spark.createDataFrame(
+        [("s", vecs[0, :767].tolist())], "g string, embedding array<float>"
+    )
+    with pytest.raises(Exception, match="mean_pool: vector length 767 != dim = 768"):
+        mean_pool(short, ["g"], dim=DIM).collect()

@@ -644,3 +644,22 @@ def test_bloom_anti_join_table_drops_broadcast_beyond_ceiling(spark, sf_dir):
     assert "ResolvedHint" not in big_logical
     assert "LeftAnti" in plan, plan
     assert "Cartesian" not in plan, plan
+
+
+def test_mean_pool_plan_does_not_grow_with_dim(spark):
+    """mean_pool averages once per (group, pos) at every width: the
+    analyzed plan at dim 768 holds ONE avg aggregate and is about as long
+    as the dim 8 plan. One avg column per component made the plan grow
+    with the width and cost seconds to build at dim 768."""
+    import re
+
+    from pubmed_central_semantic_search_spark.operators.pooling import mean_pool
+
+    df = spark.createDataFrame([("a", [1.0])], "g string, embedding array<double>")
+
+    def analyzed(dim):
+        return mean_pool(df, ["g"], dim=dim)._jdf.queryExecution().analyzed().toString()
+
+    wide, narrow = analyzed(768), analyzed(8)
+    assert len(re.findall(r"\bavg\(", wide)) == 1, wide
+    assert len(wide) < 2 * len(narrow), (len(wide), len(narrow))

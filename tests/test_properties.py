@@ -43,7 +43,7 @@ def test_mean_pool_matches_python_mean(spark, vs):
     [row] = mean_pool(df, ["g"], dim=4).collect()
     expected = [sum(col) / len(vs) for col in zip(*vs)]
     assert row["embedding"] == pytest.approx(expected, rel=1e-9, abs=1e-9)
-    # flat (dim-agnostic) shape agrees with the wide-avg fast path
+    # dim only adds the length guard: without it the mean is the same
     [flat] = mean_pool(df, ["g"], dim=None).collect()
     assert flat["embedding"] == pytest.approx(row["embedding"], rel=1e-12)
 
