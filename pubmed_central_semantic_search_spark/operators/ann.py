@@ -97,15 +97,124 @@ def brute_force_topk(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    kernel: str = "hof",
 ) -> DataFrame:
-    """Exact ANN baseline: per-query top-k cosine. ``queries``:
-    (query_id, qvec) — broadcast."""
-    scored = vectors.crossJoin(F.broadcast(queries)).select(
+    """THE exact per-query top-k cosine — ``score_documents``,
+    ``plan_topk_search``'s exact tier and the x768 bench pack all route
+    here. ``queries``: (query_id, qvec), the tiny side. Returns
+    (query_id, id_col, score).
+
+    ``kernel`` picks the scoring engine: ``hof`` (default) is the
+    bit-exact Catalyst sequential fold over a broadcast crossJoin — every
+    oracle row stays here; ``blas`` scores all queries in ONE
+    Arrow-batched matmul pass (``vectorized.multi_query_scores_udf`` — at
+    dim ≳ 256 the interpreted fold loses by ~an order of magnitude);
+    ``auto`` resolves by query dimensionality at the planner's measured
+    crossover (``plans.planner.resolve_kernel``). Kernels agree on ROW
+    SETS — NULL/NaN/zero vectors and NULL query vectors follow the fold's
+    rules — and on rounded scores; raw scores differ in last-ulp
+    accumulation noise, so callers that hash exact floats must not opt
+    in."""
+    return _exact_topk(vectors, queries, k, id_col, vec_col, kernel).drop("qvec")
+
+
+def _exact_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    kernel: str,
+) -> DataFrame:
+    """``brute_force_topk`` that keeps each query's ``qvec``:
+    (query_id, qvec, id_col, score). ``score_documents`` needs the vector
+    downstream; re-joining the caller's frame would evaluate its
+    (possibly encoder-bearing) plan a second time."""
+    if kernel not in ("hof", "blas", "auto"):
+        raise ValueError(f"unknown kernel: {kernel}")
+    if kernel == "auto":
+        from ..plans.planner import resolve_kernel
+
+        # dim from ONE non-null query row: a NULL qvec has no length
+        first = queries.select("qvec").where(F.col("qvec").isNotNull()).first()
+        kernel = resolve_kernel(len(first["qvec"]) if first is not None else 0)
+    if kernel == "hof":
+        scored = _fold_scores(vectors, queries, id_col, vec_col)
+    else:
+        scored = _blas_scores(vectors, queries, id_col, vec_col)
+    return grouped_top_k(scored, ["query_id"], "score", k, tiebreak=[id_col])
+
+
+def _fold_scores(
+    vectors: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """The HOF arm: every (vector, query) pair scored by the Catalyst
+    fold. A NULL vector or NULL query scores NULL, a NaN/zero one 0.0."""
+    return vectors.crossJoin(F.broadcast(queries)).select(
         "query_id",
+        "qvec",
         F.col(id_col),
         cosine_similarity(vec_col, F.col("qvec")).alias("score"),
     )
-    return grouped_top_k(scored, ["query_id"], "score", k, tiebreak=[id_col])
+
+
+def _blas_scores(
+    vectors: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """The BLAS arm, with the fold's row set: one matmul pass scores the
+    live queries; NULL-qvec queries (which cannot enter the matrix) take
+    the fold arm."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from ..session import collect_bounded, local_df
+
+    # looked up at call time, so a wrapper installed on the module is seen
+    from .vectorized import multi_query_scores_udf
+
+    # ONE evaluation of the (possibly encoder-bearing) query plan: the
+    # collected rows are both the kernel's matrix and, as local frames,
+    # the query side downstream. k-row side by contract — fenced.
+    qrows = collect_bounded(
+        queries.select("query_id", "qvec"), 65_536, "blas query side"
+    )
+    spark = vectors.sparkSession
+    # local frames keep the CALLER's query_id type under every kernel
+    q_fields = [queries.schema["query_id"], queries.schema["qvec"]]
+    live = [r for r in qrows if r["qvec"] is not None]
+    null_q = [r for r in qrows if r["qvec"] is None]
+    if not live:
+        # the matmul needs a (nq, dim) matrix; zero live queries
+        # (including an empty query side) is the fold arm's case alone
+        return _fold_scores(
+            vectors, local_df(spark, qrows, StructType(q_fields)), id_col, vec_col
+        )
+    qframe = local_df(
+        spark,
+        [(i, r["query_id"], r["qvec"]) for i, r in enumerate(live)],
+        StructType([StructField("_qi", IntegerType()), *q_fields]),
+    )
+    # a NULL embedding's kernel result is a null array; coalescing it to
+    # nulls keeps the row (posexplode of a null array yields none, while
+    # the fold keeps the vector as a null-score row). posexplode takes the
+    # kernel expression itself: exploding a projected kernel column let
+    # Catalyst infer a size(...) > 0 filter below it that ran the kernel
+    # a second time.
+    scores = F.coalesce(
+        multi_query_scores_udf([r["qvec"] for r in live])(F.col(vec_col)),
+        F.array_repeat(F.lit(None).cast("double"), len(live)),
+    )
+    scored = (
+        vectors.select(F.col(id_col), F.posexplode(scores).alias("_qi", "score"))
+        .join(F.broadcast(qframe), "_qi")
+        .select("query_id", "qvec", id_col, "score")
+    )
+    if null_q:
+        scored = scored.unionByName(
+            _fold_scores(
+                vectors, local_df(spark, null_q, StructType(q_fields)), id_col, vec_col
+            )
+        )
+    return scored
 
 
 def probe_buckets(bucket: Column, n_planes: int, multi_probe: int = 0) -> Column:

@@ -28,10 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..functions.vector import cosine_similarity
 from ..schemas import ARTICLE_ID
+from .ann import _exact_topk
 from .topk import grouped_top_k
 
 
@@ -41,113 +41,20 @@ def score_documents(
     k_docs: int = 5,
     kernel: str = "hof",
 ) -> DataFrame:
-    """Q1/Q3 — per-query top-k documents by cosine.
+    """Q1/Q3 — per-query top-k documents by cosine: the exact top-k of
+    ``ann.brute_force_topk`` keyed on article_id, keeping each query's
+    ``qvec`` for the chunk stage.
 
-    ``queries``: (query_id, qvec) — the tiny side, broadcast.
+    ``queries``: (query_id, qvec) — the tiny side.
     ``doc_vectors``: (article_id, embedding, ...).
     Returns (query_id, qvec, article_id, doc_score).
 
-    ``kernel`` picks the scoring engine (the plan_topk_search contract):
-    ``hof`` (default) is the bit-exact Catalyst fold — every oracle row
-    stays here; ``blas`` scores all queries in ONE Arrow-batched matmul
-    pass (operators/vectorized.multi_query_scores_udf — at dim ≳ 256 the
-    interpreted HOF fold loses by ~an order of magnitude); ``auto``
-    resolves by query dimensionality at the measured crossover. Kernels
-    agree on rows at rounded scores (twin-pinned); raw doc_score differs
-    in last-ulp accumulation noise, so callers that hash exact floats
-    must not opt in."""
-    if kernel not in ("hof", "blas", "auto"):
-        raise ValueError(f"unknown kernel: {kernel}")
-    if kernel == "auto":
-        from ..plans.planner import resolve_kernel
-
-        # dim from the first NON-NULL query vector (len(None) crashed)
-        first = queries.select("qvec").where(F.col("qvec").isNotNull()).first()
-        kernel = resolve_kernel(len(first["qvec"]) if first is not None else 0)
-    if kernel == "blas":
-        from ..operators.vectorized import multi_query_scores_udf
-        from ..session import local_df
-
-        # ONE evaluation of the (possibly encoder-bearing) query plan:
-        # the collected rows are both the kernel's matrix AND — via a
-        # local frame — the qvec column re-attached downstream (the old
-        # broadcast join against the original frame re-ran the query
-        # plan a second time per search; review find)
-        from ..session import collect_bounded
-
-        # k-row side by contract — fenced (the k-sized-collect rule)
-        qrows = collect_bounded(
-            queries.select("query_id", "qvec"), 65_536, "blas query side"
-        )
-        spark = doc_vectors.sparkSession
-        # the local frame keeps the CALLER's query_id type (string/64-bit
-        # ids work under every kernel — a hardcoded `query_id int` made
-        # kernel choice silently change the accepted input domain)
-        q_schema = StructType(
-            [queries.schema["query_id"], queries.schema["qvec"]]
-        )
-        qframe = F.broadcast(local_df(spark, qrows, q_schema))
-        live = [r for r in qrows if r["qvec"] is not None]
-        if not live:
-            # the matmul kernel needs a (nq, dim) matrix — zero live
-            # queries crash numpy's axis-1 norm. NULL-qvec queries score
-            # NULL against every document (the HOF twin's semantics).
-            base = doc_vectors.select(ARTICLE_ID).crossJoin(qframe)
-            scored = base.select(
-                "query_id", "qvec", ARTICLE_ID,
-                F.lit(None).cast("double").alias("doc_score"),
-            )
-            if not qrows:
-                scored = scored.limit(0)
-            return grouped_top_k(
-                scored, ["query_id"], "doc_score", k_docs, tiebreak=[ARTICLE_ID]
-            )
-        qid_arr = F.array(*[F.lit(r["query_id"]) for r in live])
-        # a NULL embedding scores NULL against every query (the kernel
-        # returns a null array; coalescing to k nulls keeps the row) —
-        # posexplode of the bare null array would DROP the document while
-        # the HOF twin keeps it as a null-score row, and the kernels must
-        # agree on row sets, not just rounded scores (review find)
-        null_scores = F.array_repeat(F.lit(None).cast("double"), len(live))
-        scored = (
-            doc_vectors.withColumn(
-                "_s",
-                F.coalesce(
-                    multi_query_scores_udf([list(r["qvec"]) for r in live])(
-                        F.col("embedding")
-                    ),
-                    null_scores,
-                ),
-            )
-            .select(ARTICLE_ID, F.posexplode("_s").alias("_qi", "doc_score"))
-            .withColumn("query_id", F.element_at(qid_arr, F.col("_qi") + 1))
-            .join(qframe, "query_id")
-            .select("query_id", "qvec", ARTICLE_ID, "doc_score")
-        )
-        if len(live) < len(qrows):
-            # NULL-qvec queries still return rows — null scores, exactly
-            # like the HOF crossJoin (another kernel row-set parity rule)
-            null_q = local_df(
-                spark, [r for r in qrows if r["qvec"] is None], q_schema
-            )
-            scored = scored.unionByName(
-                doc_vectors.select(ARTICLE_ID)
-                .crossJoin(F.broadcast(null_q))
-                .select(
-                    "query_id", "qvec", ARTICLE_ID,
-                    F.lit(None).cast("double").alias("doc_score"),
-                )
-            )
-    else:
-        scored = doc_vectors.crossJoin(F.broadcast(queries)).select(
-            "query_id",
-            "qvec",
-            ARTICLE_ID,
-            cosine_similarity("embedding", F.col("qvec")).alias("doc_score"),
-        )
-    return grouped_top_k(
-        scored, ["query_id"], "doc_score", k_docs, tiebreak=[ARTICLE_ID]
-    )
+    ``kernel`` (``hof``/``blas``/``auto``) picks the scoring engine as in
+    ``brute_force_topk``; the default bit-exact fold is where every
+    oracle row stays."""
+    return _exact_topk(
+        doc_vectors, queries, k_docs, ARTICLE_ID, "embedding", kernel
+    ).withColumnRenamed("score", "doc_score")
 
 
 def highlight_chunks(

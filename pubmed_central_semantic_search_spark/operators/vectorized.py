@@ -20,6 +20,13 @@ contract — BLAS accumulates blockwise, agreeing to ~1e-12 relative), and
 stay on the HOF path; these kernels serve bench/scale workloads and ANN
 interiors where scores are rounded anyway.
 
+Two kernels live here, and no top-k operator: ``multi_query_scores_udf``
+scores every row against a fixed query set and is the scoring arm of
+``ann.brute_force_topk(kernel="blas")``, which owns the kernel choice,
+the query-side collect, null handling and the per-query cut;
+``nearest_centroid_udf`` (with ``assign_clusters_np``) is the k-means
+assignment kernel.
+
 Determinism: numpy with fixed inputs is deterministic; argmax ties break
 to the lowest index, and centroids are passed sorted by cluster id, so
 tie-break order matches the HOF path's (score, lowest-id) struct sort
@@ -29,65 +36,12 @@ sequential-fold arithmetic may differ — measure-zero for real data).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .topk import top_k
-
 Centroids = list[tuple[int, list[float]]]
-
-
-def cosine_scores_udf(query: list[float]):
-    """Arrow-batched cosine against a fixed query: array<num> → double.
-
-    SELF-CONTAINED closure (the package-wide UDF rule, see encoder.py):
-    the body references only stdlib/numpy/pandas and plain captured data,
-    so cloudpickle ships it by value and executors never need this
-    package importable — verified by ``test_np_kernels_are_self_contained``
-    running the kernel from a foreign working directory."""
-    q_list = [float(x) for x in query]
-
-    @pandas_udf("double")
-    def _score(vecs: pd.Series) -> pd.Series:
-        import numpy as _np
-        import pandas as _pd
-
-        q = _np.asarray(q_list, dtype=_np.float64)
-        # zero-norm rule = cosine_similarity's: zero query OR zero corpus
-        # row scores 0.0, never NaN (NaN sorts ABOVE every double
-        # descending and would hijack top-k) and never DIVIDE_BY_ZERO.
-        # Null rows score null (the HOF twin's semantics) instead of
-        # crashing np.array on an inhomogeneous list.
-        qn = float(_np.linalg.norm(q)) or 1.0
-        # fast path: no nulls (the overwhelmingly common batch) keeps the
-        # single bulk tolist() conversion; the masked path only runs when
-        # a null row is actually present
-        mask = vecs.notna().to_numpy()
-        if mask.all():
-            m = _np.array(vecs.tolist(), dtype=_np.float64)
-            norms = _np.linalg.norm(m, axis=1)
-            norms[norms == 0] = _np.inf  # 0-row → score 0.0
-            s = (m @ q) / (norms * qn)
-            # degenerate (NaN/Inf) inputs score 0.0 — the HOF twin's
-            # convention; without this a NaN row scored NULL here vs 0.0
-            # there and the kernels returned different top-k ROW SETS
-            s[~_np.isfinite(s)] = 0.0
-            return _pd.Series(s)
-        out = _np.full(len(vecs), _np.nan)
-        if mask.any():
-            m = _np.array(vecs[mask].tolist(), dtype=_np.float64)
-            norms = _np.linalg.norm(m, axis=1)
-            norms[norms == 0] = _np.inf
-            s = (m @ q) / (norms * qn)
-            s[~_np.isfinite(s)] = 0.0
-            out[mask] = s
-        res = _pd.Series(out)
-        return res.where(mask, None)
-
-    return _score
 
 
 def nearest_centroid_udf(centroids: Centroids):
@@ -97,7 +51,7 @@ def nearest_centroid_udf(centroids: Centroids):
     cluster id): centroid norms fold into the matrix once, argmax returns
     the first (lowest-index) maximum, and rows are sorted by id.
     Self-contained closure — plain-list captures only (see
-    ``cosine_scores_udf``)."""
+    ``multi_query_scores_udf``)."""
     cents = sorted((int(cid), [float(x) for x in vec]) for cid, vec in centroids)
     id_list = [cid for cid, _ in cents]
     c_list = [vec for _, vec in cents]
@@ -136,30 +90,17 @@ def nearest_centroid_udf(centroids: Centroids):
     return _assign
 
 
-def brute_force_topk_np(
-    vectors: DataFrame,
-    query: list[float],
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine with the BLAS kernel: Arrow-batched scoring →
-    TakeOrderedAndProject. Identical result set to the HOF brute force
-    (scores rounded to 6 decimals absorb the accumulation-order noise)."""
-    scored = vectors.select(
-        F.col(id_col), cosine_scores_udf(query)(F.col(vec_col)).alias("score")
-    )
-    return top_k(scored, "score", k, tiebreak=[id_col]).withColumn(
-        "score", F.round("score", 6)
-    )
-
-
 def multi_query_scores_udf(query_vecs: list[list[float]]):
     """Arrow-batched cosine against a FIXED SET of queries in one pass:
     array<num> → array<double> (one score per query, query order
     preserved). One (batch × dim) @ (dim × n_queries) matmul per Arrow
-    batch — the multi-query analog of ``cosine_scores_udf``; n separate
-    scans become one. Self-contained closure (plain-list captures)."""
+    batch — the scoring kernel of ``ann.brute_force_topk(kernel="blas")``.
+
+    SELF-CONTAINED closure (the package-wide UDF rule, see encoder.py):
+    the body references only stdlib/numpy/pandas and plain captured data,
+    so cloudpickle ships it by value and executors never need this
+    package importable — verified by ``test_np_kernels_are_self_contained``
+    running the kernel from a foreign working directory."""
     q_lists = [[float(x) for x in q] for q in query_vecs]
 
     @pandas_udf("array<double>")
@@ -170,66 +111,25 @@ def multi_query_scores_udf(query_vecs: list[list[float]]):
         q = _np.asarray(q_lists, dtype=_np.float64)  # (nq, dim)
         qn = _np.linalg.norm(q, axis=1)
         qn[qn == 0] = 1.0
-        # zero-norm rows score 0.0 (cosine_similarity's rule — NaN would
-        # hijack every query's top-k); null rows yield null arrays;
-        # no-null batches keep the bulk tolist() fast path
+        # null rows yield null arrays (the fold's null-in → null-out)
+        # instead of crashing np.array on an inhomogeneous list
         mask = vecs.notna().to_numpy()
-        if mask.all():
-            m = _np.array(vecs.tolist(), dtype=_np.float64)
-            norms = _np.linalg.norm(m, axis=1)
-            norms[norms == 0] = _np.inf
-            s = (m @ q.T) / _np.outer(norms, qn)
-            s[~_np.isfinite(s)] = 0.0  # HOF convention: degenerate → 0.0
-            return _pd.Series(list(s))
-        out = _np.full(len(vecs), None, dtype=object)
-        if mask.any():
-            m = _np.array(vecs[mask].tolist(), dtype=_np.float64)
-            norms = _np.linalg.norm(m, axis=1)
-            norms[norms == 0] = _np.inf
-            s = (m @ q.T) / _np.outer(norms, qn)
-            s[~_np.isfinite(s)] = 0.0
-            for idx, row in zip(_np.nonzero(mask)[0], s):
-                out[idx] = row
-        return _pd.Series(out)
+        if not mask.any():
+            return _pd.Series([None] * len(vecs), dtype=object)
+        m = _np.array(vecs[mask].tolist(), dtype=_np.float64)
+        norms = _np.linalg.norm(m, axis=1)
+        # zero-norm rule = cosine_similarity's: a zero row or query
+        # scores 0.0, never NaN (NaN sorts ABOVE every double descending
+        # and would hijack top-k) and never DIVIDE_BY_ZERO
+        norms[norms == 0] = _np.inf
+        s = (m @ q.T) / _np.outer(norms, qn)
+        # degenerate (NaN/Inf) inputs score 0.0 — the fold's convention;
+        # without it the kernels returned different top-k ROW SETS
+        s[~_np.isfinite(s)] = 0.0
+        rows = iter(s)
+        return _pd.Series([next(rows) if ok else None for ok in mask])
 
     return _scores
-
-
-def multi_query_topk_np(
-    vectors: DataFrame,
-    queries: list[tuple[int, list[float]]],
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact multi-query top-k with the BLAS kernel (Q3 at scale): ONE
-    corpus scan scores every query (matrix-matrix, amortizing the Arrow
-    transfer across queries — the broadcast-crossJoin HOF shape re-reads
-    or re-scores the corpus per query), then posexplode + per-query
-    top-k window. Returns (query_id, id, score) like
-    ``ann.brute_force_topk``."""
-    from .topk import grouped_top_k
-
-    # keep query ids AS GIVEN (int or str both make a valid array
-    # literal) — int() coercion broke the hof-parity contract for
-    # non-integer ids; mixed types can't form one array, so reject loudly
-    qids = [qid for qid, _ in queries]
-    if len({type(q) for q in qids}) > 1:
-        raise ValueError(
-            "multi_query_topk_np: query ids must share one type "
-            f"(got {sorted({type(q).__name__ for q in qids})})"
-        )
-    scored = vectors.select(
-        F.col(id_col),
-        F.posexplode(
-            multi_query_scores_udf([v for _, v in queries])(F.col(vec_col))
-        ).alias("_qpos", "score"),
-    ).select(
-        F.element_at(F.lit(qids), F.col("_qpos") + 1).alias("query_id"),
-        F.col(id_col),
-        "score",
-    )
-    return grouped_top_k(scored, ["query_id"], "score", k, tiebreak=[id_col])
 
 
 def assign_clusters_np(

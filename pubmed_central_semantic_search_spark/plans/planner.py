@@ -20,14 +20,15 @@ library-level rewrite is idiomatic and debuggable):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.ann import brute_force_topk, lsh_topk
 
 # kernel='auto' crossover: the measured dim where the Arrow-batched BLAS
-# matmul overtakes the interpreted Catalyst HOF fold (documented with the
-# measurements in operators/projection.py:169 and operators/vectorized.py;
-# the retained x768_multiq/x768_multiq_np bench pair keeps it honest).
+# matmul overtakes the interpreted Catalyst HOF fold (measurements in
+# operators/projection.py and operators/vectorized.py). The exact top-k
+# (operators/ann.brute_force_topk) is its one caller with a peek; the
+# x768_multiq/x768_multiq_np bench pair runs that top-k under each kernel
+# at dim 768 and keeps the crossover honest.
 _KERNEL_CROSSOVER_DIM = 256
 
 
@@ -59,22 +60,12 @@ def plan_topk_search(
     ``ivf`` requires prebuilt coarse ``centroids`` (operators/clustering)
     — with cluster-partitioned storage the probe is partition pruning.
 
-    ``kernel`` picks the exact tier's scoring engine: ``hof`` (default)
-    is the bit-exact Catalyst sequential fold — the DuckDB-oracle
-    contract; ``blas`` is the Arrow-batched numpy matmul
-    (operators/vectorized.py — same rows at rounded scores, ~an order of
-    magnitude less CPU at dim ≳ 256); ``kernel='auto'`` picks BETWEEN
-    them by query dimensionality at the measured crossover
-    (``_KERNEL_CROSSOVER_DIM`` — Catalyst HOF folds run interpreted and
-    fall behind the matmul as dim grows; below it the fold wins because
-    it never pays the Arrow transfer). The DEFAULT stays ``hof``:
+    ``kernel`` picks the exact tier's scoring engine (``hof``/``blas``/
+    ``auto``) — the tier is one ``ann.brute_force_topk`` call, which owns
+    the kernel contract and its routing. The DEFAULT stays ``hof``:
     kernels differ in last-ulp float noise, so the bit-exact engine must
-    never change underneath a caller who didn't ask — ``auto`` is the
-    explicit opt-in for callers that accept either (rows agree at
-    rounded scores; twin equivalence is test-pinned in
-    test_vectorized.py)."""
-    if kernel not in ("hof", "blas", "auto"):
-        raise ValueError(f"unknown kernel: {kernel}")
+    never change underneath a caller who didn't ask. The approximate
+    tiers have no kernel choice."""
     if kernel != "hof" and mode != "exact":
         # validated up front so approx/ivf can't silently ignore an
         # explicitly requested scoring engine
@@ -82,59 +73,7 @@ def plan_topk_search(
             f"kernel={kernel!r} requires mode='exact', got mode={mode!r}"
         )
     if mode == "exact":
-        if kernel == "auto":
-            # peek ONE NON-NULL query row for the dim — collecting the
-            # whole frame here would pay a job whose result is discarded
-            # when auto routes to hof, and len(None) crashed (the same
-            # null-peek fix score_documents carries)
-            first = (
-                queries.select("qvec")
-                .where(F.col("qvec").isNotNull())
-                .first()
-            )
-            kernel = resolve_kernel(
-                len(first["qvec"]) if first is not None else 0
-            )
-        if kernel == "blas":
-            from ..operators.vectorized import multi_query_topk_np
-
-            # queries are a handful of rows by contract — driver-side
-            # list, fenced (the k-sized-collect rule). NULL-qvec rows
-            # can't enter the matmul; they score NULL against every
-            # vector via the HOF arm (cosine of a null query is null),
-            # keeping the kernels row-set-equal. The null arm rebuilds
-            # its query side from the COLLECTED rows (review find: a
-            # .where() on the original frame re-executed the possibly
-            # encoder-bearing query plan per search — the plan-doubling
-            # pattern score_documents already fixed).
-            from pyspark.sql.types import StructType
-
-            from ..session import collect_bounded, local_df
-
-            qrows = collect_bounded(
-                queries.select("query_id", "qvec"), 65_536, "blas query side"
-            )
-            qlist = [
-                (r["query_id"], [float(x) for x in r["qvec"]])
-                for r in qrows
-                if r["qvec"] is not None
-            ]
-            q_schema = StructType(
-                [queries.schema["query_id"], queries.schema["qvec"]]
-            )
-            if not qlist:
-                local_q = local_df(vectors.sparkSession, qrows, q_schema)
-                return brute_force_topk(vectors, local_q, k)
-            out = multi_query_topk_np(vectors, qlist, k)
-            if len(qlist) < len(qrows):
-                null_q = local_df(
-                    vectors.sparkSession,
-                    [r for r in qrows if r["qvec"] is None],
-                    q_schema,
-                )
-                out = out.unionByName(brute_force_topk(vectors, null_q, k))
-            return out
-        return brute_force_topk(vectors, queries, k)
+        return brute_force_topk(vectors, queries, k, kernel=kernel)
     if mode == "approx":
         return lsh_topk(vectors, queries, k, **lsh_kwargs)
     if mode == "ivf":

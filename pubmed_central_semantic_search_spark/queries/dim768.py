@@ -160,13 +160,19 @@ def x_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def x768_topk_cosine_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BLAS twin of x768_topk_cosine (operators/vectorized.py): same
-    result set, Arrow-batched numpy matmul instead of interpreted HOF
-    folds — the two entries bench the kernel crossover at dim=768."""
-    from ..operators.vectorized import brute_force_topk_np
+    """The BLAS twin of x768_topk_cosine: the exact top-k
+    ``brute_force_topk(kernel="blas")`` for the one query, so Arrow-batched
+    numpy matmul instead of interpreted HOF folds — same result set; the
+    two entries bench the kernel crossover at dim=768."""
+    from ..operators.ann import brute_force_topk
 
     emb = corpus_768(spark, sf_dir)
-    return brute_force_topk_np(emb, widen_list(QUERY_VEC), 5)
+    q = local_df(
+        spark, [(0, widen_list(QUERY_VEC))], "query_id int, qvec array<double>"
+    )
+    return brute_force_topk(emb, q, 5, kernel="blas").select(
+        "vec_id", F.round("score", 6).alias("score")
+    )
 
 
 def x768_assign_np(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,12 +221,14 @@ def x768_multiq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def x768_multiq_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BLAS twin of x768_multiq (the one-scan many-queries claim's
-    number): one (batch x 768) @ (768 x 8) matmul per Arrow batch scores
-    all 8 queries — same rows at rounded scores."""
-    from ..operators.vectorized import multi_query_topk_np
+    number): the same ``brute_force_topk`` call with ``kernel="blas"``,
+    so one (batch x 768) @ (768 x 8) matmul per Arrow batch scores all 8
+    queries — same rows at rounded scores."""
+    from ..operators.ann import brute_force_topk
 
     emb = corpus_768(spark, sf_dir)
-    return multi_query_topk_np(emb, _multiq_768(), k=5)
+    qdf = local_df(spark, _multiq_768(), "query_id int, qvec array<double>")
+    return brute_force_topk(emb, qdf, k=5, kernel="blas")
 
 
 def x_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:

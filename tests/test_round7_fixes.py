@@ -105,8 +105,10 @@ def test_plan_topk_auto_and_blas_handle_null_qvecs(spark):
         plan_topk_search,
     )
 
+    # a NULL embedding keeps its null-score row under every kernel (the
+    # blas arm's posexplode of a null score array used to drop it)
     vecs = spark.createDataFrame(
-        [(1, [1.0] * 300), (2, [0.0] * 299 + [1.0])],
+        [(1, [1.0] * 300), (2, [0.0] * 299 + [1.0]), (3, None)],
         "vec_id int, embedding array<double>",
     )
     # null row FIRST so the unfiltered peek would have crashed; dim 300
@@ -123,11 +125,12 @@ def test_plan_topk_auto_and_blas_handle_null_qvecs(spark):
     for kernel in ("auto", "blas"):
         assert key(plan_topk_search(vecs, q, k=5, mode="exact", kernel=kernel)) == hof
     assert (9, 1, None) in hof  # null-qvec query keeps its rows
+    assert (0, 3, None) in hof  # null embedding keeps its row
     # ALL queries null: auto resolves dim 0 → hof, blas falls back — no crash
     qn = spark.createDataFrame([(7, None)], "query_id int, qvec array<double>")
     for kernel in ("auto", "blas"):
         out = plan_topk_search(vecs, qn, k=5, mode="exact", kernel=kernel).collect()
-        assert len(out) == 2 and all(r["score"] is None for r in out)
+        assert len(out) == 3 and all(r["score"] is None for r in out)
 
 
 def test_blas_kernel_preserves_query_id_type(spark):

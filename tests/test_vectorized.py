@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from pubmed_central_semantic_search_spark.functions.vector import (
     cosine_similarity,
 )
+from pubmed_central_semantic_search_spark.operators.ann import brute_force_topk
 from pubmed_central_semantic_search_spark.operators.clustering import (
     nearest_centroid,
     seed_centroids,
@@ -13,8 +14,7 @@ from pubmed_central_semantic_search_spark.operators.clustering import (
 from pubmed_central_semantic_search_spark.operators.topk import top_k
 from pubmed_central_semantic_search_spark.operators.vectorized import (
     assign_clusters_np,
-    brute_force_topk_np,
-    cosine_scores_udf,
+    multi_query_scores_udf,
 )
 from pubmed_central_semantic_search_spark.queries.dim768 import (
     corpus_768,
@@ -32,10 +32,22 @@ def _hof_topk(emb, query, k):
     )
 
 
+def _blas_topk(emb, query, k):
+    # the single-query BLAS top-k, ordered and rounded like _hof_topk
+    q = emb.sparkSession.createDataFrame(
+        [(0, query)], "query_id int, qvec array<double>"
+    )
+    return (
+        brute_force_topk(emb, q, k, kernel="blas")
+        .orderBy(F.desc("score"), "vec_id")
+        .withColumn("score", F.round("score", 6))
+    )
+
+
 def test_np_topk_matches_hof_dim64(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     hof = _hof_topk(emb, QUERY_VEC, 10).collect()
-    blas = brute_force_topk_np(emb, QUERY_VEC, 10).collect()
+    blas = _blas_topk(emb, QUERY_VEC, 10).collect()
     assert [(r["vec_id"], r["score"]) for r in hof] == [
         (r["vec_id"], r["score"]) for r in blas
     ]
@@ -45,7 +57,7 @@ def test_np_topk_matches_hof_dim768(spark, sf_dir):
     emb = corpus_768(spark, sf_dir)
     q = widen_list(QUERY_VEC)
     hof = _hof_topk(emb, q, 10).collect()
-    blas = brute_force_topk_np(emb, q, 10).collect()
+    blas = _blas_topk(emb, q, 10).collect()
     assert [(r["vec_id"], r["score"]) for r in hof] == [
         (r["vec_id"], r["score"]) for r in blas
     ]
@@ -69,14 +81,23 @@ def test_np_assignment_matches_jvm_literal_path(spark, sf_dir):
 
 def test_np_kernel_plan_is_arrow_batched(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
-    df = brute_force_topk_np(emb, QUERY_VEC, 5)
+    q = spark.createDataFrame([(0, QUERY_VEC)], "query_id int, qvec array<double>")
+    df = brute_force_topk(emb, q, 5, kernel="blas")
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the Python stage is INTENDED here — but it must be the Arrow-batched
     # pandas-UDF evaluator, never row-at-a-time pickling, and top-k must
-    # still be per-partition heaps
+    # still be per-partition heaps: a partial WindowGroupLimit cuts each
+    # partition to k rows per query BELOW the shuffle
     assert "ArrowEvalPython" in plan, plan
     assert "BatchEvalPython" not in plan, plan
-    assert "TakeOrderedAndProject" in plan, plan
+    # the kernel runs ONCE per row: posexplode over a projected kernel
+    # column let Catalyst infer a size(...) > 0 filter below the generator
+    # that evaluated the kernel a second time
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "row_number(), 5, Partial" in plan, plan
+    assert plan.index("Exchange hashpartitioning") < plan.index(
+        "row_number(), 5, Partial"
+    ), plan
 
 
 def test_np_scores_zero_and_null_vectors_match_hof_convention(spark):
@@ -93,7 +114,7 @@ def test_np_scores_zero_and_null_vectors_match_hof_convention(spark):
     )
     rows = df.select(
         "vec_id",
-        cosine_scores_udf([1.0, 0.0])(F.col("embedding")).alias("s"),
+        multi_query_scores_udf([[1.0, 0.0]])(F.col("embedding"))[0].alias("s"),
         cosine_similarity(
             "embedding", F.array(F.lit(1.0), F.lit(0.0))
         ).alias("hof"),
@@ -115,7 +136,6 @@ def test_np_kernels_are_self_contained(spark):
 
     from pubmed_central_semantic_search_spark.encoder import fake_encoder_udf
     from pubmed_central_semantic_search_spark.operators.vectorized import (
-        cosine_scores_udf,
         multi_query_scores_udf,
         nearest_centroid_udf,
     )
@@ -138,7 +158,6 @@ def test_np_kernels_are_self_contained(spark):
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     for udf in (
-        cosine_scores_udf([1.0, 0.0]),
         multi_query_scores_udf([[1.0, 0.0], [0.0, 1.0]]),
         nearest_centroid_udf([(0, [1.0, 0.0]), (1, [0.0, 1.0])]),
         fake_encoder_udf(dim=8),
@@ -164,12 +183,6 @@ def test_np_kernels_are_self_contained(spark):
 
 
 def test_multi_query_topk_matches_hof_brute_force(spark, sf_dir):
-    from pubmed_central_semantic_search_spark.operators.ann import (
-        brute_force_topk,
-    )
-    from pubmed_central_semantic_search_spark.operators.vectorized import (
-        multi_query_topk_np,
-    )
     from pubmed_central_semantic_search_spark.registry import QUERY_VECS, load
 
     emb = load(spark, sf_dir, "embeddings")
@@ -183,7 +196,7 @@ def test_multi_query_topk_matches_hof_brute_force(spark, sf_dir):
     }
     blas = {
         (r["query_id"], r["vec_id"], round(r["score"], 6))
-        for r in multi_query_topk_np(emb, qlist, k=7).collect()
+        for r in brute_force_topk(emb, qdf, k=7, kernel="blas").collect()
     }
     assert hof == blas
 
@@ -205,12 +218,13 @@ def test_multi_query_scores_order_preserved(spark):
 def test_np_scores_zero_query_scores_zero_not_nan(spark):
     # a zero QUERY vector must not NaN-flood the scores (NaN sorts above
     # every double descending, so degenerate rows would win top-k);
-    # both BLAS kernels substitute query norm 1.0 → all scores 0.0
+    # the BLAS kernel substitutes query norm 1.0 → all scores 0.0
     df = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [3.0, 4.0])], "vec_id long, embedding array<double>"
     )
     rows = df.select(
-        "vec_id", cosine_scores_udf([0.0, 0.0])(F.col("embedding")).alias("s")
+        "vec_id",
+        multi_query_scores_udf([[0.0, 0.0]])(F.col("embedding"))[0].alias("s"),
     ).collect()
     assert all(r["s"] == 0.0 for r in rows)
 
