@@ -28,6 +28,23 @@ def as_double(v: Column | str) -> Column:
     return v.cast("array<double>")
 
 
+def length_guard(v: Column | str, dim: int, who: str) -> Column:
+    """``v`` as array<double> when it is NULL or exactly ``dim`` long;
+    any other length raises by name with both widths
+    (``{who}: vector length N != dim = D``) instead of letting zip_with
+    null-pad or numpy fail on a broadcast deep in an executor."""
+    v = as_double(v)
+    return F.when(v.isNull() | (F.size(v) == dim), v).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"{who}: vector length "),
+                F.size(v).cast("string"),
+                F.lit(f" != dim = {dim}"),
+            )
+        ).cast("array<double>")
+    )
+
+
 def _check_finite(flat: Sequence[float]) -> None:
     if not all(math.isfinite(x) for x in flat):
         raise ValueError("packed literal values must be finite (no NaN/inf)")

@@ -6,15 +6,18 @@ HNSW index (``qdrant.py:71-89``), whose Spark-side analogs are:
 
 - **Lloyd k-means** over document vectors (X7): the MLlib execution shape
   re-expressed in plain DataFrame ops — centroids are TINY (k × dim), so
-  each iteration collects them to the driver and re-broadcasts them as a
-  PACKED ``array<array<double>>`` literal. Assignment is then a pure
-  projection (a ``zip_with`` loop over the centroid matrix): NO shuffle,
-  O(1)-size codegen at any k × dim (proven at dim=768 — the unrolled
-  per-centroid-literal form fell back to interpreted eval there, 80×
-  slower). The only shuffle per iteration is the k·dim-row centroid
-  re-aggregation. Deterministic end to end: seeds are the k lowest-id
-  vectors, ties break to the lowest cluster id — so the whole algorithm
-  (any fixed iteration count) has a DuckDB oracle via unrolled CTEs.
+  each iteration collects them to the driver and re-broadcasts them by
+  value. Assignment (``nearest_centroid``) is a pure projection — NO
+  shuffle, NO join — whose kernel follows the centroid width through
+  ``plans.planner.resolve_kernel``: below the 256 crossover a ``zip_with``
+  loop over ONE packed ``array<array<double>>`` literal (O(1)-size
+  codegen at any k × dim, bit-exact against the DuckDB oracle); at or
+  above it the Arrow-batched BLAS kernel in ``operators/vectorized.py``
+  (HOF folds run interpreted, so wide dots are their slow case). The
+  only shuffle per iteration is the k·dim-row centroid re-aggregation.
+  Deterministic end to end: seeds are the k lowest-id vectors, ties
+  break to the lowest cluster id — so the whole algorithm (any fixed
+  iteration count) has a DuckDB oracle via unrolled CTEs.
 - **IVF-flat top-k** (the "inverted file" ANN tier): assign every vector
   to its nearest centroid once at build time (that's the inverted list),
   then at query time probe only the ``nprobe`` nearest centroids' lists.
@@ -35,9 +38,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import as_double, cosine_similarity, dot, matrix_lit
+from ..functions.vector import (
+    as_double,
+    cosine_similarity,
+    dot,
+    length_guard,
+    matrix_lit,
+)
 from .topk import grouped_top_k
-from ..session import local_df
+from .vectorized import nearest_centroid_udf
 
 Centroids = list[tuple[int, list[float]]]
 
@@ -77,7 +86,20 @@ def _ranked_centroids(vec_col: Column | str, centroids: Centroids) -> Column:
 
 
 def nearest_centroid(vec_col: Column | str, centroids: Centroids) -> Column:
-    """Argmax-cosine cluster id as a pure projection."""
+    """Argmax-cosine cluster id as a pure projection — the one assignment
+    every caller (Lloyd, IVF, SemDeDup, IVF-PQ, streaming append) uses.
+
+    The kernel follows the centroid width the driver already holds
+    (``plans.planner.resolve_kernel``): below the crossover the
+    packed-literal fold above; at or above it the Arrow-batched BLAS
+    kernel ``vectorized.nearest_centroid_udf`` (same ties → lowest id),
+    whose input is length-guarded so an off-width vector raises by name."""
+    from ..plans.planner import resolve_kernel
+
+    dim = len(centroids[0][1]) if centroids else 0
+    if resolve_kernel(dim) == "blas":
+        guarded = length_guard(vec_col, dim, "nearest_centroid")
+        return nearest_centroid_udf(centroids)(guarded)
     return F.element_at(_ranked_centroids(vec_col, centroids), 1).getField("c")
 
 
@@ -86,45 +108,6 @@ def top_centroids(
 ) -> Column:
     """array<int> of the ``nprobe`` nearest centroid ids, best first."""
     return F.slice(_ranked_centroids(vec_col, centroids), 1, nprobe).getField("c")
-
-
-def nearest_centroid_join(
-    vectors: DataFrame,
-    centroids: Centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Broadcast-join assignment fallback for VERY large k: the centroid
-    table rides a broadcast crossJoin instead of a plan literal.
-
-    The packed-literal path (``nearest_centroid``) is a pure projection —
-    the right default at any dim and k into the thousands — but the
-    centroid matrix still serializes into every task's plan; when k × dim
-    doubles outgrow what a plan should carry (say k in the 10^5 range —
-    IVF codebooks), a broadcast relation is the right transport. This
-    shape stays flat: k rows broadcast, per-partition partial
-    ``min(struct)`` argmax, ONE row per vector on the shuffle — never the
-    k× pre-agg stream. Returns (id, cluster_id); bit-identical to the
-    literal path (same dot fold, same tie-break) — proven in
-    tests/test_dim768.py."""
-    spark = vectors.sparkSession
-    cdf = local_df(spark, 
-        [(cid, _unit(list(v))) for cid, v in centroids],
-        "cluster_id int, _cvec array<double>",
-    )
-    best = F.min(
-        F.struct(
-            (-dot(vec_col, F.col("_cvec"))).alias("nsim"),
-            F.col("cluster_id").alias("c"),
-        )
-    )
-    return (
-        vectors.select(id_col, vec_col)
-        .crossJoin(F.broadcast(cdf))
-        .groupBy(id_col)
-        .agg(best.alias("_best"))
-        .select(id_col, F.col("_best.c").alias("cluster_id"))
-    )
 
 
 def seed_centroids(

@@ -923,7 +923,7 @@ def semantic_dedup(
     Returns ``df`` + (cluster_id, component, is_survivor).
 
     Scale shape, stage by stage: assignment is a pure projection
-    (packed-literal argmax, no join); the near-dup self-join is blocked
+    (``nearest_centroid``, no join); the near-dup self-join is blocked
     on cluster_id (the SemDeDup insight — the quadratic pair space
     shrinks to per-cluster blocks, and at 100 TB the corpus is stored
     partitioned by cluster so the self-join is partition-local);

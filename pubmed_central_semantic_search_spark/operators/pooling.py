@@ -23,7 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import as_double
+from ..functions.vector import as_double, length_guard
 
 
 def mean_pool_flat(
@@ -65,15 +65,7 @@ def mean_pool(
         # another width would silently skew the pooled mean (e.g. an engine
         # reconstructed with a smaller dim over previously-ingested
         # embeddings). Nulls stay null.
-        vec = F.when(vec.isNull(), vec).when(F.size(vec) == dim, vec).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("mean_pool: vector length "),
-                    F.size(vec).cast("string"),
-                    F.lit(f" != dim = {dim}"),
-                )
-            ).cast("array<double>")
-        )
+        vec = length_guard(vec, dim, "mean_pool")
     # posexplode_outer keeps all-null groups alive as a (null, null)
     # component row; the assembly filters that cell back out and maps an
     # empty result to NULL

@@ -18,9 +18,13 @@ second-moment accumulation:
    (dim² doubles), never partition-count × dim².
 3. ``np.linalg.eigh`` on the dim×dim covariance driver-side — dim-sized,
    corpus-independent.
-4. ``pca_project`` — pure Catalyst: the components ride as a packed
+4. ``pca_project`` — the one projection; its kernel follows the model
+   width through ``plans.planner.resolve_kernel``. Below the 256
+   crossover it is pure Catalyst: the components ride as a packed
    ``matrix_lit`` literal and the projection is a zip_with/aggregate dot
-   per output component. Narrow, zero shuffle, engine-portable.
+   per output component. At or above it, the Arrow-batched BLAS kernel
+   ``pca_project_udf``. Narrow and zero-shuffle on both arms, and an
+   off-width vector raises by name on both.
 
 Scale shape: stage 1 reads the corpus once and emits partition-count rows;
 everything after is O(dim²) regardless of corpus size. Eigenvector SIGN is
@@ -34,10 +38,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import array_lit, as_double, matrix_lit
+from ..functions.vector import array_lit, length_guard, matrix_lit
 
 _PARTIAL_SCHEMA = "n bigint, s array<double>, g array<double>"
 
@@ -104,7 +108,7 @@ def _moment_partials(vec_col: str):
 def pca_fit(df: DataFrame, vec_col: str = "embedding", out_dim: int = 8) -> PCAModel:
     """Fit PCA on ``vec_col`` with one distributed moment pass (see module
     docstring). Returns a dim-sized model; raises on an empty frame.
-    NULL embeddings are excluded from the fit (the projection twins
+    NULL embeddings are excluded from the fit (both projection arms
     already pass nulls through; without this filter one null row fed
     np.asarray(None) into the moment fold and the whole fit died in an
     opaque executor traceback — review find)."""
@@ -172,9 +176,10 @@ def _effective_components(model: PCAModel, whiten: bool, eps: float):
     clamp+scale block had drifted into three copies): ``whiten=True``
     folds 1/√(λ+eps) into the components; the clamp exists because eigh
     returns tiny NEGATIVE eigenvalues for rank-deficient covariance and
-    (λ+eps)**0.5 would go complex. All three projection tiers (Catalyst,
-    Arrow/BLAS, driver-side query vector) call this, so the pinned twin
-    equivalence cannot silently break on a one-site convention change."""
+    (λ+eps)**0.5 would go complex. Both ``pca_project`` arms (Catalyst,
+    Arrow/BLAS) and the driver-side ``project_vec`` call this, so their
+    pinned equivalence cannot silently break on a one-site convention
+    change."""
     comps = model.components
     if whiten:
         scales = [1.0 / (max(lam, 0.0) + eps) ** 0.5 for lam in model.eigvals]
@@ -190,15 +195,22 @@ def pca_project(
     whiten: bool = False,
     eps: float = 1e-9,
 ) -> DataFrame:
-    """Project ``vec_col`` onto the fitted components — pure Catalyst
-    (packed literals + zip_with/aggregate dots), narrow, zero shuffle.
-    ``whiten=True`` folds 1/√(λ+eps) into the components driver-side so
-    the plan is identical either way."""
-    comps = _effective_components(model, whiten, eps)
-    centered = F.zip_with(
-        as_double(vec_col), array_lit(model.mean), lambda a, b: a - b
-    )
-    w = matrix_lit(comps)
+    """Project ``vec_col`` onto the fitted components — narrow, zero
+    shuffle, null in → null out. The kernel follows the model width
+    (``plans.planner.resolve_kernel(len(model.mean))``): below the
+    crossover pure Catalyst (packed literals + zip_with/aggregate dots),
+    at or above it the Arrow-batched ``pca_project_udf``. Either way an
+    off-width vector raises by name with both widths. ``whiten=True``
+    folds 1/√(λ+eps) into the components driver-side so the plan is
+    identical either way."""
+    from ..plans.planner import resolve_kernel
+
+    dim = len(model.mean)
+    vec = length_guard(vec_col, dim, "pca_project")
+    if resolve_kernel(dim) == "blas":
+        return df.withColumn(out_col, pca_project_udf(model, whiten, eps)(vec))
+    centered = F.zip_with(vec, array_lit(model.mean), lambda a, b: a - b)
+    w = matrix_lit(_effective_components(model, whiten, eps))
     proj = F.transform(
         w,
         lambda row: F.aggregate(
@@ -208,14 +220,13 @@ def pca_project(
         ),
     )
     # null in → null out (not an array OF nulls) — the same answer the
-    # BLAS twin gives, keeping the pinned equivalence total on null rows
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
+    # BLAS kernel gives
     return df.withColumn(out_col, F.when(vec.isNotNull(), proj))
 
 
 def pca_project_udf(model: PCAModel, whiten: bool = False, eps: float = 1e-9):
-    """Arrow-batched projection kernel for the high-dim tier (dim ≳ 256,
-    where Catalyst HOF folds run interpreted — see vectorized.py): one
+    """Arrow-batched projection kernel, ``pca_project``'s arm at dim ≥ 256
+    (where Catalyst HOF folds run interpreted — see vectorized.py): one
     Arrow transfer per batch, ``(batch×dim) @ (dim×out_dim)`` matmul.
     Closure ships by VALUE (plain-list captures, imports in body)."""
     from pyspark.sql.functions import pandas_udf
@@ -231,37 +242,15 @@ def pca_project_udf(model: PCAModel, whiten: bool = False, eps: float = 1e-9):
 
         w = np.array(comps_l, dtype=np.float64).T  # dim × out_dim
         mu = np.array(mean_l, dtype=np.float64)
-        # null rows project to null (the Catalyst twin's semantics —
-        # np.asarray(None) would otherwise kill the whole job and break
-        # the pinned twin equivalence on any null embedding)
-        mask = np.array([v is not None for v in vecs])
-        if not mask.any():
-            return pd.Series([None] * len(vecs), dtype=object)
-        x = np.array(
-            [np.asarray(v, dtype=np.float64) for v in vecs[mask]]
-        )
-        p = (x - mu) @ w
-        out = np.full(len(vecs), None, dtype=object)
-        for idx, row in zip(np.nonzero(mask)[0], p):
-            out[idx] = row
-        return pd.Series(out)
+        # null rows project to null (the Catalyst arm's semantics)
+        mask = vecs.notna().to_numpy()
+        out = pd.Series([None] * len(vecs), dtype=object)
+        if mask.any():
+            x = np.array(vecs[mask].tolist(), dtype=np.float64)
+            out[mask] = pd.Series(list((x - mu) @ w), index=out.index[mask])
+        return out
 
     return _project
-
-
-def pca_project_np(
-    df: DataFrame,
-    model: PCAModel,
-    vec_col: str = "embedding",
-    out_col: str = "proj",
-    whiten: bool = False,
-    eps: float = 1e-9,
-) -> DataFrame:
-    """BLAS twin of ``pca_project`` (equivalence test-pinned — float noise
-    only: BLAS accumulation vs sequential fold)."""
-    return df.withColumn(
-        out_col, pca_project_udf(model, whiten, eps)(F.col(vec_col))
-    )
 
 
 def project_vec(

@@ -321,53 +321,6 @@ def _shift_next(s: Column, g: Column) -> Column:
     )
 
 
-def _top_gram_chars(s: Column) -> Column:
-    """Characters covered by the MOST FREQUENT value of the SORTED array
-    ``s``: count(top) * length(top). Top value = max by (count desc,
-    value asc) — the deterministic tie-break both engines replay.
-
-    Near-linear per row: mark run starts by zipping against the
-    shifted-by-one copy, derive run lengths by zipping start positions
-    with their successors — no per-gram rescan of the array (that would
-    be O(G·distinct): quadratic on repetitive docs, the exact docs this
-    rule exists to catch). ``s`` must be an ATTRIBUTE (a materialized
-    column), not an inline expression — it is referenced several times."""
-    g = F.size(s)
-    idx = F.sequence(F.lit(1), g)  # only evaluated under the g > 0 guard
-    zs = F.zip_with(s, idx, lambda t, i: F.struct(t.alias("t"), i.alias("i")))
-    starts = F.filter(
-        F.zip_with(
-            zs,
-            _shift_prev(s, g),
-            lambda z, p: F.struct(
-                z["t"].alias("t"),
-                z["i"].alias("i"),
-                (p.isNull() | (z["t"] != p)).alias("st"),
-            ),
-        ),
-        lambda e: e["st"],
-    )
-    start_pos = F.transform(starts, lambda e: e["i"])
-    # Run k spans [starts[k].i, starts[k+1].i) — the last run ends at G+1.
-    ends = F.concat(
-        F.slice(start_pos, 2, F.greatest(F.size(start_pos) - 1, F.lit(0))),
-        F.array(g + 1),
-    )
-    runs = F.zip_with(
-        starts, ends, lambda e, b: F.struct((b - e["i"]).alias("c"), e["t"].alias("t"))
-    )
-    best = F.aggregate(
-        runs,
-        F.struct(F.lit(0).cast("int").alias("c"), F.lit("").alias("t")),
-        lambda acc, x: F.when(
-            (x["c"] > acc["c"]) | ((x["c"] == acc["c"]) & (x["t"] < acc["t"])), x
-        ).otherwise(acc),
-    )
-    return F.when(g > 0, best["c"].cast("bigint") * F.length(best["t"])).otherwise(
-        F.lit(0).cast("bigint")
-    )
-
-
 def _dup_sorted_chars(s: Column) -> Column:
     """Characters covered by values occurring MORE THAN ONCE in the
     SORTED array ``s`` (every occurrence counted — Gopher's 'duplicate
@@ -390,7 +343,6 @@ def _dup_sorted_chars(s: Column) -> Column:
     )
 
 
-GRAM_NS = (2, 3, 4, 5, 10)
 _GRAM_STATS_SCHEMA = (
     "top2_chars long, top3_chars long, top4_chars long, "
     "dup5_chars long, dup10_chars long"
@@ -398,14 +350,14 @@ _GRAM_STATS_SCHEMA = (
 
 
 def _gram_stats_udf():
-    """Arrow-batched twin of the Catalyst gram-char metrics: one scalar
-    pandas_udf returning all five signals as a struct. Higher-order
-    functions are CodegenFallback in Spark — every lambda element is
-    interpreted — so the pure-Catalyst formulation above, while
-    shuffle-free and correct, costs ~5 ms/row; the vectorized Python loop
-    (C-backed str.split + Counter) is ~50× cheaper and rides one Arrow
-    batch channel. Equivalence with the Catalyst twin is pinned in
-    tests/test_gopher.py. Ship-by-value: no module globals captured."""
+    """The Gopher gram-char metrics as one scalar pandas_udf returning
+    all five signals as a struct. Higher-order functions are
+    CodegenFallback in Spark — every lambda element is interpreted — so
+    a pure-Catalyst formulation costs ~5 ms/row; the vectorized Python
+    loop (C-backed str.split + Counter) is ~50× cheaper and rides one
+    Arrow batch channel. Pinned against a from-definition Python
+    reference and DuckDB in tests/test_gopher.py. Ship-by-value: no
+    module globals captured."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(_GRAM_STATS_SCHEMA)
@@ -453,9 +405,7 @@ def _count_occurrences(text: Column, needle: str) -> Column:
     ).cast("bigint")
 
 
-def gopher_panel(
-    df: DataFrame, text_col: str = "text", gram_engine: str = "arrow"
-) -> DataFrame:
+def gopher_panel(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append the Gopher rule panel to ``df`` (all per-row, zero shuffle):
 
     word rules — ``n_words``, ``mean_word_chars_milli`` (mean word length
@@ -479,28 +429,16 @@ def gopher_panel(
     words, dup-line < 30%, top-2-gram < 20%, dup-5-gram < 15%.
 
     Two projection stages: the first MATERIALIZES the heavy per-row
-    arrays (token list, trimmed lines, sorted gram arrays) so each is
+    arrays (token list, trimmed lines, sorted lines, gram stats) so each is
     computed exactly once per row; the second computes every signal from
     those attributes. Collapsing them into one projection would re-inline
     each array expression at every reference site (trees, not DAGs) —
     Catalyst's CollapseProject keeps the boundary because the aliases are
     expensive and multiply referenced.
 
-    ``gram_engine``: ``'arrow'`` (default) computes the five gram-char
-    metrics in one Arrow-batched pandas_udf (HOFs are CodegenFallback —
-    interpreted per element — so the hot loop is ~50× cheaper in
-    vectorized Python); ``'catalyst'`` uses the pure-expression twin
-    (zero Python, zero shuffle) — equivalence is test-pinned, so either
-    engine is safe anywhere.
+    The five gram-char metrics come from one Arrow-batched pandas_udf
+    (``_gram_stats_udf``).
     """
-    if gram_engine not in ("arrow", "catalyst"):
-        # silent fallthrough to the ~50x-slower interpreted twin on a
-        # typo ('Arrow') would look like a hang, not an error — the
-        # planner's up-front kernel-validation rule
-        raise ValueError(
-            f"gopher_panel: unknown gram_engine {gram_engine!r} "
-            "(expected 'arrow' or 'catalyst')"
-        )
     text = F.col(text_col)
     toks = F.col("_gp_toks")
     lines = F.col("_gp_lines")
@@ -516,35 +454,9 @@ def gopher_panel(
                 lambda ln: ln != "",
             )
         ),
+        "_gp_gs": _gram_stats_udf()(text),
     }
-    if gram_engine == "arrow":
-        cols["_gp_gs"] = _gram_stats_udf()(text)
-    else:
-        cols.update(
-            {
-                f"_gp_s{n}": F.array_sort(_ngrams(_tokens(text_col), n))
-                for n in GRAM_NS
-            }
-        )
     staged = df.withColumns(cols)
-    if gram_engine == "arrow":
-        gram_chars = {
-            "top2": F.col("_gp_gs.top2_chars"),
-            "top3": F.col("_gp_gs.top3_chars"),
-            "top4": F.col("_gp_gs.top4_chars"),
-            "dup5": F.col("_gp_gs.dup5_chars"),
-            "dup10": F.col("_gp_gs.dup10_chars"),
-        }
-        gram_tmp_cols = ["_gp_gs"]
-    else:
-        gram_chars = {
-            "top2": _top_gram_chars(F.col("_gp_s2")),
-            "top3": _top_gram_chars(F.col("_gp_s3")),
-            "top4": _top_gram_chars(F.col("_gp_s4")),
-            "dup5": _dup_sorted_chars(F.col("_gp_s5")),
-            "dup10": _dup_sorted_chars(F.col("_gp_s10")),
-        }
-        gram_tmp_cols = [f"_gp_s{n}" for n in GRAM_NS]
     n_words = F.size(toks).cast("bigint")
     word_chars = F.aggregate(
         toks, F.lit(0).cast("bigint"), lambda a, t: a + F.length(t)
@@ -609,13 +521,13 @@ def gopher_panel(
                 ).cast("bigint"),
                 n_lines,
             ),
-            "top2_char_milli": int_milli(gram_chars["top2"], char_total),
-            "top3_char_milli": int_milli(gram_chars["top3"], char_total),
-            "top4_char_milli": int_milli(gram_chars["top4"], char_total),
-            "dup5_char_milli": int_milli(gram_chars["dup5"], char_total),
-            "dup10_char_milli": int_milli(gram_chars["dup10"], char_total),
+            "top2_char_milli": int_milli(F.col("_gp_gs.top2_chars"), char_total),
+            "top3_char_milli": int_milli(F.col("_gp_gs.top3_chars"), char_total),
+            "top4_char_milli": int_milli(F.col("_gp_gs.top4_chars"), char_total),
+            "dup5_char_milli": int_milli(F.col("_gp_gs.dup5_chars"), char_total),
+            "dup10_char_milli": int_milli(F.col("_gp_gs.dup10_chars"), char_total),
         }
-    ).drop("_gp_toks", "_gp_lines", "_gp_sl", *gram_tmp_cols)
+    ).drop("_gp_toks", "_gp_lines", "_gp_sl", "_gp_gs")
     return out.withColumn(
         "gopher_pass",
         (F.col("n_words") >= 20)

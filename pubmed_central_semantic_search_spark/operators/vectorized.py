@@ -20,12 +20,15 @@ contract — BLAS accumulates blockwise, agreeing to ~1e-12 relative), and
 stay on the HOF path; these kernels serve bench/scale workloads and ANN
 interiors where scores are rounded anyway.
 
-Two kernels live here, and no top-k operator: ``multi_query_scores_udf``
+Two kernels live here, and no operator: ``multi_query_scores_udf``
 scores every row against a fixed query set and is the scoring arm of
 ``ann.brute_force_topk(kernel="blas")``, which owns the kernel choice,
 the query-side collect, null handling and the per-query cut;
-``nearest_centroid_udf`` (with ``assign_clusters_np``) is the k-means
-assignment kernel.
+``nearest_centroid_udf`` is the BLAS arm of ``clustering.nearest_centroid``,
+which picks it from the centroid width (``plans.planner.resolve_kernel``)
+and length-guards its input. (The PCA projection's BLAS arm,
+``projection.pca_project_udf``, follows the same rules.) Both kernels
+take one masked path: NULL rows out as NULL, the rest in one matmul.
 
 Determinism: numpy with fixed inputs is deterministic; argmax ties break
 to the lowest index, and centroids are passed sorted by cluster id, so
@@ -37,8 +40,6 @@ sequential-fold arithmetic may differ — measure-zero for real data).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 Centroids = list[tuple[int, list[float]]]
@@ -66,26 +67,18 @@ def nearest_centroid_udf(centroids: Centroids):
         norms = _np.linalg.norm(c, axis=1)
         norms[norms == 0] = 1.0
         cu = (c.T / norms).T  # unit rows: cosine argmax == dot argmax
-        # null rows assign null (HOF semantics), not a batch crash;
-        # no-null batches keep the bulk tolist() fast path
+        # null rows assign null (HOF semantics), not a batch crash
         mask = vecs.notna().to_numpy()
-        if mask.all():
-            m = _np.array(vecs.tolist(), dtype=_np.float64)
+        out = _pd.Series([None] * len(vecs), dtype=object)
+        if mask.any():
+            m = _np.array(vecs[mask].tolist(), dtype=_np.float64)
             sc = m @ cu.T
             # degenerate rows (NaN components) score 0 to every centroid
             # so argmax falls to the lowest id — the HOF twin's tie rule;
             # raw NaN makes numpy argmax undefined-ish and diverges
             sc[~_np.isfinite(sc)] = 0.0
-            best = sc.argmax(axis=1)
-            return _pd.Series(ids[best])
-        out = _np.full(len(vecs), None, dtype=object)
-        if mask.any():
-            m = _np.array(vecs[mask].tolist(), dtype=_np.float64)
-            sc = m @ cu.T
-            sc[~_np.isfinite(sc)] = 0.0
-            best = sc.argmax(axis=1)
-            out[mask] = ids[best]
-        return _pd.Series(out)
+            out[mask] = ids[sc.argmax(axis=1)]
+        return out
 
     return _assign
 
@@ -130,18 +123,3 @@ def multi_query_scores_udf(query_vecs: list[list[float]]):
         return _pd.Series([next(rows) if ok else None for ok in mask])
 
     return _scores
-
-
-def assign_clusters_np(
-    vectors: DataFrame,
-    centroids: Centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, cluster_id) via the BLAS assignment kernel — the full-corpus
-    pass of sample-trained k-means at high dim, one Arrow round-trip, no
-    shuffle, no join."""
-    return vectors.select(
-        F.col(id_col),
-        nearest_centroid_udf(centroids)(F.col(vec_col)).alias("cluster_id"),
-    )

@@ -25,10 +25,14 @@ from ..operators.ann import brute_force_topk, lsh_topk
 
 # kernel='auto' crossover: the measured dim where the Arrow-batched BLAS
 # matmul overtakes the interpreted Catalyst HOF fold (measurements in
-# operators/projection.py and operators/vectorized.py). The exact top-k
-# (operators/ann.brute_force_topk) is its one caller with a peek; the
-# x768_multiq/x768_multiq_np bench pair runs that top-k under each kernel
-# at dim 768 and keeps the crossover honest.
+# operators/vectorized.py). The one routing point for every dense kernel
+# choice: the exact top-k (operators/ann.brute_force_topk, one peek of the
+# query width), and — from widths the driver already holds, no peek —
+# k-means/IVF assignment (clustering.nearest_centroid, centroid width),
+# PCA projection (projection.pca_project, model width) and the engine
+# facade (api, its embedding dim). The x768_multiq/x768_multiq_np bench
+# pair runs the top-k under each kernel at dim 768 and keeps the
+# crossover honest.
 _KERNEL_CROSSOVER_DIM = 256
 
 

@@ -5,10 +5,11 @@ encodes at 768 (``/root/reference/src/backend/database/qdrant.py:74``,
 ``all-mpnet-base-v2`` in ``app.py:17``). These builders widen the 64-dim
 corpus to 768 deterministically and re-run the flagship vector operators
 at full width, proving the (group, pos) mean-pool aggregate, the cosine
-expression, and the centroid-literal codegen hold at 12× the certified
-dimensionality (with the broadcast-join assignment fallback for k × dim
-beyond codegen comfort — ``operators/clustering.py``
-``nearest_centroid_join``).
+expression, and the kernel crossover hold at 12× the certified
+dimensionality: at 768 ``clustering.nearest_centroid`` and
+``projection.pca_project`` pick their Arrow-batched BLAS arms
+(``plans.planner.resolve_kernel``), while the dim-64 registry rows keep
+the bit-exact folds.
 
 The widening is a TILING with per-tile scales:
 ``v768[t*64 + i] = v64[i] * s_t`` (s_t a fixed nonzero constant). Dot
@@ -88,10 +89,10 @@ def x768_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     then ONE full-corpus assignment pass — the 100 TB training shape
     (k-means quality saturates at sample sizes in the 100k range, so
     training cost is sample-sized at any corpus scale; only the final
-    assignment touches every row). The assignment uses the packed-literal
-    zip_with projection and training the posexplode re-aggregation — the
-    shapes that replaced the unrolled/wide-agg forms after they fell out
-    of codegen at this width (see operators/clustering.py)."""
+    assignment touches every row). At this width every assignment —
+    inside Lloyd and the final pass — runs ``nearest_centroid``'s BLAS
+    arm (one Arrow round-trip per stage), and training re-aggregates
+    with the posexplode (cluster, pos) shape (see operators/clustering.py)."""
     from ..operators.clustering import lloyd_kmeans, nearest_centroid
 
     emb = corpus_768(spark, sf_dir)
@@ -100,17 +101,6 @@ def x768_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     train.unpersist()
     # the caller's action executes the full-corpus assignment scan
     assigned = emb.withColumn("cluster_id", nearest_centroid("embedding", cents))
-    return assigned.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
-
-
-def x768_kmeans_join_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The non-literal fallback at dim=768: broadcast-join argmax
-    assignment under the same seeds (the k × dim-beyond-codegen path)."""
-    from ..operators.clustering import nearest_centroid_join, seed_centroids
-
-    emb = corpus_768(spark, sf_dir)
-    cents = seed_centroids(emb, k=8)
-    assigned = nearest_centroid_join(emb, cents)
     return assigned.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -176,16 +166,15 @@ def x768_topk_cosine_np(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def x768_assign_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BLAS twin of x768_kmeans_join_assign: identical seeds and
-    cluster counts, full-corpus assignment via one Arrow round-trip
-    (no join, no shuffle before the count aggregate) — three strategies
-    for the same work sit side by side in the bench output."""
-    from ..operators.clustering import seed_centroids
-    from ..operators.vectorized import assign_clusters_np
+    """One full-corpus assignment at dim=768 under the 8 seed centroids:
+    ``nearest_centroid`` resolves to its BLAS arm at this width, so one
+    Arrow round-trip per batch (no join, no shuffle before the count
+    aggregate). Output: per-cluster counts."""
+    from ..operators.clustering import nearest_centroid, seed_centroids
 
     emb = corpus_768(spark, sf_dir)
     cents = seed_centroids(emb, k=8)
-    assigned = assign_clusters_np(emb, cents)
+    assigned = emb.withColumn("cluster_id", nearest_centroid("embedding", cents))
     return assigned.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -265,20 +254,22 @@ def x_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x768_pca_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA 768→32 + whitening at the reference's real width: one
     distributed moment pass (mapInPandas partials → single combine), eigh
-    driver-side (768², corpus-independent), then the BLAS projection twin
-    (the Catalyst path is test-pinned equivalent; at 768 the HOF fold is
-    interpreted — kernel-tier rule). Output: per-component variance of the
-    projection (≈1.0 when whitened — the operator's own correctness
-    signal)."""
-    from ..operators.projection import pca_fit, pca_project_np
+    driver-side (768², corpus-independent), then ``pca_project``, which
+    picks its BLAS arm at this width (the Catalyst arm is test-pinned
+    equivalent). Output: per-component variance of the projection (≈1.0
+    when whitened — the operator's own correctness signal)."""
+    from ..operators.projection import pca_fit, pca_project
 
     emb = corpus_768(spark, sf_dir).persist()
     model = pca_fit(emb, "embedding", out_dim=32)
-    proj = pca_project_np(emb, model, "embedding", whiten=True)
+    proj = pca_project(emb, model, "embedding", whiten=True)
     # materialize the 32-row result eagerly so the widened-corpus cache
-    # can be released before returning (no pinned RDD outlives the entry)
+    # can be released before returning (no pinned RDD outlives the entry).
+    # posexplode_outer: a plain posexplode lets Catalyst infer a
+    # size(proj) > 0 filter below the projection, a second kernel
+    # evaluation; no row here is NULL, so the rows are the same.
     out = (
-        proj.select(F.posexplode("proj").alias("component", "value"))
+        proj.select(F.posexplode_outer("proj").alias("component", "value"))
         .groupBy("component")
         .agg(F.round(F.var_samp("value"), 4).alias("variance"))
         .orderBy("component")
@@ -292,19 +283,20 @@ def x768_pca_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval ON the PCA projection — the storage/latency claim of
     operators/projection.py made concrete and paired with
     ``x768_topk_cosine`` (same query, full width): fit 768→64 once,
-    project corpus (BLAS twin) and query (driver-side ``project_vec``),
+    project corpus (``pca_project``, BLAS arm at this width) and query
+    (driver-side ``project_vec``),
     then the certified top-k cosine runs in the 64-dim space — 12× fewer
     flops per score and a 12× smaller vector column at rest. The ranking
     contract vs full-dim (projection preserves centered cosine exactly at
     full rank; recall@k bound when lossy) is pinned in
     tests/test_projection.py."""
     from ..functions.vector import cosine_similarity
-    from ..operators.projection import pca_fit, pca_project_np, project_vec
+    from ..operators.projection import pca_fit, pca_project, project_vec
     from ..operators.topk import top_k
 
     emb = corpus_768(spark, sf_dir).persist()
     model = pca_fit(emb, "embedding", out_dim=64)
-    proj = pca_project_np(emb, model, "embedding", out_col="proj")
+    proj = pca_project(emb, model, "embedding", out_col="proj")
     pq_vec = project_vec(model, widen_list(QUERY_VEC))
     scored = proj.select(
         "vec_id",
@@ -330,12 +322,12 @@ def x768_serving_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     width."""
     from ..operators.clustering import lloyd_kmeans
     from ..operators.pq import ivfpq_topk, train_pq
-    from ..operators.projection import pca_fit, pca_project_np, project_vec
+    from ..operators.projection import pca_fit, pca_project, project_vec
     from ..operators.retrieval import mmr_rerank
 
     emb = corpus_768(spark, sf_dir).persist()
     model = pca_fit(emb, "embedding", out_dim=64)
-    proj = pca_project_np(emb, model, "embedding", out_col="pvec", whiten=True)
+    proj = pca_project(emb, model, "embedding", out_col="pvec", whiten=True)
     proj = proj.select("vec_id", "pvec").persist()
     qvec = project_vec(model, widen_list(QUERY_VEC), whiten=True)
     # sample-trained coarse quantizer + PQ codebooks (training cost is
@@ -820,7 +812,6 @@ BENCH_EXTRAS = {
     "x768_topk_cosine_np": x768_topk_cosine_np,
     "x768_mean_pool": x768_mean_pool,
     "x768_kmeans": x768_kmeans,
-    "x768_kmeans_join_assign": x768_kmeans_join_assign,
     "x768_assign_np": x768_assign_np,
     "x768_multiq": x768_multiq,
     "x768_multiq_np": x768_multiq_np,

@@ -322,8 +322,8 @@ def stream_ivf_append(
     embedded vectors is absorbed into the partition-pruned IVF layout.
 
     Each incoming vector is tagged with its inverted-list id by
-    ``nearest_centroid`` — a pure narrow expression over a packed
-    centroid literal (no broadcast, no state, append-mode trivially) —
+    ``nearest_centroid`` — a pure narrow expression with the centroids
+    riding by value (no broadcast, no state, append-mode trivially) —
     and written through the streaming parquet sink with
     ``partitionBy(cluster_id)``. The sink's manifest log + checkpoint
     give exactly-once file commits, so replays never duplicate vectors.

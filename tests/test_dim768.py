@@ -74,32 +74,6 @@ def test_kmeans_768_matches_64_assignments(spark, sf_dir):
     assert agree >= 0.99, f"assignment agreement {agree}"
 
 
-def test_literal_and_join_assignment_agree_at_768(spark, sf_dir):
-    """The codegen-literal path and the broadcast-join fallback are the
-    same math in the same fold order — assignments must match EXACTLY
-    (this is the fallback's license to take over at large k x dim)."""
-    from pubmed_central_semantic_search_spark.operators.clustering import (
-        nearest_centroid,
-        nearest_centroid_join,
-        seed_centroids,
-    )
-
-    emb = corpus_768(spark, sf_dir).persist()
-    cents = seed_centroids(emb, k=8)
-    lit = {
-        r["vec_id"]: r["cluster_id"]
-        for r in emb.select(
-            "vec_id", nearest_centroid("embedding", cents).alias("cluster_id")
-        ).collect()
-    }
-    jn = {
-        r["vec_id"]: r["cluster_id"]
-        for r in nearest_centroid_join(emb, cents).collect()
-    }
-    emb.unpersist()
-    assert lit == jn
-
-
 def test_kmeans_768_bench_entry_runs(spark, sf_dir):
     out = x768_kmeans(spark, sf_dir).collect()
     assert sum(r["n"] for r in out) > 0

@@ -1,7 +1,7 @@
 """Gopher rule panel (operators/textstats.py gopher_panel — Rae et al.
-2021 Table A1): hand-computed values, Arrow-vs-Catalyst twin equivalence,
-and newline/line-rule behavior the driver corpus (no newlines) can't
-exercise.
+2021 Table A1): hand-computed values, parity with a from-definition
+Python reference and with DuckDB, and newline/line-rule behavior the
+driver corpus (no newlines) can't exercise.
 """
 
 import pytest
@@ -75,26 +75,6 @@ def test_empty_doc_all_zero(panel):
     assert r["gopher_pass"] is False
 
 
-def test_arrow_catalyst_twins_agree(spark):
-    """The Arrow gram stage and the pure-Catalyst run-length algebra are
-    interchangeable — pinned on the hand corpus AND a generated repetitive
-    corpus (rotations + repeats so runs of every shape appear)."""
-    words = ["alpha", "beta", "gamma", "delta", "x", "yy"]
-    gen = [
-        (100 + i, " ".join(words[(i + j) % len(words)] for j in range(n)) + extra)
-        for i, (n, extra) in enumerate(
-            [(0, ""), (1, ""), (5, ""), (11, ""), (13, " alpha beta" * 4), (30, " x" * 25)]
-        )
-    ]
-    df = spark.createDataFrame(CORPUS + gen, "doc_id long, text string")
-    a = sorted(tuple(r) for r in gopher_panel(df).drop("text").collect())
-    c = sorted(
-        tuple(r)
-        for r in gopher_panel(df, gram_engine="catalyst").drop("text").collect()
-    )
-    assert a == c
-
-
 def test_gopher_pass_thresholds(spark):
     """A clean long-enough English doc passes; the same doc with a looping
     tail fails on the repetition rules only."""
@@ -114,11 +94,9 @@ def test_gopher_pass_thresholds(spark):
 
 
 def test_panel_is_narrow_no_shuffle(spark):
-    """Everything except the Arrow gram stage is per-row; the Catalyst
-    twin's plan must contain no Exchange at all."""
+    """Every stage, the Arrow gram stage included, is per-row: the plan
+    contains no Exchange at all."""
     df = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    plan = gopher_panel(df, gram_engine="catalyst")._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
     arrow_plan = gopher_panel(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in arrow_plan
     assert "ArrowEvalPython" in arrow_plan
@@ -128,7 +106,8 @@ def test_panel_is_narrow_no_shuffle(spark):
 def test_gram_metrics_match_python_reference_on_random_corpora(spark):
     """Property: the Arrow gram kernel equals a direct-from-definition
     Python computation (Counter over overlapping n-grams) on randomized
-    repetitive corpora — not just the hand corpus."""
+    repetitive corpora, the hand corpus, and a generated corpus of
+    rotations + repeats (so runs of every shape appear)."""
     import random
     from collections import Counter
 
@@ -141,6 +120,14 @@ def test_gram_metrics_match_python_reference_on_random_corpora(spark):
         if n >= 6 and rng.random() < 0.5:  # plant a verbatim loop
             toks = toks[:6] * rng.randrange(2, 5)
         rows.append((i, " ".join(toks)))
+    gen_words = ["alpha", "beta", "gamma", "delta", "x", "yy"]
+    rows += [
+        (100 + i, " ".join(gen_words[(i + j) % len(gen_words)] for j in range(n)) + extra)
+        for i, (n, extra) in enumerate(
+            [(0, ""), (1, ""), (5, ""), (11, ""), (13, " alpha beta" * 4), (30, " x" * 25)]
+        )
+    ]
+    rows += [(1000 + i, text) for i, text in CORPUS]
 
     def py_metrics(text):
         toks = [t for t in text.split(" ") if t]

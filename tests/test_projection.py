@@ -86,8 +86,10 @@ def test_projection_matches_numpy_and_is_narrow(spark):
 
 
 def test_np_projection_matches_catalyst_path(spark):
+    from pyspark.sql import functions as F
+
     from pubmed_central_semantic_search_spark.operators.projection import (
-        pca_project_np,
+        pca_project_udf,
     )
 
     model = pca_fit(_df(spark), "embedding", out_dim=3)
@@ -96,7 +98,9 @@ def test_np_projection_matches_catalyst_path(spark):
             r["vec_id"]: r["proj"]
             for r in pca_project(_df(spark), model, "embedding", whiten=whiten).collect()
         }
-        blas = pca_project_np(_df(spark), model, "embedding", whiten=whiten)
+        blas = _df(spark).withColumn(
+            "proj", pca_project_udf(model, whiten=whiten)(F.col("embedding"))
+        )
         plan = blas._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
         got = {r["vec_id"]: r["proj"] for r in blas.collect()}

@@ -8,12 +8,12 @@ from pubmed_central_semantic_search_spark.functions.vector import (
 )
 from pubmed_central_semantic_search_spark.operators.ann import brute_force_topk
 from pubmed_central_semantic_search_spark.operators.clustering import (
+    _ranked_centroids,
     nearest_centroid,
     seed_centroids,
 )
 from pubmed_central_semantic_search_spark.operators.topk import top_k
 from pubmed_central_semantic_search_spark.operators.vectorized import (
-    assign_clusters_np,
     multi_query_scores_udf,
 )
 from pubmed_central_semantic_search_spark.queries.dim768 import (
@@ -66,15 +66,18 @@ def test_np_topk_matches_hof_dim768(spark, sf_dir):
 def test_np_assignment_matches_jvm_literal_path(spark, sf_dir):
     emb = corpus_768(spark, sf_dir)
     cents = seed_centroids(emb, k=8)
+    # the fold arm called explicitly; nearest_centroid itself resolves to
+    # the BLAS arm at dim 768
+    fold = F.element_at(_ranked_centroids("embedding", cents), 1).getField("c")
     jvm = {
+        r["vec_id"]: r["cluster_id"]
+        for r in emb.select("vec_id", fold.alias("cluster_id")).collect()
+    }
+    blas = {
         r["vec_id"]: r["cluster_id"]
         for r in emb.select(
             "vec_id", nearest_centroid("embedding", cents).alias("cluster_id")
         ).collect()
-    }
-    blas = {
-        r["vec_id"]: r["cluster_id"]
-        for r in assign_clusters_np(emb, cents).collect()
     }
     assert jvm == blas
 
@@ -326,3 +329,90 @@ def test_blas_kernel_keeps_null_embedding_rows_like_hof(spark):
     assert ("A" in {t[1] for t in key(blas)}) and (
         "C" in {t[1] for t in key(blas)}
     )
+
+
+def test_assignment_and_projection_pick_kernel_by_width(spark, sf_dir, monkeypatch):
+    """nearest_centroid and pca_project route through resolve_kernel on
+    the width they already hold: below 256 the fold plans carry no Python
+    stage; at 768 each evaluates its Arrow kernel exactly ONCE — also in
+    the plan a Lloyd iteration collects (assign → posexplode →
+    groupBy(cluster, pos)). A filter Catalyst infers and pushes below the
+    kernel's projection would show up here as a second evaluation."""
+    from pubmed_central_semantic_search_spark import session
+    from pubmed_central_semantic_search_spark.operators.clustering import (
+        lloyd_kmeans,
+    )
+    from pubmed_central_semantic_search_spark.operators.projection import (
+        pca_fit,
+        pca_project,
+    )
+
+    lloyd_plans = []
+    collect = session.collect_bounded
+
+    def recording_collect(df, *args, **kwargs):
+        lloyd_plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return collect(df, *args, **kwargs)
+
+    monkeypatch.setattr(session, "collect_bounded", recording_collect)
+    for emb, dim, want in (
+        (load(spark, sf_dir, "embeddings"), 64, 0),
+        (corpus_768(spark, sf_dir), 768, 1),
+    ):
+        cents = seed_centroids(emb, k=4)
+        assigned = emb.withColumn("cluster_id", nearest_centroid("embedding", cents))
+        proj = pca_project(emb, pca_fit(emb, "embedding", out_dim=4), "embedding")
+        lloyd_plans.clear()
+        lloyd_kmeans(emb, k=4, n_iter=1, dim=dim)
+        assert len(lloyd_plans) == 1
+        for plan in (
+            assigned._jdf.queryExecution().executedPlan().toString(),
+            proj._jdf.queryExecution().executedPlan().toString(),
+            lloyd_plans[0],
+        ):
+            assert plan.count("ArrowEvalPython") == want, plan
+            assert "BatchEvalPython" not in plan
+
+
+def test_width_mismatch_raises_by_name_on_both_arms(spark):
+    """An off-width vector raises by name with both widths — PCA on its
+    fold arm (3-wide model) and BLAS arm (256-wide), and the BLAS
+    assignment arm at 256 — instead of zip_with null-padding to
+    ``[None]`` or numpy failing on a broadcast; NULL rows stay NULL."""
+    import pytest
+
+    from pubmed_central_semantic_search_spark.operators.projection import (
+        PCAModel,
+        pca_project,
+    )
+
+    def unit(dim, i):
+        return [1.0 if j == i else 0.0 for j in range(dim)]
+
+    schema = "id long, embedding array<double>"
+    for dim in (3, 256):
+        model = PCAModel(
+            mean=[0.0] * dim, components=[unit(dim, 0), unit(dim, 1)],
+            eigvals=[2.0, 1.0], n=10,
+        )
+        bad = spark.createDataFrame([(1, unit(dim - 1, 0))], schema)
+        with pytest.raises(
+            Exception, match=f"pca_project: vector length {dim - 1} != dim = {dim}"
+        ):
+            pca_project(bad, model).collect()
+        ok = spark.createDataFrame([(2, None), (3, unit(dim, 1))], schema)
+        got = {r["id"]: r["proj"] for r in pca_project(ok, model).collect()}
+        assert got == {2: None, 3: [0.0, 1.0]}
+
+    cents = [(0, unit(256, 0)), (1, unit(256, 1))]
+    bad = spark.createDataFrame([(1, unit(255, 0))], schema)
+    with pytest.raises(
+        Exception, match="nearest_centroid: vector length 255 != dim = 256"
+    ):
+        bad.select(nearest_centroid("embedding", cents)).collect()
+    ok = spark.createDataFrame([(2, None), (3, unit(256, 1))], schema)
+    got = {
+        r["id"]: r["c"]
+        for r in ok.select("id", nearest_centroid("embedding", cents).alias("c")).collect()
+    }
+    assert got == {2: None, 3: 1}

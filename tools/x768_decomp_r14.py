@@ -70,7 +70,7 @@ def main() -> int:
     # --- pca_fit ------------------------------------------------------------
     from pubmed_central_semantic_search_spark.operators.projection import (
         pca_fit,
-        pca_project_np,
+        pca_project,
         project_vec,
     )
 
@@ -87,7 +87,7 @@ def main() -> int:
     def proj_var():
         emb = corpus_768(spark, sf)
         model = _MODEL[0]
-        proj = pca_project_np(emb, model, "embedding", whiten=True)
+        proj = pca_project(emb, model, "embedding", whiten=True)
         (
             proj.select(F.posexplode("proj").alias("component", "value"))
             .groupBy("component")
@@ -97,7 +97,7 @@ def main() -> int:
         )
 
     _MODEL = [pca_fit(corpus_768(spark, sf), "embedding", out_dim=32)]
-    probe("pca_project_np_plus_var", proj_var)
+    probe("pca_project_plus_var", proj_var)
 
     # --- serving stack internals --------------------------------------------
     from pubmed_central_semantic_search_spark.operators.clustering import (
@@ -114,7 +114,7 @@ def main() -> int:
 
     def proj64():
         emb = corpus_768(spark, sf)
-        return pca_project_np(emb, model64, "embedding", out_col="pvec", whiten=True).select("vec_id", "pvec")
+        return pca_project(emb, model64, "embedding", out_col="pvec", whiten=True).select("vec_id", "pvec")
 
     probe("ss_project64", lambda: noop(proj64()))
 
