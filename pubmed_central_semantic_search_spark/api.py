@@ -33,11 +33,15 @@ from .operators.chunking import explode_chunks
 from .operators.pooling import mean_pool
 from .operators.render import render_hits
 from .operators.search import highlight_chunks, score_documents, semantic_search
-from .sources.catalog import BUCKET_COL, read_upsert_table, upsert_parquet
+from .sources.catalog import read_upsert_table, upsert_parquet
 from .sources.jsonl import read_jsonl_splits
 from .sources.pmc import fetch_articles, to_article_rows
 from .schemas import ARTICLES_SCHEMA
-from .session import local_df
+from .session import collect_bounded, local_df
+
+# an upload is batch-sized by the ingest contract: its article ids are
+# collected to the driver for the chunk-table lookup
+_MAX_UPLOAD_ARTICLES = 100_000
 
 
 class SemanticSearchEngine:
@@ -50,7 +54,7 @@ class SemanticSearchEngine:
         partition_buckets: int | None = None,
     ) -> None:
         """``partition_buckets`` switches both store tables to the
-        bucket-partitioned upsert layout (catalog._upsert_partitioned):
+        bucket-partitioned upsert layout (catalog.upsert_parquet):
         each upload rewrites only the ``pmod(xxhash64(article_id), n)``
         buckets its articles land in — the 100 TB ingest shape. Choose it
         at store creation and keep it (the layouts don't mix)."""
@@ -86,9 +90,9 @@ class SemanticSearchEngine:
         (``replace_group_col`` — a chunk-keyed upsert alone cannot delete,
         so re-uploading a shortened article would leave its removed
         paragraphs searchable); mean-pool from the WRITTEN chunks of just
-        the UPLOADED articles (broadcast semi-join on the batch's article
-        ids — re-pooling the whole corpus would make every small ingest an
-        O(corpus) job) → upsert doc vectors (E1 runs once, H1-keyed
+        the UPLOADED articles (one ``read_upsert_table`` batch lookup on the
+        batch's article ids — re-pooling the whole corpus would make every
+        small ingest an O(corpus) job) → upsert doc vectors (E1 runs once, H1-keyed
         idempotent overwrite)."""
         chunks = explode_chunks(articles).withColumn(
             "embedding", encode_column("paragraph", kind=self.encoder, dim=self.dim)
@@ -105,46 +109,21 @@ class SemanticSearchEngine:
             # consumption (the upsert consumes the batch plan 2-3×)
             persist_batch=True,
         )
-        batch_ids = articles.select(
-            F.col("article_id").cast("string").alias("article_id")
-        ).distinct()
-        if self.partition_buckets is not None:
-            # partition-pruned re-read: the filter is on the PARTITION
-            # column itself (a pmod-over-article_id expression would not
-            # prune — Catalyst cannot equate it with the directory key),
-            # so only the batch's bucket directories are scanned. The
-            # hash is catalog.bucket_expr — the ONE shared formula; the
-            # chunks table's bucket key is article_id by the engine's own
-            # construction (upsert replace_group_col above).
-            from .sources.catalog import bucket_expr
-
-            table = self.spark.read.parquet(self.chunks_path)
-            # Hash with the TABLE column's own type (the read_upsert_table
-            # discipline): the write side hashed the chunks frame's native
-            # article_id — xxhash64 of the same value at a different type
-            # differs, and a type-coerced hash here would prune to the
-            # WRONG bucket and silently drop the batch's doc vectors.
-            buckets = [
-                r[0]
-                for r in batch_ids.select(
-                    bucket_expr(
-                        [
-                            F.col("article_id").cast(
-                                table.schema["article_id"].dataType
-                            )
-                        ],
-                        self.partition_buckets,
-                    )
-                )
-                .distinct()
-                .collect()
-            ]
-            written = table.filter(
-                F.col(BUCKET_COL).isin(buckets)
-            ).drop(BUCKET_COL)
-        else:
-            written = self._read(self.chunks_path)
-        written = written.join(F.broadcast(batch_ids), "article_id")
+        # the doc vectors of just the uploaded articles, pooled from the
+        # WRITTEN chunks: one batch lookup (on the partitioned layout its
+        # file list is the batch's buckets only). The ids keep their
+        # native type — the lookup hashes them at the stored column type.
+        ids = [
+            r[0]
+            for r in collect_bounded(
+                articles.select("article_id").distinct(),
+                _MAX_UPLOAD_ARTICLES,
+                "upload_articles batch ids",
+            )
+        ]
+        written = read_upsert_table(
+            self.spark, self.chunks_path, key_equals={"article_id": ids}
+        )
         vecs = mean_pool(
             written, group=["article_id"], vec_col="embedding", dim=self.dim
         ).withColumn("doc_pk", doc_key("article_id"))

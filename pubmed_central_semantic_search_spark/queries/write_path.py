@@ -25,8 +25,11 @@ The query, three merge phases:
    doc_ids < 50, text suffixed ``-v3``. The odd doc_ids < 50 must be
    DELETED (their groups were re-uploaded without them); 50-199 stay.
 
-The driver-hashed arm runs the BUCKET-PARTITIONED layout only
-(``n_buckets=8`` — catalog._upsert_partitioned, the 100 TB shape), seeded
+Every write here commits through the table's versioned commit log
+(``sources/fsio.py``: immutable files, one ``_log/v{n}`` record per
+commit, published by an atomic put-if-absent); upserts and snapshots
+share it. The driver-hashed arm runs the BUCKET-PARTITIONED layout only
+(``n_buckets=8`` — catalog.upsert_parquet, the 100 TB shape), seeded
 through the sharded columnar sink's read-back so S4 stays inside the
 certified lineage. The FLAT layout's replay of the same three phases —
 and the flat≡partitioned parity check — lives in pytest
@@ -143,10 +146,10 @@ _LOOKUP_KEYS = (0, 1, 60, 199)
            CAST(NULL AS VARCHAR) AS source, CAST(NULL AS VARCHAR) AS lang,
            '2:1:2' AS content_key, CAST(NULL AS BIGINT) AS n_chars
     UNION ALL
-    -- 'gen' arm (round-13): the per-table write-generation stamp after
-    -- the partitioned table's three commits (create, UPSERT INTO,
-    -- group-replace) — every commit bumps _writestamp before its data
-    -- write, so the generation is exactly the commit count
+    -- 'gen' arm: the commit log's latest version after the partitioned
+    -- table's three commits (create, UPSERT INTO, group-replace) — every
+    -- commit publishes exactly one log record, so the version is
+    -- exactly the commit count
     SELECT 'gen' AS kind, CAST(-3 AS BIGINT) AS doc_id,
            CAST(NULL AS VARCHAR) AS source, CAST(NULL AS VARCHAR) AS lang,
            '3' AS content_key, CAST(NULL AS BIGINT) AS n_chars
@@ -170,9 +173,9 @@ _LOOKUP_KEYS = (0, 1, 60, 199)
     "VACUUM SNAPSHOTS KEEP 1 retires v1 after the CDC leg — the "
     "remaining-version set driver-hashed; the last two write-path "
     "lifecycle stages join upsert/snapshot/diff/stream in the certified "
-    "set; round-13 'gen' arm: the write-generation stamp reads exactly "
-    "the table's commit count — the bump-per-commit contract rebucket's "
-    "crash proofs ride on, driver-certified)",
+    "set; 'gen' arm: the commit log's latest version reads exactly the "
+    "table's commit count — one published record per commit, "
+    "driver-certified)",
 )
 def q62_write_path_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
@@ -297,22 +300,13 @@ def _roundtrip_merges(
     )
     _merge_phases(spark, docs_grp, part_path, n_buckets=8)
 
-    # 'gen' arm (round-13, verdict #1/#6): the write-generation stamp —
-    # every content-changing commit bumps `<table>/_writestamp` BEFORE
-    # its data write (the proof token rebucket's resume/swap/recovery
-    # checks ride on; see catalog._bump_table_stamp). The partitioned
-    # table above took EXACTLY three commits (create, UPSERT INTO,
-    # group-replace), so the generation reads 3 — one driver-side file
-    # read, deterministic, and the whole stamp protocol's bump-per-
-    # commit contract joins the certified set. Stamp-uuid freshness and
-    # the compaction-does-not-bump rule are pinned in pytest
-    # (test_write_stamp_bumps_per_commit_not_on_compaction).
-    from ..sources.catalog import _read_table_stamp
+    # 'gen' arm: the partitioned table above took EXACTLY three commits
+    # (create, UPSERT INTO, group-replace), and every commit publishes one
+    # record to the table's commit log, so its latest version reads 3 —
+    # one driver-side listing, deterministic.
+    from ..sources.catalog import log_versions
 
-    gen_rows = [(
-        "gen", -3, None, None,
-        str(int(_read_table_stamp(spark, part_path)["generation"])), None,
-    )]
+    gen_rows = [("gen", -3, None, None, str(log_versions(spark, part_path)[-1]), None)]
 
     # S9 — collection DDL round-trip on the same schema (create-if-absent,
     # exists-check, drop — the reference's collection lifecycle). Explicit
@@ -340,13 +334,13 @@ def _roundtrip_merges(
     part_out = project(read_upsert_table(spark, part_path), "table")
     part_rows = part_out.collect()  # materialize before the temp dir goes
     # S7 point-lookup arm (round-7 backfill): each probe key reads ONE
-    # bucket directory out of n_buckets. The table buckets on 'grp' (the
+    # bucket's files out of n_buckets. The table buckets on 'grp' (the
     # group-replace key takes bucket precedence), so the probe must COVER
     # the stored bucket key — {'grp': k // 10, 'doc_id': k}; a bare
     # doc_id probe full-scanned (round-8 ADVICE: the prune condition
     # demanded exact key_equals == bucket_cols and silently fell back).
-    # PartitionFilters pruning on this exact probe shape is plan-pinned
-    # in tests/test_partitioned_upsert.py; key 1 is a group-replace-
+    # Pruning on this exact probe shape is pinned by the scan's
+    # inputFiles() in tests/test_partitioned_upsert.py; key 1 is a group-replace-
     # deleted row and must come back EMPTY through the pruned path too.
     # Each probe is an independent tiny job — run them concurrently so
     # the arm pays ONE job-latency round, not four (the q53 threading
@@ -541,30 +535,15 @@ WRITE_BENCH_EXTRAS = {
 def upsert_rewrite_stats(spark: SparkSession, sf_dir: str) -> dict:
     """Deterministic scale evidence for the bench JSON: apply ONE
     single-article upsert to each layout's (module-cached) table and
-    report exactly which files changed. Flat must rewrite the whole
-    table; partitioned must rewrite one bucket directory — the
-    batch-sized-vs-table-sized fact, free of wall-clock noise.
-    Local-filesystem paths only (the bench host); returns {} elsewhere."""
+    report what its commit rewrote, read from the commit's log record.
+    Flat must rewrite the whole table; partitioned must rewrite only
+    the touched bucket — the batch-sized-vs-table-sized fact, free of
+    wall-clock noise."""
+    from ..sources.catalog import read_record
+
     out: dict = {}
     for layout, n_buckets in (("flat", None), ("part", 64)):
         path = _upsert_bench_table(spark, sf_dir, layout, n_buckets)
-        if not os.path.isdir(path):
-            return {}
-
-        def snap():
-            s = {}
-            for r, _d, fs in os.walk(path):
-                for f in fs:
-                    if f.endswith(".parquet"):
-                        full = os.path.join(r, f)
-                        st = os.stat(full)
-                        s[os.path.relpath(full, path)] = (
-                            st.st_size,
-                            st.st_mtime_ns,
-                        )
-            return s
-
-        before = snap()
         batch = _upsert_seed(spark, sf_dir).filter(
             F.col("doc_id") < 2
         ).withColumn("text", F.concat("text", F.lit("-u")))
@@ -572,14 +551,11 @@ def upsert_rewrite_stats(spark: SparkSession, sf_dir: str) -> dict:
             spark, batch, path, key_cols=["chunk_key"],
             replace_group_col="doc_id", n_buckets=n_buckets,
         )
-        after = snap()
-        rewritten = {
-            p: sz for p, (sz, mt) in after.items() if before.get(p) != (sz, mt)
-        }
+        record = read_record(spark, path)
         out[layout] = {
-            "table_files": len(after),
-            "table_bytes": sum(sz for sz, _ in after.values()),
-            "files_rewritten": len(rewritten),
-            "bytes_rewritten": sum(rewritten.values()),
+            "table_files": len(record["files"]),
+            "table_bytes": sum(f["bytes"] for f in record["files"]),
+            "files_rewritten": record["files_added"],
+            "bytes_rewritten": record["bytes_added"],
         }
     return out

@@ -1,57 +1,47 @@
-"""S8 — manifest-versioned snapshots (time travel on plain parquet),
-split out of ``catalog.py`` in round 12 (verdict #4; no behavior
-change). Every public name remains importable from ``catalog``.
+"""S8 — versioned snapshots (time travel on plain parquet) over the same
+commit log as the upsert tables (``fsio``). Every public name remains
+importable from ``catalog``.
 
 Reference: the reference snapshots its whole Qdrant store
-(``scripts/setup_local_database.py:19-20`` restores one); the lakehouse
-analog is manifest commits — see the design note at the top of this
-module's body."""
+(``scripts/setup_local_database.py:19-20`` restores one). Here every
+snapshot writes its data under ``data/v{n}-<uuid>/`` — a name no other
+commit can produce — and publishes ``_log/v{n}`` listing every file
+the version reads (``append``: the prior version's files plus the new
+ones; ``overwrite``: only the new ones). The atomic publish is the
+commit point: readers only ever see fully written versions, a reader
+pinned to version k is untouched by later writes (replaced files stay
+until VACUUM), and a crash before the publish leaves only unreferenced
+files. Concurrency contract: a snapshot reads the whole table, so two
+racing writers always conflict — the loser raises
+``ConcurrentUpsertError`` ("lost the commit race") by name and nothing
+of it is published; a crash leaves the last version readable."""
 
 from __future__ import annotations
+
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fsio import _hadoop_fs, _read_small_json_lines, _write_small_json_lines
+from .fsio import (
+    LOG_DIR,
+    _hadoop_fs,
+    commit,
+    log_versions,
+    place_files,
+    read_files,
+    read_record,
+    retire_record,
+    table_schema,
+)
 
-# --- S8: manifest-versioned snapshots (time travel on plain parquet) -------
-#
-# The reference snapshots its whole Qdrant store
-# (scripts/setup_local_database.py:19-20 restores one); the lakehouse
-# analog is manifest commits: every snapshot writes its data under
-# data/v{n}/ and then publishes _manifests/v{n}/ listing the data
-# directories composing that version. The manifest RENAME is the commit
-# point — readers only ever see fully-written versions, a reader pinned
-# to version k is untouched by later writes (old data dirs are retained
-# until vacuum), and a writer crash before the rename leaves no visible
-# version. All file ops go through the Hadoop FS API; manifests are read/
-# written with Spark's own json reader/writer, so the scheme works on any
-# supported filesystem.
-
-
-def _manifest_dir(table_dir: str) -> str:
-    return table_dir.rstrip("/") + "/_manifests"
+_FLAT = {"n_buckets": None, "bucket_cols": "", "bucket_col_types": [], "evolved": False}
 
 
 def snapshot_versions(spark: SparkSession, table_dir: str) -> list[int]:
-    """Committed versions, ascending. Staging dirs (crashed writers) and
-    foreign files are ignored."""
-    fs, hpath, jvm = _hadoop_fs(spark, _manifest_dir(table_dir))
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v") and name[1:].isdigit():
-            out.append(int(name[1:]))
-    return sorted(out)
-
-
-def _manifest_paths(spark: SparkSession, table_dir: str, version: int) -> list[str]:
-    rows = _read_small_json_lines(
-        spark, f"{_manifest_dir(table_dir)}/v{version}"
-    )
-    return sorted(r["path"] for r in rows)
+    """Committed (and not yet vacuumed) versions, ascending."""
+    return log_versions(spark, table_dir)
 
 
 def snapshot_write(
@@ -65,79 +55,28 @@ def snapshot_write(
     ``append`` — the new version sees all prior data plus this frame;
     ``overwrite`` — the new version sees only this frame. Either way the
     data of earlier versions is untouched (time travel until vacuum).
-
-    SINGLE-WRITER protocol (like bare Delta without a lock service) —
-    concurrent writers are OUT OF CONTRACT (the orphan reclaim below can
-    delete a peer's in-flight data dir), but the manifest commit DETECTS
-    the race best-effort rather than silently nesting: Hadoop ``rename``
-    into an existing destination DIRECTORY moves the source inside it
-    and returns true, so a bare rename-return check cannot catch a
-    racing peer — the commit checks the destination before renaming and
-    re-checks for the tell-tale nested staging dir after, raising on
-    either. A writer crash between data write and manifest rename leaves
-    an ORPHAN data/v{n} dir; since version numbers only exist once their
-    manifest commits, the next writer reclaims that number and deletes
-    the orphan before rewriting (crash recovery, same entry-time rule as
-    ``compact_parquet``). ``snapshot_vacuum`` likewise assumes no writer
-    is mid-commit while it runs."""
+    A concurrent writer that published first makes this call raise
+    ``ConcurrentUpsertError`` by name (module docstring)."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     # resolve through the catalog module at call time: the version read
-    # is this writer's race-window seam, and the commit-race test pins
-    # it by patching catalog.snapshot_versions (the split must not
-    # silently detach that seam)
+    # is this writer's race-window seam (the commit-race test pins it by
+    # patching catalog.snapshot_versions)
     from . import catalog as _catalog
 
+    started = time.perf_counter()
     versions = _catalog.snapshot_versions(spark, table_dir)
-    latest = versions[-1] if versions else 0
-    version = latest + 1
-    data_path = f"{table_dir.rstrip('/')}/data/v{version}"
-    fs0, dpath0, jvm0 = _hadoop_fs(spark, data_path)
-    # Re-check the manifest FRESH before touching data/v{n}: if a peer
-    # committed this version after our (stale) version read, its data dir
-    # is NOT an orphan — deleting it would destroy a committed snapshot.
-    if fs0.exists(
-        jvm0.org.apache.hadoop.fs.Path(f"{_manifest_dir(table_dir)}/v{version}")
-    ):
-        raise RuntimeError(
-            f"snapshot commit race: version {version} already exists"
-        )
-    if fs0.exists(dpath0):  # orphan of a crashed writer — no manifest ⇒ dead
-        fs0.delete(dpath0, True)
-    df.write.mode("errorifexists").parquet(data_path)
-    prior = _manifest_paths(spark, table_dir, latest) if (
-        mode == "append" and latest
-    ) else []
-    mdir = _manifest_dir(table_dir)
-    staging = f"{mdir}/.v{version}.staging"
-    _write_small_json_lines(
-        spark,
-        staging,
-        [{"version": version, "path": p} for p in prior + [data_path]],
-        "manifest.json",
+    base = read_record(spark, table_dir, versions[-1]) if versions else None
+    version = (versions[-1] if versions else 0) + 1
+    data = f"{table_dir.rstrip('/')}/data/v{version}-{uuid.uuid4().hex[:12]}"
+    df.write.parquet(data)
+    added = place_files(spark, table_dir, data, version, move=False)
+    removed = {f["path"] for f in base["files"]} if base and mode == "overwrite" else set()
+    record = commit(
+        spark, table_dir, base, "SNAPSHOT", added, removed, None,
+        table_schema(df), _FLAT, started,
     )
-    fs, _, jvm = _hadoop_fs(spark, mdir)
-    committed = jvm.org.apache.hadoop.fs.Path(f"{mdir}/v{version}")
-    if fs.exists(committed):  # a peer committed this version first
-        fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-        raise RuntimeError(
-            f"snapshot commit race: version {version} already exists"
-        )
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staging), committed):
-        raise RuntimeError(
-            f"snapshot commit race: version {version} already exists"
-        )
-    # rename into a directory that appeared between the check and the
-    # rename NESTS the staging dir and returns true — detect and raise
-    nested = jvm.org.apache.hadoop.fs.Path(
-        f"{mdir}/v{version}/.v{version}.staging"
-    )
-    if fs.exists(nested):
-        fs.delete(nested, True)
-        raise RuntimeError(
-            f"snapshot commit race: version {version} committed by a peer"
-        )
-    return version
+    return record["version"]
 
 
 def snapshot_read(
@@ -152,67 +91,77 @@ def snapshot_read(
         version = versions[-1]
     if version not in versions:
         raise ValueError(f"version {version} not in {versions}")
-    return spark.read.parquet(*_manifest_paths(spark, table_dir, version))
+    return read_files(spark, table_dir, read_record(spark, table_dir, version))
+
+
+def _intended_version(name: str) -> int | None:
+    """The version a commit's data was written for (``v{n}-…`` /
+    ``v{n}.…`` names), None for names no commit produces."""
+    digits = name[1:].split("-", 1)[0].split(".", 1)[0]
+    return int(digits) if name.startswith("v") and digits.isdigit() else None
 
 
 def snapshot_vacuum(
     spark: SparkSession, table_dir: str, keep_last: int = 1
 ) -> dict[str, int]:
-    """Retire history: keep the newest ``keep_last`` versions, delete
-    manifests and any data directory no retained version references.
-    Returns {versions_removed, data_dirs_removed}.
+    """VACUUM for any log table (snapshots and upsert tables): keep the
+    newest ``keep_last`` versions, retire the older records, and delete
+    every data directory or file no retained version references —
+    retired versions' data and crash leftovers (``data/`` dirs,
+    ``_staging/`` writes, unpublished files in the table or its bucket
+    dirs). Returns {versions_removed, data_dirs_removed} (the second
+    counts removed directories and files).
 
-    Safe against a writer mid-commit BY CONSTRUCTION, not by convention:
-    a data dir ``v{n}`` with ``n`` greater than the newest committed
-    manifest is either an in-flight commit (data written, manifest rename
-    pending) or a crashed-writer orphan that the next ``snapshot_write``
-    reclaims anyway — vacuum never touches those, so it cannot delete an
-    in-flight version out from under its writer."""
+    Records are retired FIRST, data second, so a crash between the two
+    leaves every listed version fully readable and a re-run finishes
+    the data phase. Data a commit wrote for a version newer than the
+    latest record is an in-flight first attempt and is never touched. A
+    writer that lost the race and is republishing its files while
+    VACUUM runs is not protected: run VACUUM where writes are
+    serialized (as the streaming sink's foreachBatch does)."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     from . import catalog as _catalog
 
     versions = snapshot_versions(spark, table_dir)
-    latest = versions[-1] if versions else 0
-    keep = set(versions[-keep_last:])
-    drop = [v for v in versions if v not in keep]
-    # manifests store paths exactly as snapshot_write built them
-    # ({table_dir}/data/v{n}), so the data-dir NAME identifies a dir
+    if not versions:
+        return {"versions_removed": 0, "data_dirs_removed": 0}
+    latest = versions[-1]
+    keep, drop = versions[-keep_last:], versions[:-keep_last]
     referenced = {
-        p.rstrip("/").rsplit("/", 1)[-1]
-        for v in keep
-        for p in _manifest_paths(spark, table_dir, v)
+        f["path"] for v in keep for f in read_record(spark, table_dir, v)["files"]
     }
-    fs, _, jvm = _hadoop_fs(spark, table_dir)
-    P = jvm.org.apache.hadoop.fs.Path
-    # Drop the retired MANIFESTS first, data second (twenty-first pass:
-    # the original order deleted data first, so a crash between the
-    # phases left a still-LISTED version whose parquet was gone — a
-    # reader got a raw FileNotFound mid-scan instead of "version not in
-    # {versions}"). With manifests-first, every crash state is clean:
-    # every listed version remains fully readable, and the now-
-    # unreferenced data dirs (names <= latest, in no retained manifest)
-    # are exactly what the data phase — or any re-run vacuum — deletes.
+    ref_dirs = {p.rsplit("/", 1)[0] for p in referenced if "/" in p}
     for v in drop:
-        fs.delete(P(f"{_manifest_dir(table_dir)}/v{v}"), True)
+        retire_record(spark, table_dir, v)
     if _catalog._TEST_MID_VACUUM_HOOK is not None:
         _catalog._TEST_MID_VACUUM_HOOK()  # test-only: crash between phases
-    removed_dirs = 0
-    data_root = P(table_dir.rstrip("/") + "/data")
-    if fs.exists(data_root):
-        for st in fs.listStatus(data_root):
-            name = st.getPath().getName()
-            if name in referenced:
+    fs, hroot, jvm = _hadoop_fs(spark, table_dir)
+    root = table_dir.rstrip("/")
+
+    def children(rel):
+        p = jvm.org.apache.hadoop.fs.Path(f"{root}/{rel}" if rel else root)
+        return [(st.getPath(), st.isDirectory()) for st in fs.listStatus(p)] if fs.exists(p) else []
+
+    removed = 0
+    for top, is_dir in children(""):
+        name = top.getName()
+        if name in ("data", "_staging"):
+            units = [(f"{name}/{p.getName()}", p, True) for p, d in children(name) if d]
+        elif name == LOG_DIR or name.startswith("."):
+            continue
+        elif is_dir:
+            units = [(f"{name}/{p.getName()}", p, False) for p, d in children(name) if not d]
+        else:
+            units = [(name, top, False)]
+        for rel, p, unit_is_dir in units:
+            n = _intended_version(p.getName())
+            live = rel in ref_dirs if unit_is_dir else rel in referenced
+            if n is None or n > latest or live:
                 continue
-            if (
-                name.startswith("v")
-                and name[1:].isdigit()
-                and int(name[1:]) > latest
-            ):
-                continue  # in-flight writer or reclaimable orphan — skip
-            fs.delete(st.getPath(), True)
-            removed_dirs += 1
-    return {"versions_removed": len(drop), "data_dirs_removed": removed_dirs}
+            fs.delete(p, True)
+            removed += 1
+    return {"versions_removed": len(drop), "data_dirs_removed": removed}
 
 
 def snapshot_diff(
@@ -231,7 +180,7 @@ def snapshot_diff(
     sorted-name order, computed per side BEFORE the join — the full-outer
     join then carries only (key, fingerprint), never the payloads, so the
     shuffle is key-sized regardless of row width. Versions are immutable
-    until vacuum (manifest pinning), so the diff is reproducible.
+    until vacuum, so the diff is reproducible.
 
     Keys must be UNIQUE per snapshot (the upsert-table invariant this
     catalog maintains): a duplicated key would fan out through the
@@ -255,4 +204,3 @@ def snapshot_diff(
         .when(F.col("_fp_new").isNull(), F.lit("deleted"))
         .when(F.col("_fp_old") != F.col("_fp_new"), F.lit("changed")),
     ).filter(F.col("change").isNotNull()).select(*key_cols, "change")
-

@@ -128,8 +128,8 @@ def register_sql_surface(spark: SparkSession, sf_dir: str) -> None:
 # view (so follow-up statements are plain SQL) AND return its DataFrame.
 # LOOKUP values parse as Python literals (ints/floats/quoted strings) and
 # go through read_upsert_table's key_equals — a lookup covering the
-# stored bucket key prunes to the key's bucket directory, exactly like
-# the Python path (plan-pinned in tests/test_sql_surface.py).
+# stored bucket key reads only the key's bucket files, exactly like the
+# Python path (pinned by inputFiles in tests/test_sql_surface.py).
 
 import ast as _ast
 import re as _re

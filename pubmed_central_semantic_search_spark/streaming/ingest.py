@@ -79,7 +79,7 @@ def start_ingest(
     operations.
 
     ``partition_buckets`` switches both sinks to the bucket-partitioned
-    upsert (catalog._upsert_partitioned): each micro-batch then reads
+    upsert (catalog.upsert_parquet(n_buckets=...)): each micro-batch then reads
     and rewrites only the article-id buckets it touches instead of the
     whole table — the difference between O(batch) and O(table) per
     trigger, i.e. the 100 TB streaming-ingest shape. Chunks bucket on
@@ -596,14 +596,15 @@ def start_stream_upsert(
     without a transactional ledger. This is the sink tier the streaming
     CMS fold couldn't have for free (its fold is additive, not
     idempotent; it documents the tradeoff — here the merge law does the
-    work). Crash-mid-write safety comes from upsert_parquet's staging
-    swap + explicit existence check. Drain ≡ batch-upsert parity and
+    work). Crash-mid-write safety comes from upsert_parquet's commit log:
+    a crash before the publish leaves the last version intact, and the
+    replayed batch converges. Drain ≡ batch-upsert parity and
     double-apply idempotence are test-pinned.
 
     ``partition_buckets`` selects the bucket-partitioned layout — each
     micro-batch merges only the key buckets it touches (O(batch) per
     trigger instead of O(table); crash-replay convergence argument in
-    catalog._upsert_partitioned). ``allow_schema_evolution`` passes
+    the catalog module docstring). ``allow_schema_evolution`` passes
     through to the merge (table-sticky once stamped — see
     upsert_parquet); a structured stream's own schema is fixed at start,
     so this matters when the SINK table predates the stream with a

@@ -138,10 +138,9 @@ def test_demoted_parity_tests_import_exported_cte_constants():
 def test_split_modules_late_bound_catalog_names_exist():
     """Round-13 (verdict #4, the nineteenth review pass): the round-12
     module split relies on LATE BINDING — split modules resolve catalog
-    attributes at call time (`_catalog.<name>` for the _TEST_* hooks and
-    snapshot_versions; `from .catalog import (...)` inside function
-    bodies for the layout/stamp helpers) so monkeypatch seams on the
-    catalog module keep working. The split already silently detached one
+    attributes at call time (`_catalog.<name>` for the vacuum test hook
+    and snapshot_versions; `from .catalog import (...)` inside function
+    bodies) so monkeypatch seams on the catalog module keep working. The split already silently detached one
     seam once (caught only by the full suite). This pins the contract
     mechanically: every name a split module late-binds must exist on
     catalog, so a rename fails THIS test immediately instead of a
@@ -152,13 +151,11 @@ def test_split_modules_late_bound_catalog_names_exist():
     from pubmed_central_semantic_search_spark.sources import (
         catalog,
         fsio,
-        locks,
-        rebucket,
         snapshots,
     )
 
     found_any = False
-    for mod in (locks, rebucket, snapshots, fsio):
+    for mod in (snapshots, fsio):
         src = inspect.getsource(mod)
         names = set(re.findall(r"_catalog\.([A-Za-z_][A-Za-z0-9_]*)", src))
         for block in re.findall(

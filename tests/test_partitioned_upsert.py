@@ -1,6 +1,6 @@
-"""Bucket-partitioned keyed upsert (catalog._upsert_partitioned) — the
-100 TB S7 shape: merge cost is batch-sized, untouched partitions are
-never read or rewritten.
+"""Bucket-partitioned keyed upsert (catalog.upsert_parquet(n_buckets=...))
+— the 100 TB S7 shape: merge cost is batch-sized, untouched buckets are
+never read or rewritten — and the commit log every write publishes to.
 
 Reference semantics being preserved: the content-keyed idempotent
 overwrite of qdrant.py:137-139,149-175 — same merge law as the flat
@@ -43,9 +43,28 @@ def _file_snapshot(path):
     return snap
 
 
+def _scanned(df, path):
+    """Table-relative paths of the files a frame's scan reads."""
+    root = path.rstrip("/") + "/"
+    return {f.split(root, 1)[1] for f in df.inputFiles()}
+
+
+def _live_files(spark, path, buckets=None):
+    """Table-relative paths of the latest version's live files (only the
+    given buckets' when set)."""
+    from pubmed_central_semantic_search_spark.sources.catalog import read_record
+
+    return {
+        f["path"] for f in read_record(spark, path)["files"]
+        if buckets is None or f["bucket"] in buckets
+    }
+
+
 def _bucket_of(spark, value, n):
-    return spark.createDataFrame([(value,)], "k string").select(
-        F.pmod(F.xxhash64("k"), F.lit(n))
+    # a foldable projection over VALUES: Spark evaluates it on the driver,
+    # so the per-key lookups the concurrency tests make launch no job
+    return spark.sql("VALUES (1)").select(
+        F.pmod(F.xxhash64(F.lit(value).cast("string")), F.lit(n))
     ).collect()[0][0]
 
 
@@ -101,9 +120,14 @@ def test_untouched_partitions_are_byte_identical(spark, tmp_path):
 
 
 def test_existing_side_read_is_partition_pruned(spark, tmp_path):
-    """The existing-side read filters on the PARTITION column, so the scan
-    plan prunes to the touched directories (PartitionFilters) — pinned on
-    the same read expression _upsert_partitioned builds."""
+    """The existing-side read takes only the touched buckets' files from
+    the log record, so the scan reads exactly those buckets' live files
+    (inputFiles) — pinned on the same read call upsert_parquet makes."""
+    from pubmed_central_semantic_search_spark.sources.catalog import (
+        read_files,
+        read_record,
+    )
+
     path = str(tmp_path / "t")
     upsert_parquet(
         spark,
@@ -112,20 +136,10 @@ def test_existing_side_read_is_partition_pruned(spark, tmp_path):
         key_cols=["article_id"],
         n_buckets=8,
     )
-    pruned = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin([0, 1]))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and BUCKET_COL in plan, plan
-    n_parts = (
-        spark.read.parquet(path)
-        .filter(F.col(BUCKET_COL).isin([0, 1]))
-        .select(F.input_file_name())
-        .distinct()
-        .count()
-    )
-    all_parts = (
-        spark.read.parquet(path).select(F.input_file_name()).distinct().count()
-    )
-    assert n_parts < all_parts  # strictly fewer files actually scanned
+    pruned = read_files(spark, path, read_record(spark, path), [0, 1])
+    want = _live_files(spark, path, [0, 1])
+    assert want and _scanned(pruned, path) == want
+    assert len(want) < len(_live_files(spark, path))  # strictly fewer files
 
 
 def test_partitioned_group_replace_deletes_absent_members(spark, tmp_path):
@@ -393,19 +407,19 @@ def test_layout_is_self_describing_and_validated(spark, tmp_path):
 
 
 def test_pre_metadata_table_is_accepted_and_stamped(spark, tmp_path):
-    import shutil
+    from pubmed_central_semantic_search_spark.sources.catalog import bucket_expr
 
     path = str(tmp_path / "t")
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v1")]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    shutil.rmtree(os.path.join(path, "_layout"))  # simulate a pre-metadata table
+    # a table written before the commit log: plain hive-partitioned files
+    _rows(spark, [("PMC1", "v1")]).withColumn(
+        BUCKET_COL, bucket_expr(["article_id"], 4)
+    ).write.partitionBy(BUCKET_COL).parquet(path)
+    assert not os.path.exists(os.path.join(path, "_log"))
     upsert_parquet(
         spark, _rows(spark, [("PMC2", "v1")]), path,
         key_cols=["article_id"], n_buckets=4,
     )
-    assert os.path.isdir(os.path.join(path, "_layout"))  # re-stamped
+    assert os.path.isdir(os.path.join(path, "_log"))  # adopted
     assert len(_table_state(spark, path)) == 2
     # and from now on a mismatch is caught again
     import pytest as _pt
@@ -419,7 +433,7 @@ def test_pre_metadata_table_is_accepted_and_stamped(spark, tmp_path):
 
 def test_point_lookup_read_prunes_to_one_bucket(spark, tmp_path):
     """read_upsert_table(key_equals=...) over the stored bucket key scans
-    ONE partition directory (PartitionFilters) and still returns exactly
+    ONE bucket's live files (inputFiles) and still returns exactly
     the matching rows; literals are cast to the column type before
     hashing (an int-vs-long hash mismatch would prune to the WRONG
     bucket and return nothing)."""
@@ -429,25 +443,14 @@ def test_point_lookup_read_prunes_to_one_bucket(spark, tmp_path):
     )
     upsert_parquet(spark, df, path, key_cols=["k"], n_buckets=8)
     out = read_upsert_table(spark, path, key_equals={"k": 7})  # int literal
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and BUCKET_COL in plan, plan
+    b = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(7).cast("long")), F.lit(8))
+    ).collect()[0][0]
+    assert _scanned(out, path) == _live_files(spark, path, [b])
     rows = out.collect()
     assert [(r.k, r.payload) for r in rows] == [(7, "v7")]
-    n_files = (
-        read_upsert_table(spark, path, key_equals={"k": 7})
-        .count()  # force execution; file pruning checked via the input
-    )
     # strictly fewer files scanned than the whole table
-    from pyspark.sql import functions as F
-
-    scanned = (
-        spark.read.parquet(path)
-        .filter(F.col(BUCKET_COL) == spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(7).cast("long")), F.lit(8))).collect()[0][0])
-        .select(F.input_file_name()).distinct().count()
-    )
-    total = spark.read.parquet(path).select(F.input_file_name()).distinct().count()
-    assert scanned < total
+    assert len(_scanned(out, path)) < len(_live_files(spark, path))
     # non-bucket-key filters still work (no pruning, just correctness)
     assert read_upsert_table(spark, path, key_equals={"payload": "v9"}).collect()[0].k == 9
 
@@ -579,59 +582,6 @@ def test_flat_layout_merge_phases_match_partitioned(spark, tmp_path):
     assert 1 not in by_id
 
 
-def test_layout_record_commits_before_first_data_write(spark, tmp_path):
-    """The creation crash window (round-5 advice): the _layout record now
-    commits BEFORE the first data write, so the only possible orphan is a
-    stamped-but-dataless directory — harmless and re-used. A later upsert
-    into that orphan creates the table with the STORED key and validates
-    against it, instead of silently stamping its own."""
-    import pytest as _pt
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_upsert_layout,
-        _write_upsert_layout,
-    )
-
-    path = str(tmp_path / "t")
-    os.makedirs(path)
-    # simulate a create that crashed between stamp and data write:
-    # group-bucketed layout, no data
-    _write_upsert_layout(spark, path, 4, ["grp"])
-
-    rows = spark.createDataFrame(
-        [("PMC1", "g0", "v1"), ("PMC2", "g0", "v1")],
-        "article_id string, grp string, payload string",
-    )
-    # a mismatched bucket count against the orphaned stamp still raises
-    with _pt.raises(ValueError, match="layout mismatch"):
-        upsert_parquet(spark, rows, path, key_cols=["article_id"], n_buckets=8)
-    # a keyed-only retry re-uses the STORED group key (grp rides in the
-    # batch) rather than stamping article_id
-    upsert_parquet(spark, rows, path, key_cols=["article_id"], n_buckets=4)
-    layout = _read_upsert_layout(spark, path)
-    assert layout["bucket_cols"] == "grp" and int(layout["n_buckets"]) == 4
-    got = {
-        r["article_id"]: r["payload"]
-        for r in read_upsert_table(spark, path).collect()
-    }
-    assert got == {"PMC1": "v1", "PMC2": "v1"}
-    # and the merge path still works on the recovered table
-    upsert_parquet(
-        spark,
-        spark.createDataFrame(
-            [("PMC2", "g0", "v2")], "article_id string, grp string, payload string"
-        ),
-        path,
-        key_cols=["article_id"],
-        n_buckets=4,
-    )
-    got = {
-        r["article_id"]: r["payload"]
-        for r in read_upsert_table(spark, path).collect()
-    }
-    assert got == {"PMC1": "v1", "PMC2": "v2"}
-
-
 def test_engine_partitioned_nonstring_article_id_pools_all_docs(spark, tmp_path):
     """Round-5 advice: the partition-pruned re-read used to hash
     article_id AFTER a .cast('string') while the write side hashed the
@@ -662,11 +612,11 @@ def test_engine_partitioned_nonstring_article_id_pools_all_docs(spark, tmp_path)
 
 def test_concurrent_disjoint_bucket_upserts(spark, tmp_path):
     """The concurrency contract (round-5 verdict #5): two writers
-    upserting DISJOINT bucket sets concurrently are safe — each prunes
-    its read to its own partitions, stages under its own job dir, and
-    dynamic-overwrites only its own directories. Both batches must land
-    exactly; untouched buckets stay byte-identical; the _layout record
-    survives."""
+    upserting DISJOINT bucket sets concurrently are safe — each reads
+    only its own buckets' files and writes new files; whichever loses
+    the publish race republishes its files at the next version. Both
+    batches must land exactly; untouched buckets stay byte-identical;
+    the layout survives."""
     import threading
 
     from pubmed_central_semantic_search_spark.sources.catalog import (
@@ -732,14 +682,10 @@ def test_concurrent_disjoint_bucket_upserts(spark, tmp_path):
 
 
 def test_compact_partitioned_leaves(spark, tmp_path):
-    """Leaf-level compaction for hive layouts: APPENDING partitioned
-    writers (the streaming IVF sink's shape — one file per touched leaf
-    per micro-batch) accrete small files; compaction rewrites only the
-    grown leaves (staging swap per leaf), leaves metadata and
-    single-file leaves untouched, and the table reads back identical.
-    The self-managed upsert doesn't accrete (dynamic overwrite rewrites
-    touched buckets to one file) but its buckets can outgrow the target
-    file size — same tool, split direction."""
+    """Leaf-level compaction of an upsert table: buckets that accreted
+    files (here: an upsert written under a per-file row cap) are
+    rewritten to one file each in ONE commit, single-file buckets stay
+    untouched, the layout survives, and the table reads back identical."""
     import pytest as _pt
 
     from pubmed_central_semantic_search_spark.sources.catalog import (
@@ -756,17 +702,16 @@ def test_compact_partitioned_leaves(spark, tmp_path):
         key_cols=["article_id"],
         n_buckets=4,
     )
-    # accrete: an appending co-writer (the IVF-sink shape) adds files
-    # into existing bucket directories without rewriting them
-    from pubmed_central_semantic_search_spark.sources.catalog import bucket_expr
-
-    extra = _rows(spark, [(f"NEW{i}", "a1") for i in range(8)]).withColumn(
-        BUCKET_COL, bucket_expr(["article_id"], 4)
-    )
-    for _ in range(2):
-        extra.repartition(F.col(BUCKET_COL)).write.mode("append").partitionBy(
-            BUCKET_COL
-        ).parquet(path)
+    # accrete: an upsert written under a small per-file row cap leaves
+    # several files in every bucket it touches
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", 3)
+    try:
+        upsert_parquet(
+            spark, _rows(spark, [(f"NEW{i}", "a1") for i in range(24)]),
+            path, key_cols=["article_id"], n_buckets=4,
+        )
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
 
     before_state = _table_state(spark, path)
     before_files = len(_file_snapshot(path))
@@ -799,224 +744,6 @@ def test_compact_partitioned_leaves(spark, tmp_path):
         compact_partitioned_leaves(spark, flat)
     with _pt.raises(ValueError, match="hive-partitioned"):
         compact_parquet(spark, path)
-
-
-def test_leaf_compaction_staging_is_hidden_and_crash_recoverable(spark, tmp_path):
-    """Round-6 self-review find: staging a leaf compaction BESIDE the
-    leaf (`_bucket=3.compact.staging`) parses as a partition directory —
-    it injected phantom rows AND flipped the partition column's inferred
-    type from int to string. Leaf compaction now stages under
-    dot-prefixed table-level names (hidden from discovery); a simulated
-    crash leftover is (a) invisible to readers and (b) recovered by the
-    next compaction run."""
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        bucket_expr,
-        compact_partitioned_leaves,
-    )
-
-    path = str(tmp_path / "t")
-    upsert_parquet(
-        spark,
-        _rows(spark, [(f"PMC{i}", "v0") for i in range(40)]),
-        path,
-        key_cols=["article_id"],
-        n_buckets=4,
-    )
-    extra = _rows(spark, [(f"NEW{i}", "a") for i in range(8)]).withColumn(
-        BUCKET_COL, bucket_expr(["article_id"], 4)
-    )
-    extra.repartition(F.col(BUCKET_COL)).write.mode("append").partitionBy(
-        BUCKET_COL
-    ).parquet(path)
-    state = _table_state(spark, path)
-
-    # simulate a compaction that crashed between its two renames: the
-    # leaf moved to the backup, the compacted output is still in staging
-    leaf = next(
-        d for d in os.listdir(path) if d.startswith(f"{BUCKET_COL}=")
-    )
-    import shutil
-
-    shutil.move(os.path.join(path, leaf), os.path.join(path, f".{leaf}.compact.old"))
-    os.makedirs(os.path.join(path, f".{leaf}.compact.staging"), exist_ok=True)
-
-    # the crash leftovers are INVISIBLE to a reader (dot-prefixed): the
-    # partition column still reads as its real type, no phantom rows
-    df = spark.read.parquet(path)
-    assert dict(df.dtypes)[BUCKET_COL] in ("int", "bigint"), df.dtypes
-    missing_rows = len(state) - df.count()
-    assert missing_rows > 0  # that leaf's rows are parked in the backup
-
-    # the next compaction run recovers the leaf, then compacts normally
-    compact_partitioned_leaves(spark, path, max_files_per_leaf=1)
-    assert _table_state(spark, path) == state
-    assert not any(".compact." in d for d in os.listdir(path)), os.listdir(path)
-    # and at no point does a key=value-named staging dir exist at the top
-    assert not any(
-        d.startswith(f"{BUCKET_COL}=") and ".compact" in d
-        for d in os.listdir(path)
-    )
-
-
-def test_upsert_restores_parked_leaf_before_merging(spark, tmp_path):
-    """Twenty-first pass — the round-11 rebucket bug class, found live
-    in the COMPACTION path: a leaf compaction that crashed between its
-    two renames parks the leaf's rows in `.{leaf}.compact.old`. An
-    upsert touching that bucket (after TTL-breaking the dead lock) used
-    to read the leaf as EMPTY, merge its batch against nothing, and the
-    next compaction pass deleted the backup — the only copy of the old
-    rows. The writer now reconciles the leftovers UNDER its bucket
-    locks before reading: the parked rows are restored and merged."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        bucket_expr,
-    )
-
-    path = str(tmp_path / "t")
-    upsert_parquet(
-        spark,
-        _rows(spark, [(f"PMC{i}", "v0") for i in range(40)]),
-        path,
-        key_cols=["article_id"],
-        n_buckets=4,
-    )
-    state = _table_state(spark, path)
-    # park the bucket that holds PMC1 — the bucket the next merge touches
-    bval = (
-        _rows(spark, [("PMC1", "x")])
-        .select(bucket_expr(["article_id"], 4))
-        .head()[0]
-    )
-    leaf = f"{BUCKET_COL}={bval}"
-    shutil.move(
-        os.path.join(path, leaf), os.path.join(path, f".{leaf}.compact.old")
-    )
-    assert spark.read.parquet(path).count() < len(state)  # rows parked
-
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v1")]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    expected = dict(state)
-    expected["PMC1"] = "v1"
-    # EVERY parked row survived the merge; the backup is adjudicated away
-    assert _table_state(spark, path) == expected
-    assert not os.path.exists(os.path.join(path, f".{leaf}.compact.old"))
-
-
-def test_upsert_restores_parked_leaf_wide_batch_listing_path(
-    spark, tmp_path
-):
-    """The listing arm of the writer-side reconcile (touched > 32
-    buckets takes ONE root listing instead of per-leaf probes): a wide
-    merge over a 64-bucket table with one leaf parked must restore it
-    through that branch too."""
-    import shutil
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(400)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, "v0") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=64,
-    )
-    state = _table_state(spark, path)
-    leaf = next(
-        d for d in os.listdir(path) if d.startswith(f"{BUCKET_COL}=")
-    )
-    shutil.move(
-        os.path.join(path, leaf), os.path.join(path, f".{leaf}.compact.old")
-    )
-    # the parked keys stay OUT of the new batch — their survival proves
-    # the restore — but the batch must still TOUCH the parked bucket
-    # (writers only adjudicate the leaves they hold locks on), so add
-    # fresh keys that hash into it
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        bucket_expr,
-    )
-
-    parked = {
-        r["article_id"]
-        for r in spark.read.parquet(
-            os.path.join(path, f".{leaf}.compact.old")
-        ).collect()
-    }
-    assert parked
-    bval = int(leaf.split("=", 1)[1])
-    cands = _rows(spark, [(f"NEW{i}", "v1") for i in range(300)])
-    hitters = [
-        r["article_id"]
-        for r in cands.withColumn("b", bucket_expr(["article_id"], 64))
-        .filter(F.col("b") == bval)
-        .limit(2)
-        .collect()
-    ]
-    assert hitters  # 300 candidates over 64 buckets always hit one
-    batch = [k for k in keys if k not in parked] + hitters
-    # ~394 old keys over the other 63 buckets + the hitters: > 32 touched
-    upsert_parquet(
-        spark, _rows(spark, [(k, "v1") for k in batch]), path,
-        key_cols=["article_id"], n_buckets=64,
-    )
-    expected = {k: ("v0" if k in parked else "v1") for k in keys}
-    expected.update({k: "v1" for k in hitters})
-    assert _table_state(spark, path) == expected
-    assert len(state) == len(keys)
-    assert not os.path.exists(os.path.join(path, f".{leaf}.compact.old"))
-
-
-def test_rebucket_restores_parked_leaf_before_migrating(spark, tmp_path):
-    """Twenty-first pass, rebucket leg: a migration reading the table
-    while a leaf sits parked in its crashed-compaction backup would
-    install a staged table MISSING that bucket's rows (and the swap
-    eventually deletes the pre-rebucket copy). Rebucket now reconciles
-    compaction leftovers after its writer drain, under the table lock."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import rebucket
-
-    path = str(tmp_path / "t")
-    upsert_parquet(
-        spark,
-        _rows(spark, [(f"PMC{i}", "v0") for i in range(40)]),
-        path,
-        key_cols=["article_id"],
-        n_buckets=4,
-    )
-    state = _table_state(spark, path)
-    leaf = next(
-        d for d in os.listdir(path) if d.startswith(f"{BUCKET_COL}=")
-    )
-    shutil.move(
-        os.path.join(path, leaf), os.path.join(path, f".{leaf}.compact.old")
-    )
-    stats = rebucket(spark, path, 8)
-    assert stats["rows"] == len(state)
-    assert _table_state(spark, path) == state
-    assert not any(".compact." in d for d in os.listdir(os.path.dirname(path)))
-
-
-def test_flat_upsert_restores_parked_table_before_merging(spark, tmp_path):
-    """Twenty-first pass, flat leg: a flat compact_parquet crash parks
-    the WHOLE table in `<path>.compact.old`; the flat upsert used to
-    read 'first write' and replace the table with new-rows-only. The
-    flat writer now reconciles under its table lock first."""
-    import shutil
-
-    path = str(tmp_path / "t")
-    upsert_parquet(
-        spark, _rows(spark, [(f"PMC{i}", "v0") for i in range(20)]), path,
-        key_cols=["article_id"],
-    )
-    state = _table_state(spark, path)
-    shutil.move(path, path + ".compact.old")
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v1")]), path, key_cols=["article_id"]
-    )
-    expected = dict(state)
-    expected["PMC1"] = "v1"
-    assert _table_state(spark, path) == expected
-    assert not os.path.exists(path + ".compact.old")
 
 
 def test_schema_evolution_both_layouts(spark, tmp_path):
@@ -1077,9 +804,9 @@ def test_evolution_review_fixes(spark, tmp_path):
     being silently null-keyed under allowMissingColumns; (2) evolution
     is TABLE-STICKY — a later merge that forgets the flag still reads
     merged footers and cannot strip the evolved column; (3) a flat
-    upsert into a _bucket-bearing table without a _layout record raises
+    upsert into a _bucket-bearing table without a commit log raises
     instead of silently flattening the layout; (4) read_upsert_table
-    auto-merges footers for stamped-evolved tables."""
+    returns the evolved (union) schema without being asked."""
     import pytest as _pt
 
     # (1) missing key column — named error, both layouts, evolved or not
@@ -1115,14 +842,12 @@ def test_evolution_review_fixes(spark, tmp_path):
     assert rows["PMC2"]["quality"] is None and len(rows) == 12
 
     # (3) pre-metadata partitioned table + flat evolved call — named error
-    import shutil
+    from pubmed_central_semantic_search_spark.sources.catalog import bucket_expr
 
     pm = str(tmp_path / "premeta")
-    upsert_parquet(
-        spark, _rows(spark, [("a", "b")]), pm, key_cols=["article_id"],
-        n_buckets=4,
-    )
-    shutil.rmtree(os.path.join(pm, "_layout"))
+    _rows(spark, [("a", "b")]).withColumn(
+        BUCKET_COL, bucket_expr(["article_id"], 4)
+    ).write.partitionBy(BUCKET_COL).parquet(pm)
     with _pt.raises(ValueError, match="bucket-partitioned"):
         upsert_parquet(
             spark, _rows(spark, [("a", "c")]), pm, key_cols=["article_id"],
@@ -1170,7 +895,7 @@ def test_compact_partitioned_leaves_concurrent_with_crash_leftover(spark, tmp_pa
 
 def test_batch_point_lookup_prunes_to_key_union(spark, tmp_path):
     """Round-7 batch lookup: key_equals with a LIST prunes the scan to
-    the union of the keys' bucket directories (PartitionFilters) and
+    the union of the keys' buckets' live files (inputFiles) and
     returns exactly those keys' rows — incl. absent keys returning
     nothing."""
     from pubmed_central_semantic_search_spark.sources.catalog import (
@@ -1181,23 +906,20 @@ def test_batch_point_lookup_prunes_to_key_union(spark, tmp_path):
     path = str(tmp_path / "t")
     df = spark.range(2000).selectExpr("id AS k", "CAST(id * 3 AS STRING) AS v")
     upsert_parquet(spark, df, path, key_cols=["k"], n_buckets=16)
-    got = read_upsert_table(spark, path, key_equals={"k": [5, 77, 900, 999999]})
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "_bucket" in plan
+    keys = [5, 77, 900, 999999]
+    got = read_upsert_table(spark, path, key_equals={"k": keys})
+    from pubmed_central_semantic_search_spark.sources.catalog import bucket_expr
+
+    probed = {
+        spark.range(1).select(bucket_expr([F.lit(k).cast("bigint")], 16)).collect()[0][0]
+        for k in keys
+    }
+    assert _scanned(got, path) == _live_files(spark, path, probed)
     rows = sorted((r["k"], r["v"]) for r in got.collect())
     assert rows == [(5, "15"), (77, "231"), (900, "2700")]
     # single-value form unchanged
     one = read_upsert_table(spark, path, key_equals={"k": 5}).collect()
     assert [(r["k"], r["v"]) for r in one] == [(5, "15")]
-
-
-def _bucket_partition_filter(df) -> str:
-    """The PartitionFilters clause of the scan, '' when absent/empty."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    marker = "PartitionFilters: ["
-    if marker not in plan:
-        return ""
-    return plan.split(marker, 1)[1].split("]", 1)[0]
 
 
 def test_superset_probe_prunes_group_bucketed_table(spark, tmp_path):
@@ -1223,14 +945,17 @@ def test_superset_probe_prunes_group_bucketed_table(spark, tmp_path):
     out = read_upsert_table(
         spark, path, key_equals={"grp": 6, "doc_id": 63}
     )
-    assert "_bucket" in _bucket_partition_filter(out), (
+    from pubmed_central_semantic_search_spark.sources.catalog import bucket_expr
+
+    b = spark.range(1).select(bucket_expr([F.lit(6).cast("bigint")], 8)).collect()[0][0]
+    assert _scanned(out, path) == _live_files(spark, path, [b]), (
         "superset probe did not prune on the stored bucket key"
     )
     assert [(r.doc_id, r.payload) for r in out.collect()] == [(63, "v-63")]
     # bare-doc_id probe cannot prune (doc_id is not the bucket key) but
     # stays a correct ordinary filter
     bare = read_upsert_table(spark, path, key_equals={"doc_id": 63})
-    assert "_bucket" not in _bucket_partition_filter(bare)
+    assert _scanned(bare, path) == _live_files(spark, path)
     assert [r.doc_id for r in bare.collect()] == [63]
 
 
@@ -1264,10 +989,9 @@ def test_point_lookup_lists_only_probed_bucket_dirs(spark, tmp_path):
     """Round-9 (verdict #2): the r8 measurement showed a pruned point
     lookup spends ~1.2 s LISTING all bucket directories (512 dirs for a
     1.26 MB read) — the data read was already pruned, the DISCOVERY was
-    not. With bucket_col_types stamped in _layout, the reader now folds
-    the bucket id driver-side (zero Spark jobs) and reads
-    <path>/_bucket=<h> directly: inputFiles must name ONLY the probed
-    buckets' directories, values and plan evidence unchanged."""
+    not. The reader folds the bucket id driver-side (zero Spark jobs)
+    with the stored bucket_col_types and reads that bucket's files from
+    the log record: inputFiles must name ONLY the probed buckets."""
     from pubmed_central_semantic_search_spark.sources.catalog import (
         read_upsert_table,
         upsert_parquet,
@@ -1281,8 +1005,6 @@ def test_point_lookup_lists_only_probed_bucket_dirs(spark, tmp_path):
     files = got.inputFiles()
     assert files, "fast path read no files"
     assert len({f.split("_bucket=")[1].split("/")[0] for f in files}) == 1, files
-    # plan evidence unchanged: bucket filter still a PartitionFilter
-    assert "_bucket" in _bucket_partition_filter(got)
     assert [(r["k"], r["v"]) for r in got.collect()] == [(5, "15")]
 
     # batch lookup: union of the probed keys' buckets only
@@ -1293,60 +1015,12 @@ def test_point_lookup_lists_only_probed_bucket_dirs(spark, tmp_path):
         (5, "15"), (77, "231"), (900, "2700")
     ]
 
-    # absent key: falls back to the root read, still a correct empty
+    # absent key: a correct empty
     assert read_upsert_table(spark, path, key_equals={"k": 10**12}).count() == 0
 
     # non-bucket extra filter rides along (superset probe)
     sup = read_upsert_table(spark, path, key_equals={"k": 5, "v": "15"})
     assert [(r["k"], r["v"]) for r in sup.collect()] == [(5, "15")]
-
-
-def test_point_lookup_fast_path_skips_legacy_and_evolved(spark, tmp_path):
-    """Legacy layout records (no bucket_col_types) and evolved tables
-    (schema contract requires table-wide footer sampling) must keep the
-    root-read path — correct values either way."""
-    import json
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _layout_dir,
-        _read_upsert_layout,
-        read_upsert_table,
-        upsert_parquet,
-    )
-
-    path = str(tmp_path / "t")
-    df = spark.range(500).selectExpr("id AS k", "CAST(id AS STRING) AS v")
-    upsert_parquet(spark, df, path, key_cols=["k"], n_buckets=8)
-    # strip the types field -> legacy record
-    ldir = _layout_dir(path)
-    import pathlib
-
-    f = pathlib.Path(ldir) / "layout.json"
-    rec = json.loads(f.read_text())
-    assert rec.pop("bucket_col_types") == ["bigint"]
-    f.write_text(json.dumps(rec) + "\n")
-    crc = pathlib.Path(ldir) / ".layout.json.crc"
-    if crc.exists():  # hadoop local FS checksum would reject the edit
-        crc.unlink()
-    assert "bucket_col_types" not in _read_upsert_layout(spark, path)
-    got = read_upsert_table(spark, path, key_equals={"k": 7})
-    # root read: every bucket directory is listed (not the fast path)
-    assert [(r["k"], r["v"]) for r in got.collect()] == [(7, "7")]
-    assert "_bucket" in _bucket_partition_filter(got)
-
-    # evolved table: fast path must not apply (footer-union contract)
-    path2 = str(tmp_path / "t2")
-    upsert_parquet(spark, df, path2, key_cols=["k"], n_buckets=8)
-    extra = spark.range(500, 510).selectExpr(
-        "id AS k", "CAST(id AS STRING) AS v", "id * 2 AS extra"
-    )
-    upsert_parquet(
-        spark, extra, path2, key_cols=["k"], n_buckets=8,
-        allow_schema_evolution=True,
-    )
-    hit = read_upsert_table(spark, path2, key_equals={"k": 7})
-    assert "extra" in hit.columns  # schema is table-wide despite k=7's
-    assert [(r["k"], r["v"], r["extra"]) for r in hit.collect()] == [(7, "7", None)]
 
 
 def test_fold_bucket_ids_matches_cluster_eval_and_launches_no_job(spark):
@@ -1418,7 +1092,7 @@ def test_upsert_null_key_value_raises_by_name(spark, tmp_path):
     assert spark.read.parquet(path).count() == 1
 
 
-# --- round-10: overlapping-writer locks + rebucket lifecycle ---------------
+# --- overlapping writers + rebucket lifecycle --------------------------------
 
 
 def test_overlapping_bucket_writers_serialize_or_raise(spark, tmp_path):
@@ -1429,11 +1103,9 @@ def test_overlapping_bucket_writers_serialize_or_raise(spark, tmp_path):
     import threading
     import time
 
+    from pubmed_central_semantic_search_spark.sources import catalog
     from pubmed_central_semantic_search_spark.sources.catalog import (
         ConcurrentUpsertError,
-        _acquire_bucket_locks,
-        _hadoop_fs,
-        _release_bucket_locks,
     )
 
     path = str(tmp_path / "t")
@@ -1446,10 +1118,19 @@ def test_overlapping_bucket_writers_serialize_or_raise(spark, tmp_path):
     target = keys[0]
     b = _bucket_of(spark, target, n)
 
-    # writer A holds the bucket's lock (simulating a mid-merge writer);
-    # writer B touching the same bucket must raise by name
-    fs, _, _ = _hadoop_fs(spark, path)
-    locks = _acquire_bucket_locks(spark, path, [b])
+    # writer B has read the table and merged; writer A commits into the
+    # same bucket before B publishes — B must raise by name, A's rows stay
+    real_commit = catalog.commit
+
+    def a_lands_first(*args, **kwargs):
+        catalog.commit = real_commit
+        upsert_parquet(
+            spark, _rows(spark, [(target, "A")]), path,
+            key_cols=["article_id"], n_buckets=n,
+        )
+        return real_commit(*args, **kwargs)
+
+    catalog.commit = a_lands_first
     try:
         try:
             upsert_parquet(
@@ -1460,9 +1141,10 @@ def test_overlapping_bucket_writers_serialize_or_raise(spark, tmp_path):
         except ConcurrentUpsertError as e:
             assert str(b) in str(e)
     finally:
-        _release_bucket_locks(fs, locks)
+        catalog.commit = real_commit
+    assert _table_state(spark, path)[target] == "A"
 
-    # after the holder releases, the retry lands and nothing is lost
+    # the loser's retry after the winner committed lands; nothing is lost
     upsert_parquet(
         spark, _rows(spark, [(target, "B")]), path,
         key_cols=["article_id"], n_buckets=n,
@@ -1501,47 +1183,6 @@ def test_overlapping_bucket_writers_serialize_or_raise(spark, tmp_path):
     winners = {tag for k, tag in outcomes if k == "ok"}
     assert {state[k] for k in same_bucket_keys} <= winners
     assert len(state) == len(keys)  # no rows lost anywhere
-
-
-def test_stale_bucket_lock_is_broken(spark, tmp_path):
-    """A crashed writer's lock (mtime beyond the TTL) must not wedge the
-    table: the next writer breaks it and proceeds."""
-    import os
-    import time
-
-    path = str(tmp_path / "t")
-    n = 4
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v1")]), path,
-        key_cols=["article_id"], n_buckets=n,
-    )
-    b = _bucket_of(spark, "PMC1", n)
-    lock = os.path.join(path, "_locks", f"bucket={b}.lock")
-    os.makedirs(os.path.dirname(lock), exist_ok=True)
-    open(lock, "w").close()
-    old = time.time() - 7200  # two hours ago, past the 1 h TTL
-    os.utime(lock, (old, old))
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v2")]), path,
-        key_cols=["article_id"], n_buckets=n,
-    )
-    assert _table_state(spark, path)["PMC1"] == "v2"
-    # a FRESH lock must still block (the break is TTL-gated)
-    open(lock, "w").close()
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        ConcurrentUpsertError,
-    )
-
-    try:
-        upsert_parquet(
-            spark, _rows(spark, [("PMC1", "v3")]), path,
-            key_cols=["article_id"], n_buckets=n,
-        )
-        raise AssertionError("fresh foreign lock did not block")
-    except ConcurrentUpsertError:
-        pass
-    finally:
-        os.remove(lock)
 
 
 def test_rebucket_migrates_layout_and_content(spark, tmp_path):
@@ -1620,710 +1261,12 @@ def test_rebucket_sql_surface_and_noop(spark, tmp_path):
         rebucket(spark, flat, 4)
         raise AssertionError("flat rebucket did not raise")
     except ValueError as e:
-        assert "_layout" in str(e)
-
-
-def test_flat_table_writer_lock(spark, tmp_path):
-    """Round-10 symmetry: the FLAT layout's merge is a whole-table
-    read-merge-swap, so ANY two concurrent flat upserts are a lost
-    update — a held table lock raises ConcurrentUpsertError by name, the
-    lock releases on completion (including failures), and a stale lock
-    past the TTL is broken."""
-    import os
-    import time
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        ConcurrentUpsertError,
-    )
-
-    path = str(tmp_path / "flat")
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v1")]), path, key_cols=["article_id"]
-    )
-    lock = path + "__upsert.lock"
-    assert not os.path.exists(lock)  # released after the commit
-    open(lock, "w").close()
-    try:
-        upsert_parquet(
-            spark, _rows(spark, [("PMC1", "v2")]), path,
-            key_cols=["article_id"],
-        )
-        raise AssertionError("held flat lock did not block")
-    except ConcurrentUpsertError:
-        pass
-    old = time.time() - 7200
-    os.utime(lock, (old, old))  # abandoned: past the 1 h TTL
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v3")]), path, key_cols=["article_id"]
-    )
-    assert _table_state(spark, path)["PMC1"] == "v3"
-    assert not os.path.exists(lock)
-
-
-def test_leaf_compaction_skips_locked_bucket(spark, tmp_path):
-    """Round-10: compaction and the partitioned upsert share the bucket
-    lock namespace — a leaf whose bucket lock is held (a mid-merge
-    writer) is SKIPPED this pass (leaves_locked counts it), and the next
-    unheld pass compacts it."""
-    import os
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        compact_partitioned_leaves,
-    )
-
-    path = str(tmp_path / "t")
-    n = 2
-    keys = [f"PMC{i}" for i in range(20)]
-    # several upserts of the same keys accrete nothing (dynamic overwrite
-    # rewrites to 1 file) — force multi-file leaves via a raw append
-    upsert_parquet(
-        spark, _rows(spark, [(k, "v1") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=n,
-    )
-    read_upsert_table(spark, path)  # sanity: table reads
-    # append one extra file per leaf so compaction has work
-    for b in range(n):
-        leaf = os.path.join(path, f"{BUCKET_COL}={b}")
-        if os.path.isdir(leaf):
-            spark.createDataFrame(
-                [(f"X{b}", "extra")], "article_id string, payload string"
-            ).coalesce(1).write.mode("append").parquet(leaf)
-    lockdir = os.path.join(path, "_locks")
-    os.makedirs(lockdir, exist_ok=True)
-    held_b = 0
-    open(os.path.join(lockdir, f"bucket={held_b}.lock"), "w").close()
-    stats = compact_partitioned_leaves(spark, path, max_files_per_leaf=1)
-    assert stats["leaves_locked"] == 1
-    os.remove(os.path.join(lockdir, f"bucket={held_b}.lock"))
-    stats2 = compact_partitioned_leaves(spark, path, max_files_per_leaf=1)
-    assert stats2["leaves_locked"] == 0
-    assert stats2["leaves_compacted"] >= 1
-    # every leaf is single-file afterwards and the lock dir is clean
-    stats3 = compact_partitioned_leaves(spark, path, max_files_per_leaf=1)
-    assert stats3["leaves_compacted"] == 0
-    assert not any(f.endswith(".lock") for f in os.listdir(lockdir))
-
-
-def test_rebucket_incremental_split_merge_and_resume(spark, tmp_path):
-    """The incremental (bucket-group-at-a-time) rebucket path (round-10):
-    dividing bucket counts migrate as one shuffle-free job per group —
-    split 4→8 and merge 8→2 preserve content exactly; a crash mid-
-    migration (injected after 2 groups) RESUMES from the journal instead
-    of restarting, and the finished table carries no _migration dir;
-    incremental=True with non-dividing counts raises by name."""
-    import os
-
-    import pytest
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_upsert_layout,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(80)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-
-    # split 4 -> 8 (auto-selects incremental: counts divide)
-    stats = rebucket(spark, path, 8)
-    assert stats == {"old_n_buckets": 4, "new_n_buckets": 8, "rows": 80}
-    assert _table_state(spark, path) == before
-    assert int(_read_upsert_layout(spark, path)["n_buckets"]) == 8
-    assert not os.path.exists(os.path.join(path, "_migration"))
-    # upserts keep working against the new layout
-    upsert_parquet(
-        spark, _rows(spark, [("PMC3", "split")]), path,
-        key_cols=["article_id"], n_buckets=8,
-    )
-    assert _table_state(spark, path)["PMC3"] == "split"
-    before = _table_state(spark, path)
-
-    # merge 8 -> 2 with an injected crash after 1 group, then resume
-    with pytest.raises(RuntimeError, match="injected test crash"):
-        rebucket(spark, path, 2, _fail_after_groups=1)
-    # live table untouched by the crash (swap never happened)
-    assert _table_state(spark, path) == before
-    assert int(_read_upsert_layout(spark, path)["n_buckets"]) == 8
-    staging = path + ".rebucket.staging"
-    assert os.path.isdir(os.path.join(staging, "_migration"))
-    stats = rebucket(spark, path, 2)  # resumes from the journal
-    assert stats["rows"] == 80
-    assert _table_state(spark, path) == before
-    assert int(_read_upsert_layout(spark, path)["n_buckets"]) == 2
-    dirs = {d for d in os.listdir(path) if d.startswith(BUCKET_COL + "=")}
-    assert dirs <= {f"{BUCKET_COL}=0", f"{BUCKET_COL}=1"}
-    got = read_upsert_table(
-        spark, path, key_equals={"article_id": "PMC7"}
-    ).collect()
-    assert [r.payload for r in got] == ["vPMC7"]
-
-    # non-dividing counts: incremental raises by name, default falls back
-    with pytest.raises(ValueError, match="dividing bucket counts"):
-        rebucket(spark, path, 3, incremental=True)
-    assert rebucket(spark, path, 3)["rows"] == 80
-    assert _table_state(spark, path) == before
-
-
-def test_rebucket_crash_recovery_clears_stale_locks(spark, tmp_path):
-    """A rebucket crash BETWEEN the swap renames parks the table (with
-    the dead writer's _locks inside) in the backup — re-entry must
-    restore it AND clear those locks, or the retry blocks on its own
-    predecessor's leases until the TTL."""
-    import os
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_upsert_layout,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(40)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-    # simulate the crash window: live renamed to backup (locks inside,
-    # as the dead writer held them), staging incomplete
-    os.makedirs(os.path.join(path, "_locks"), exist_ok=True)
-    for b in range(4):
-        open(os.path.join(path, "_locks", f"bucket={b}.lock"), "w").close()
-    shutil.move(path, path + ".rebucket.old")
-    stats = rebucket(spark, path, 8)  # recovers, then migrates
-    assert stats["rows"] == 40
-    assert _table_state(spark, path) == before
-    assert int(_read_upsert_layout(spark, path)["n_buckets"]) == 8
-
-
-def test_bucket_locks_release_when_merge_raises(spark, tmp_path):
-    """A merge that FAILS (here: strict call widening an evolved table)
-    must release its bucket locks on the way out — a leaked lock would
-    block every later writer of those buckets for the TTL."""
-    import os
-
-    path = str(tmp_path / "t")
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v1"), ("PMC2", "v2")]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    bad = spark.createDataFrame(
-        [("PMC1", "x", "boom")],
-        "article_id string, payload string, extra string",
-    )
-    try:
-        upsert_parquet(spark, bad, path, key_cols=["article_id"], n_buckets=4)
-        raise AssertionError("schema-widening strict upsert did not raise")
-    except AssertionError:
-        raise
-    except Exception:
-        pass  # strict unionByName AnalysisException — the expected failure
-    lockdir = os.path.join(path, "_locks")
-    held = [f for f in os.listdir(lockdir)] if os.path.isdir(lockdir) else []
-    assert not any(f.endswith(".lock") for f in held), held
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v3")]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    assert _table_state(spark, path)["PMC1"] == "v3"
-
-
-# --- round-11: owner tokens, heartbeat, pre-commit re-check, lock seam -----
-
-
-def _steal_all(lease):
-    """Simulate a TTL break + second-writer steal of every lock in the
-    lease: remove the holder's token file, stamp a foreign token."""
-    import os
-
-    for lp, _tok in lease._leases:
-        os.remove(lp)
-        with open(lp, "w") as fh:
-            fh.write("f" * 32)
-
-
-def _clear_locks(path):
-    import os
-
-    lockdir = os.path.join(path, "_locks")
-    if os.path.isdir(lockdir):
-        for f in os.listdir(lockdir):
-            if f.endswith(".lock"):
-                os.remove(os.path.join(lockdir, f))
-
-
-def test_lock_lost_mid_merge_aborts_commit_by_name(spark, tmp_path):
-    """Round-11 verdict #1: a holder whose lock is broken mid-merge (TTL
-    expiry + a second writer's steal) must abort its commit BY NAME
-    (LockLostError) with the table untouched — no lost update, no
-    double-commit. Its release must also LEAVE the stealing writer's
-    lock in place (ADVICE r10: unconditional delete let a third writer
-    in). Covers the partitioned and the flat layout."""
-    from pubmed_central_semantic_search_spark.sources import catalog
-
-    # partitioned
-    path = str(tmp_path / "part")
-    keys = [f"PMC{i}" for i in range(20)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, "v1") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-    catalog._TEST_PRE_COMMIT_HOOK = _steal_all
-    try:
-        try:
-            upsert_parquet(
-                spark, _rows(spark, [(keys[0], "LOST")]), path,
-                key_cols=["article_id"], n_buckets=4,
-            )
-            raise AssertionError("lost lock did not abort the commit")
-        except catalog.LockLostError:
-            pass
-    finally:
-        catalog._TEST_PRE_COMMIT_HOOK = None
-    assert _table_state(spark, path) == before  # commit never happened
-    # release left the foreign (stealing writer's) locks in place
-    lockdir = os.path.join(path, "_locks")
-    foreign = [f for f in os.listdir(lockdir) if f.endswith(".lock")]
-    assert foreign, "aborted holder deleted the stealing writer's lock"
-    _clear_locks(path)  # the "second writer" commits and releases
-    upsert_parquet(
-        spark, _rows(spark, [(keys[0], "RETRY")]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    assert _table_state(spark, path)[keys[0]] == "RETRY"
-
-    # flat
-    fpath = str(tmp_path / "flat")
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v1")]), fpath, key_cols=["article_id"]
-    )
-    catalog._TEST_PRE_COMMIT_HOOK = _steal_all
-    try:
-        try:
-            upsert_parquet(
-                spark, _rows(spark, [("PMC1", "LOST")]), fpath,
-                key_cols=["article_id"],
-            )
-            raise AssertionError("flat: lost lock did not abort the commit")
-        except catalog.LockLostError:
-            pass
-    finally:
-        catalog._TEST_PRE_COMMIT_HOOK = None
-    assert _table_state(spark, fpath)["PMC1"] == "v1"
-    assert os.path.exists(fpath + "__upsert.lock")  # foreign lock kept
-    os.remove(fpath + "__upsert.lock")
-
-
-def test_rebucket_lock_lost_aborts_swap_by_name(spark, tmp_path):
-    """Rebucket holds locks longest (the whole staged rewrite) — verdict
-    r10 #1 names it the most exposed holder. A steal before the swap
-    must abort BY NAME with the live table AND the staged migration
-    intact (re-runnable)."""
-    from pubmed_central_semantic_search_spark.sources import catalog
-    from pubmed_central_semantic_search_spark.sources.catalog import rebucket
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(30)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-    catalog._TEST_PRE_COMMIT_HOOK = _steal_all
-    try:
-        try:
-            rebucket(spark, path, 8)
-            raise AssertionError("rebucket committed over a lost lock")
-        except catalog.LockLostError:
-            pass
-    finally:
-        catalog._TEST_PRE_COMMIT_HOOK = None
-    # live table untouched, no half-swap state
-    assert _table_state(spark, path) == before
-    assert not os.path.exists(path + ".rebucket.old")
-    _clear_locks(path)
-    stats = rebucket(spark, path, 8)  # retry completes
-    assert stats["rows"] == len(keys)
-    assert _table_state(spark, path) == before
-
-
-def test_heartbeat_keeps_live_merge_lock_fresh(spark, tmp_path):
-    """Round-11 verdict #1(a): a LIVE merge outliving the TTL must NOT
-    be treated as abandoned — the heartbeat refreshes the lock, so a
-    second writer still raises ConcurrentUpsertError instead of
-    breaking in (pre-heartbeat, the stale-break fired and both
-    committed)."""
-    import time
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        ConcurrentUpsertError,
-        LockLostError,
-        _acquire_bucket_locks,
-        _hadoop_fs,
-        _release_bucket_locks,
-    )
-
-    path = str(tmp_path / "t")
-    n = 4
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v1")]), path,
-        key_cols=["article_id"], n_buckets=n,
-    )
-    b = _bucket_of(spark, "PMC1", n)
-    fs, _, _ = _hadoop_fs(spark, path)
-    # holder with a 2 s TTL; heartbeat interval = ttl/4 (min 0.5 s)
-    locks = _acquire_bucket_locks(spark, path, [b], ttl_s=2)
-    try:
-        time.sleep(5)  # well past the TTL — only the heartbeat keeps it
-        try:
-            upsert_parquet(
-                spark, _rows(spark, [("PMC1", "v2")]), path,
-                key_cols=["article_id"], n_buckets=n, lock_ttl_s=2,
-            )
-            raise AssertionError(
-                "a heartbeated live lock was broken by the TTL"
-            )
-        except LockLostError:
-            raise  # wrong failure mode: OUR lock must never be lost here
-        except ConcurrentUpsertError:
-            pass
-        # and the holder's own lease is still valid — commit would proceed
-        locks.validate_or_raise()
-    finally:
-        _release_bucket_locks(fs, locks)
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v2")]), path,
-        key_cols=["article_id"], n_buckets=n,
-    )
-    assert _table_state(spark, path)["PMC1"] == "v2"
-
-
-def test_lock_backend_primitives(spark, tmp_path):
-    """HadoopFsLockBackend unit contract: token round-trip, foreign
-    token rejection, heartbeat ownership gate, release-only-if-owner."""
-    import os
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        HadoopFsLockBackend,
-    )
-
-    backend = HadoopFsLockBackend(spark, str(tmp_path))
-    lock = str(tmp_path / "x.lock")
-    tok = backend.try_acquire(lock, 3600)
-    assert tok is not None
-    assert backend.validate(lock, tok)
-    assert not backend.validate(lock, "f" * 32)
-    assert backend.heartbeat(lock, tok)
-    assert not backend.heartbeat(lock, "f" * 32)
-    # second acquire on a live lock fails
-    assert backend.try_acquire(lock, 3600) is None
-    # steal, then the original holder's release must NOT delete
-    os.remove(lock)
-    with open(lock, "w") as fh:
-        fh.write("f" * 32)
-    backend.release(lock, tok)
-    assert os.path.exists(lock)
-    # a rightful owner (token stamped THROUGH the backend) can release
-    os.remove(lock)
-    tok2 = backend.try_acquire(lock, 3600)
-    assert tok2 is not None and backend.validate(lock, tok2)
-    backend.release(lock, tok2)
-    assert not os.path.exists(lock)
-
-
-def test_custom_lock_backend_seam(spark, tmp_path):
-    """Round-11 verdict #4: every write-path lock routes through the
-    pluggable LockBackend — an in-memory implementation (standing in
-    for an S3 conditional-put / DynamoDB lease) carries a full upsert,
-    contention raises by name through it, and set_lock_backend
-    restores cleanly."""
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        ConcurrentUpsertError,
-        LockBackend,
-        set_lock_backend,
-    )
-
-    events = []
-    table = {}
-
-    class MemBackend(LockBackend):
-        def __init__(self, spark, path):
-            pass
-
-        def try_acquire(self, lp, ttl_s):
-            events.append(("acquire", lp))
-            if lp in table:
-                return None
-            table[lp] = f"tok:{len(events)}"
-            return table[lp]
-
-        def validate(self, lp, tok):
-            return table.get(lp) == tok
-
-        def heartbeat(self, lp, tok):
-            return self.validate(lp, tok)
-
-        def release(self, lp, tok):
-            events.append(("release", lp))
-            if table.get(lp) == tok:
-                table.pop(lp)
-
-        def prepare_dir(self, d):
-            pass
-
-        def is_held(self, lp, ttl_s):
-            return lp in table
-
-        def list_held(self, d):
-            return [lp.rsplit("/", 1)[-1] for lp in table if lp.startswith(d)]
-
-    path = str(tmp_path / "t")
-    prev = set_lock_backend(MemBackend)
-    try:
-        upsert_parquet(
-            spark, _rows(spark, [("PMC1", "v1"), ("PMC2", "v2")]), path,
-            key_cols=["article_id"], n_buckets=4,
-        )
-        upsert_parquet(
-            spark, _rows(spark, [("PMC1", "v2")]), path,
-            key_cols=["article_id"], n_buckets=4,
-        )
-        assert any(e[0] == "acquire" for e in events)
-        assert not table, "backend leaked a lease"
-        # contention THROUGH the custom backend raises by name
-        b = _bucket_of(spark, "PMC1", 4)
-        table[f"{path}/_locks/bucket={b}.lock"] = "foreign"
-        try:
-            upsert_parquet(
-                spark, _rows(spark, [("PMC1", "v3")]), path,
-                key_cols=["article_id"], n_buckets=4,
-            )
-            raise AssertionError("custom-backend contention did not raise")
-        except ConcurrentUpsertError:
-            pass
-        table.clear()
-        # rebucket (table lock + writer-drain listing) and leaf
-        # compaction run through the SAME seam — the full write path
-        # works against a non-filesystem lock service
-        from pubmed_central_semantic_search_spark.sources.catalog import (
-            compact_partitioned_leaves,
-            rebucket,
-        )
-
-        stats = rebucket(spark, path, 8, _writer_drain_timeout_s=0.5)
-        assert stats["new_n_buckets"] == 8 and not table
-        cstats = compact_partitioned_leaves(spark, path, max_files_per_leaf=0)
-        assert cstats["leaves_seen"] > 0 and not table
-        # a foreign TABLE lock in the custom backend blocks rebucket
-        table[f"{path}/_locks/_table.lock"] = "foreign"
-        try:
-            rebucket(spark, path, 4, _writer_drain_timeout_s=0.5)
-            raise AssertionError("custom-backend table lock did not block")
-        except ConcurrentUpsertError:
-            pass
-        table.clear()
-    finally:
-        set_lock_backend(prev)
-    assert _table_state(spark, path)["PMC1"] == "v2"
-
-
-def test_rebucket_mid_swap_recreate_aborts_by_name(spark, tmp_path):
-    """ADVICE r10: a create-path upsert landing inside the swap's absent
-    window may commit REAL content at the live path — the old code
-    deleted it ('can only contain lock files'); now only a _locks
-    subtree is removable and anything else aborts BY NAME with all
-    three copies intact, and the next rebucket's crash recovery refuses
-    the same way instead of deleting the backup (the only full copy)."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources import catalog
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        RebucketStateError,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-
-    def recreate():
-        # a concurrent create-path writer's committed table (stand-in)
-        os.makedirs(path, exist_ok=True)
-        os.makedirs(os.path.join(path, "_layout"), exist_ok=True)
-        with open(os.path.join(path, "part-0.parquet"), "w") as fh:
-            fh.write("foreign")
-
-    catalog._TEST_MID_SWAP_HOOK = recreate
-    try:
-        try:
-            rebucket(spark, path, 8)
-            raise AssertionError("mid-swap recreate was silently deleted")
-        except RebucketStateError:
-            pass
-    finally:
-        catalog._TEST_MID_SWAP_HOOK = None
-    # nothing deleted: all three copies still on disk
-    assert os.path.isdir(path + ".rebucket.old")
-    assert os.path.isdir(path + ".rebucket.staging")
-    assert os.path.exists(os.path.join(path, "part-0.parquet"))
-    # the NEXT call's crash recovery also refuses by name (three copies)
-    try:
-        rebucket(spark, path, 8)
-        raise AssertionError("recovery deleted a copy in the three-way state")
-    except RebucketStateError:
-        pass
-    # operator resolution: drop the foreign live dir -> recovery restores
-    # the backup and the migration completes with no lost rows
-    shutil.rmtree(path)
-    stats = rebucket(spark, path, 8)
-    assert stats["rows"] == len(keys)
-    assert _table_state(spark, path) == before
-
-
-def test_rebucket_recovery_restores_backup_over_lock_detritus(spark, tmp_path):
-    """ADVICE r10: crash window + a racing acquire's mkdirs left the live
-    path holding ONLY _locks — recovery must clear it and restore the
-    backup (the old code saw 'live exists' and deleted the backup: the
-    only full copy of the table)."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_upsert_layout,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-    shutil.move(path, path + ".rebucket.old")
-    # racing acquire recreated the live dir with lock files only
-    os.makedirs(os.path.join(path, "_locks"))
-    open(os.path.join(path, "_locks", "bucket=0.lock"), "w").close()
-    stats = rebucket(spark, path, 8)
-    assert stats["rows"] == len(keys)
-    assert _table_state(spark, path) == before
-    assert int(_read_upsert_layout(spark, path)["n_buckets"]) == 8
-
-
-def test_rebucket_table_lock_handshake(spark, tmp_path):
-    """Round-11 table-lock redesign: rebucket holds ONE table lock
-    instead of O(n_buckets) bucket locks. Both directions of the
-    handshake: (a) an in-flight writer's bucket lock blocks rebucket BY
-    NAME after the drain window; (b) a held table lock blocks new
-    upserts BY NAME and makes leaf compaction skip; release unblocks
-    both."""
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        ConcurrentUpsertError,
-        _get_lock_backend,
-        _locks_dir,
-        _table_lock_path,
-        compact_partitioned_leaves,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    backend = _get_lock_backend(spark, path)
-
-    # (a) in-flight writer lock blocks rebucket after the drain poll
-    btok = backend.try_acquire(f"{_locks_dir(path)}/bucket=1.lock", 3600)
-    assert btok is not None
-    try:
-        rebucket(spark, path, 8, _writer_drain_timeout_s=0.5)
-        raise AssertionError("rebucket swapped under an in-flight writer")
-    except ConcurrentUpsertError as e:
-        assert "bucket=1.lock" in str(e)
-    finally:
-        backend.release(f"{_locks_dir(path)}/bucket=1.lock", btok)
-    # and the failed attempt released its table lock — retry succeeds
-    stats = rebucket(spark, path, 8, _writer_drain_timeout_s=0.5)
-    assert stats["rows"] == len(keys)
-
-    # (b) a held table lock blocks new upserts by name...
-    ttok = backend.try_acquire(_table_lock_path(path), 3600)
-    assert ttok is not None
-    try:
-        try:
-            upsert_parquet(
-                spark, _rows(spark, [("PMC0", "x")]), path,
-                key_cols=["article_id"], n_buckets=8,
-            )
-            raise AssertionError("upsert merged during a rebucket")
-        except ConcurrentUpsertError as e:
-            assert "rebucket" in str(e)
-        # ...and leaf compaction skips every leaf instead of racing
-        stats = compact_partitioned_leaves(spark, path, max_files_per_leaf=0)
-        assert stats["leaves_compacted"] == 0
-        assert stats["leaves_locked"] == stats["leaves_seen"]
-    finally:
-        backend.release(_table_lock_path(path), ttok)
-    upsert_parquet(
-        spark, _rows(spark, [("PMC0", "x")]), path,
-        key_cols=["article_id"], n_buckets=8,
-    )
-    assert _table_state(spark, path)["PMC0"] == "x"
-    # bucket locks and the table lock all released
-    import os
-
-    lockdir = os.path.join(path, "_locks")
-    assert not any(f.endswith(".lock") for f in os.listdir(lockdir))
-
-
-def test_rebucket_drain_waits_for_inflight_writer(spark, tmp_path):
-    """The drain's SUCCESS path: an in-flight writer that releases
-    within the window lets rebucket proceed (it must wait, not abort
-    instantly, and must not swap early)."""
-    import threading
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _get_lock_backend,
-        _locks_dir,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-    backend = _get_lock_backend(spark, path)
-    lp = f"{_locks_dir(path)}/bucket=2.lock"
-    tok = backend.try_acquire(lp, 3600)
-    assert tok is not None
-    release_timer = threading.Timer(1.5, backend.release, args=(lp, tok))
-    release_timer.start()
-    try:
-        # drain window comfortably larger than the release delay: the
-        # poll must observe the lock for a while, then proceed
-        stats = rebucket(spark, path, 8, _writer_drain_timeout_s=30)
-        assert stats["rows"] == len(keys)
-        assert _table_state(spark, path) == before
-    finally:
-        release_timer.cancel()
+        assert "flat" in str(e)
 
 
 def test_concurrent_writers_converge_with_retries(spark, tmp_path):
-    """Convergence under the full round-11 protocol (tokens + heartbeat
-    + pre-commit re-check): four writers race over a SHARED key set,
+    """Convergence under the commit log: four writers race over a SHARED
+    key set,
     retrying on ConcurrentUpsertError until they commit. Every writer
     must eventually succeed exactly once, the final state must be one
     of the writers' tags per key (no torn/merged rows), and no key may
@@ -2377,1300 +1320,157 @@ def test_concurrent_writers_converge_with_retries(spark, tmp_path):
     # and every batch touches all keys, so the state is uniform
     assert len(set(state.values())) == 1, state
     assert next(iter(set(state.values()))) in tags
-    # all locks released
-    lockdir = os.path.join(path, "_locks")
-    held = [f for f in os.listdir(lockdir)] if os.path.isdir(lockdir) else []
-    assert not any(f.endswith(".lock") for f in held), held
 
 
-# --- round-12: resume-journal invalidation, stamped TTL, beat sidecar, CAS --
+# --- the commit log: zero-job reads, the publish race, crashes --------------
 
 
-def test_writer_clears_dead_rebucket_staging_no_lost_rows(spark, tmp_path):
-    """Round-12 verdict #1 (the injected Done-test): crash an incremental
-    rebucket mid-migration, expire/break the dead table lock, commit an
-    upsert INTO AN ALREADY-JOURNALED GROUP, resume, swap — zero lost
-    rows. Pre-fix, the resume skipped the journaled groups and the swap
-    replaced the live table with a staging copy that predated the
-    crash-window commit: the writer's rows vanished silently."""
-    import json
-    import time
-
-    from pubmed_central_semantic_search_spark.sources.catalog import rebucket
-
+def test_read_upsert_table_launches_no_spark_job(spark, tmp_path):
+    """A read is one log record: the file list and the schema come from
+    it, so building the read of a 16-bucket table (whole-table and
+    point/batch lookups alike) schedules no Spark job — no schema
+    inference, no listing job."""
     path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(32)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    # crash after two journaled groups (groups = old buckets 0 and 1)
-    try:
-        rebucket(spark, path, 8, _fail_after_groups=2)
-        raise AssertionError("injected crash did not fire")
-    except RuntimeError as e:
-        assert "injected" in str(e)
-    staging = path + ".rebucket.staging"
-    journal_file = os.path.join(staging, "_migration", "migration.json")
-    assert os.path.isdir(staging) and os.path.exists(journal_file)
-    completed = set(json.load(open(journal_file))["completed"])
-    assert completed == {0, 1}
-    # a REAL crash leaves the dead rebucket's table lock behind — the
-    # injected raise released it (finally), so recreate it abandoned:
-    # foreign token, stamped 1 s TTL, backdated mtime
-    lockdir = os.path.join(path, "_locks")
-    tl = os.path.join(lockdir, "_table.lock")
-    with open(tl, "w") as fh:
-        fh.write("f" * 32 + "\n1")
-    old = time.time() - 7200
-    os.utime(tl, (old, old))
-    # crash-window commit: UPDATE a key of a completed group and INSERT
-    # a new key that also buckets into a completed group
-    victim = next(k for k in keys if _bucket_of(spark, k, 4) in completed)
-    newkey = next(
-        f"PMCnew{i}" for i in range(100)
-        if _bucket_of(spark, f"PMCnew{i}", 4) in completed
-    )
-    upsert_parquet(
-        spark, _rows(spark, [(victim, "CRASHWINDOW"), (newkey, "FRESH")]),
-        path, key_cols=["article_id"], n_buckets=4,
-    )
-    # the writer broke the stale lock and cleared the unsafe staging
-    assert not os.path.exists(staging), (
-        "crash-window writer left the stale migration journal resumable"
-    )
-    # resume: a fresh full migration from the live table
-    stats = rebucket(spark, path, 8)
-    assert stats["rows"] == len(keys) + 1
-    state = _table_state(spark, path)
-    assert state[victim] == "CRASHWINDOW"  # the row the old code lost
-    assert state[newkey] == "FRESH"
-    assert len(state) == len(keys) + 1
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_upsert_layout,
-    )
+    df = spark.range(2000).selectExpr("id AS k", "CAST(id * 3 AS STRING) AS v")
+    upsert_parquet(spark, df, path, key_cols=["k"], n_buckets=16)
+    sc = spark.sparkContext
+    spark.range(1).collect()
 
-    assert int(_read_upsert_layout(spark, path)["n_buckets"]) == 8
+    def jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(None) or [])
+
+    before = jobs()
+    whole = read_upsert_table(spark, path)
+    one = read_upsert_table(spark, path, key_equals={"k": 5})
+    batch = read_upsert_table(spark, path, key_equals={"k": [5, 77, 900]})
+    assert jobs() == before, "read_upsert_table scheduled a Spark job"
+    assert whole.columns == ["k", "v"]
+    assert whole.count() == 2000
+    assert [(r.k, r.v) for r in one.collect()] == [(5, "15")]
+    assert sorted(r.k for r in batch.collect()) == [5, 77, 900]
 
 
-def test_live_rebucket_staging_survives_writer_and_backup_guard(spark, tmp_path):
-    """The clear must NOT fire on (a) a LIVE rebucket's staging — the
-    writer aborts by name on the table lock first — or (b) a mid-swap
-    crash state where .rebucket.old exists (the staging may be the only
-    complete migrated copy; RebucketStateError recovery owns it)."""
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        ConcurrentUpsertError,
-        _get_lock_backend,
-        _table_lock_path,
-    )
-
-    path = str(tmp_path / "t")
-    upsert_parquet(
-        spark, _rows(spark, [(f"PMC{i}", "v") for i in range(12)]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    staging = path + ".rebucket.staging"
-    os.makedirs(staging)
-    open(os.path.join(staging, "marker"), "w").close()
-    # (a) live rebucket: table lock held -> abort by name, staging intact
-    backend = _get_lock_backend(spark, path)
-    tok = backend.try_acquire(_table_lock_path(path), 3600)
-    assert tok is not None
-    try:
-        try:
-            upsert_parquet(
-                spark, _rows(spark, [("PMC0", "x")]), path,
-                key_cols=["article_id"], n_buckets=4,
-            )
-            raise AssertionError("writer merged under a live table lock")
-        except ConcurrentUpsertError:
-            pass
-        assert os.path.exists(os.path.join(staging, "marker"))
-    finally:
-        backend.release(_table_lock_path(path), tok)
-    # (b) backup present (mid-swap crash family): writer commits but the
-    # staging is preserved for the operator/recovery path
-    os.makedirs(path + ".rebucket.old")
-    try:
-        upsert_parquet(
-            spark, _rows(spark, [("PMC0", "y")]), path,
-            key_cols=["article_id"], n_buckets=4,
-        )
-        assert os.path.exists(os.path.join(staging, "marker"))
-        assert _table_state(spark, path)["PMC0"] == "y"
-    finally:
-        import shutil
-
-        shutil.rmtree(path + ".rebucket.old")
-        shutil.rmtree(staging)
-
-
-def test_stamped_ttl_governs_staleness(spark, tmp_path):
-    """Round-12 ADVICE (medium): staleness is judged by the TTL the
-    HOLDER stamped into the lock, not the probing caller's — a
-    default-TTL writer must not break a live long-TTL holder whose
-    heartbeat cadence exceeds the caller's ttl. Unstamped (foreign /
-    crash-between-create-and-stamp) locks fall back to the caller's."""
-    import time
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        HadoopFsLockBackend,
-    )
-
-    backend = HadoopFsLockBackend(spark, str(tmp_path))
-    lp = str(tmp_path / "x.lock")
-    tok = backend.try_acquire(lp, 3600)
-    assert tok is not None
-    time.sleep(1.2)
-    # a caller with ttl_s=1 probes: mtime is 1.2 s old, but the stamp
-    # says 3600 — the lock is LIVE to every observer
-    assert backend.is_held(lp, 1)
-    assert backend.try_acquire(lp, 1) is None
-    assert os.path.exists(lp) and backend.validate(lp, tok)
-    backend.release(lp, tok)
-    # unstamped foreign lock: caller's ttl is the fallback judgment
-    with open(lp, "w") as fh:
-        fh.write("f" * 32)
-    old = time.time() - 5
-    os.utime(lp, (old, old))
-    assert not backend.is_held(lp, 1)  # broken as a side effect
-    assert not os.path.exists(lp)
-
-
-def test_heartbeat_sidecar_fallback_never_rewrites_lock(spark, tmp_path):
-    """Round-12 verdict #2 + ADVICE (low ×2): on filesystems without
-    setTimes the heartbeat must not rewrite the lock file (the rewrite
-    could clobber a successor's token after a mid-beat break, and a
-    beat racing release could RECREATE the released lock). Freshness
-    rides on a .beat sidecar; the lock file is only ever written by its
-    creating acquire."""
-    import time
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        HadoopFsLockBackend,
-    )
-
-    class NoSetTimes(HadoopFsLockBackend):
-        def _touch(self, lock_path):
-            raise OSError("setTimes unsupported (S3A-like)")
-
-    backend = NoSetTimes(spark, str(tmp_path))
-    lp = str(tmp_path / "x.lock")
-    tok = backend.try_acquire(lp, 2)
-    assert tok is not None
-    original = open(lp, "rb").read()
-    assert backend.heartbeat(lp, tok)
-    assert open(lp, "rb").read() == original, "fallback rewrote the lock file"
-    assert os.path.exists(lp + ".beat")
-    # liveness through the sidecar: lock mtime long past the TTL, beat
-    # fresh -> held to every probe; beat also stale -> broken
-    old = time.time() - 7200
-    os.utime(lp, (old, old))
-    assert backend.is_held(lp, 2)
-    os.utime(lp + ".beat", (old, old))
-    assert not backend.is_held(lp, 2)
-    assert not os.path.exists(lp) and not os.path.exists(lp + ".beat")
-    # steal between validate and beat cannot clobber the successor: a
-    # foreign-token lock stays byte-identical through our beat attempt
-    tok2 = backend.try_acquire(lp, 2)
-    assert tok2 is not None
-    os.remove(lp)
-    with open(lp, "w") as fh:
-        fh.write("f" * 32 + "\n3600")
-    foreign = open(lp, "rb").read()
-    assert not backend.heartbeat(lp, tok2)
-    assert open(lp, "rb").read() == foreign, "beat clobbered the successor"
-    os.remove(lp)
-    # a beat racing our own release must not recreate the lock
-    tok3 = backend.try_acquire(lp, 2)
-    backend.release(lp, tok3)
-    assert not backend.heartbeat(lp, tok3)
-    assert not os.path.exists(lp), "post-release beat recreated the lock"
-
-
-def test_rebucket_drains_abandoned_writer_lock(spark, tmp_path):
-    """Round-12 ADVICE (low): the writer drain judges LIVENESS, not bare
-    presence — a crashed writer's abandoned bucket lock must not wedge
-    every rebucket until an unrelated upsert happens to acquire that
-    exact path."""
-    import time
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _get_lock_backend,
-        _locks_dir,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(16)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, "v") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    backend = _get_lock_backend(spark, path)
-    lp = f"{_locks_dir(path)}/bucket=1.lock"
-    assert backend.try_acquire(lp, 3600) is not None
-    old = time.time() - 7200  # the writer crashed two hours ago
-    os.utime(lp, (old, old))
-    stats = rebucket(spark, path, 8, _writer_drain_timeout_s=5)
-    assert stats["rows"] == len(keys)
-    assert _table_state(spark, path) == {k: "v" for k in keys}
-
-
-def _store_contract(store):
-    v1 = store.put_if("a/k1", None, b"one")
-    assert v1 is not None
-    assert store.put_if("a/k1", None, b"dup") is None  # create-if-absent
-    val, ver = store.get("a/k1")
-    assert val == b"one" and ver == v1
-    assert store.put_if("a/k1", "wrong", b"x") is None
-    v2 = store.put_if("a/k1", v1, b"two")
-    assert v2 is not None and v2 != v1
-    assert store.get("a/k1")[0] == b"two"
-    assert not store.delete_if("a/k1", v1)  # stale version
-    assert store.put_if("b/k2", None, b"z") is not None
-    assert sorted(store.list("a/")) == ["a/k1"]
-    assert store.delete_if("a/k1", v2)
-    assert store.get("a/k1") is None
-    assert store.list("a/") == []
-
-
-def test_conditional_put_store_contract(tmp_path):
-    """Both ConditionalPutStore implementations satisfy the CAS
-    contract CasLockBackend is built on."""
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        LocalFsConditionalPutStore,
-        MemoryConditionalPutStore,
-    )
-
-    _store_contract(MemoryConditionalPutStore())
-    _store_contract(LocalFsConditionalPutStore(str(tmp_path / "store")))
-
-
-def test_localfs_store_acquire_race_single_winner(tmp_path):
-    """flock-serialized conditional put: N threads racing try_acquire on
-    one key yield exactly one token."""
+def test_publish_race_one_winner_disjoint_republish_overlap_raises(spark, tmp_path):
+    """N threads (more than cores) race to publish the SAME version. The
+    put itself admits exactly one; every disjoint loser republishes its
+    files at the next version, and the losers that read the winner's
+    bucket raise ConcurrentUpsertError by name. The final record holds
+    every successful commit's files — a lost update would drop one."""
+    import sys
     import threading
 
     from pubmed_central_semantic_search_spark.sources.catalog import (
-        CasLockBackend,
-        LocalFsConditionalPutStore,
-    )
-
-    backend = CasLockBackend(LocalFsConditionalPutStore(str(tmp_path / "s")))
-    tokens = []
-
-    def race():
-        t = backend.try_acquire("t/_locks/bucket=0.lock", 3600)
-        if t is not None:
-            tokens.append(t)
-
-    threads = [threading.Thread(target=race) for _ in range(8)]
-    [t.start() for t in threads]
-    [t.join() for t in threads]
-    assert len(tokens) == 1
-
-
-def test_cas_lock_backend_primitives(tmp_path):
-    """CasLockBackend unit contract over both stores: token round-trip,
-    deadline liveness, one-CAS break of an abandoned lock, conditional
-    release (no validate→delete TOCTOU), heartbeat extends the
-    deadline and honestly reports a lost lease."""
-    import time
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        CasLockBackend,
-        LocalFsConditionalPutStore,
-        MemoryConditionalPutStore,
-    )
-
-    for store in (
-        MemoryConditionalPutStore(),
-        LocalFsConditionalPutStore(str(tmp_path / "s")),
-    ):
-        b = CasLockBackend(store)
-        lp = "tbl/_locks/bucket=0.lock"
-        tok = b.try_acquire(lp, 1)
-        assert tok is not None
-        assert b.validate(lp, tok) and not b.validate(lp, "f" * 32)
-        assert b.try_acquire(lp, 1) is None  # live
-        assert b.is_held(lp, 1)
-        assert b.heartbeat(lp, tok)  # extends the deadline
-        time.sleep(0.7)
-        assert b.is_held(lp, 1)  # 0.7 s after the beat, still live
-        time.sleep(0.5)
-        assert b.heartbeat(lp, tok)
-        # abandoned after expiry: break + acquire is ONE conditional write
-        time.sleep(1.2)
-        tok2 = b.try_acquire(lp, 3600)
-        assert tok2 is not None and tok2 != tok
-        assert not b.validate(lp, tok)
-        assert not b.heartbeat(lp, tok)  # honest loss report, no clobber
-        assert b.validate(lp, tok2)
-        # the overrun holder's release is conditional — successor intact
-        b.release(lp, tok)
-        assert b.validate(lp, tok2)
-        assert sorted(b.list_held("tbl/_locks")) == ["bucket=0.lock"]
-        b.release(lp, tok2)
-        assert not b.is_held(lp, 3600)
-        assert b.list_held("tbl/_locks") == []
-
-
-def test_cas_lock_backend_full_write_path(spark, tmp_path):
-    """Round-12 verdict #3 Done-check: the CAS backend carries the FULL
-    write path — upsert, contention by name, steal→LockLostError abort,
-    rebucket (table lock + drain), leaf compaction — through
-    set_lock_backend, with no filesystem mtime anywhere."""
-    from pubmed_central_semantic_search_spark.sources import catalog
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        CasLockBackend,
         ConcurrentUpsertError,
-        MemoryConditionalPutStore,
-        compact_partitioned_leaves,
-        rebucket,
-        set_lock_backend,
+        commit,
+        read_record,
     )
+    from pubmed_central_semantic_search_spark.sources.fsio import _put_if_absent
 
-    store = MemoryConditionalPutStore()
-    path = str(tmp_path / "t")
-    prev = set_lock_backend(CasLockBackend.factory(store))
-    try:
-        keys = [f"PMC{i}" for i in range(20)]
-        upsert_parquet(
-            spark, _rows(spark, [(k, "v1") for k in keys]), path,
-            key_cols=["article_id"], n_buckets=4,
-        )
-        upsert_parquet(
-            spark, _rows(spark, [("PMC0", "v2")]), path,
-            key_cols=["article_id"], n_buckets=4,
-        )
-        assert store.list("") == [], "backend leaked a lease"
-        # contention by name through the CAS backend
-        side = CasLockBackend(store)
-        b = _bucket_of(spark, "PMC1", 4)
-        held = side.try_acquire(f"{path}/_locks/bucket={b}.lock", 3600)
-        assert held is not None
-        try:
-            upsert_parquet(
-                spark, _rows(spark, [("PMC1", "v3")]), path,
-                key_cols=["article_id"], n_buckets=4,
-            )
-            raise AssertionError("CAS contention did not raise")
-        except ConcurrentUpsertError:
-            pass
-        finally:
-            side.release(f"{path}/_locks/bucket={b}.lock", held)
-        # steal mid-merge -> LockLostError, commit aborted, no clobber
-        def _steal(lease):
-            for lp, tok in lease._leases:
-                lease.backend.release(lp, tok)
-                assert lease.backend.try_acquire(lp, 3600) is not None
-
-        before = _table_state(spark, path)
-        catalog._TEST_PRE_COMMIT_HOOK = _steal
-        try:
-            try:
-                upsert_parquet(
-                    spark, _rows(spark, [("PMC2", "LOST")]), path,
-                    key_cols=["article_id"], n_buckets=4,
-                )
-                raise AssertionError("CAS steal did not abort the commit")
-            except catalog.LockLostError:
-                pass
-        finally:
-            catalog._TEST_PRE_COMMIT_HOOK = None
-        assert _table_state(spark, path) == before
-        for k in list(store.list("")):
-            rec = store.get(k)
-            store.delete_if(k, rec[1])
-        # rebucket + compaction through the CAS seam
-        stats = rebucket(spark, path, 8, _writer_drain_timeout_s=2)
-        assert stats["new_n_buckets"] == 8
-        assert store.list("") == []
-        cstats = compact_partitioned_leaves(spark, path, max_files_per_leaf=0)
-        assert cstats["leaves_seen"] > 0
-        assert store.list("") == []
-    finally:
-        set_lock_backend(prev)
-    state = _table_state(spark, path)
-    assert state["PMC0"] == "v2" and state["PMC2"] == "v1"
-
-
-def test_rebucket_swap_aborts_if_staging_invalidated_pre_swap(spark, tmp_path):
-    """Round-12 eighteenth-pass find: a crash-window writer that broke a
-    stalled-heartbeat table lock clears the staging — if that lands
-    before the swap, rebucket must abort BY NAME with the live table
-    untouched (never rename live away toward a missing staging)."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources import catalog
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        RebucketStateError,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-
-    def _clear_staging(lease):
-        if os.path.isdir(path + ".rebucket.staging"):
-            shutil.rmtree(path + ".rebucket.staging")
-
-    catalog._TEST_PRE_COMMIT_HOOK = _clear_staging
-    try:
-        try:
-            rebucket(spark, path, 8)
-            raise AssertionError("swap ran toward a missing staging")
-        except RebucketStateError as e:
-            assert "vanished before the swap" in str(e)
-    finally:
-        catalog._TEST_PRE_COMMIT_HOOK = None
-    assert _table_state(spark, path) == before
-    assert not os.path.exists(path + ".rebucket.old")
-    stats = rebucket(spark, path, 8)  # re-run migrates from scratch
-    assert stats["rows"] == len(keys)
-    assert _table_state(spark, path) == before
-
-
-def test_rebucket_mid_swap_staging_loss_restores_backup(spark, tmp_path):
-    """Same cause one instant later: the staging vanishes AFTER live was
-    renamed to the backup — the failed swap rename must restore the
-    backup IN-PROCESS (a parked 'backup + no staging' state is
-    ambiguous with a completed swap) and raise by name."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources import catalog
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        RebucketStateError,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-
-    def _lose_staging():
-        shutil.rmtree(path + ".rebucket.staging")
-
-    catalog._TEST_MID_SWAP_HOOK = _lose_staging
-    try:
-        try:
-            rebucket(spark, path, 8)
-            raise AssertionError("mid-swap staging loss went unnoticed")
-        except RebucketStateError as e:
-            assert "restored" in str(e)
-    finally:
-        catalog._TEST_MID_SWAP_HOOK = None
-    # restored in-process: live intact, no parked copies
-    assert _table_state(spark, path) == before
-    assert not os.path.exists(path + ".rebucket.old")
-    assert not os.path.exists(path + ".rebucket.staging")
-    stats = rebucket(spark, path, 8)
-    assert stats["rows"] == len(keys)
-    assert _table_state(spark, path) == before
-
-
-def test_rebucket_recovery_demands_layout_proof_before_backup_delete(
-    spark, tmp_path
-):
-    """Recovery's 'swap completed, finish the backup delete' branch must
-    demand the staged table's _layout as proof: a merge-path writer's
-    dynamic overwrite that recreated a renamed-away live has real
-    content but NO _layout — deleting the backup then would destroy the
-    only full pre-rebucket copy (round-12 eighteenth-pass find)."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        RebucketStateError,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-    # park the full table in the backup; recreate live as a merge-path
-    # writer's partial overwrite would: one bucket dir, no _layout
-    shutil.move(path, path + ".rebucket.old")
-    os.makedirs(os.path.join(path, "_bucket=0"))
-    shutil.copy(
-        next(
-            os.path.join(r, f)
-            for r, _d, fs_ in os.walk(path + ".rebucket.old")
-            for f in fs_ if f.endswith(".parquet")
-        ),
-        os.path.join(path, "_bucket=0", "part-0.parquet"),
-    )
-    try:
-        rebucket(spark, path, 8)
-        raise AssertionError("recovery deleted the backup without proof")
-    except RebucketStateError as e:
-        assert "_layout" in str(e)
-    assert os.path.isdir(path + ".rebucket.old"), "backup was destroyed"
-    # operator resolution: drop the partial live -> recovery restores
-    shutil.rmtree(path)
-    stats = rebucket(spark, path, 8)
-    assert stats["rows"] == len(keys)
-    assert _table_state(spark, path) == before
-
-
-def test_cas_backend_concurrent_writers_converge(spark, tmp_path):
-    """The four-writer convergence stress rerun THROUGH CasLockBackend
-    (round-12): racing writers over a shared key set, retrying on
-    ConcurrentUpsertError, must each commit exactly once with no torn
-    rows and no leaked leases — the conditional-put protocol under real
-    thread concurrency, not just the single-caller unit contract."""
-    import threading
-    import time
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        CasLockBackend,
-        ConcurrentUpsertError,
-        MemoryConditionalPutStore,
-        set_lock_backend,
-    )
-
-    store = MemoryConditionalPutStore()
-    path = str(tmp_path / "t")
-    prev = set_lock_backend(CasLockBackend.factory(store))
-    try:
-        keys = [f"PMC{i}" for i in range(12)]
-        upsert_parquet(
-            spark, _rows(spark, [(k, "seed") for k in keys]), path,
-            key_cols=["article_id"], n_buckets=2,
-        )
-        commits, errors = [], []
-
-        def work(tag):
-            deadline = time.monotonic() + 120
-            while True:
-                try:
-                    upsert_parquet(
-                        spark, _rows(spark, [(k, tag) for k in keys]), path,
-                        key_cols=["article_id"], n_buckets=2,
-                    )
-                    commits.append(tag)
-                    return
-                except ConcurrentUpsertError:
-                    if time.monotonic() >= deadline:
-                        errors.append((tag, "timeout"))
-                        return
-                    time.sleep(0.1)
-                except Exception as e:
-                    errors.append((tag, repr(e)))
-                    return
-
-        tags = [f"w{i}" for i in range(4)]
-        threads = [threading.Thread(target=work, args=(t,)) for t in tags]
+    def run_all(target, n):
+        threads = [threading.Thread(target=target, args=(i,)) for i in range(n)]
         for t in threads:
             t.start()
         for t in threads:
-            t.join()
-        assert not errors, errors
-        assert sorted(commits) == sorted(tags)
-        state = _table_state(spark, path)
-        assert len(state) == len(keys)
-        assert len(set(state.values())) == 1, state
-        assert next(iter(set(state.values()))) in tags
-        assert store.list("") == [], "a racing writer leaked a lease"
-    finally:
-        set_lock_backend(prev)
-
-
-def test_conditional_put_store_model_check(tmp_path):
-    """Hypothesis model check: random op sequences against both
-    ConditionalPutStore implementations must track a dict model exactly
-    — version mismatches always fail, matched versions always succeed,
-    and get/list always reflect the model state."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        LocalFsConditionalPutStore,
-        MemoryConditionalPutStore,
-    )
-
-    keys = st.sampled_from(["a/k1", "a/k2", "b/k1"])
-    ops = st.lists(
-        st.tuples(
-            st.sampled_from(["put_new", "put_cur", "put_stale", "del_cur",
-                             "del_stale", "get", "list"]),
-            keys,
-            st.binary(min_size=0, max_size=8),
-        ),
-        max_size=30,
-    )
-    counter = [0]
-
-    @settings(max_examples=60, deadline=None)
-    @given(ops)
-    def run(seq):
-        counter[0] += 1
-        stores = [
-            MemoryConditionalPutStore(),
-            LocalFsConditionalPutStore(
-                str(tmp_path / f"s{counter[0]}")
-            ),
-        ]
-        for store in stores:
-            model = {}  # key -> (value, version)
-            stale = "0" * 32
-            for op, key, val in seq:
-                cur_ver = model[key][1] if key in model else None
-                if op == "put_new":
-                    got = store.put_if(key, None, val)
-                    if key in model:
-                        assert got is None
-                    else:
-                        assert got is not None
-                        model[key] = (val, got)
-                elif op == "put_cur":
-                    got = store.put_if(key, cur_ver, val)
-                    assert got is not None and got != cur_ver
-                    model[key] = (val, got)
-                elif op == "put_stale":
-                    assert store.put_if(key, stale, val) is None
-                elif op == "del_cur":
-                    if key in model:
-                        assert store.delete_if(key, cur_ver)
-                        del model[key]
-                    else:
-                        assert not store.delete_if(key, stale)
-                elif op == "del_stale":
-                    assert not store.delete_if(key, stale)
-                elif op == "get":
-                    got = store.get(key)
-                    if key in model:
-                        assert got == (bytes(model[key][0]), model[key][1])
-                    else:
-                        assert got is None
-                elif op == "list":
-                    prefix = key.split("/")[0] + "/"
-                    assert sorted(store.list(prefix)) == sorted(
-                        k for k in model if k.startswith(prefix)
-                    )
-
-    run()
-
-
-def test_lock_lease_release_joins_heartbeat_thread(spark, tmp_path):
-    """Round-12 ADVICE (low): release() must stop AND JOIN the heartbeat
-    thread before deleting, so no beat can race the delete."""
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _acquire_bucket_locks,
-        _hadoop_fs,
-        _release_bucket_locks,
-    )
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
 
     path = str(tmp_path / "t")
     upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v1")]), path,
-        key_cols=["article_id"], n_buckets=4,
+        spark, _rows(spark, [(f"PMC{i}", "v1") for i in range(8)]), path,
+        key_cols=["article_id"], n_buckets=8,
     )
-    locks = _acquire_bucket_locks(spark, path, [0, 1, 2], ttl_s=2)
-    assert locks._thread is not None and locks._thread.is_alive()
-    fs, _, _ = _hadoop_fs(spark, path)
-    _release_bucket_locks(fs, locks)
-    assert not locks._thread.is_alive(), "release returned with a live beat"
-    lockdir = os.path.join(path, "_locks")
-    assert not any(f.endswith(".lock") for f in os.listdir(lockdir))
+    base = read_record(spark, path)
+    # six disjoint writers (buckets 0-5) + two more that read bucket 0
+    reads = [[b] for b in range(6)] + [[0], [0]]
+    target = str(tmp_path / "race" / "v1")
+    wins, ok, raised, errors = [], {}, [], []
+    put_barrier = threading.Barrier(8)
+    commit_barrier = threading.Barrier(len(reads))
 
+    def put(i):
+        put_barrier.wait()
+        wins.append(_put_if_absent(spark, target, f"writer {i}"))
 
-# --- round-13: write-stamp proof chain, lock-first rebucket, breaker fence --
-
-
-def test_write_stamp_bumps_per_commit_not_on_compaction(spark, tmp_path):
-    """Round-13 (verdict #1): every content-changing commit — create,
-    keyed upsert, group-replace, rebucket — installs a FRESH write stamp
-    with generation+1; leaf compaction (row-equivalent by construction)
-    leaves the stamp untouched, so a resumable migration's journal stays
-    valid through it. The rebucket swap's stamp chains prev_stamp to the
-    migration-start stamp (the completed-swap proof)."""
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_table_stamp,
-        compact_partitioned_leaves,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    grp = spark.createDataFrame(
-        [(f"PMC{i}", f"v{i}", i // 10) for i in range(40)],
-        "article_id string, payload string, grp int",
-    )
-    upsert_parquet(
-        spark, grp, path, key_cols=["article_id"],
-        replace_group_col="grp", n_buckets=4,
-    )
-    s1 = _read_table_stamp(spark, path)
-    assert s1 is not None and int(s1["generation"]) == 1
-
-    upsert_parquet(
-        spark,
-        spark.createDataFrame(
-            [("PMC1", "v1b", 0)], "article_id string, payload string, grp int"
-        ),
-        path, key_cols=["article_id"], n_buckets=4,
-    )
-    s2 = _read_table_stamp(spark, path)
-    assert int(s2["generation"]) == 2 and s2["stamp"] != s1["stamp"]
-
-    upsert_parquet(
-        spark,
-        spark.createDataFrame(
-            [("PMC2", "v2c", 0)], "article_id string, payload string, grp int"
-        ),
-        path, key_cols=["article_id"], replace_group_col="grp", n_buckets=4,
-    )
-    s3 = _read_table_stamp(spark, path)
-    assert int(s3["generation"]) == 3 and s3["stamp"] != s2["stamp"]
-
-    compact_partitioned_leaves(spark, path)
-    s4 = _read_table_stamp(spark, path)
-    assert s4 == s3, "leaf compaction is row-equivalent and must not bump"
-
-    rebucket(spark, path, 8)
-    s5 = _read_table_stamp(spark, path)
-    assert int(s5["generation"]) == 4
-    assert s5["prev_stamp"] == s3["stamp"], "swap must chain prev_stamp"
-    assert s5["stamp"] not in {s1["stamp"], s2["stamp"], s3["stamp"]}
-
-
-def test_rebucket_reconciliation_waits_for_table_lock(spark, tmp_path):
-    """Round-13 (ADVICE r12 #1, medium): a second rebucket call with a
-    DIFFERENT target bucket count must fail on the live migration's
-    table lock BEFORE touching its staging — the old order deleted the
-    live staging first (its journal's completed groups then silently
-    dropped from the swap: data loss) and only then failed."""
-    import json
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        ConcurrentUpsertError,
-        _get_lock_backend,
-        _table_lock_path,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-    # simulate a LIVE rebucket (target 16) mid-migration: table lock
-    # held, staging with a valid journal
-    backend = _get_lock_backend(spark, path)
-    token = backend.try_acquire(_table_lock_path(path), 3600)
-    assert token is not None
-    staging = path + ".rebucket.staging"
-    os.makedirs(os.path.join(staging, "_migration"))
-    with open(
-        os.path.join(staging, "_migration", "migration.json"), "w"
-    ) as fh:
-        json.dump({"target_n": 16, "completed": [0, 1]}, fh)
-    try:
+    def work(i):
+        entry = {"path": f"_bucket={reads[i][0]}/fake-{i}.parquet",
+                 "bucket": reads[i][0], "rows": 1, "bytes": 1}
+        commit_barrier.wait()
         try:
-            rebucket(spark, path, 8)
-            raise AssertionError("rebucket ignored the live table lock")
+            rec = commit(spark, path, base, "UPSERT", [entry], set(), reads[i],
+                         base["schema"], base["layout"], 0.0)
+            ok[i] = rec["version"]
         except ConcurrentUpsertError:
-            pass
-        # the live migration's staging (and journal) survived intact
-        assert os.path.isdir(staging), "live staging was deleted pre-lock"
-        with open(
-            os.path.join(staging, "_migration", "migration.json")
-        ) as fh:
-            assert json.load(fh)["completed"] == [0, 1]
+            raised.append(i)
+        except Exception as e:
+            errors.append(repr(e))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the racers as finely as possible
+    try:
+        run_all(put, 8)  # the primitive: eight racing puts of one name
+        run_all(work, len(reads))  # the protocol
     finally:
-        backend.release(_table_lock_path(path), token)
-    # with the lock released the orphaned staging is cleared (journal
-    # target/stamp mismatch) and the migration runs fresh
-    assert rebucket(spark, path, 8)["rows"] == len(keys)
-    assert _table_state(spark, path) == before
+        sys.setswitchinterval(switch)
+    assert sorted(wins) == [False] * 7 + [True]
+    assert open(target).read().startswith("writer ")
+    assert not errors, errors
+    v0 = base["version"]
+    assert sorted(ok.values()) == list(range(v0 + 1, v0 + 7))  # one per version
+    assert {1, 2, 3, 4, 5} <= set(ok)  # every disjoint writer landed
+    assert len(raised) == 2 and set(raised) | set(ok) == set(range(8))
+    assert len({0, 6, 7} & set(ok)) == 1  # one bucket-0 writer won
+    final = read_record(spark, path)
+    assert final["version"] == v0 + 6
+    fakes = {f["path"] for f in final["files"] if "fake-" in f["path"]}
+    assert fakes == {f"_bucket={reads[i][0]}/fake-{i}.parquet" for i in ok}
 
 
-def test_rebucket_recovery_gated_on_live_backup_lock(spark, tmp_path):
-    """Round-13 (ADVICE r12 #2, low): 'backup exists + live missing' is
-    also a LIVE rebucket's mid-swap window — its table lock rode INTO
-    the backup with the live→backup rename. Recovery must refuse by
-    name while that lock is live (restoring under a live swapper nests
-    its staging rename and kills its lease) and proceed once it is
-    released/stale."""
-    import shutil
+def test_crash_after_data_write_and_after_publish_keeps_last_version(spark, tmp_path):
+    """A crash after the data write (before the publish) and a crash after
+    the publish (before the replaced files are deleted) each leave the
+    latest published version readable; the next upsert is correct, and
+    VACUUM then deletes exactly the unreferenced leftovers."""
+    import pytest
 
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        ConcurrentUpsertError,
-        _get_lock_backend,
-        _table_lock_path,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-    shutil.move(path, path + ".rebucket.old")
-    backend = _get_lock_backend(spark, path)
-    tl_backup = _table_lock_path(path + ".rebucket.old")
-    token = backend.try_acquire(tl_backup, 3600)
-    assert token is not None
-    try:
-        rebucket(spark, path, 8)
-        raise AssertionError("recovery restored under a live swap lock")
-    except ConcurrentUpsertError as e:
-        assert "in flight" in str(e)
-    assert os.path.isdir(path + ".rebucket.old"), "backup was touched"
-    assert not os.path.exists(path), "live was recreated under the lock"
-    backend.release(tl_backup, token)
-    stats = rebucket(spark, path, 8)  # lock gone -> recover + migrate
-    assert stats["rows"] == len(keys)
-    assert _table_state(spark, path) == before
-
-
-def test_rebucket_recovery_refuses_create_path_recreation(spark, tmp_path):
-    """Round-13 (verdict #1 — the triple-fault residue CLOSED): a
-    CREATE-path writer recreating a renamed-away live stamps its own
-    _layout AND a fresh write stamp — under round-12's _layout-presence
-    check, recovery's finish-the-backup-delete branch would have
-    destroyed the only full pre-rebucket copy. The stamp proof
-    (live.prev_stamp == backup.stamp) now fails it honestly."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        RebucketStateError,
-        _read_upsert_layout,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    backup_state = _table_state(spark, path)
-    # the crashed-swap absent window: live parked in the backup...
-    shutil.move(path, path + ".rebucket.old")
-    # ...and a concurrent CREATE-path upsert recreates live as a whole
-    # new table — real content, real _layout, fresh self-stamp
-    upsert_parquet(
-        spark, _rows(spark, [("PMCnew", "fresh")]), path,
-        key_cols=["article_id"], n_buckets=2,
-    )
-    assert _read_upsert_layout(spark, path) is not None  # the old proof PASSES
-    try:
-        rebucket(spark, path, 8)
-        raise AssertionError(
-            "recovery deleted the backup on a create-path recreation"
-        )
-    except RebucketStateError as e:
-        assert "_layout" in str(e) or "prev_stamp" in str(e)
-    assert os.path.isdir(path + ".rebucket.old"), "backup was destroyed"
-    # operator resolution: drop the recreated live -> recovery restores
-    shutil.rmtree(path)
-    stats = rebucket(spark, path, 8)
-    assert stats["rows"] == len(keys)
-    assert _table_state(spark, path) == backup_state
-
-
-def test_rebucket_recovery_finishes_backup_delete_with_stamp_proof(
-    spark, tmp_path
-):
-    """The positive side of the stamp proof: when live really IS the
-    completed swap (live.prev_stamp == backup.stamp), recovery finishes
-    the crashed backup delete instead of raising."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_table_stamp,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-    pre_stamp = _read_table_stamp(spark, path)["stamp"]
-    # park a full copy as the backup, then complete the swap for real:
-    # rebucket installs a live whose stamp chains prev_stamp=pre_stamp
-    shutil.copytree(path, path + ".rebucket.old.pending")
-    rebucket(spark, path, 8)
-    assert _read_table_stamp(spark, path)["prev_stamp"] == pre_stamp
-    # simulate "swap completed, backup delete crashed"
-    shutil.move(path + ".rebucket.old.pending", path + ".rebucket.old")
-    stats = rebucket(spark, path, 16)  # recovery finishes the delete
-    assert stats["rows"] == len(keys)
-    assert not os.path.exists(path + ".rebucket.old")
-    assert _table_state(spark, path) == before
-
-
-def test_rebucket_backup_delete_recovery_survives_later_commits(
-    spark, tmp_path
-):
-    """Twentieth-pass regression: swap completes, the backup delete
-    crashes, and ORDINARY upserts then land on the healthy live table —
-    enough of them to cross the stamp-prune horizon. The completed-swap
-    anchor (the ``prev_stamp`` record) is prune-exempt and the proof
-    scans anchors rather than only the current stamp, so the next
-    rebucket's recovery still finishes the backup delete instead of
-    wedging a healthy table behind RebucketStateError (the first-cut
-    proof read only the current record, which commit 1 already
-    superseded, and pruning deleted the anchor at commit 3)."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_table_stamp,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    pre_stamp = _read_table_stamp(spark, path)["stamp"]
-    shutil.copytree(path, path + ".rebucket.old.pending")
-    rebucket(spark, path, 8)
-    assert _read_table_stamp(spark, path)["prev_stamp"] == pre_stamp
-    # "swap completed, backup delete crashed" — and life goes on: four
-    # commits bump the stamp well past the anchor's prune window
-    shutil.move(path + ".rebucket.old.pending", path + ".rebucket.old")
-    for i in range(4):
-        upsert_parquet(
-            spark, _rows(spark, [(f"PMC{i}", f"rewrite{i}")]), path,
-            key_cols=["article_id"], n_buckets=8,
-        )
-    cur = _read_table_stamp(spark, path)
-    assert "prev_stamp" not in cur, "later commits superseded the anchor"
-    stamp_files = os.listdir(os.path.join(path, "_writestamp"))
-    assert any(n.endswith(".anchor.json") for n in stamp_files), (
-        "the completed-swap anchor must survive pruning"
-    )
-    stats = rebucket(spark, path, 16)  # recovery still proves the swap
-    assert stats["rows"] == len(keys)
-    assert not os.path.exists(path + ".rebucket.old")
-    got = {
-        (r["article_id"], r["payload"])
-        for r in read_upsert_table(spark, path).collect()
-    }
-    expected = {
-        (k, f"v{k}") for k in keys if k not in {f"PMC{i}" for i in range(4)}
-    } | {(f"PMC{i}", f"rewrite{i}") for i in range(4)}
-    assert got == expected
-
-
-def test_rebucket_swap_aborts_on_write_stamp_change(spark, tmp_path):
-    """Round-13 (verdict #1, swap side): a commit landing during the
-    migration BUMPS the write stamp — the swap re-reads it immediately
-    before the live→backup rename and aborts by name on mismatch, even
-    when the lock token check passed (the microsecond residue where a
-    crash-window writer finished between the heartbeat and the swap)."""
     from pubmed_central_semantic_search_spark.sources import catalog
     from pubmed_central_semantic_search_spark.sources.catalog import (
-        RebucketStateError,
-        _bump_table_stamp,
-        rebucket,
+        read_record,
+        snapshot_vacuum,
     )
 
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-
-    def bump_stamp(lease):
-        if lease._op == "rebucket":
-            _bump_table_stamp(spark, path)
-
-    catalog._TEST_PRE_COMMIT_HOOK = bump_stamp
-    try:
-        try:
-            rebucket(spark, path, 8)
-            raise AssertionError("swap proceeded over a changed stamp")
-        except RebucketStateError as e:
-            assert "write stamp" in str(e)
-    finally:
-        catalog._TEST_PRE_COMMIT_HOOK = None
-    # live untouched, no parked copies blocking the retry
-    assert _table_state(spark, path) == before
-    assert not os.path.exists(path + ".rebucket.old")
-    assert rebucket(spark, path, 8)["rows"] == len(keys)
-    assert _table_state(spark, path) == before
-
-
-def test_rebucket_resume_journal_invalidated_by_stamp_change(
-    spark, tmp_path
-):
-    """Round-13 (verdict #1, resume side): a resumable journal is only
-    honored while the live table's write stamp still equals the
-    journal's recorded start stamp. Simulates the one path the round-12
-    writer-side clear cannot cover (a staging that survived a commit —
-    the backup-guard case): the resume must discard the journal and
-    re-migrate from the live table, so the commit's rows survive."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import rebucket
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(40)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    # crash mid-migration with groups journaled as completed
-    try:
-        rebucket(spark, path, 8, _fail_after_groups=2)
-        raise AssertionError("injected crash did not fire")
-    except RuntimeError as e:
-        assert "injected" in str(e)
-    staging = path + ".rebucket.staging"
-    assert os.path.isdir(staging)
-    saved = str(tmp_path / "staging_copy")
-    shutil.copytree(staging, saved)
-    # the committed key must hash into a JOURNALED-COMPLETED group (0 or
-    # 1) — otherwise an unfenced resume would pass by luck (the lost-row
-    # window is exactly the groups the resume skips)
-    new_key = next(
-        f"PMCnew{i}" for i in range(64)
-        if _bucket_of(spark, f"PMCnew{i}", 4) in (0, 1)
-    )
-    # a writer commits (its clear_dead_rebucket_staging removes the
-    # staging — restore the saved copy to simulate the case the clear
-    # cannot reach, e.g. its backup guard refused)
-    upsert_parquet(
-        spark, _rows(spark, [(new_key, "committed")]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    shutil.copytree(saved, staging)
-    stats = rebucket(spark, path, 8)
-    assert stats["rows"] == len(keys) + 1
-    got = _table_state(spark, path)
-    assert got[new_key] == "committed", "resume discarded a commit"
-    assert len(got) == len(keys) + 1
-
-
-def test_break_stale_verifies_judged_token_before_delete(spark, tmp_path):
-    """Round-13 (verdict #3, unit): _break_stale must verify the
-    tombstoned file still carries the token the breaker judged stale —
-    a mismatch means a successor's FRESH lock was renamed away, and it
-    is restored intact."""
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        HadoopFsLockBackend,
-    )
-
-    path = str(tmp_path / "t")
-    os.makedirs(path)
-    backend = HadoopFsLockBackend(spark, path)
-    lp = os.path.join(path, "x.lock")
-    token = backend.try_acquire(lp, 3600)
-    assert token is not None
-    # judged-stale token differs from the file's -> restore, not delete
-    backend._break_stale(lp, expected_token="not-the-current-token")
-    assert os.path.exists(lp), "a fresh successor lock was destroyed"
-    assert backend.validate(lp, token)
-    # matching judged token -> the break proceeds
-    backend._break_stale(lp, expected_token=token)
-    assert not os.path.exists(lp)
-
-
-def test_second_breaker_race_preserves_successors_lock(spark, tmp_path):
-    """Round-13 (verdict #3, injected): breaker B judges the old lock
-    stale; breaker A's break + re-acquire + token stamp lands BEFORE
-    B's tombstone rename. B's rename tombstones A's brand-new lock —
-    the judged-token verify must restore it, B must NOT acquire, and
-    A's lease must survive validation."""
-    import time
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        HadoopFsLockBackend,
-    )
-
-    path = str(tmp_path / "t")
-    os.makedirs(path)
-    a = HadoopFsLockBackend(spark, path)
-    b = HadoopFsLockBackend(spark, path)
-    lp = os.path.join(path, "x.lock")
-    # an abandoned lock: stamped ttl 1 s, mtime aged past it
-    stale_token = a.try_acquire(lp, 1)
-    assert stale_token is not None
-    old = time.time() - 30
-    os.utime(lp, (old, old))
-
-    state = {}
-    orig = b._break_stale
-
-    def hooked(lock_path, expected_token=None):
-        # A's whole break + re-acquire lands between B's judgment and
-        # B's tombstone rename
-        state["a_token"] = a.try_acquire(lock_path, 3600)
-        orig(lock_path, expected_token)
-
-    b._break_stale = hooked
-    got = b.try_acquire(lp, 3600)
-    assert state["a_token"] is not None, "A's re-acquire failed"
-    assert got is None, "B acquired over A's fresh lock"
-    assert a.validate(lp, state["a_token"]), "A's fresh lock was lost"
-
-
-def test_rebucket_drain_window_commit_does_not_abort_swap(spark, tmp_path):
-    """Round-13 nineteenth-pass find ON THIS ROUND'S OWN CHANGE: the
-    migration-start stamp must be read AFTER the writer drain. An
-    in-flight writer (bucket locks acquired before the table lock
-    existed) commits DURING the drain and bumps the stamp — its rows
-    ARE in the post-drain table the migration reads, so a pre-drain
-    stamp read would make the swap's equality check abort spuriously
-    on a commit the staging already includes."""
-    import threading
-    import time
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _bump_table_stamp,
-        _get_lock_backend,
-        _locks_dir,
-        _read_upsert_layout,
-        rebucket,
-    )
-
-    path = str(tmp_path / "t")
-    keys = [f"PMC{i}" for i in range(24)]
-    upsert_parquet(
-        spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    before = _table_state(spark, path)
-    # the in-flight writer: a live bucket lease taken BEFORE rebucket's
-    # table lock, committing (stamp bump) mid-drain, then releasing
-    backend = _get_lock_backend(spark, path)
-    blp = f"{_locks_dir(path)}/bucket=0.lock"
-    btok = backend.try_acquire(blp, 3600)
-    assert btok is not None
-
-    def writer_commits():
-        time.sleep(1.5)  # rebucket is inside its drain poll by now
-        _bump_table_stamp(spark, path)
-        backend.release(blp, btok)
-
-    t = threading.Thread(target=writer_commits)
-    t.start()
-    try:
-        stats = rebucket(spark, path, 8, _writer_drain_timeout_s=20.0)
-    finally:
-        t.join()
-    assert stats["rows"] == len(keys)
-    assert int(_read_upsert_layout(spark, path)["n_buckets"]) == 8
-    assert _table_state(spark, path) == before
-
-
-def test_cas_backend_recovery_gate_symmetric(spark, tmp_path):
-    """The round-13 recovery gate through CasLockBackend: a KV lock key
-    never rides into the backup (no rename moves it), so the gate's
-    probe of the ORIGINAL table-lock path is what protects a mid-swap
-    holder there — a live CAS lease blocks recovery by name, and
-    recovery proceeds once the lease is released."""
-    import shutil
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        CasLockBackend,
-        ConcurrentUpsertError,
-        MemoryConditionalPutStore,
-        _table_lock_path,
-        rebucket,
-        set_lock_backend,
-    )
-
-    store = MemoryConditionalPutStore()
-    prev = set_lock_backend(CasLockBackend.factory(store))
-    try:
-        path = str(tmp_path / "t")
-        keys = [f"PMC{i}" for i in range(24)]
+    for n_buckets in (None, 4):
+        path = str(tmp_path / f"t{n_buckets}")
         upsert_parquet(
-            spark, _rows(spark, [(k, f"v{k}") for k in keys]), path,
-            key_cols=["article_id"], n_buckets=4,
+            spark, _rows(spark, [(f"PMC{i}", "v1") for i in range(12)]), path,
+            key_cols=["article_id"], n_buckets=n_buckets,
         )
-        before = _table_state(spark, path)
-        backend = CasLockBackend(store)
-        tl = _table_lock_path(path)
-        token = backend.try_acquire(tl, 3600)  # the mid-swap holder
-        assert token is not None
-        shutil.move(path, path + ".rebucket.old")  # its absent window
-        try:
-            rebucket(spark, path, 8)
-            raise AssertionError("CAS recovery ignored the live lease")
-        except ConcurrentUpsertError as e:
-            assert "in flight" in str(e)
-        assert os.path.isdir(path + ".rebucket.old")
-        backend.release(tl, token)
-        stats = rebucket(spark, path, 8)
-        assert stats["rows"] == len(keys)
-        assert _table_state(spark, path) == before
-    finally:
-        set_lock_backend(prev)
+        v1 = read_record(spark, path)["version"]
 
+        def crash(*args, **kwargs):
+            raise RuntimeError("injected crash")
 
-def test_concurrent_stamp_bumps_converge(spark, tmp_path):
-    """The stamp protocol under racing DISJOINT-bucket writers (legal
-    concurrency): 16 concurrent bumps through the APPEND-ONLY record
-    protocol — no bump raises, the current stamp is one of the written
-    uuids, and records two generations behind prune away as later
-    commits land. This stress is what caught the first-cut
-    replace-in-place design tearing on ChecksumFileSystem (data and
-    .crc pairing across writers) before it shipped."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _bump_table_stamp,
-        _read_table_stamp,
-    )
-
-    path = str(tmp_path / "t")
-    upsert_parquet(
-        spark, _rows(spark, [("PMC1", "v1")]), path,
-        key_cols=["article_id"], n_buckets=4,
-    )
-    with ThreadPoolExecutor(8) as pool:
-        stamps = list(
-            pool.map(lambda _: _bump_table_stamp(spark, path)["stamp"],
-                     range(16))
+        for point, state in (("commit", "v1"), ("delete_files", "v2")):
+            real = getattr(catalog, point)
+            setattr(catalog, point, crash)
+            try:
+                with pytest.raises(RuntimeError, match="injected crash"):
+                    upsert_parquet(
+                        spark, _rows(spark, [("PMC1", state)]), path,
+                        key_cols=["article_id"], n_buckets=n_buckets,
+                    )
+            finally:
+                setattr(catalog, point, real)
+            got = _table_state(spark, path)
+            assert len(got) == 12 and got["PMC1"] == state
+        # the crash before the publish published nothing; the one after did
+        assert read_record(spark, path)["version"] == v1 + 1
+        assert len(_file_snapshot(path)) > len(_live_files(spark, path))
+        upsert_parquet(
+            spark, _rows(spark, [("PMC1", "v3"), ("PMCnew", "n")]), path,
+            key_cols=["article_id"], n_buckets=n_buckets,
         )
-    final = _read_table_stamp(spark, path)
-    assert final is not None
-    assert final["stamp"] in stamps
-    assert int(final["generation"]) >= 2
-    # the record set stays bounded: three more SERIAL commits advance
-    # the generation past the racing burst, pruning its records
-    for _ in range(3):
-        last = _bump_table_stamp(spark, path)
-    records = [
-        f for f in os.listdir(os.path.join(path, "_writestamp"))
-        if not f.startswith(".")  # ChecksumFileSystem .crc sidecars
-    ]
-    assert all(f.startswith("g") and f.endswith(".json") for f in records)
-    burst_gen = int(final["generation"])
-    kept_gens = {int(f[1:13]) for f in records}
-    assert min(kept_gens) >= int(last["generation"]) - 2
-    assert max(kept_gens) == int(last["generation"]) == burst_gen + 3
-    # reader still converges on the current stamp
-    assert _read_table_stamp(spark, path)["stamp"] == last["stamp"]
+        got = _table_state(spark, path)
+        assert len(got) == 13 and got["PMC1"] == "v3" and got["PMC2"] == "v1"
+        snapshot_vacuum(spark, path, keep_last=1)
+        assert set(_file_snapshot(path)) == _live_files(spark, path)
+        assert _table_state(spark, path) == got

@@ -137,34 +137,6 @@ def test_snapshot_diff_schema_mismatch_raises(spark, tmp_path):
         snapshot_diff(spark, table, v1, v2, ["k"])
 
 
-def test_upsert_recovers_from_crash_between_swap_renames(spark, tmp_path):
-    """Simulate a writer that died between rename(live -> backup) and
-    rename(staging -> live): the live path is ABSENT and the prior table
-    sits in the __upsert_old backup. The next upsert must restore it and
-    MERGE — never treat the table as a first write (which would silently
-    drop every pre-crash row)."""
-    from pubmed_central_semantic_search_spark.sources.catalog import _hadoop_fs
-
-    table = str(tmp_path / "t")
-    schema = "k long, v string, ver long"
-    upsert_parquet(
-        spark, spark.createDataFrame([(1, "a", 1), (2, "b", 1)], schema),
-        table, ["k"], version_col="ver",
-    )
-    # crash simulation: live renamed away, nothing renamed back
-    fs, hpath, jvm = _hadoop_fs(spark, table)
-    backup = jvm.org.apache.hadoop.fs.Path(table + "__upsert_old")
-    assert fs.rename(hpath, backup)
-    assert not fs.exists(hpath)
-
-    upsert_parquet(
-        spark, spark.createDataFrame([(2, "B", 2), (3, "c", 1)], schema),
-        table, ["k"], version_col="ver",
-    )
-    assert _read(spark, table) == [(1, "a", 1), (2, "B", 2), (3, "c", 1)]
-    assert not fs.exists(backup)
-
-
 def test_upsert_ignores_stale_staging(spark, tmp_path):
     """A staging dir left by an aborted write (live intact) must be
     discarded, not merged or adopted."""
