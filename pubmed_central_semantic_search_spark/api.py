@@ -33,15 +33,11 @@ from .operators.chunking import explode_chunks
 from .operators.pooling import mean_pool
 from .operators.render import render_hits
 from .operators.search import highlight_chunks, score_documents, semantic_search
-from .sources.catalog import read_upsert_table, upsert_parquet
+from .sources.catalog import read_files, read_upsert_table, upsert_parquet
 from .sources.jsonl import read_jsonl_splits
 from .sources.pmc import fetch_articles, to_article_rows
 from .schemas import ARTICLES_SCHEMA
-from .session import collect_bounded, local_df
-
-# an upload is batch-sized by the ingest contract: its article ids are
-# collected to the driver for the chunk-table lookup
-_MAX_UPLOAD_ARTICLES = 100_000
+from .session import local_df
 
 
 class SemanticSearchEngine:
@@ -90,14 +86,15 @@ class SemanticSearchEngine:
         (``replace_group_col`` — a chunk-keyed upsert alone cannot delete,
         so re-uploading a shortened article would leave its removed
         paragraphs searchable); mean-pool from the WRITTEN chunks of just
-        the UPLOADED articles (one ``read_upsert_table`` batch lookup on the
-        batch's article ids — re-pooling the whole corpus would make every
-        small ingest an O(corpus) job) → upsert doc vectors (E1 runs once, H1-keyed
+        the UPLOADED articles (the chunk commit's rewritten buckets,
+        broadcast semi-join on the batch's article ids — re-pooling the
+        whole corpus would make every small ingest an O(corpus) job) →
+        upsert doc vectors (E1 runs once, H1-keyed
         idempotent overwrite)."""
         chunks = explode_chunks(articles).withColumn(
             "embedding", encode_column("paragraph", kind=self.encoder, dim=self.dim)
         )
-        upsert_parquet(
+        record = upsert_parquet(
             self.spark,
             chunks,
             self.chunks_path,
@@ -109,20 +106,17 @@ class SemanticSearchEngine:
             # consumption (the upsert consumes the batch plan 2-3×)
             persist_batch=True,
         )
+        if record is None:
+            return  # an empty upload committed nothing
         # the doc vectors of just the uploaded articles, pooled from the
-        # WRITTEN chunks: one batch lookup (on the partitioned layout its
-        # file list is the batch's buckets only). The ids keep their
-        # native type — the lookup hashes them at the stored column type.
-        ids = [
-            r[0]
-            for r in collect_bounded(
-                articles.select("article_id").distinct(),
-                _MAX_UPLOAD_ARTICLES,
-                "upload_articles batch ids",
-            )
-        ]
-        written = read_upsert_table(
-            self.spark, self.chunks_path, key_equals={"article_id": ids}
+        # WRITTEN chunks: the files of the buckets this commit rewrote
+        # (every file of a flat table), semi-joined to the batch's ids
+        written = read_files(
+            self.spark, self.chunks_path, record, record["buckets"]
+        ).join(
+            F.broadcast(articles.select("article_id").distinct()),
+            "article_id",
+            "left_semi",
         )
         vecs = mean_pool(
             written, group=["article_id"], vec_col="embedding", dim=self.dim

@@ -303,10 +303,10 @@ def _roundtrip_merges(
     # 'gen' arm: the partitioned table above took EXACTLY three commits
     # (create, UPSERT INTO, group-replace), and every commit publishes one
     # record to the table's commit log, so its latest version reads 3 —
-    # one driver-side listing, deterministic.
-    from ..sources.catalog import log_versions
+    # one driver-side record read, deterministic.
+    from ..sources.catalog import read_record
 
-    gen_rows = [("gen", -3, None, None, str(log_versions(spark, part_path)[-1]), None)]
+    gen_rows = [("gen", -3, None, None, str(read_record(spark, part_path)["version"]), None)]
 
     # S9 — collection DDL round-trip on the same schema (create-if-absent,
     # exists-check, drop — the reference's collection lifecycle). Explicit
@@ -539,19 +539,16 @@ def upsert_rewrite_stats(spark: SparkSession, sf_dir: str) -> dict:
     Flat must rewrite the whole table; partitioned must rewrite only
     the touched bucket — the batch-sized-vs-table-sized fact, free of
     wall-clock noise."""
-    from ..sources.catalog import read_record
-
     out: dict = {}
     for layout, n_buckets in (("flat", None), ("part", 64)):
         path = _upsert_bench_table(spark, sf_dir, layout, n_buckets)
         batch = _upsert_seed(spark, sf_dir).filter(
             F.col("doc_id") < 2
         ).withColumn("text", F.concat("text", F.lit("-u")))
-        upsert_parquet(
+        record = upsert_parquet(
             spark, batch, path, key_cols=["chunk_key"],
             replace_group_col="doc_id", n_buckets=n_buckets,
         )
-        record = read_record(spark, path)
         out[layout] = {
             "table_files": len(record["files"]),
             "table_bytes": sum(f["bytes"] for f in record["files"]),

@@ -24,6 +24,7 @@ the leftovers. Nothing is reconciled on entry."""
 from __future__ import annotations
 
 import functools
+import json
 import re
 import time
 import uuid
@@ -36,6 +37,7 @@ from .fsio import (  # noqa: F401
     ConcurrentUpsertError,
     _hadoop_fs,
     _list_parquet_sizes,
+    _read_text,
     check_conflicts,
     commit,
     delete_files,
@@ -43,6 +45,7 @@ from .fsio import (  # noqa: F401
     place_files,
     read_files,
     read_record,
+    retire_record,
     table_schema,
 )
 from .snapshots import (  # noqa: F401
@@ -70,6 +73,13 @@ def reset_table(spark: SparkSession, name: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
+# an upsert-table commit retires the record this many versions back:
+# the files of older versions are already deleted, so only a writer
+# still racing from such an old read version would read the record (it
+# then raises ConcurrentUpsertError), and the log's bytes stay bounded
+# instead of growing by one full file list per commit
+_KEEP_RECORDS = 16
+
 # test-only injection point: called between snapshot_vacuum's two
 # phases (records retired, data not yet deleted) so tests can pin the
 # crash state — every listed version must still be readable
@@ -95,14 +105,41 @@ def _read_upsert_layout(spark: SparkSession, path: str):
     return record["layout"]
 
 
+def _legacy_layout(spark, path):
+    """The ``<path>/_layout`` record a table written before the commit log
+    carries (json lines: n_buckets, bucket_cols, evolved and, from later
+    writers, bucket_col_types), or None. Conflicting records raise — a
+    wrong n_buckets would hash rows into the wrong buckets."""
+    fs, hpath, _ = _hadoop_fs(spark, f"{path.rstrip('/')}/_layout")
+    if not fs.exists(hpath):
+        return None
+    rows = [
+        json.loads(line)
+        for st in fs.listStatus(hpath)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        for line in _read_text(spark, st.getPath().toString()).splitlines()
+        if line.strip()
+    ]
+    if any(r != rows[0] for r in rows[1:]):
+        raise ValueError(
+            f"upsert_parquet: the _layout record of {path} holds "
+            f"{len(rows)} conflicting entries — the table metadata is "
+            "corrupted; remove the stale file"
+        )
+    return rows[0] if rows else None
+
+
 def _adopt(spark, path, n_buckets, bucket_src, started):
     """A directory that holds parquet but no commit log (written by a plain
     parquet writer, or before the log existed): publish its files as they
     stand as version 1. Files a commit wrote but never published
-    (``v{n}-`` names) stay out. Flat files on a partitioned call, or
-    ``_bucket=`` directories on a flat call, raise by name — the layouts
-    cannot be switched in place. Returns the record, or None for an
-    absent or data-less directory."""
+    (``v{n}-`` names) stay out. The layout comes from the table's own
+    ``_layout`` record when it has one (the caller's mismatching layout
+    then raises in ``upsert_parquet``), else from the call. Flat files on
+    a partitioned layout, ``_bucket=`` directories on a flat one, or a
+    bucket directory at or past ``n_buckets`` raise by name. The schema
+    is the union of every file's footer. Returns the record, or None for
+    an absent or data-less directory."""
     fs, hpath, _ = _hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
@@ -112,6 +149,10 @@ def _adopt(spark, path, n_buckets, bucket_src, started):
     ]
     if not files:
         return None
+    legacy = _legacy_layout(spark, path)
+    if legacy is not None:
+        n_buckets = int(legacy["n_buckets"])
+        bucket_src = legacy["bucket_cols"].split(",")
     nested = any("/" in f["path"] for f in files)
     if nested and n_buckets is None:
         raise ValueError(
@@ -124,15 +165,25 @@ def _adopt(spark, path, n_buckets, bucket_src, started):
             f"n_buckets={n_buckets} — the layouts cannot be switched in "
             "place; rewrite the table once through the partitioned create path"
         )
+    stray = sorted({f["bucket"] for f in files if n_buckets and f["bucket"] >= n_buckets})
+    if stray:
+        raise ValueError(
+            f"upsert_parquet: layout mismatch — table at {path} holds "
+            f"{BUCKET_COL} directories {stray} at or past n_buckets="
+            f"{n_buckets}; it was written with another bucket count"
+        )
     # the one schema inference this table ever pays
-    existing = spark.read.parquet(*[f"{path.rstrip('/')}/{f['path']}" for f in files])
+    existing = spark.read.option("mergeSchema", "true").parquet(
+        *[f"{path.rstrip('/')}/{f['path']}" for f in files]
+    )
     layout = {
         "n_buckets": n_buckets,
         "bucket_cols": ",".join(bucket_src) if n_buckets else "",
-        "bucket_col_types": [
-            existing.schema[c].dataType.simpleString() for c in bucket_src
-        ] if n_buckets else [],
-        "evolved": False,
+        "bucket_col_types": (
+            (legacy or {}).get("bucket_col_types")
+            or [existing.schema[c].dataType.simpleString() for c in bucket_src]
+        ) if n_buckets else [],
+        "evolved": bool(n_buckets and legacy and legacy.get("evolved")),
     }
     return commit(
         spark, path, None, "ADOPT", files, set(), None,
@@ -154,8 +205,9 @@ def _publish(spark, path, base, build, layout, operation, read_buckets, started)
     them when None). A partitioned frame carries the bucket column and
     arrives partitioned the way its files should be cut. The replaced
     files, and bucket directories left without live files, are deleted
-    after the publish. A lost race deletes this commit's own files
-    before it raises."""
+    after the publish, and the record ``_KEEP_RECORDS`` versions back is
+    retired. A lost race deletes this commit's own files before it
+    raises."""
     version = (base["version"] if base else 0) + 1
     staging = f"{path.rstrip('/')}/_staging/v{version}.{uuid.uuid4().hex}"
     try:
@@ -185,6 +237,8 @@ def _publish(spark, path, base, build, layout, operation, read_buckets, started)
     live_dirs = {f["path"].rsplit("/", 1)[0] for f in record["files"] if "/" in f["path"]}
     emptied = {p.rsplit("/", 1)[0] for p in removed if "/" in p} - live_dirs
     delete_files(spark, path, sorted(removed) + sorted(emptied))
+    if record["version"] > _KEEP_RECORDS:
+        retire_record(spark, path, record["version"] - _KEEP_RECORDS)
     return record
 
 
@@ -198,13 +252,16 @@ def upsert_parquet(
     n_buckets: int | None = None,
     allow_schema_evolution: bool = False,
     persist_batch: bool = False,
-) -> None:
+) -> dict | None:
     """S7 — idempotent keyed write: new rows win over existing rows with
     the same key (the reference's content-keyed overwrite semantics).
 
     One commit: read the latest log record, merge the batch with the
     live files it touches, write the merged rows as NEW files, publish
     one record (``fsio.commit``), then delete the replaced files.
+    Returns the published record (its ``buckets`` are the buckets the
+    commit rewrote; None for a flat table), or None when an empty
+    partitioned batch committed nothing.
     Concurrency: disjoint-bucket writers converge, overlapping ones raise
     ``ConcurrentUpsertError`` by name, a crash leaves the last version
     readable and writable (module docstring). A directory holding
@@ -358,7 +415,7 @@ def upsert_parquet(
             bexpr = bucket_expr(bucket_src, n_buckets)
             touched = sorted(r[0] for r in df.select(bexpr).distinct().collect())
             if not touched:
-                return  # an empty batch commits nothing
+                return None  # an empty batch commits nothing
         def merge():
             if base is None and n_buckets is not None:
                 # a partitioned create writes the batch as it comes: no
@@ -400,7 +457,7 @@ def upsert_parquet(
         op = "CREATE" if base is None else (
             "GROUP_REPLACE" if replace_group_col else "UPSERT"
         )
-        _publish(spark, path, base, merge, layout, op, touched, started)
+        return _publish(spark, path, base, merge, layout, op, touched, started)
     finally:
         if persist_batch:
             df.unpersist()

@@ -19,8 +19,11 @@ Concurrency contract: writers whose read buckets are disjoint converge
 rewrite); overlapping writers raise ``ConcurrentUpsertError`` by name; a
 crash at any step leaves only unreferenced files, and the last
 published version stays readable and writable. Record names are never
-freed: VACUUM empties a retired record instead of deleting it, so a
-stale writer can never re-publish a retired version."""
+freed: VACUUM (and an upsert-table commit, for the record 16 versions
+back) empties a retired record instead of deleting it, so a stale
+writer can never re-publish a retired version. Versions are therefore
+contiguous, and the latest is found by probing forward
+(``latest_version``) instead of listing the log."""
 
 from __future__ import annotations
 
@@ -54,13 +57,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath, jvm
 
 
-def _local(fs, hpath) -> str | None:
-    """The OS path when ``hpath`` lives on the local filesystem."""
-    if fs.getUri().getScheme() == "file":
-        return hpath.toUri().getPath()
-    return None
-
-
 def _list_parquet_sizes(fs, hpath, jvm) -> tuple[list[int], bool]:
     """Recursive (sizes, has_subdir_files) over a table directory via the
     Hadoop FS API — works on any supported filesystem, not just local."""
@@ -82,13 +78,6 @@ def _list_parquet_sizes(fs, hpath, jvm) -> tuple[list[int], bool]:
 def _read_text(spark: SparkSession, path: str) -> str | None:
     """One small file's text, or None if absent."""
     fs, hpath, jvm = _hadoop_fs(spark, path)
-    local = _local(fs, hpath)
-    if local is not None:
-        try:
-            with open(local, encoding="utf-8") as fh:
-                return fh.read()
-        except FileNotFoundError:
-            return None
     if not fs.exists(hpath):
         return None
     stream = fs.open(hpath)
@@ -110,8 +99,8 @@ def _put_if_absent(spark: SparkSession, path: str, text: str) -> bool:
     fs, hpath, jvm = _hadoop_fs(spark, path)
     parent, name = path.rstrip("/").rsplit("/", 1)
     tmp = f"{parent}/.{name}.{uuid.uuid4().hex}.tmp"
-    local = _local(fs, hpath)
-    if local is not None:
+    if fs.getUri().getScheme() == "file":
+        local = hpath.toUri().getPath()
         tmp_local = os.path.join(os.path.dirname(local), os.path.basename(tmp))
         os.makedirs(os.path.dirname(local), exist_ok=True)
         with open(tmp_local, "w", encoding="utf-8") as fh:
@@ -138,21 +127,14 @@ def _put_if_absent(spark: SparkSession, path: str, text: str) -> bool:
 # --- the commit log ---------------------------------------------------------
 
 
-def _record_sizes(spark: SparkSession, table: str, stat: bool) -> list[tuple]:
+def _record_path(table: str, version: int) -> str:
+    return f"{table.rstrip('/')}/{LOG_DIR}/v{version}"
+
+
+def _record_sizes(spark: SparkSession, table: str) -> list[tuple[str, int]]:
     """(name, size) of every record file in the table's log ([] without a
-    log); sizes are only read with ``stat`` (else None)."""
+    log) — one listing of the whole history."""
     fs, hpath, _ = _hadoop_fs(spark, f"{table.rstrip('/')}/{LOG_DIR}")
-    local = _local(fs, hpath)
-    if local is not None:
-        try:
-            names = [n for n in os.listdir(local) if _is_record(n)]
-        except FileNotFoundError:
-            return []
-        # record files are never deleted, so stat cannot race a delete
-        # (a publisher's temp file can vanish, but it is not a record)
-        return [
-            (n, os.stat(os.path.join(local, n)).st_size if stat else None) for n in names
-        ]
     if not fs.exists(hpath):
         return []
     return [
@@ -168,32 +150,50 @@ def _is_record(name: str) -> bool:
 def log_versions(spark: SparkSession, table: str) -> list[int]:
     """Published versions of a table, ascending (retired records — emptied
     by VACUUM — excluded; [] when the table has no log)."""
-    return sorted(int(n[1:]) for n, size in _record_sizes(spark, table, True) if size > 0)
+    return sorted(int(n[1:]) for n, size in _record_sizes(spark, table) if size > 0)
+
+
+# the latest version this process last saw per table
+_SEEN: dict[str, int] = {}
+
+
+def latest_version(spark: SparkSession, table: str) -> int:
+    """The table's latest version (0 without a log). Record names are
+    never freed and a commit only publishes right after the latest it
+    read, so versions are contiguous from 1: the latest is found by
+    probing v{n+1}, v{n+2}, ... from any existing name. The probe starts
+    at the version this process last saw, so it costs the commits since
+    then, not the log's history; only the first look at a table (or one
+    whose last-seen name is gone — the table was recreated) lists the
+    log. VACUUM keeps the latest record, so it is never retired."""
+    table = table.rstrip("/")
+    fs, _, jvm = _hadoop_fs(spark, table)
+    P = jvm.org.apache.hadoop.fs.Path
+    n = _SEEN.get(table, 0)
+    if n == 0 or not fs.exists(P(_record_path(table, n))):
+        n = max((int(name[1:]) for name, _ in _record_sizes(spark, table)), default=0)
+    while fs.exists(P(_record_path(table, n + 1))):
+        n += 1
+    _SEEN[table] = n
+    return n
 
 
 def read_record(spark: SparkSession, table: str, version: int | None = None):
     """The record of ``version`` (default: the latest), or None when the
     table has no such published version."""
     if version is None:
-        # VACUUM keeps at least the latest version, so the highest record
-        # name is always published and never retired: no stat needed
-        names = _record_sizes(spark, table, False)
-        if not names:
+        version = latest_version(spark, table)
+        if version == 0:
             return None
-        version = max(int(n[1:]) for n, _ in names)
-    text = _read_text(spark, f"{table.rstrip('/')}/{LOG_DIR}/v{version}")
+    text = _read_text(spark, _record_path(table, version))
     return json.loads(text) if text else None
 
 
 def retire_record(spark: SparkSession, table: str, version: int) -> None:
     """Empty a record in place (VACUUM): the version stops being readable,
     but its name stays taken, so no writer can publish it again."""
-    fs, hpath, _ = _hadoop_fs(spark, f"{table.rstrip('/')}/{LOG_DIR}/v{version}")
-    local = _local(fs, hpath)
-    if local is not None:
-        open(local, "w").close()
-    else:
-        fs.create(hpath, True).close()
+    fs, hpath, _ = _hadoop_fs(spark, _record_path(table, version))
+    fs.create(hpath, True).close()
 
 
 def _writer() -> str:
@@ -247,7 +247,8 @@ def commit(
             "writer": _writer(),
             "duration_s": round(time.perf_counter() - started, 3),
         }
-        if _put_if_absent(spark, f"{table}/{LOG_DIR}/v{version}", json.dumps(record)):
+        if _put_if_absent(spark, _record_path(table, version), json.dumps(record)):
+            _SEEN[table] = version
             return record
         head = check_conflicts(spark, table, base, read_buckets, operation)
 
@@ -266,10 +267,9 @@ def check_conflicts(
     table has none)."""
     table = table.rstrip("/")
     first = (base["version"] if base else 0) + 1
-    versions = log_versions(spark, table)
-    latest = versions[-1] if versions else 0
-    for v in range(first, latest + 1):
-        other = read_record(spark, table, v)
+    head, version = base, first
+    while (text := _read_text(spark, _record_path(table, version))) is not None:
+        other = json.loads(text) if text else None
         if (
             base is None
             or other is None
@@ -286,7 +286,8 @@ def check_conflicts(
                 "publishing would lose its rows; nothing was published. "
                 "Retry the operation."
             )
-    return read_record(spark, table, latest)
+        head, version = other, version + 1
+    return head
 
 
 def place_files(

@@ -431,6 +431,111 @@ def test_pre_metadata_table_is_accepted_and_stamped(spark, tmp_path):
         )
 
 
+
+def test_adopt_honours_legacy_layout_record(spark, tmp_path):
+    """A table written before the commit log by the layout-record writer:
+    group-bucketed (by grp), evolved (some files carry an extra column)
+    and described by its ``_layout`` record. Adoption takes the layout
+    from that record, not from the call: a keyed call hashes by the
+    stored group column, a different bucket count raises, the sticky
+    evolved flag admits an old-schema batch, and the evolved column
+    survives the rewrite of its bucket. Bucket directories past the
+    call's count refuse adoption by name."""
+    import json
+
+    import pytest as _pt
+
+    from pubmed_central_semantic_search_spark.sources.catalog import (
+        bucket_expr,
+        read_record,
+    )
+
+    path = str(tmp_path / "legacy")
+    schema = "doc_id string, grp string, payload string"
+    old = spark.createDataFrame(
+        [(f"d{i}", f"g{i % 8}", f"v1-{i}") for i in range(32)], schema
+    )
+    old.withColumn(BUCKET_COL, bucket_expr(["grp"], 4)).write.partitionBy(
+        BUCKET_COL
+    ).parquet(path)
+    evolved = spark.createDataFrame(
+        [("d100", "g1", "v1-100", 0.9), ("d101", "g1", "v1-101", 0.8)],
+        schema + ", quality double",
+    )
+    evolved.withColumn(BUCKET_COL, bucket_expr(["grp"], 4)).write.mode(
+        "append"
+    ).partitionBy(BUCKET_COL).parquet(path)
+    os.makedirs(os.path.join(path, "_layout"))
+    with open(os.path.join(path, "_layout", "part-00000.json"), "w") as fh:
+        fh.write(json.dumps({"n_buckets": 4, "bucket_cols": "grp", "evolved": True}) + "\n")
+
+    batch = spark.createDataFrame([("d100", "g1", "v2-100")], schema)
+    with _pt.raises(ValueError, match="layout mismatch"):
+        upsert_parquet(spark, batch, path, key_cols=["doc_id"], n_buckets=8)
+    # keyed call, old-schema batch, no evolution flag: the stored layout
+    # (group key, sticky evolved) governs
+    upsert_parquet(spark, batch, path, key_cols=["doc_id"], n_buckets=4)
+    layout = read_record(spark, path)["layout"]
+    assert layout == {
+        "n_buckets": 4, "bucket_cols": "grp",
+        "bucket_col_types": ["string"], "evolved": True,
+    }
+    got = {r["doc_id"]: r for r in read_upsert_table(spark, path).collect()}
+    assert len(got) == 34  # merged in place, no duplicate of d100
+    assert got["d100"]["payload"] == "v2-100" and got["d100"]["quality"] is None
+    assert got["d101"]["quality"] == 0.8  # evolved column kept in the rewrite
+    assert got["d5"]["payload"] == "v1-5"
+
+    # a directory bucketed 8 ways, adopted by a 4-bucket call
+    wide = str(tmp_path / "wide")
+    old.withColumn(BUCKET_COL, bucket_expr(["doc_id"], 8)).write.partitionBy(
+        BUCKET_COL
+    ).parquet(wide)
+    with _pt.raises(ValueError, match="layout mismatch"):
+        upsert_parquet(spark, batch, wide, key_cols=["doc_id"], n_buckets=4)
+    assert not os.path.exists(os.path.join(wide, "_log"))
+
+
+def test_latest_record_is_probed_and_old_records_retire(spark, tmp_path, monkeypatch):
+    """The latest record is found by probing forward from the version
+    this process last saw — no listing of the log once a table has been
+    seen — and an upsert-table commit empties the record
+    ``_KEEP_RECORDS`` versions back, so the log's bytes stay bounded. A
+    table recreated with fewer versions than last seen still reads at
+    its own latest."""
+    import shutil
+
+    from pubmed_central_semantic_search_spark.sources import catalog, fsio
+
+    monkeypatch.setattr(catalog, "_KEEP_RECORDS", 2)
+    path = str(tmp_path / "t")
+    for i in range(5):
+        upsert_parquet(
+            spark, _rows(spark, [(f"PMC{i % 3}", f"v{i}")]), path,
+            key_cols=["article_id"], n_buckets=4,
+        )
+    sizes = [os.path.getsize(os.path.join(path, "_log", f"v{v}")) for v in range(1, 6)]
+    assert [s == 0 for s in sizes] == [True, True, True, False, False]
+    assert catalog.read_record(spark, path)["version"] == 5
+
+    listings = []
+    real = fsio._record_sizes
+    monkeypatch.setattr(fsio, "_record_sizes", lambda *a: listings.append(a) or real(*a))
+    upsert_parquet(
+        spark, _rows(spark, [("PMC0", "v5")]), path,
+        key_cols=["article_id"], n_buckets=4,
+    )
+    assert catalog.read_record(spark, path)["version"] == 6
+    assert _table_state(spark, path) == {"PMC0": "v5", "PMC1": "v4", "PMC2": "v2"}
+    assert listings == []
+
+    shutil.rmtree(path)
+    upsert_parquet(
+        spark, _rows(spark, [("PMC9", "new")]), path, key_cols=["article_id"]
+    )
+    assert catalog.read_record(spark, path)["version"] == 1
+    assert _table_state(spark, path) == {"PMC9": "new"}
+
 def test_point_lookup_read_prunes_to_one_bucket(spark, tmp_path):
     """read_upsert_table(key_equals=...) over the stored bucket key scans
     ONE bucket's live files (inputFiles) and still returns exactly
