@@ -17,10 +17,18 @@ Layout:
                    real sentence-transformers path behind an import guard.
 - ``functions/`` — column-expression builders (vector math, text/hash fns).
 - ``operators/`` — DataFrame→DataFrame transforms (chunking, pooling, top-k,
-                   search, dedup, text stats, ANN, multimodal).
-- ``sources/``   — readers/writers (JSONL, parquet, EuropePMC JATS XML, PDF
-                   stub).
-- ``plans/``     — plan-construction helpers (exact vs. approximate search).
+                   search, dedup, clustering, text stats, ANN, multimodal,
+                   curation).
+- ``sources/``   — readers/writers (JSONL, EuropePMC JATS XML, PDF) and the
+                   table layer (upsert tables and snapshots over one
+                   commit log).
+- ``queries/``   — the driver-facing registry queries, each with its DuckDB
+                   oracle.
+- ``plans/``     — plan helpers: the dense-kernel rule (``resolve_kernel``),
+                   plan introspection (``explain_str``/``assert_plan``)
+                   and the Z-order file layout (``layout``).
+- ``api``/``sql``— the engine facade (``SemanticSearchEngine``) and the
+                   pure-SQL entry point.
 - ``streaming/`` — Structured Streaming incremental ingest.
 """
 

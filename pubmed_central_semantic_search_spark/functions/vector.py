@@ -132,16 +132,12 @@ def dot(a: Column | str, b: Column | str) -> Column:
 
 
 def l2_norm(v: Column | str) -> Column:
-    return F.sqrt(dot(v, v))
-
-
-def l2_normalize(v: Column | str) -> Column:
-    """Unit-normalize an array column (returns array<double>). The zero
-    vector passes through unchanged — dividing by its zero norm would be
-    DIVIDE_BY_ZERO under ANSI (``cosine_similarity``'s convention)."""
-    v = as_double(v)
-    n = l2_norm(v)
-    return F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(v)
+    """Euclidean norm: the squares folded left to right — the order and
+    the bits of ``sqrt(dot(v, v))`` — without ``dot``'s length check,
+    which a vector against itself cannot fail. NULL in, NULL out."""
+    return F.sqrt(
+        F.aggregate(as_double(v), F.lit(0.0), lambda acc, x: acc + x * x)
+    )
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
@@ -165,33 +161,3 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return F.when(~F.isnan(n2) & (n2 > 0), dot(a, b) / n2).otherwise(
         F.when(n2.isNotNull(), F.lit(0.0))
     )
-
-
-def cosine_similarity_prenormed(a: Column | str, b: Column | str) -> Column:
-    """Cosine when BOTH sides are already unit-normalized: just the dot.
-
-    At 100 TB scale, normalize once at write time (`l2_normalize`) and use
-    this in every query — saves 2/3 of the flops per comparison.
-    """
-    return dot(a, b)
-
-
-def euclidean_distance(a: Column | str, b: Column | str) -> Column:
-    a, b = as_double(a), as_double(b)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def vector_sum(a: Column | str, b: Column | str) -> Column:
-    """Element-wise sum of two arrays."""
-    return F.zip_with(as_double(a), as_double(b), lambda x, y: x + y)
-
-
-def scale(v: Column | str, s: Column) -> Column:
-    """Element-wise scalar multiply."""
-    return F.transform(as_double(v), lambda x: x * s)

@@ -99,10 +99,9 @@ def brute_force_topk(
     vec_col: str = "embedding",
     kernel: str = "hof",
 ) -> DataFrame:
-    """THE exact per-query top-k cosine — ``score_documents``,
-    ``plan_topk_search``'s exact tier and the x768 bench pack all route
-    here. ``queries``: (query_id, qvec), the tiny side. Returns
-    (query_id, id_col, score).
+    """THE exact per-query top-k cosine — ``score_documents`` and the
+    x768 bench pack both route here. ``queries``: (query_id, qvec), the
+    tiny side. Returns (query_id, id_col, score).
 
     ``kernel`` picks the scoring engine: ``hof`` (default) is the
     bit-exact Catalyst sequential fold over a broadcast crossJoin — every

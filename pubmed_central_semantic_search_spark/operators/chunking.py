@@ -28,13 +28,6 @@ from ..functions.text import regex_escape_literal, CHUNK_SEPARATORS, chunk_split
 from ..schemas import ARTICLE_ID, SECTION_NAMES, SECTIONS
 
 
-def chunk_flat_text(
-    df: DataFrame, text_col: str = "text", level: str = "sentence", out_col: str = "chunks"
-) -> DataFrame:
-    """F1 on flat documents: add an array<string> chunk column."""
-    return df.withColumn(out_col, chunk_split(text_col, level))
-
-
 def rechunk_sections(
     articles: DataFrame, level: str = "sentence", used_separator: str = "\n"
 ) -> DataFrame:

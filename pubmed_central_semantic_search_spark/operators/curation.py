@@ -38,7 +38,7 @@ HEX = "0123456789abcdef"
 
 def _tokens(text_col: Column | str) -> Column:
     """THE whitespace tokenizer — the one definition every operator
-    module shares (dsir/lm/classifier/emitter/textstats/dedup/retrieval
+    module shares (dsir/lm/classifier/textstats/dedup/retrieval
     import it), so the content-addressed features, perplexities, and
     DuckDB oracles can never drift on tokenization.
 

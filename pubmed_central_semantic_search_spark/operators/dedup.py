@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .curation import _tokens
-from ..functions.vector import cosine_similarity, dot, l2_norm
+from ..functions.vector import dot, l2_norm
 
 
 def exact_dedup(
@@ -219,14 +219,6 @@ def cut_spans(
     ).drop("_toks", "_cuts", "_keeps")
 
 
-def tokenize(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, pos, token) — literal whitespace split, empties dropped (F1/P5)."""
-    return df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "token"),
-    ).filter(F.col("token") != "")
-
-
 def shingle_array(text_col: Column | str, n: int = 3) -> Column:
     """DISTINCT n-gram token shingles of a text column as an array —
     a pure per-row expression (``transform(sequence(...))``): the narrow
@@ -283,37 +275,6 @@ def hash32(col: Column | str, seed: int) -> Column:
     ).cast("bigint")
 
 
-def minhash_signature_array(
-    text_col: Column | str, n_hashes: int = 8, shingle_n: int = 3
-) -> Column:
-    """k-permutation MinHash signature as an array<bigint> — a pure
-    per-row expression: k ``array_min`` folds over the shingle array.
-    NULL-element signature for shingle-less docs (callers filter).
-
-    This is ZERO-shuffle (the earlier shape exploded shingles and took k
-    mins in a groupBy — one corpus-wide shuffle just to compute a value
-    that is a pure function of the row). Same mins, any order: min over a
-    set is order-free, so the flat/oracle values are unchanged.
-
-    NOTE the multi-reference trap: this expression embeds the shingle
-    array as a subtree of EVERY hash fold, and HOF subtrees are excluded
-    from subexpression elimination — each row re-shingles k times. Frame
-    consumers use ``minhash_signature_frame``, which materializes the
-    shingle array in a prior projection so it is built ONCE per row; this
-    column form exists for single-shot expression composition only."""
-    grams = shingle_array(text_col, shingle_n)
-    return _signature_from_grams(grams, n_hashes)
-
-
-def _signature_from_grams(grams: Column, n_hashes: int) -> Column:
-    return F.array(
-        *[
-            F.array_min(F.transform(grams, lambda s: hash32(s, i)))
-            for i in range(n_hashes)
-        ]
-    )
-
-
 def minhash_signature_frame(
     df: DataFrame, id_col: str, text_col: str, n_hashes: int = 8, shingle_n: int = 3
 ) -> DataFrame:
@@ -325,19 +286,14 @@ def minhash_signature_frame(
         F.col(id_col).alias("_id"),
         shingle_array(text_col, shingle_n).alias("_g"),
     )
-    return staged.select(
-        "_id", _signature_from_grams(F.col("_g"), n_hashes).alias("_sig")
-    ).filter(F.col("_sig")[0].isNotNull())
-
-
-def minhash_signature_flat(
-    df: DataFrame, id_col: str, text_col: str, n_hashes: int = 8, shingle_n: int = 3
-) -> DataFrame:
-    """(id, hash_idx, min_hash) — the flat signature view (narrow: one
-    projection + one posexplode). Docs with no shingles drop out, matching
-    the set semantics of the oracle's groupBy."""
-    return minhash_signature_frame(df, id_col, text_col, n_hashes, shingle_n).select(
-        "_id", F.posexplode("_sig").alias("hash_idx", "min_hash")
+    sig = F.array(
+        *[
+            F.array_min(F.transform("_g", lambda s: hash32(s, i)))
+            for i in range(n_hashes)
+        ]
+    )
+    return staged.select("_id", sig.alias("_sig")).filter(
+        F.col("_sig")[0].isNotNull()
     )
 
 

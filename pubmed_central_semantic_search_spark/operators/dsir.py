@@ -44,11 +44,11 @@ def dsir_buckets(text_col: Column | str, n_buckets: int = 256) -> Column:
     paper's hashed n-gram featurization). Narrow; the token array is
     referenced a constant number of times at whole-array level (never
     inside a per-element lambda — trees, not DAGs)."""
-    # null text pins to the empty-doc path (the emitter's idiom): without
-    # the coalesce a NULL-text doc scored NULL dsir_logw_micro and NULL
-    # Gumbel key — silently never selected and poisoning any downstream
-    # arithmetic over the appended columns, where the docstring promises
-    # empty docs score 0 (review find)
+    # null text pins to the empty-doc path: without the coalesce a
+    # NULL-text doc scored NULL dsir_logw_micro and NULL Gumbel key —
+    # silently never selected and poisoning any downstream arithmetic
+    # over the appended columns, where the docstring promises empty docs
+    # score 0 (review find)
     tk = F.coalesce(_tokens(text_col), F.array())
     n1 = F.greatest(F.size(tk) - 1, F.lit(0))
     bi = F.zip_with(

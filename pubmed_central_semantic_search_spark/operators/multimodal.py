@@ -11,7 +11,7 @@ The codec seam is IMPORT-GATED (like encoder.py's sbert seam): with
 ImportError eagerly when it isn't (it isn't in this container; the gated
 tests skip). The default arms produce deterministic fakes so everything
 AROUND the codec — schemas, UDF signatures, Arrow batch shapes,
-partitioning, binaryFile reader plumbing, per-row error isolation — is
+partitioning, per-row error isolation — is
 real and tested end to end.
 
 Scale notes: binary payloads ride the same columnar path as everything
@@ -25,7 +25,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,36 +49,6 @@ MEDIA_SCHEMA = T.StructType(
         ),
     ]
 )
-
-
-def read_binary_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """X5 source — directory of media files → (path, modificationTime,
-    length, content) via Spark's binaryFile source, normalized to
-    MEDIA_SCHEMA (modality from extension; decode fills real meta later)."""
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    ext = F.lower(F.element_at(F.split(F.col("path"), "\\."), -1))
-    modality = (
-        F.when(ext.isin("png", "jpg", "jpeg", "gif"), "image")
-        .when(ext.isin("wav", "mp3", "flac"), "audio")
-        .when(ext.isin("mp4", "avi", "mkv"), "video")
-        .otherwise("unknown")
-    )
-    return raw.select(
-        F.col("path").alias("media_id"),
-        modality.alias("modality"),
-        F.col("content"),
-        F.struct(
-            F.lit(None).cast("string").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.lit(None).cast("int").alias("sample_rate"),
-        ).alias("meta"),
-    )
 
 
 DECODED_SCHEMA = (

@@ -221,7 +221,7 @@ def mmr_rerank(
     """Maximal-marginal-relevance re-rank of a top-N candidate list.
 
     ``candidates`` must be a BOUNDED frame (top-N from ``top_k`` /
-    ``plan_topk_search`` — N small by contract); it is collected and the
+    ``ann.brute_force_topk`` — N small by contract); it is collected and the
     greedy selection runs driver-side, because each pick depends on the
     set selected so far (no distributed formulation avoids that chain).
 

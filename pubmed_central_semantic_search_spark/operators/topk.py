@@ -64,13 +64,3 @@ def grouped_top_k(
     out = df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
     return out if keep_rank else out.drop(rank_col)
 
-
-def argmax_per_group(
-    df: DataFrame,
-    group: Sequence[str],
-    score: Column | str,
-    tiebreak: Sequence[str] = (),
-) -> DataFrame:
-    """Q7 — single best row per group (the reference's
-    ``_relevant_paragraphs[0]``, ``responses.py:96-97``)."""
-    return grouped_top_k(df, group, score, 1, tiebreak)

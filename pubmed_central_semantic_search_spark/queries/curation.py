@@ -17,7 +17,6 @@ from ..operators.curation import (
     scrub_pii,
     select_token_budget,
     semantic_decontaminate,
-    stratified_sample,
 )
 from ..operators.retrieval import bm25_rank, rrf_fuse
 from ..operators.textstats import build_vocab, tfidf_top_terms
@@ -811,10 +810,9 @@ def q50_split_and_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "X4/X1 token-budget corpus selection (data mixing) + length-bucketed "
     "inference batching (ntile length quartiles per source, fixed-size "
     "batch ids within each bucket — the padding-minimizing batch layout) "
-    "+ the sample emitter's vocab-id lookup (tok_id_sum: per-doc sum of "
-    "q55-vocab token ids, OOV→0 — the doc→token-ids mapping "
-    "emit_training_sequences packs; sequence assembly itself is "
-    "DuckDB-parity-pinned in tests/test_emitter.py)",
+    "+ the training-sample vocab-id lookup (tok_id_sum: per-doc sum of "
+    "q55-vocab token ids, OOV→0 — the doc→token-ids mapping a sample "
+    "emitter packs into sequences)",
 )
 def q51_packing_and_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.curation import length_bucketed_batches
@@ -822,10 +820,10 @@ def q51_packing_and_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     packed = pack_sequences(docs, ctx_len=512)
-    # Emitter-certification arm: the doc → token-id mapping (q55's ranked
-    # vocab, OOV→0) summed per doc — the exact lookup
-    # emit_training_sequences packs into sequences. Vocab broadcasts; the
-    # token stream partial-aggregates before its one doc_id shuffle.
+    # Vocab-id arm: the doc → token-id mapping (q55's ranked vocab,
+    # OOV→0) summed per doc — the lookup a training-sample emitter packs
+    # into sequences. Vocab broadcasts; the token stream partial-
+    # aggregates before its one doc_id shuffle.
     vocab = build_vocab(docs, "doc_id", "text", min_count=5)
     tok_sums = (
         docs.select(

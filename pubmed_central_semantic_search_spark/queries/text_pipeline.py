@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import clean_paragraph, content_key, strip_citations
 from ..registry import load, register
 from ..session import local_df
 
@@ -146,8 +147,8 @@ def q13_tokenize_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# F3/F4/F5/H1 + X4 — scalar text functions: content hash (md5 — identical
-# across engines), citation strip, char/token counts.
+# F4/F5/H1 + X4 — scalar text functions: content hash (md5 — identical
+# across engines), trim + citation strip, char/token counts.
 
 
 @register(
@@ -160,14 +161,14 @@ def q13_tokenize_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
            upper(substr(text, 1, 8)) AS head_upper
     FROM documents
     """,
-    survey_rows="F3, F4, F5, H1, X4",
+    survey_rows="F4, F5, H1, X4",
 )
 def q14_doc_text_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    cleaned = F.regexp_replace(F.trim(F.col("text")), r"\[[^\]]*\]", "")
+    cleaned = strip_citations(clean_paragraph("text"))
     return d.select(
         "doc_id",
-        F.md5("text").alias("content_key"),
+        content_key("text").alias("content_key"),
         F.length("text").cast("bigint").alias("n_chars_computed"),
         F.size(F.filter(F.split(cleaned, " "), lambda t: t != ""))
         .cast("bigint")

@@ -260,11 +260,3 @@ def track_caches(key: str, deps) -> None:
         _refs_release(_TRACKED_CACHES.pop(key))
     _TRACKED_CACHES[key] = pairs
 
-
-def swap_tracked_caches(key: str, deps) -> None:
-    """release + track in one call. ``track_caches`` now acquires the
-    new deps' plan refcounts BEFORE releasing the key's previous set, so
-    a plan-identical carry-over keeps its shared cache entry alive
-    across the swap — the round-8 aliasing trap is closed by ordering,
-    not by caller discipline."""
-    track_caches(key, deps)

@@ -80,6 +80,10 @@ def reset_table(spark: SparkSession, name: str) -> None:
 # instead of growing by one full file list per commit
 _KEEP_RECORDS = 16
 
+# leaves of a plain partitioned directory compacted at once (each one a
+# driver thread submitting its own rewrite job)
+_COMPACT_LEAF_THREADS = 8
+
 # test-only injection point: called between snapshot_vacuum's two
 # phases (records retired, data not yet deleted) so tests can pin the
 # crash state — every listed version must still be readable
@@ -489,7 +493,6 @@ def read_upsert_table(
     spark: SparkSession,
     path: str,
     key_equals: dict | None = None,
-    merge_schema: bool = False,
 ) -> DataFrame:
     """Read an upsert table in either layout — one read of its latest log
     record: the live file list and the schema come from the record, then
@@ -512,10 +515,9 @@ def read_upsert_table(
     single-column bucket keys only. An EMPTY list returns an empty frame
     without scanning anything.
 
-    ``merge_schema`` is accepted for compatibility and changes nothing:
-    the record's schema is already the union every commit evolved to
-    (files written before an evolution read the new columns as null).
-    A directory without a commit log is read as plain parquet."""
+    The record's schema is the union every commit evolved to (files
+    written before an evolution read the new columns as null). A
+    directory without a commit log is read as plain parquet."""
     record = read_record(spark, path)
     key_equals = key_equals or {}
     multi = {c for c, v in key_equals.items() if isinstance(v, (list, tuple, set))}
@@ -650,7 +652,6 @@ def compact_partitioned_leaves(
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     max_files_per_leaf: int = 1,
-    max_concurrency: int = 8,
 ) -> dict[str, int]:
     """Leaf-level compaction for single-level hive-partitioned layouts
     (``key=value`` directories) — the housekeeping ``compact_parquet``
@@ -665,7 +666,8 @@ def compact_partitioned_leaves(
     one of the two raise ``ConcurrentUpsertError``. A plain partitioned
     directory (no commit log — an appending writer's output) compacts
     each leaf through ``compact_parquet``'s staging swap, concurrently
-    across leaves, single-writer per leaf; its work dirs are
+    across leaves (``_COMPACT_LEAF_THREADS`` at a time), single-writer
+    per leaf; its work dirs are
     dot-prefixed table-level names (``.{leaf}.compact.*``), invisible to
     partition discovery, and a leaf parked in its crash backup is
     recovered by the next run.
@@ -761,7 +763,7 @@ def compact_partitioned_leaves(
         )
         return stats["files_before"], stats["files_after"], 1
 
-    with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
+    with ThreadPoolExecutor(max_workers=_COMPACT_LEAF_THREADS) as pool:
         results = list(pool.map(_one_leaf, sorted(leaf_names)))
     return {
         "leaves_seen": len(leaf_names),

@@ -101,7 +101,7 @@ def test_double_invocation_does_not_accrete_caches(spark, sf_dir, name):
     REGISTRY[name].spark(spark, sf_dir).count()
     first = _n_cached(spark)
     REGISTRY[name].spark(spark, sf_dir).count()
-    # unpersist in swap_tracked_caches is non-blocking; poll briefly
+    # unpersist in track_caches is non-blocking; poll briefly
     import time
 
     for _ in range(40):

@@ -856,9 +856,9 @@ def test_schema_evolution_both_layouts(spark, tmp_path):
     read null) or OMIT non-key columns (the replaced key's new version
     carries null — the new row wins whole); without the opt-in a
     mismatched batch raises (a typo'd column must not silently fork the
-    schema). Partitioned reads of evolved tables opt into footer schema
-    merging via read_upsert_table(merge_schema=True) — untouched buckets
-    still hold pre-evolution files."""
+    schema). Partitioned reads of evolved tables return the union schema —
+    untouched buckets still hold pre-evolution files, whose rows read
+    null in the new column."""
     import pytest as _pt
 
     v1 = _rows(spark, [(f"PMC{i}", "v1") for i in range(12)])
@@ -880,7 +880,7 @@ def test_schema_evolution_both_layouts(spark, tmp_path):
             spark, v2, path, key_cols=["article_id"], n_buckets=buckets,
             allow_schema_evolution=True,
         )
-        got = read_upsert_table(spark, path, merge_schema=True)
+        got = read_upsert_table(spark, path)
         assert "quality" in got.columns
         rows = {r["article_id"]: r for r in got.collect()}
         assert len(rows) == 13
@@ -896,7 +896,7 @@ def test_schema_evolution_both_layouts(spark, tmp_path):
         )
         rows3 = {
             r["article_id"]: r
-            for r in read_upsert_table(spark, path, merge_schema=True).collect()
+            for r in read_upsert_table(spark, path).collect()
         }
         assert rows3["PMC1"]["payload"] == "v3"
         assert rows3["PMC1"]["quality"] is None
@@ -940,7 +940,7 @@ def test_evolution_review_fixes(spark, tmp_path):
         spark, _rows(spark, [("PMC1", "v3")]), path,
         key_cols=["article_id"], n_buckets=4,
     )
-    got = read_upsert_table(spark, path)  # no merge_schema arg — auto
+    got = read_upsert_table(spark, path)
     assert "quality" in got.columns
     rows = {r["article_id"]: r for r in got.collect()}
     assert rows["PMC1"]["payload"] == "v3" and rows["PMC1"]["quality"] is None
@@ -987,13 +987,13 @@ def test_compact_partitioned_leaves_concurrent_with_crash_leftover(spark, tmp_pa
 
     leaf = os.path.join(path, "part=3")
     shutil.move(leaf, os.path.join(path, ".part=3.compact.old"))
-    stats = compact_partitioned_leaves(spark, path, max_concurrency=6)
+    stats = compact_partitioned_leaves(spark, path)
     assert stats["leaves_seen"] == 12
     assert stats["leaves_compacted"] == 12  # incl. the recovered leaf
     got = sorted((r["part"], r["v"]) for r in spark.read.parquet(path).collect())
     assert got == want
     # steady state: pooled re-run compacts nothing
-    stats2 = compact_partitioned_leaves(spark, path, max_concurrency=6)
+    stats2 = compact_partitioned_leaves(spark, path)
     assert stats2["leaves_compacted"] == 0
     assert stats2["files_before"] == stats2["files_after"] == stats["files_after"]
 

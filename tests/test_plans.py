@@ -13,10 +13,11 @@ Each assertion encodes a scale property:
 
 
 
-from pubmed_central_semantic_search_spark.plans.planner import (
-    assert_plan,
-    plan_topk_search,
+from pubmed_central_semantic_search_spark.operators.ann import (
+    brute_force_topk,
+    lsh_topk,
 )
+from pubmed_central_semantic_search_spark.plans.planner import assert_plan
 from pubmed_central_semantic_search_spark.registry import REGISTRY, QUERY_VECS
 
 
@@ -124,36 +125,38 @@ def test_lsh_join_is_hash_not_cartesian(spark, sf_dir):
 
 
 def test_planner_modes(spark, sf_dir):
+    """The three search tiers, each called directly, on one corpus."""
+    import pytest as _pt
+
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qdf = spark.createDataFrame(
         [(qid, v) for qid, v in QUERY_VECS.items()],
         "query_id int, qvec array<double>",
     )
-    exact = plan_topk_search(emb, qdf, k=3, mode="exact")
-    approx = plan_topk_search(emb, qdf, k=3, mode="approx", dim=64)
-    auto = plan_topk_search(emb, qdf, k=3, mode="auto")
+    exact = brute_force_topk(emb, qdf, k=3)
+    approx = lsh_topk(emb, qdf, k=3, dim=64)
     assert exact.count() == 9  # 3 queries × k
     assert approx.count() <= 9  # LSH may return < k per bucket
-    assert auto.count() == 9  # small corpus → exact tier
 
     from pubmed_central_semantic_search_spark.operators.clustering import (
+        ivf_topk,
         seed_centroids,
     )
 
-    ivf = plan_topk_search(
-        emb, qdf, k=3, mode="ivf", centroids=seed_centroids(emb, 4), nprobe=4
-    )
+    ivf = ivf_topk(emb, qdf, seed_centroids(emb, 4), k=3, nprobe=4)
     # nprobe = all lists → IVF degenerates to exact: same ids as brute force
     assert sorted(map(tuple, ivf.select("query_id", "vec_id").collect())) == sorted(
         map(tuple, exact.select("query_id", "vec_id").collect())
     )
 
     # the BLAS kernel of the exact tier: same ids, Arrow-batched plan
-    blas = plan_topk_search(emb, qdf, k=3, mode="exact", kernel="blas")
+    blas = brute_force_topk(emb, qdf, k=3, kernel="blas")
     assert sorted(map(tuple, blas.select("query_id", "vec_id").collect())) == sorted(
         map(tuple, exact.select("query_id", "vec_id").collect())
     )
     assert "ArrowEvalPython" in blas._jdf.queryExecution().executedPlan().toString()
+    with _pt.raises(ValueError, match="unknown kernel"):
+        brute_force_topk(emb, qdf, k=3, kernel="avx")
 
 
 def test_pipeline_encoder_is_arrow_batched(spark, sf_dir):
@@ -222,7 +225,7 @@ def test_split_and_sample_two_window_shuffles_no_join(spark, sf_dir):
 def test_packing_and_budget_two_window_shuffles(spark, sf_dir):
     """q51: each running-total window shuffles the corpus ONCE on the shard
     key (two orderings → two exchanges); the budget side reattaches by
-    broadcast. The tok_id_sum emitter arm adds exactly two more keyed
+    broadcast. The tok_id_sum vocab-id arm adds exactly two more keyed
     exchanges (the vocab token groupBy and the per-doc sum groupBy) — its
     vocab lookup must stay a broadcast join on token, never a corpus
     shuffle on the token stream."""
@@ -382,20 +385,6 @@ def test_repeated_spans_plan_shape(spark, sf_dir):
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan or "ShuffledHashJoin" in plan, plan
 
 
-def test_planner_rejects_blas_kernel_outside_exact(spark, sf_dir):
-    import pytest as _pt
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qdf = emb.limit(1).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    with _pt.raises(ValueError, match="kernel='blas' requires mode='exact'"):
-        plan_topk_search(emb, qdf, k=3, mode="approx", kernel="blas", dim=64)
-    with _pt.raises(ValueError, match="unknown kernel"):
-        plan_topk_search(emb, qdf, k=3, mode="exact", kernel="avx")
-
-
 def test_semantic_dedup_plan_no_cartesian(spark, sf_dir):
     """semantic_dedup's pair stage must be the blocked equi-join
     (cluster_id key), never a CartesianProduct — the SemDeDup scale
@@ -435,13 +424,13 @@ def test_planner_auto_kernel_picks_by_dim(spark, sf_dir):
     q64 = emb64.limit(2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    auto64 = plan_topk_search(emb64, q64, k=3, mode="exact", kernel="auto")
+    auto64 = brute_force_topk(emb64, q64, k=3, kernel="auto")
     plan64 = auto64._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan64  # hof side of the crossover
     assert sorted(map(tuple, auto64.select("query_id", "vec_id").collect())) == sorted(
         map(
             tuple,
-            plan_topk_search(emb64, q64, k=3, mode="exact")
+            brute_force_topk(emb64, q64, k=3)
             .select("query_id", "vec_id")
             .collect(),
         )
@@ -455,29 +444,17 @@ def test_planner_auto_kernel_picks_by_dim(spark, sf_dir):
     q768 = emb768.limit(2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    auto768 = plan_topk_search(emb768, q768, k=3, mode="exact", kernel="auto")
+    auto768 = brute_force_topk(emb768, q768, k=3, kernel="auto")
     plan768 = auto768._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan768  # blas side of the crossover
     assert sorted(map(tuple, auto768.select("query_id", "vec_id").collect())) == sorted(
         map(
             tuple,
-            plan_topk_search(emb768, q768, k=3, mode="exact", kernel="blas")
+            brute_force_topk(emb768, q768, k=3, kernel="blas")
             .select("query_id", "vec_id")
             .collect(),
         )
     )
-
-
-def test_planner_auto_kernel_rejected_outside_exact(spark, sf_dir):
-    import pytest as _pt
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qdf = emb.limit(1).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    with _pt.raises(ValueError, match="kernel='auto' requires mode='exact'"):
-        plan_topk_search(emb, qdf, k=3, mode="approx", kernel="auto", dim=64)
 
 
 def test_hybrid_rrf_round8_arms_plan_shape(spark, sf_dir):

@@ -728,6 +728,48 @@ def test_cosine_nan_embedding_scores_zero_not_top_hit(spark):
     ]
 
 
+def test_l2_norm_plan_has_no_length_guard(spark, tmp_path):
+    """l2_norm's optimized plan carries no size() comparison and no
+    raise_error arm (dot's length guard, which a vector against itself
+    cannot fail), and its values are sqrt(dot(v, v))'s bit for bit —
+    [3,4] → 5, NULL → NULL, [0,0] → 0, [NaN] → NaN — with
+    cosine_similarity's zero/NaN rule holding on top."""
+    import math
+
+    from pubmed_central_semantic_search_spark.functions.vector import (
+        cosine_similarity,
+        dot,
+        l2_norm,
+    )
+
+    path = str(tmp_path / "v")
+    spark.createDataFrame(
+        [(1, [3.0, 4.0]), (2, None), (3, [0.0, 0.0]), (4, [float("nan")])],
+        "id long, v array<double>",
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    plan = (
+        df.select(l2_norm("v").alias("n"))
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert "size(" not in plan and "raise_error" not in plan, plan
+    rows = {
+        r["id"]: r
+        for r in df.select(
+            "id",
+            l2_norm("v").alias("n"),
+            F.sqrt(dot("v", "v")).alias("guarded"),
+            cosine_similarity("v", F.array(F.lit(1.0), F.lit(0.0))).alias("c"),
+        ).collect()
+    }
+    assert rows[1]["n"] == rows[1]["guarded"] == 5.0 and rows[1]["c"] == 0.6
+    assert rows[2]["n"] is None and rows[2]["guarded"] is None
+    assert rows[2]["c"] is None
+    assert rows[3]["n"] == rows[3]["guarded"] == 0.0 and rows[3]["c"] == 0.0
+    assert math.isnan(rows[4]["n"]) and math.isnan(rows[4]["guarded"])
+    assert rows[4]["c"] == 0.0
+
+
 def test_quantization_scale_inf_and_subnormal(spark):
     """Review find: the NaN guard missed ±Inf (scale inf → inf/inf = NaN
     → opaque ANSI cast abort) and subnormal maxima (scale underflows to

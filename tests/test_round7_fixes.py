@@ -1,6 +1,6 @@
 """Regression pins for the round-6 ADVICE findings: Unicode-whitespace
 strip parity in the renderer, component-level-null mean pooling, the
-planner's null-qvec blas path, and the blas kernel's query_id typing."""
+exact top-k's null-qvec blas path, and the blas kernel's query_id typing."""
 
 import duckdb
 import pytest
@@ -97,12 +97,12 @@ def test_mean_pool_component_null_agrees_across_branches(spark):
 
 
 def test_plan_topk_auto_and_blas_handle_null_qvecs(spark):
-    """ADVICE find: plan_topk_search(kernel='auto') peeked the FIRST qvec
+    """ADVICE find: the exact top-k's kernel='auto' peeked the FIRST qvec
     (TypeError when null) and the blas collect crashed on any null-qvec
     row while the score_documents twin null-scores them. Null-qvec rows
     now score NULL against every vector under every kernel."""
-    from pubmed_central_semantic_search_spark.plans.planner import (
-        plan_topk_search,
+    from pubmed_central_semantic_search_spark.operators.ann import (
+        brute_force_topk,
     )
 
     # a NULL embedding keeps its null-score row under every kernel (the
@@ -121,15 +121,15 @@ def test_plan_topk_auto_and_blas_handle_null_qvecs(spark):
          None if r["score"] is None else round(r["score"], 6))
         for r in df.collect()
     }
-    hof = key(plan_topk_search(vecs, q, k=5, mode="exact", kernel="hof"))
+    hof = key(brute_force_topk(vecs, q, k=5, kernel="hof"))
     for kernel in ("auto", "blas"):
-        assert key(plan_topk_search(vecs, q, k=5, mode="exact", kernel=kernel)) == hof
+        assert key(brute_force_topk(vecs, q, k=5, kernel=kernel)) == hof
     assert (9, 1, None) in hof  # null-qvec query keeps its rows
     assert (0, 3, None) in hof  # null embedding keeps its row
     # ALL queries null: auto resolves dim 0 → hof, blas falls back — no crash
     qn = spark.createDataFrame([(7, None)], "query_id int, qvec array<double>")
     for kernel in ("auto", "blas"):
-        out = plan_topk_search(vecs, qn, k=5, mode="exact", kernel=kernel).collect()
+        out = brute_force_topk(vecs, qn, k=5, kernel=kernel).collect()
         assert len(out) == 3 and all(r["score"] is None for r in out)
 
 
