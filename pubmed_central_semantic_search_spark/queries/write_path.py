@@ -123,9 +123,10 @@ _LOOKUP_KEYS = (0, 1, 60, 199)
     -- stage joins the certified set): the seed state re-written as FOUR
     -- 40-row shards (coalesce(1) + maxRecordsPerFile=40 over 150 rows —
     -- deterministic sharding), then catalog_sql COMPACT with a 1 GiB
-    -- target rewrites the directory to ONE file through the crash-safe
-    -- staging swap. These rows are the compacted table's READ-BACK —
-    -- content must be byte-identical to the seed state.
+    -- target adopts the plain directory into the commit log (v1) and
+    -- rewrites it to ONE file as one COMPACT commit (v2). These rows are
+    -- the compacted table's READ-BACK through the log — content must be
+    -- byte-identical to the seed state.
     SELECT 'compact' AS kind, doc_id, source, lang,
            md5(text) AS content_key,
            CAST(length(text) AS BIGINT) AS n_chars
@@ -167,8 +168,9 @@ _LOOKUP_KEYS = (0, 1, 60, 199)
     "start_stream_upsert — multi-micro-batch file stream into a "
     "bucket-partitioned table, READ-BACK driver-hashed; the streaming "
     "sink tier joins the certified lineage), "
-    "S7 housekeeping (round-10 backfill: catalog_sql COMPACT rewrites a "
-    "4-shard seed copy to one file through the crash-safe staging swap — "
+    "S7 housekeeping (round-10 backfill: catalog_sql COMPACT adopts a "
+    "4-shard plain seed copy into the commit log and rewrites it to one "
+    "file as one COMPACT commit — "
     "read-back AND the 4:1 file-count delta driver-hashed; catalog_sql "
     "VACUUM SNAPSHOTS KEEP 1 retires v1 after the CDC leg — the "
     "remaining-version set driver-hashed; the last two write-path "
@@ -409,9 +411,11 @@ def _roundtrip_merges(
         # 'compact' arm (round-10, verdict #1): the seed state re-written
         # as four 40-row shards (coalesce(1) pins the sharding: one task,
         # maxRecordsPerFile cuts at 40/80/120), then COMPACT through the
-        # SQL surface — the crash-safe staging swap rewrites to ONE file
-        # with a 1 GiB target. Driver-hashed facts: the read-back rows
-        # (content survived the rewrite) and the 4:1 file-count delta.
+        # SQL surface — the plain directory is adopted into the commit log
+        # and rewritten to ONE file as one commit with a 1 GiB target, so
+        # it is read back through the log. Driver-hashed facts: the
+        # read-back rows (content survived the rewrite) and the 4:1
+        # file-count delta.
         from ..sql import catalog_sql
 
         compact_tbl = os.path.join(base, "compact_tbl")
@@ -421,7 +425,7 @@ def _roundtrip_merges(
         stats = catalog_sql(
             spark, f"COMPACT '{compact_tbl}' TARGET {1 << 30}"
         )
-        rows = project(spark.read.parquet(compact_tbl), "compact").collect()
+        rows = project(read_upsert_table(spark, compact_tbl), "compact").collect()
         n_rows = len(rows)
         rows.append((
             "compactstat", -1, None, None,

@@ -9,9 +9,12 @@ Spark: parquet tables under one versioned commit log per table
 (``fsio``: immutable data files, ``<table>/_log/v{n}`` records holding
 the complete live file list, published by an atomic put-if-absent).
 Every write here — upsert (flat and bucket-partitioned), group-replace,
-compaction of an upsert table, rebucket — is "write new files, publish
-one log record"; the files a commit replaced are deleted only after it
-has published. ``snapshots`` commits through the same log.
+compaction, rebucket — is "write new files, publish one log record";
+the files a commit replaced are deleted only after it has published.
+``snapshots`` commits through the same log. A plain parquet directory
+(no log) joins the log as version 1 on its first upsert or compaction
+(``_adopt``); from then on it is written through this module and read
+through ``read_upsert_table``.
 
 Concurrency contract: writers whose read buckets are disjoint converge
 (the loser of the race republishes its files at the next version);
@@ -24,7 +27,6 @@ the leftovers. Nothing is reconciled on entry."""
 from __future__ import annotations
 
 import functools
-import json
 import re
 import time
 import uuid
@@ -36,8 +38,6 @@ from .fsio import (  # noqa: F401
     BUCKET_COL,
     ConcurrentUpsertError,
     _hadoop_fs,
-    _list_parquet_sizes,
-    _read_text,
     check_conflicts,
     commit,
     delete_files,
@@ -80,10 +80,6 @@ def reset_table(spark: SparkSession, name: str) -> None:
 # instead of growing by one full file list per commit
 _KEEP_RECORDS = 16
 
-# leaves of a plain partitioned directory compacted at once (each one a
-# driver thread submitting its own rewrite job)
-_COMPACT_LEAF_THREADS = 8
-
 # test-only injection point: called between snapshot_vacuum's two
 # phases (records retired, data not yet deleted) so tests can pin the
 # crash state — every listed version must still be readable
@@ -109,61 +105,62 @@ def _read_upsert_layout(spark: SparkSession, path: str):
     return record["layout"]
 
 
-def _legacy_layout(spark, path):
-    """The ``<path>/_layout`` record a table written before the commit log
-    carries (json lines: n_buckets, bucket_cols, evolved and, from later
-    writers, bucket_col_types), or None. Conflicting records raise — a
-    wrong n_buckets would hash rows into the wrong buckets."""
-    fs, hpath, _ = _hadoop_fs(spark, f"{path.rstrip('/')}/_layout")
+def _adoptable(spark, path, n_buckets):
+    """The parquet files a directory without a commit log publishes as
+    version 1 ([] when it is absent or holds none). Files a commit wrote
+    but never published (``v{n}-`` names) stay out. A directory that
+    cannot join the log raises by name before anything is written:
+    a Structured Streaming file-sink output (its ``_spark_metadata``
+    manifest pins exact file names: replacing them breaks every plain
+    read of the root and the resumed stream); a ``_layout`` record (a
+    table bucketed before the log existed, whose bucket key the caller's
+    key may not reproduce); hive-partitioned ``key=value`` directories
+    other than ``_bucket=`` (the log has no layout for them); and a
+    layout the call contradicts — ``_bucket=`` directories on a flat
+    call, flat files on a partitioned one, or a bucket at or past
+    ``n_buckets``."""
+    fs, hpath, jvm = _hadoop_fs(spark, path)
     if not fs.exists(hpath):
-        return None
-    rows = [
-        json.loads(line)
-        for st in fs.listStatus(hpath)
-        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
-        for line in _read_text(spark, st.getPath().toString()).splitlines()
-        if line.strip()
-    ]
-    if any(r != rows[0] for r in rows[1:]):
+        return []
+    P = jvm.org.apache.hadoop.fs.Path
+    root = path.rstrip("/")
+    if fs.exists(P(f"{root}/_spark_metadata")):
         raise ValueError(
-            f"upsert_parquet: the _layout record of {path} holds "
-            f"{len(rows)} conflicting entries — the table metadata is "
-            "corrupted; remove the stale file"
+            f"cannot adopt {path} into the commit log: it is a Structured "
+            "Streaming file-sink output (_spark_metadata manifest) — the "
+            "manifest pins exact file names, and replacing them breaks every "
+            "read of the table root and the resumed stream. Stop the stream "
+            "and rewrite it through a batch path first."
         )
-    return rows[0] if rows else None
-
-
-def _adopt(spark, path, n_buckets, bucket_src, started):
-    """A directory that holds parquet but no commit log (written by a plain
-    parquet writer, or before the log existed): publish its files as they
-    stand as version 1. Files a commit wrote but never published
-    (``v{n}-`` names) stay out. The layout comes from the table's own
-    ``_layout`` record when it has one (the caller's mismatching layout
-    then raises in ``upsert_parquet``), else from the call. Flat files on
-    a partitioned layout, ``_bucket=`` directories on a flat one, or a
-    bucket directory at or past ``n_buckets`` raise by name. The schema
-    is the union of every file's footer. Returns the record, or None for
-    an absent or data-less directory."""
-    fs, hpath, _ = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return None
+    if fs.exists(P(f"{root}/_layout")):
+        raise ValueError(
+            f"cannot adopt {path} into the commit log: it carries a _layout "
+            "record (a bucket-partitioned table written before the log), "
+            "whose bucket key this call may not reproduce — rewrite it "
+            "through upsert_parquet into a new path"
+        )
     files = [
         f for f in place_files(spark, path, path, 0, move=False)
         if not re.match(r"v\d+-", f["path"].rsplit("/", 1)[-1])
     ]
-    if not files:
-        return None
-    legacy = _legacy_layout(spark, path)
-    if legacy is not None:
-        n_buckets = int(legacy["n_buckets"])
-        bucket_src = legacy["bucket_cols"].split(",")
-    nested = any("/" in f["path"] for f in files)
-    if nested and n_buckets is None:
+    hive = sorted({
+        f["path"].split("/", 1)[0] for f in files
+        if "/" in f["path"] and f["bucket"] is None
+    })
+    if hive:
         raise ValueError(
-            f"upsert_parquet: table at {path} carries {BUCKET_COL} partition "
-            "directories — it is bucket-partitioned; call with its n_buckets"
+            f"cannot adopt {path} into the commit log: it is hive-partitioned "
+            f"(parquet under partition directories {hive[:3]}) — the log holds "
+            f"no layout for them, only the {BUCKET_COL}= directories of a "
+            "bucket-partitioned upsert table; rewrite it through upsert_parquet"
         )
-    if not nested and n_buckets is not None:
+    if n_buckets is None and any(f["bucket"] is not None for f in files):
+        raise ValueError(
+            f"cannot adopt {path} into the commit log: it carries {BUCKET_COL} "
+            "partition directories — it is bucket-partitioned; upsert it with "
+            "its n_buckets"
+        )
+    if n_buckets is not None and any(f["bucket"] is None for f in files):
         raise ValueError(
             f"upsert_parquet: table at {path} is FLAT but this call passes "
             f"n_buckets={n_buckets} — the layouts cannot be switched in "
@@ -176,6 +173,22 @@ def _adopt(spark, path, n_buckets, bucket_src, started):
             f"{BUCKET_COL} directories {stray} at or past n_buckets="
             f"{n_buckets}; it was written with another bucket count"
         )
+    return files
+
+
+def _adopt(spark, path, n_buckets, bucket_src, started):
+    """Publish the files of a directory that holds parquet but no commit
+    log (a plain parquet writer's output) as they stand, as version 1 —
+    ``_adoptable`` names the directories that cannot join the log. The
+    layout comes from the call; the schema is the union of every file's
+    footer. Returns the record, or None for an absent or data-less
+    directory. Once adopted, the directory is a log table: write it
+    through ``upsert_parquet`` or the compactions and read it through
+    ``read_upsert_table`` (a plain ``spark.read.parquet`` of the root
+    also reads files a crashed commit left unpublished)."""
+    files = _adoptable(spark, path, n_buckets)
+    if not files:
+        return None
     # the one schema inference this table ever pays
     existing = spark.read.option("mergeSchema", "true").parquet(
         *[f"{path.rstrip('/')}/{f['path']}" for f in files]
@@ -183,11 +196,10 @@ def _adopt(spark, path, n_buckets, bucket_src, started):
     layout = {
         "n_buckets": n_buckets,
         "bucket_cols": ",".join(bucket_src) if n_buckets else "",
-        "bucket_col_types": (
-            (legacy or {}).get("bucket_col_types")
-            or [existing.schema[c].dataType.simpleString() for c in bucket_src]
-        ) if n_buckets else [],
-        "evolved": bool(n_buckets and legacy and legacy.get("evolved")),
+        "bucket_col_types": [
+            existing.schema[c].dataType.simpleString() for c in bucket_src
+        ] if n_buckets else [],
+        "evolved": False,
     }
     return commit(
         spark, path, None, "ADOPT", files, set(), None,
@@ -269,7 +281,8 @@ def upsert_parquet(
     Concurrency: disjoint-bucket writers converge, overlapping ones raise
     ``ConcurrentUpsertError`` by name, a crash leaves the last version
     readable and writable (module docstring). A directory holding
-    parquet but no log is adopted as version 1 first.
+    parquet but no log is adopted as version 1 first (``_adopt``; the
+    directories it refuses raise by name and are left untouched).
 
     ``persist_batch``: the merge consumes the batch plan MORE THAN ONCE
     (the partitioned arm's touched-buckets collect + the final write;
@@ -570,25 +583,23 @@ def compact_parquet(
     """Small-file compaction — the housekeeping job every long-lived
     parquet table needs: streaming micro-batches, per-partition upserts
     and fine-grained partitionBy all accrete files far below the
-    scan-efficient size. Rewrites the table to ``ceil(bytes /
+    scan-efficient size. Rewrites a flat table to ``ceil(bytes /
     target_file_bytes)`` files (optionally re-sorted to restore
     clustering, e.g. a z-order key). Returns {files_before, files_after,
     bytes}.
 
-    A flat upsert table (one with a commit log) compacts as one commit:
-    new files, one published record, the old files deleted after. A
-    plain parquet directory without a log keeps a staging swap (write
-    ``<path>.compact.staging``, rename live → ``<path>.compact.old``,
-    rename staging → live, delete the backup); a crash between the two
-    renames is recovered on the next call (the backup is restored if
-    the live path is missing). Hive-partitioned layouts are rejected —
-    flat recompaction would collapse the partitions; use
-    ``compact_partitioned_leaves``."""
+    One commit: new files, one published ``COMPACT`` record, the old
+    files deleted after; a crash leaves the last version readable. A
+    plain parquet directory without a log is adopted as version 1 first
+    (``_adopt``, as ``upsert_parquet`` does), so afterwards it is a log
+    table: read it through ``read_upsert_table``. Bucket-partitioned
+    tables and hive-partitioned directories raise — flat compaction
+    would drop their layout; a bucket-partitioned table compacts through
+    ``compact_partitioned_leaves``. A path with no parquet raises."""
     started = time.perf_counter()
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    base = read_record(spark, path)
+    base = read_record(spark, path) or _adopt(spark, path, None, [], started)
     if base is None:
-        return _compact_dir(spark, fs, hpath, jvm, path.rstrip("/"), target_file_bytes, sort_cols)
+        raise ValueError(f"compact_parquet: {path} holds no parquet files")
     if base["layout"]["n_buckets"]:
         raise ValueError(
             f"compact_parquet: {path} is hive-partitioned (a bucket-"
@@ -613,163 +624,62 @@ def _sized(df, total_bytes, target_file_bytes, sort_cols=None):
     return df.repartition(n_out)
 
 
-def _compact_dir(spark, fs, hpath, jvm, path, target_file_bytes, sort_cols, work_base=None):
-    """The staging swap for a plain parquet directory (no commit log).
-    ``work_base`` (default ``path``) places ``.compact.{staging,old}``;
-    a partition leaf passes a dot-prefixed table-level base so partition
-    discovery never sees the work dirs."""
-    work_base = work_base or path
-    P = jvm.org.apache.hadoop.fs.Path
-    backup, staging_p = P(work_base + ".compact.old"), P(work_base + ".compact.staging")
-    # crash recovery: a run that died between its two renames left the
-    # data in the backup — restore it before anything else
-    if fs.exists(backup):
-        if not fs.exists(hpath):
-            fs.rename(backup, hpath)
-        else:
-            fs.delete(backup, True)
-    if fs.exists(staging_p):
-        fs.delete(staging_p, True)
-    sizes, nested = _list_parquet_sizes(fs, hpath, jvm)
-    if nested:
-        raise ValueError(
-            f"compact_parquet: {path} is hive-partitioned (parquet files in "
-            "subdirectories); flat compaction would drop partition columns — "
-            "compact each leaf partition directory instead"
-        )
-    _sized(spark.read.parquet(path), sum(sizes), target_file_bytes, sort_cols).write.mode(
-        "overwrite"
-    ).parquet(staging_p.toString())
-    fs.rename(hpath, backup)
-    fs.rename(staging_p, hpath)
-    fs.delete(backup, True)
-    after, _ = _list_parquet_sizes(fs, hpath, jvm)
-    return {"files_before": len(sizes), "files_after": len(after), "bytes": sum(sizes)}
-
-
 def compact_partitioned_leaves(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     max_files_per_leaf: int = 1,
 ) -> dict[str, int]:
-    """Leaf-level compaction for single-level hive-partitioned layouts
-    (``key=value`` directories) — the housekeeping ``compact_parquet``
-    refuses. Leaves at or under ``max_files_per_leaf`` files are
-    skipped, so steady-state runs touch only the leaves that grew; a
-    grown leaf is rewritten to ``ceil(bytes / target_file_bytes)``
-    files.
+    """Leaf-level compaction of a bucket-partitioned upsert table — the
+    housekeeping ``compact_parquet`` refuses. Buckets at or under
+    ``max_files_per_leaf`` files are skipped, so steady-state runs touch
+    only the buckets that grew; each grown bucket is rewritten to
+    ``ceil(bytes / target_file_bytes)`` files, all as ONE commit (one
+    published record, the old files deleted after). A concurrent upsert
+    touching a compacted bucket makes one of the two raise
+    ``ConcurrentUpsertError``. Returns {leaves_seen, leaves_compacted,
+    files_before, files_after}.
 
-    A bucket-partitioned upsert table compacts its grown buckets as ONE
-    commit (one rewrite per bucket, one published record, the old files
-    deleted after); a concurrent upsert touching a compacted bucket makes
-    one of the two raise ``ConcurrentUpsertError``. A plain partitioned
-    directory (no commit log — an appending writer's output) compacts
-    each leaf through ``compact_parquet``'s staging swap, concurrently
-    across leaves (``_COMPACT_LEAF_THREADS`` at a time), single-writer
-    per leaf; its work dirs are
-    dot-prefixed table-level names (``.{leaf}.compact.*``), invisible to
-    partition discovery, and a leaf parked in its crash backup is
-    recovered by the next run.
-
-    STREAMING FILE-SINK OUTPUTS ARE REFUSED BY NAME: a ``_spark_metadata``
-    manifest pins exact file names, and compacting underneath it breaks
-    every later read of the table root. Returns {leaves_seen,
-    leaves_compacted, files_before, files_after}. Flat directories raise —
-    use ``compact_parquet``."""
+    A flat table raises — use ``compact_parquet``. A directory without a
+    commit log raises by name and writes nothing: hive-partitioned
+    ``key=value`` directories have no layout in the log, and a streaming
+    file-sink output's ``_spark_metadata`` manifest pins exact file names
+    (``_adoptable``)."""
     started = time.perf_counter()
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    P = jvm.org.apache.hadoop.fs.Path
-    base_path = path.rstrip("/")
-    if fs.exists(P(base_path + "/_spark_metadata")):
-        raise ValueError(
-            f"compact_partitioned_leaves: {path} is a Structured Streaming "
-            "file-sink output (_spark_metadata manifest) — the manifest "
-            "pins exact file names, and compacting underneath it would "
-            "break every read of the table root. Retire the manifest "
-            "first (stop the stream and rewrite through a batch path)."
-        )
     base = read_record(spark, path)
-    if base is not None:
-        if not base["layout"]["n_buckets"]:
-            raise ValueError(
-                f"compact_partitioned_leaves: {path} is a flat upsert table "
-                "(no partition directories) — use compact_parquet"
-            )
-        by_bucket: dict[int, list[dict]] = {}
-        for f in base["files"]:
-            by_bucket.setdefault(f["bucket"], []).append(f)
-        grown = sorted(b for b, fl in by_bucket.items() if len(fl) > max_files_per_leaf)
-        files_before = len(base["files"])
-        files_after = files_before
-        if grown:
-            def compacted():
-                # each grown bucket cut to its own file count, one frame
-                return functools.reduce(DataFrame.unionByName, [
-                    _sized(
-                        read_files(spark, path, base, [b]),
-                        sum(f["bytes"] for f in by_bucket[b]), target_file_bytes,
-                    ).withColumn(BUCKET_COL, F.lit(b))
-                    for b in grown
-                ])
-
-            record = _publish(
-                spark, path, base, compacted, base["layout"], "COMPACT", grown, started
-            )
-            files_after = len(record["files"])
-        return {
-            "leaves_seen": len(by_bucket),
-            "leaves_compacted": len(grown),
-            "files_before": files_before,
-            "files_after": files_after,
-        }
-    # plain partitioned directory: per-leaf staging swap. A leaf parked in
-    # its crash backup is invisible in the listing — recover its name
-    # from the orphaned `.{leaf}.compact.*` work dir.
-    leaf_names: set[str] = set()
-    for st in fs.listStatus(hpath):
-        nm = st.getPath().getName()
-        if not st.isDirectory():
-            continue
-        if "=" in nm and not nm.startswith("."):
-            leaf_names.add(nm)
-        elif nm.startswith(".") and (
-            nm.endswith(".compact.old") or nm.endswith(".compact.staging")
-        ):
-            core = nm[1:].rsplit(".compact.", 1)[0]
-            if "=" in core:
-                leaf_names.add(core)
-    if not leaf_names:
+    if base is None:
+        _adoptable(spark, path, None)  # the refusals by name
+    if base is None or not base["layout"]["n_buckets"]:
         raise ValueError(
-            f"compact_partitioned_leaves: {path} has no key=value partition "
-            "directories — for a flat table use compact_parquet"
+            f"compact_partitioned_leaves: {path} is not a bucket-partitioned "
+            "upsert table (no partition directories) — use compact_parquet"
         )
-    from concurrent.futures import ThreadPoolExecutor
+    by_bucket: dict[int, list[dict]] = {}
+    for f in base["files"]:
+        by_bucket.setdefault(f["bucket"], []).append(f)
+    grown = sorted(b for b, fl in by_bucket.items() if len(fl) > max_files_per_leaf)
+    files_before = len(base["files"])
+    files_after = files_before
+    if grown:
+        def compacted():
+            # each grown bucket cut to its own file count, one frame
+            return functools.reduce(DataFrame.unionByName, [
+                _sized(
+                    read_files(spark, path, base, [b]),
+                    sum(f["bytes"] for f in by_bucket[b]), target_file_bytes,
+                ).withColumn(BUCKET_COL, F.lit(b))
+                for b in grown
+            ])
 
-    def _one_leaf(leaf_name: str) -> tuple[int, int, int]:
-        leaf = P(f"{base_path}/{leaf_name}")
-        work_base = f"{base_path}/.{leaf_name}"
-        leftovers = fs.exists(P(work_base + ".compact.old")) or fs.exists(
-            P(work_base + ".compact.staging")
+        record = _publish(
+            spark, path, base, compacted, base["layout"], "COMPACT", grown, started
         )
-        n_files = sum(
-            1 for st in fs.listStatus(leaf) if st.getPath().getName().endswith(".parquet")
-        ) if fs.exists(leaf) else 0
-        if n_files <= max_files_per_leaf and not leftovers:
-            return n_files, n_files, 0
-        stats = _compact_dir(
-            spark, fs, leaf, jvm, leaf.toString(), target_file_bytes, None,
-            work_base=work_base,
-        )
-        return stats["files_before"], stats["files_after"], 1
-
-    with ThreadPoolExecutor(max_workers=_COMPACT_LEAF_THREADS) as pool:
-        results = list(pool.map(_one_leaf, sorted(leaf_names)))
+        files_after = len(record["files"])
     return {
-        "leaves_seen": len(leaf_names),
-        "leaves_compacted": sum(c for _, _, c in results),
-        "files_before": sum(b for b, _, _ in results),
-        "files_after": sum(a for _, a, _ in results),
+        "leaves_seen": len(by_bucket),
+        "leaves_compacted": len(grown),
+        "files_before": files_before,
+        "files_after": files_after,
     }
 
 

@@ -57,24 +57,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath, jvm
 
 
-def _list_parquet_sizes(fs, hpath, jvm) -> tuple[list[int], bool]:
-    """Recursive (sizes, has_subdir_files) over a table directory via the
-    Hadoop FS API — works on any supported filesystem, not just local."""
-    sizes: list[int] = []
-    nested = False
-    it = fs.listFiles(hpath, True)  # recursive
-    base = hpath.toUri().getPath().rstrip("/")
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        if not p.getName().endswith(".parquet"):
-            continue
-        sizes.append(st.getLen())
-        if p.getParent().toUri().getPath().rstrip("/") != base:
-            nested = True
-    return sizes, nested
-
-
 def _read_text(spark: SparkSession, path: str) -> str | None:
     """One small file's text, or None if absent."""
     fs, hpath, jvm = _hadoop_fs(spark, path)

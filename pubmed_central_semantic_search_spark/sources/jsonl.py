@@ -37,17 +37,12 @@ def read_jsonl_splits(
 
 
 def write_sharded_parquet(
-    df: DataFrame,
-    path: str,
-    max_records_per_file: int = 100_000,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, max_records_per_file: int = 100_000
 ) -> None:
-    """S4 — sharded columnar sink. ``maxRecordsPerFile`` bounds shard size
-    (the analog of the reference's ``max_shard_size="100MB"``) without a
-    repartition shuffle; ``partition_by`` adds hive-style partition pruning
-    for downstream readers."""
-    writer = df.write.option("maxRecordsPerFile", max_records_per_file).mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    """S4 — sharded columnar sink (overwrites ``path``).
+    ``maxRecordsPerFile`` bounds shard size (the analog of the
+    reference's ``max_shard_size="100MB"``) without a repartition
+    shuffle."""
+    df.write.option("maxRecordsPerFile", max_records_per_file).mode(
+        "overwrite"
+    ).parquet(path)

@@ -432,70 +432,6 @@ def test_pre_metadata_table_is_accepted_and_stamped(spark, tmp_path):
 
 
 
-def test_adopt_honours_legacy_layout_record(spark, tmp_path):
-    """A table written before the commit log by the layout-record writer:
-    group-bucketed (by grp), evolved (some files carry an extra column)
-    and described by its ``_layout`` record. Adoption takes the layout
-    from that record, not from the call: a keyed call hashes by the
-    stored group column, a different bucket count raises, the sticky
-    evolved flag admits an old-schema batch, and the evolved column
-    survives the rewrite of its bucket. Bucket directories past the
-    call's count refuse adoption by name."""
-    import json
-
-    import pytest as _pt
-
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        bucket_expr,
-        read_record,
-    )
-
-    path = str(tmp_path / "legacy")
-    schema = "doc_id string, grp string, payload string"
-    old = spark.createDataFrame(
-        [(f"d{i}", f"g{i % 8}", f"v1-{i}") for i in range(32)], schema
-    )
-    old.withColumn(BUCKET_COL, bucket_expr(["grp"], 4)).write.partitionBy(
-        BUCKET_COL
-    ).parquet(path)
-    evolved = spark.createDataFrame(
-        [("d100", "g1", "v1-100", 0.9), ("d101", "g1", "v1-101", 0.8)],
-        schema + ", quality double",
-    )
-    evolved.withColumn(BUCKET_COL, bucket_expr(["grp"], 4)).write.mode(
-        "append"
-    ).partitionBy(BUCKET_COL).parquet(path)
-    os.makedirs(os.path.join(path, "_layout"))
-    with open(os.path.join(path, "_layout", "part-00000.json"), "w") as fh:
-        fh.write(json.dumps({"n_buckets": 4, "bucket_cols": "grp", "evolved": True}) + "\n")
-
-    batch = spark.createDataFrame([("d100", "g1", "v2-100")], schema)
-    with _pt.raises(ValueError, match="layout mismatch"):
-        upsert_parquet(spark, batch, path, key_cols=["doc_id"], n_buckets=8)
-    # keyed call, old-schema batch, no evolution flag: the stored layout
-    # (group key, sticky evolved) governs
-    upsert_parquet(spark, batch, path, key_cols=["doc_id"], n_buckets=4)
-    layout = read_record(spark, path)["layout"]
-    assert layout == {
-        "n_buckets": 4, "bucket_cols": "grp",
-        "bucket_col_types": ["string"], "evolved": True,
-    }
-    got = {r["doc_id"]: r for r in read_upsert_table(spark, path).collect()}
-    assert len(got) == 34  # merged in place, no duplicate of d100
-    assert got["d100"]["payload"] == "v2-100" and got["d100"]["quality"] is None
-    assert got["d101"]["quality"] == 0.8  # evolved column kept in the rewrite
-    assert got["d5"]["payload"] == "v1-5"
-
-    # a directory bucketed 8 ways, adopted by a 4-bucket call
-    wide = str(tmp_path / "wide")
-    old.withColumn(BUCKET_COL, bucket_expr(["doc_id"], 8)).write.partitionBy(
-        BUCKET_COL
-    ).parquet(wide)
-    with _pt.raises(ValueError, match="layout mismatch"):
-        upsert_parquet(spark, batch, wide, key_cols=["doc_id"], n_buckets=4)
-    assert not os.path.exists(os.path.join(wide, "_log"))
-
-
 def test_latest_record_is_probed_and_old_records_retire(spark, tmp_path, monkeypatch):
     """The latest record is found by probing forward from the version
     this process last saw — no listing of the log once a table has been
@@ -958,44 +894,6 @@ def test_evolution_review_fixes(spark, tmp_path):
             spark, _rows(spark, [("a", "c")]), pm, key_cols=["article_id"],
             allow_schema_evolution=True,
         )
-
-
-def test_compact_partitioned_leaves_concurrent_with_crash_leftover(spark, tmp_path):
-    """Round-7: leaf compaction runs distinct leaves through a thread
-    pool. Pin the pooled path end to end — many leaves, several appended
-    files each, one leaf PARKED in its crash backup (a previous run died
-    between its renames) — rows and values must survive exactly, the
-    parked leaf must be recovered AND compacted, and a steady-state
-    re-run touches nothing."""
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        compact_partitioned_leaves,
-    )
-
-    path = str(tmp_path / "tbl")
-    df = spark.range(240).selectExpr(
-        "CAST(id % 12 AS INT) AS part", "id AS v"
-    )
-    for i in range(3):
-        df.withColumn("v", F.col("v") + i * 1000).repartition("part") \
-          .write.mode("append").partitionBy("part").parquet(path)
-    want = sorted(
-        (r["part"], r["v"]) for r in spark.read.parquet(path).collect()
-    )
-    # simulate a crash: one leaf moved to its .compact.old backup
-    import os
-    import shutil
-
-    leaf = os.path.join(path, "part=3")
-    shutil.move(leaf, os.path.join(path, ".part=3.compact.old"))
-    stats = compact_partitioned_leaves(spark, path)
-    assert stats["leaves_seen"] == 12
-    assert stats["leaves_compacted"] == 12  # incl. the recovered leaf
-    got = sorted((r["part"], r["v"]) for r in spark.read.parquet(path).collect())
-    assert got == want
-    # steady state: pooled re-run compacts nothing
-    stats2 = compact_partitioned_leaves(spark, path)
-    assert stats2["leaves_compacted"] == 0
-    assert stats2["files_before"] == stats2["files_after"] == stats["files_after"]
 
 
 def test_batch_point_lookup_prunes_to_key_union(spark, tmp_path):

@@ -343,7 +343,7 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
 
 def test_compact_parquet(spark, tmp_path):
     """Compaction: many tiny files → the computed target count, same rows,
-    original directory name preserved (atomic swap)."""
+    in place under the original directory name."""
     from pubmed_central_semantic_search_spark.sources.catalog import compact_parquet
 
     path = str(tmp_path / "shards")
@@ -378,21 +378,152 @@ def test_compact_parquet_preserves_sort_clustering(spark, tmp_path):
     assert part == sorted(part)  # single output file, globally k-sorted
 
 
-def test_compact_parquet_recovers_stranded_backup(spark, tmp_path):
-    """Crash-recovery contract: if a previous compaction died between its
-    two renames (live dir missing, data stranded in .compact.old), the next
-    call must restore and proceed."""
-    import os
+def _tree_bytes(path):
+    """(relpath -> bytes) of every file under ``path``."""
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
 
+
+def test_compact_parquet_adopts_plain_directory_as_one_commit(spark, tmp_path):
+    """A plain parquet directory (no commit log) joins the log on COMPACT:
+    v1 ADOPT publishes its files as they stand, v2 COMPACT replaces them
+    with one file, and the rows read back identical through the log and
+    through a plain read of the root."""
+    from pubmed_central_semantic_search_spark.sources.catalog import (
+        compact_parquet,
+        log_versions,
+        read_record,
+        read_upsert_table,
+    )
+
+    path = str(tmp_path / "plain")
+    spark.range(0, 500).selectExpr("id", "id * 3 AS v").repartition(5).write.parquet(path)
+    want = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    stats = compact_parquet(spark, path, target_file_bytes=1 << 30)
+    assert stats["files_before"] == 5 and stats["files_after"] == 1
+    assert log_versions(spark, path) == [1, 2]
+    assert [read_record(spark, path, v)["operation"] for v in (1, 2)] == ["ADOPT", "COMPACT"]
+    on_disk = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert on_disk == [read_record(spark, path)["files"][0]["path"]]
+    assert sorted(tuple(r) for r in read_upsert_table(spark, path).collect()) == want
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == want
+
+
+def test_compact_crash_before_publish_keeps_adopted_rows_once(spark, tmp_path, monkeypatch):
+    """A crash after COMPACT placed its files but before it published:
+    the log still reads the adopted version's rows exactly once, a re-run
+    of COMPACT lands, and VACUUM then deletes the crashed attempt's
+    unpublished ``v2-`` files (before the re-run published v2 they are an
+    in-flight attempt VACUUM must not touch)."""
+    from pubmed_central_semantic_search_spark.sources import catalog
+
+    path = str(tmp_path / "plain")
+    spark.range(0, 300).selectExpr("id", "id * 3 AS v").repartition(6).write.parquet(path)
+    want = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    real = catalog.commit
+
+    def crash(*args):
+        if args[3] == "COMPACT":  # the operation: ADOPT still publishes
+            raise RuntimeError("injected crash")
+        return real(*args)
+
+    monkeypatch.setattr(catalog, "commit", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        catalog.compact_parquet(spark, path, target_file_bytes=1 << 30)
+    monkeypatch.setattr(catalog, "commit", real)
+    assert catalog.read_record(spark, path)["operation"] == "ADOPT"
+    crashed = {f for f in os.listdir(path) if f.startswith("v2-") and f.endswith(".parquet")}
+    assert crashed
+    assert sorted(tuple(r) for r in catalog.read_upsert_table(spark, path).collect()) == want
+
+    stats = catalog.compact_parquet(spark, path, target_file_bytes=1 << 30)
+    assert stats["files_before"] == 6 and stats["files_after"] == 1
+    catalog.snapshot_vacuum(spark, path, keep_last=1)
+    on_disk = {f for f in os.listdir(path) if f.endswith(".parquet")}
+    assert on_disk == {f["path"] for f in catalog.read_record(spark, path)["files"]}
+    assert not on_disk & crashed
+    assert sorted(tuple(r) for r in catalog.read_upsert_table(spark, path).collect()) == want
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == want
+
+
+def test_adoption_refuses_streaming_file_sink_output(spark, tmp_path):
+    """A Structured Streaming file-sink output (its ``_spark_metadata``
+    manifest pins exact file names) never joins the commit log: COMPACT
+    and an upsert both raise by name and leave the directory as it was,
+    so plain reads of the root and the resumed stream keep working."""
     from pubmed_central_semantic_search_spark.sources.catalog import compact_parquet
 
-    path = str(tmp_path / "t")
-    spark.range(0, 1000).write.parquet(path)
-    os.rename(path, path + ".compact.old")  # simulate the torn swap
-    stats = compact_parquet(spark, path, target_file_bytes=1 << 30)
-    assert stats["files_after"] >= 1
-    assert spark.read.parquet(path).count() == 1000
-    assert not os.path.exists(path + ".compact.old")
+    src, out, ckpt = tmp_path / "src", str(tmp_path / "sink"), str(tmp_path / "ck")
+    src.mkdir()
+    for t in range(2):
+        with open(src / f"t{t}.jsonl", "w") as f:
+            for i in range(t * 5, t * 5 + 5):
+                f.write(json.dumps({"doc_id": i, "text": f"d{i}"}) + "\n")
+    q = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1).json(str(src))
+        .writeStream.format("parquet").option("checkpointLocation", ckpt)
+        .trigger(availableNow=True).start(out)
+    )
+    q.awaitTermination(120)
+    assert os.path.isdir(os.path.join(out, "_spark_metadata"))
+    before = _tree_bytes(out)
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        compact_parquet(spark, out)
+    batch = spark.createDataFrame([(1, "new")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        upsert_parquet(spark, batch, out, key_cols=["doc_id"])
+    assert _tree_bytes(out) == before
+    assert spark.read.parquet(out).count() == 10
+
+
+def test_adoption_refusals_write_nothing(spark, tmp_path):
+    """Directories that cannot join the commit log raise by name and stay
+    byte-identical, with no ``_log``: a plain hive-partitioned (``part=k``)
+    directory under both compactions; under ``upsert_parquet``, a table
+    carrying a pre-log ``_layout`` record (its bucket key may not be the
+    caller's) and ``_bucket=`` directories at or past the call's count."""
+    from pubmed_central_semantic_search_spark.sources.catalog import (
+        BUCKET_COL,
+        bucket_expr,
+        compact_parquet,
+        compact_partitioned_leaves,
+    )
+
+    hive = str(tmp_path / "hive")
+    spark.range(120).selectExpr("CAST(id % 4 AS INT) AS part", "id AS v").repartition(
+        3
+    ).write.partitionBy("part").parquet(hive)
+    before = _tree_bytes(hive)
+    for compact in (compact_parquet, compact_partitioned_leaves):
+        with pytest.raises(ValueError, match="hive-partitioned"):
+            compact(spark, hive)
+        assert _tree_bytes(hive) == before
+
+    schema = "article_id string, payload string"
+    batch = spark.createDataFrame([("PMC1", "v2")], schema)
+    old = spark.createDataFrame([(f"PMC{i}", "v1") for i in range(16)], schema)
+    legacy = str(tmp_path / "legacy")
+    old.withColumn(BUCKET_COL, bucket_expr(["article_id"], 4)).write.partitionBy(
+        BUCKET_COL
+    ).parquet(legacy)
+    os.makedirs(os.path.join(legacy, "_layout"))
+    with open(os.path.join(legacy, "_layout", "part-00000.json"), "w") as fh:
+        fh.write(json.dumps({"n_buckets": 4, "bucket_cols": "article_id"}) + "\n")
+    wide = str(tmp_path / "wide")
+    old.withColumn(BUCKET_COL, bucket_expr(["article_id"], 8)).write.partitionBy(
+        BUCKET_COL
+    ).parquet(wide)
+    for path, match in ((legacy, "_layout record"), (wide, "layout mismatch")):
+        before = _tree_bytes(path)
+        with pytest.raises(ValueError, match=match):
+            upsert_parquet(spark, batch, path, key_cols=["article_id"], n_buckets=4)
+        assert _tree_bytes(path) == before
 
 
 def test_compact_parquet_rejects_hive_partitioned(spark, tmp_path):

@@ -291,7 +291,11 @@ def test_catalog_sql_upsert_snapshot_roundtrip(spark, tmp_path):
 def test_catalog_sql_compact_and_vacuum(spark, tmp_path):
     """Round-8: the housekeeping statements — COMPACT (flat + LEAVES) and
     VACUUM SNAPSHOTS — through the SQL surface, results matching the
-    Python twins' stats contracts."""
+    Python twins' stats contracts. LEAVES compacts a bucket-partitioned
+    table; a plain hive-partitioned directory has no layout in the commit
+    log and is refused by name."""
+    import pytest
+
     from pubmed_central_semantic_search_spark.sql import catalog_sql
 
     # flat compaction: several small files -> fewer
@@ -303,14 +307,29 @@ def test_catalog_sql_compact_and_vacuum(spark, tmp_path):
     stats = catalog_sql(spark, f"COMPACT '{flat}'")
     assert stats["files_before"] > stats["files_after"]
     assert spark.read.parquet(flat).count() == 400
-    # leaf compaction on a hive layout
+    # leaf compaction of a bucket-partitioned table whose buckets accreted
+    # files (written under a small per-file row cap)
     part = str(tmp_path / "part")
-    df = spark.range(40).selectExpr("id % 4 AS p", "id AS v")
-    for _ in range(3):
-        df.repartition("p").write.partitionBy("p").mode("append").parquet(part)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", 3)
+    try:
+        catalog_sql(
+            spark,
+            f"UPSERT INTO '{part}' KEY (id) BUCKETS 4 AS "
+            "SELECT id, id % 4 AS p FROM range(40)",
+        )
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     stats = catalog_sql(spark, f"COMPACT '{part}' LEAVES")
     assert stats["leaves_compacted"] == 4
-    assert spark.read.parquet(part).count() == 120
+    assert stats["files_after"] == 4 < stats["files_before"]
+    assert catalog_sql(spark, f"UPSERT READ '{part}' AS VIEW part_v").count() == 40
+    hive = str(tmp_path / "hive")
+    spark.range(40).selectExpr("id % 4 AS p", "id AS v").repartition(
+        "p"
+    ).write.partitionBy("p").parquet(hive)
+    with pytest.raises(ValueError, match="hive-partitioned"):
+        catalog_sql(spark, f"COMPACT '{hive}' LEAVES")
+    assert spark.read.parquet(hive).count() == 40
     # snapshot vacuum
     snap = str(tmp_path / "snap")
     for i in range(3):
