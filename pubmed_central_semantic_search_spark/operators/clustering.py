@@ -217,8 +217,16 @@ def ivf_assign(
 ) -> DataFrame:
     """IVF build: tag every vector with its inverted-list id. At scale,
     follow with ``.write.partitionBy("cluster_id").parquet(...)`` so
-    query-time probing becomes partition pruning."""
-    return vectors.withColumn("cluster_id", nearest_centroid(vec_col, centroids))
+    query-time probing becomes partition pruning.
+
+    The id comes out of a one-element explode, so a filter or join on
+    ``cluster_id`` stays above the assignment: Catalyst pushes such a
+    filter below a plain projection, and at widths ≥ 256 the BLAS kernel
+    then runs twice (once for the filter, once for the column). A NULL
+    vector keeps its row, with a NULL id."""
+    return vectors.withColumn(
+        "cluster_id", F.explode(F.array(nearest_centroid(vec_col, centroids)))
+    )
 
 
 def ivf_topk(

@@ -9,9 +9,11 @@ Spark design — one aggregation shape at every width:
   ``(group, pos)``. Partial (map-side) aggregation means the shuffle carries
   one partial sum per (group, pos, partition), NOT dim× the row count —
   this is the 100 TB-safe shape and also the oracle-checkable one.
-- ``mean_pool``: same aggregation, then re-assembles ``array<double>``
-  ordered by component index. Used by the document pipeline. Its ``dim``
-  is a length guard only, so the plan does not grow with the width.
+- ``mean_pool``: the same aggregation (``_component_means``, with
+  ``posexplode_outer`` so all-NULL groups survive), then re-assembles
+  ``array<double>`` ordered by component index. Used by the document
+  pipeline. Its ``dim`` is a length guard only, so the plan does not grow
+  with the width.
 
 Both are pure DataFrame ops — no UDF, no driver collect.
 """
@@ -20,20 +22,26 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, length_guard
+
+
+def _component_means(
+    df: DataFrame, group: Sequence[str], vec: Column, explode
+) -> DataFrame:
+    """The one pooling aggregation: ``explode`` (``F.posexplode`` or
+    ``F.posexplode_outer``) the components, average per ``(group, pos)``."""
+    exploded = df.select(*group, explode(vec).alias("pos", "val"))
+    return exploded.groupBy(*group, "pos").agg(F.avg("val").alias("mean_val"))
 
 
 def mean_pool_flat(
     df: DataFrame, group: Sequence[str], vec_col: str = "embedding"
 ) -> DataFrame:
     """Per-group element-wise mean, one row per (group, component pos)."""
-    exploded = df.select(
-        *group, F.posexplode(as_double(vec_col)).alias("pos", "val")
-    )
-    return exploded.groupBy(*group, "pos").agg(F.avg("val").alias("mean_val"))
+    return _component_means(df, group, as_double(vec_col), F.posexplode)
 
 
 def mean_pool(
@@ -69,8 +77,7 @@ def mean_pool(
     # posexplode_outer keeps all-null groups alive as a (null, null)
     # component row; the assembly filters that cell back out and maps an
     # empty result to NULL
-    exploded = df.select(*group, F.posexplode_outer(vec).alias("pos", "val"))
-    flat = exploded.groupBy(*group, "pos").agg(F.avg("val").alias("mean_val"))
+    flat = _component_means(df, group, vec, F.posexplode_outer)
     assembled = flat.groupBy(*group).agg(
         F.filter(
             F.sort_array(F.collect_list(F.struct("pos", "mean_val"))),

@@ -1,16 +1,12 @@
-"""Count–min sketch (Cormode & Muthukrishnan 2005) — mergeable frequency
+"""Count–min sketch (Cormode & Muthukrishnan 2005) — frequency
 estimation for the sketch tier (the HLL cardinality sketch is certified in
 q45; CMS adds approximate per-key counts).
 
 Why a sketch when ``groupBy(key).count()`` is exact: the CMS is
-CONSTANT-SIZED (depth × width cells, independent of key cardinality) and
-merges by elementwise addition — the shape that works when counts must be
-kept per time-window/per-shard and combined later, or fed from a stream
-where the exact groupBy's state would grow with distinct keys. At 100 TB:
+CONSTANT-SIZED (depth × width cells, independent of key cardinality),
+where the exact groupBy's output grows with distinct keys. At 100 TB:
 one narrow explode (depth rows per input row) → ONE partial-aggregated
-groupBy on (row, bucket) → at most depth×width output rows; sketches from
-different partitions/days/streams union + sum without ever re-reading the
-data.
+groupBy on (row, bucket) → at most depth×width output rows.
 
 Hashes are content-addressed (md5-derived, like the sampling/split
 family), so two engines — or two clusters — build BIT-IDENTICAL sketches:
@@ -42,7 +38,7 @@ def cms_build(
     """Sparse CMS: (row, bucket, cnt, depth, width) — zero cells omitted.
     One narrow explode + one keyed aggregate; ≤ depth×width output rows.
     ``depth``/``width`` ride along as literal metadata columns so every
-    downstream consumer (merge, estimate, a parquet round-trip, another
+    downstream consumer (the estimate, a parquet round-trip, another
     engine) can validate geometry instead of trusting the caller to
     repeat the build arguments. Null keys are skipped (round-8 review:
     the bloom twin already documented this rule while the CMS silently
@@ -69,34 +65,6 @@ def cms_build(
     )
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Union + elementwise sum — the CMS mergeability property. Sketch of
-    a union of frames ≡ merge of per-frame sketches (test-pinned).
-    Geometry columns join the grouping key: merging sketches built with
-    DIFFERENT geometries (whose cells are not summable — the buckets mean
-    different things) yields a frame with >1 distinct (depth, width),
-    which ``cms_estimate`` rejects at the first point query. Legacy
-    3-column sketches (pre-metadata parquet) merge as before; a MIXED
-    merge (legacy + stamped) strips the metadata from every input first —
-    grouping on a half-null geometry would otherwise SPLIT the same
-    logical cell into two rows, corrupting every later estimate — and the
-    result falls back to explicit-args validation like any legacy
-    sketch."""
-    if not sketches:
-        raise ValueError("cms_merge needs at least one sketch")
-    has_meta = ["depth" in s.columns and "width" in s.columns for s in sketches]
-    if not all(has_meta):
-        sketches = tuple(
-            s.select("row", "bucket", "cnt") if m else s
-            for s, m in zip(sketches, has_meta)
-        )
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    geom = [c for c in ("depth", "width") if c in out.columns]
-    return out.groupBy("row", "bucket", *geom).agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate(
     sketch: DataFrame,
     keys: Sequence[str],
@@ -113,9 +81,10 @@ def cms_estimate(
     (probing with a larger width than the build would rehash keys into
     empty cells and silently UNDER-estimate, the one failure the CMS
     contract forbids; a smaller width is caught the same way). A frame
-    holding more than one distinct stamped geometry (a bad merge) is
-    rejected too. Legacy sketches without metadata columns require
-    explicit ``depth``/``width`` and get the out-of-range cell guard."""
+    holding more than one distinct stamped geometry (a union of
+    sketches built with different geometries) is rejected too. Legacy
+    sketches without metadata columns require explicit
+    ``depth``/``width`` and get the out-of-range cell guard."""
     from .curation import md5_prefix_long_py
 
     from ..session import collect_bounded
@@ -129,7 +98,7 @@ def cms_estimate(
         if len(geoms) > 1:
             raise ValueError(
                 f"cms_estimate: sketch holds {len(geoms)} distinct "
-                f"geometries {sorted(geoms)} — merged sketches must share "
+                f"geometries {sorted(geoms)} — one sketch frame must hold "
                 "one (depth, width)"
             )
         if geoms:
@@ -183,8 +152,8 @@ def cms_estimate(
 # key"). The 100 TB use is incremental-ingest dedup: a new batch checks
 # its content keys against the HISTORY of everything ever ingested, and
 # a plain left_anti join re-shuffles the whole history every batch. The
-# Bloom filter of the history is constant-sized, no-false-negative, and
-# mergeable (bit_or), so the batch splits into "definitely new" (bloom
+# Bloom filter of the history is constant-sized and no-false-negative,
+# so the batch splits into "definitely new" (bloom
 # says no — EXACT, skip the join) and a small "maybe seen" remainder
 # that alone pays the exact anti-join (``bloom_anti_join``).
 #
@@ -237,60 +206,6 @@ def bloom_build(
         .agg(F.bit_or("mask").alias("word"))
         .withColumn("n_words", F.lit(int(n_words)))
         .withColumn("k", F.lit(int(k)))
-    )
-
-
-def _bloom_with_geometry(b: DataFrame) -> DataFrame:
-    """Attach null geometry columns to a legacy (word_idx, word)-only
-    frame so unions line up; null reads as unknown-but-compatible."""
-    out = b
-    if "n_words" not in out.columns:
-        out = out.withColumn("n_words", F.lit(None).cast("int"))
-    if "k" not in out.columns:
-        out = out.withColumn("k", F.lit(None).cast("int"))
-    return out
-
-
-def bloom_merge(*blooms: DataFrame) -> DataFrame:
-    """bit_or of word arrays — bloom of a union ≡ merge of per-frame
-    blooms (the same mergeability contract as ``cms_merge``). Geometry
-    is validated EAGERLY across whole inputs (the round-10 hll_merge
-    pattern): different-n_words/k blooms hash positions differently, so
-    their bit_or is a silently meaningless filter — raises by name.
-    Legacy frames without the metadata columns merge as
-    unknown-geometry (nulls are ignored by the min/max check)."""
-    if not blooms:
-        raise ValueError("bloom_merge needs at least one bloom")
-    out = _bloom_with_geometry(blooms[0])
-    for b in blooms[1:]:
-        out = out.unionByName(_bloom_with_geometry(b))
-    geom = out.agg(
-        F.min("n_words").alias("_gw_min"), F.max("n_words").alias("_gw_max"),
-        F.min("k").alias("_gk_min"), F.max("k").alias("_gk_max"),
-    )
-    return (
-        out.groupBy("word_idx")
-        .agg(
-            F.bit_or("word").alias("word"),
-            F.min("n_words").alias("n_words"),
-            F.min("k").alias("k"),
-        )
-        .crossJoin(F.broadcast(geom))
-        .withColumn(
-            "word",
-            F.when(
-                (F.coalesce(F.col("_gw_min") == F.col("_gw_max"), F.lit(True)))
-                & (F.coalesce(F.col("_gk_min") == F.col("_gk_max"), F.lit(True))),
-                F.col("word"),
-            ).otherwise(
-                F.raise_error(F.lit(
-                    "bloom_merge: blooms disagree on geometry (n_words/k) "
-                    "— built with different hash positions, the merged "
-                    "filter would yield false negatives"
-                )).cast("bigint")
-            ),
-        )
-        .drop("_gw_min", "_gw_max", "_gk_min", "_gk_max")
     )
 
 
@@ -361,7 +276,7 @@ def bloom_anti_join(
     anti-join's probe side shrinks to ~(matches + 1% of new) rows.
 
     AMORTIZE THE BUILD: pass prebuilt ``words`` (``bloom_literal`` of a
-    maintained filter — e.g. the ``start_stream_bloom`` table) whenever
+    filter built once, e.g. read back from a words table) whenever
     the same history serves many batches. Building inside this call scans
     the full history EVERY time, and at broadcast-sized history that
     costs more than the plain anti-join it replaces (measured locally:
@@ -420,8 +335,8 @@ def bloom_anti_join_table(
 ) -> DataFrame:
     """``bloom_anti_join`` for blooms TOO LARGE to ship as a plan
     literal (the docstring's beyond-10⁷-keys seam, now real): the words
-    stay a (word_idx, word) TABLE — e.g. the ``start_stream_bloom``
-    sink's durable output read straight back — and membership probes via
+    stay a (word_idx, word) TABLE — e.g. a ``bloom_build`` output
+    persisted as parquet and read straight back — and membership probes via
     an equi-join on word_idx instead of a constant-folded array lookup.
 
     Shape: the batch's DISTINCT keys explode to k (word_idx, bit) probes
@@ -557,9 +472,8 @@ def bloom_anti_join_table(
 # OWN bucket (exact); above, the bucket is (exponent, top-3-mantissa-bits)
 # — 8 sub-buckets per octave, so any answer's representative is within
 # 12.5% of the true value (exact below 16; n = 0 is exact bucket 0).
-# ≤ 488 cells for the whole int64 range — constant-size, mergeable by
-# cell addition, streaming-foldable like the CMS (same
-# _fold_sketch_batch discipline).
+# ≤ 488 cells for the whole int64 range — constant-size whatever the row
+# count.
 #
 # Quantile semantics (both engines, test-pinned): rank = floor(q·(N−1))+1,
 # answer = lower bound of the first bucket whose cumulative count reaches
@@ -654,19 +568,6 @@ def ihist_build(
     )
 
 
-def ihist_merge(*sketches: DataFrame) -> DataFrame:
-    """Union + cell addition — same mergeability law as the CMS (sketch of
-    a union ≡ merge of sketches, test-pinned). Grouping keys are every
-    column except cnt, so grouped histograms merge per group."""
-    if not sketches:
-        raise ValueError("ihist_merge needs at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    keys = [c for c in out.columns if c != "cnt"]
-    return out.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
-
-
 def ihist_quantiles(
     sketch: DataFrame, qs: Sequence[float], group_cols: Sequence[str] = ()
 ) -> DataFrame:
@@ -707,7 +608,8 @@ def ihist_quantiles(
 # cells-are-the-contract construction the CMS and bloom tiers use — and
 # the estimate a pure function of them. Registers merge by MAX (the
 # streaming story: constant ``m``-cell state however many distinct keys
-# stream by; ``start_stream_hll`` folds batches into a durable table).
+# stream by; ``start_stream_hll`` folds batches into a register table
+# that commits through the tables' versioned log).
 #
 # Hash split, chosen for exact SQL replay: h = md5-prefix-32bit(key),
 # register = h % m (non-negative, pmod-free), value = h div m — the
@@ -773,7 +675,7 @@ def hll_build(
 def hll_merge(*sketches: DataFrame) -> DataFrame:
     """Union + per-register MAX — the HLL merge law (merge(build(A),
     build(B)) ≡ build(A ∪ B), test-pinned). Geometry (m) must agree;
-    validated in-plan like cms_merge — EAGERLY across the whole union
+    validated in-plan — EAGERLY across the whole union
     (round-10 ADVICE: the earlier per-register check only fired when a
     register appeared in BOTH inputs, so different-m sketches with
     disjoint register sets merged into a silently meaningless table).

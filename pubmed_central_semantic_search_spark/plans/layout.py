@@ -112,47 +112,3 @@ def zorder_write(
         .parquet(path)
     )
 
-
-def bloom_write(
-    df: DataFrame,
-    path: str,
-    bloom_cols: list[str],
-    expected_ndv: int = 100_000,
-    mode: str = "overwrite",
-) -> None:
-    """Point-lookup layout: parquet BLOOM FILTERS on high-cardinality key
-    columns — the complement of min-max clustering. Z-order/sort stats
-    prune RANGE predicates, but an equality probe on a hash-like key
-    (content_key, doc hash, band_key) defeats min-max entirely: uniform
-    keys span every file's [min, max]. A per-row-group bloom filter
-    answers "definitely absent" in one footer read, so a point lookup
-    touches only the row groups that might hold the key — the dedup
-    incremental path (does this content_key already exist?) becomes
-    footer-bound instead of a corpus scan.
-
-    Plain Spark writer options (`parquet.bloom.filter.enabled#col`);
-    ``expected_ndv`` sizes the filter (~1.2 bytes/value at the default
-    1% false-positive rate). Readers that ignore bloom filters still read
-    the file normally — the layout is purely additive."""
-    # Fail loudly on a typo'd column (round-9 review pass): the parquet
-    # writer SILENTLY IGNORES bloom options for columns that don't exist,
-    # so a misspelled key would write a table whose promised footer-bound
-    # point lookups quietly degrade to full scans — no error anywhere.
-    missing = [c for c in bloom_cols if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"bloom_write: bloom_cols {missing} not in the frame "
-            f"(columns: {df.columns}) — a nonexistent column's bloom "
-            "option is silently dropped by the writer"
-        )
-    if expected_ndv <= 0:
-        raise ValueError(
-            f"bloom_write: expected_ndv must be positive, got {expected_ndv}"
-        )
-    writer = df.write.mode(mode)
-    for c in bloom_cols:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        writer = writer.option(
-            f"parquet.bloom.filter.expected.ndv#{c}", str(expected_ndv)
-        )
-    writer.parquet(path)

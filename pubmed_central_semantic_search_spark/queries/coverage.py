@@ -423,8 +423,8 @@ _BLOOM_WORDS, _BLOOM_K = 16, 4
     "is a pure function of them ('hllest' arm: harmonic mean + "
     "small-range correction, value-hashed; the 2^-rho register sum is "
     "EXACT in float64 so summation order cannot move it), "
-    "A2 + X4/X6 count-min frequency sketch (bit-identical cross-engine "
-    "cells, streaming-foldable) + X1/X6 Bloom membership sketch "
+    "A2 + X4 count-min frequency sketch (bit-identical cross-engine "
+    "cells) + X1 Bloom membership sketch "
     "(bit-identical words; the incremental-ingest anti-join prefilter, "
     "bloom_anti_join ≡ exact left_anti property-pinned) + X6 streaming "
     "HLL drain (round-10: start_stream_hll availableNow over a 2-file/"
@@ -441,6 +441,7 @@ def q45_cardinality_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.sketch import hll_build
     from ..session import local_df
+    from ..sources.catalog import read_upsert_table
     from ..streaming.ingest import start_stream_hll
 
     e = load(spark, sf_dir, "events")
@@ -450,7 +451,8 @@ def q45_cardinality_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pattern). The DISTINCT keys re-enter as a 2-file stream read 1
     # file per trigger (at least two micro-batches, so the foreachBatch
     # MAX-fold really merges across batches); the durable register
-    # table's read-back is collected (≤ m rows) before the temp dir goes.
+    # table's read-back through its commit log is collected (≤ m rows)
+    # before the temp dir goes.
     base = tempfile.mkdtemp(prefix="pmc_hllstream_")
     try:
         keys_dir = os.path.join(base, "keys")
@@ -481,7 +483,7 @@ def q45_cardinality_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         reg_rows = [
             ("hllstream", None, None, None, int(r["register"]), None,
              int(r["rho"]), None)
-            for r in spark.read.parquet(hll_dir).collect()
+            for r in read_upsert_table(spark, hll_dir).collect()
         ]
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -664,9 +666,9 @@ def ihist_token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t GROUP BY source
     """,
     survey_rows="§2.10 exposure: exact interpolated percentiles, X4 corpus "
-    "profiling. The mergeable integer log-histogram quantile sketch arm "
+    "profiling. The integer log-histogram quantile sketch arm "
     "(DDSketch-shaped, bit-identical cross-engine cells, constant "
-    "≤488-cell state, streaming-foldable) was DEMOTED from this row's "
+    "≤488-cell state) was DEMOTED from this row's "
     "driver replay after two green rounds (amortization policy): its "
     "DuckDB parity runs as pytest "
     "(tests/test_sketch.py::test_ihist_quantiles_duckdb_parity_demoted) "

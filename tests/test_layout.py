@@ -106,52 +106,3 @@ def test_zvalue_three_columns_matches_python(spark):
 
     assert got == {(x, y, z): morton3(x, y, z) for x, y, z in rows}
 
-
-def test_bloom_write_emits_filters_and_round_trips(spark, sf_dir, tmp_path):
-    """bloom_write: same rows back, and the bloom-enabled files carry the
-    extra filter bytes (pyarrow 16 doesn't expose bloom offsets in
-    ColumnChunkMetaData, so the observable proof is the strictly larger
-    on-disk footprint of byte-identical data plus exact row equality)."""
-    import os
-
-    from pubmed_central_semantic_search_spark.plans.layout import bloom_write
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .selectExpr("doc_id", "md5(text) AS content_key")
-        .coalesce(1)
-    )
-    plain, bloomed = str(tmp_path / "plain"), str(tmp_path / "bloom")
-    docs.write.mode("overwrite").parquet(plain)
-    bloom_write(docs, bloomed, ["content_key"], expected_ndv=10_000)
-
-    def _bytes(d):
-        return sum(
-            os.path.getsize(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    assert _bytes(bloomed) > _bytes(plain)
-    got = sorted(
-        (r["doc_id"], r["content_key"])
-        for r in spark.read.parquet(bloomed).collect()
-    )
-    want = sorted((r["doc_id"], r["content_key"]) for r in docs.collect())
-    assert got == want
-
-
-def test_bloom_write_rejects_missing_column_and_bad_ndv(spark, tmp_path):
-    """Round-9 review pass: the parquet writer SILENTLY IGNORES bloom
-    options for nonexistent columns — a typo'd key column wrote a table
-    whose promised footer-bound point lookups quietly degraded to full
-    scans. bloom_write now raises by name."""
-    import pytest
-
-    from pubmed_central_semantic_search_spark.plans.layout import bloom_write
-
-    df = spark.range(10).selectExpr("id AS k", "CAST(id AS STRING) AS v")
-    with pytest.raises(ValueError, match="content_key.*not in the frame"):
-        bloom_write(df, str(tmp_path / "b"), ["content_key"])
-    with pytest.raises(ValueError, match="expected_ndv"):
-        bloom_write(df, str(tmp_path / "b"), ["k"], expected_ndv=0)

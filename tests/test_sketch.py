@@ -1,5 +1,5 @@
 """Count–min sketch: overestimate-only guarantee, exactness for isolated
-keys, mergeability (sketch-of-union ≡ merged sketches), and a DuckDB
+keys, and a DuckDB
 recomputation of the full sketch (content-addressed hashes ⇒ the two
 engines build bit-identical tables)."""
 
@@ -9,7 +9,6 @@ import pyspark.sql.functions as F
 from pubmed_central_semantic_search_spark.operators.sketch import (
     cms_build,
     cms_estimate,
-    cms_merge,
 )
 
 DEPTH, WIDTH = 4, 64
@@ -31,24 +30,6 @@ def test_cms_never_underestimates_and_is_exact_when_sparse(spark):
         assert est[k] <= t + 2 * len(data) // WIDTH + 3  # loose eps bound
     # with 6 distinct keys in 64 buckets x 4 rows, min over rows is exact
     assert est["hot"] == 50 and est["warm"] == 7
-
-
-def test_cms_merge_equals_sketch_of_union(spark):
-    a = ["p"] * 5 + ["q"] * 2
-    b = ["p"] * 3 + ["r"] * 4
-    sk_a = cms_build(_tokens_df(spark, a), "token", DEPTH, WIDTH)
-    sk_b = cms_build(_tokens_df(spark, b), "token", DEPTH, WIDTH)
-    merged = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in cms_merge(sk_a, sk_b).collect()
-    }
-    union = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in cms_build(_tokens_df(spark, a + b), "token", DEPTH, WIDTH).collect()
-    }
-    assert merged == union
-    est = cms_estimate(cms_merge(sk_a, sk_b), ["p", "q", "r"], DEPTH, WIDTH)
-    assert est["p"] == 8 and est["q"] == 2 and est["r"] == 4
 
 
 def test_cms_matches_duckdb_recomputation(spark, sf_dir):
@@ -169,21 +150,6 @@ def test_bloom_anti_join_equals_exact_anti_join(spark):
     assert len(want) == 150  # 50 overlapping h-keys removed
 
 
-def test_bloom_merge_equals_bloom_of_union(spark):
-    from pubmed_central_semantic_search_spark.operators.sketch import (
-        bloom_build,
-        bloom_merge,
-    )
-
-    a = spark.createDataFrame([(f"a{i}",) for i in range(50)], "k string")
-    b = spark.createDataFrame([(f"b{i}",) for i in range(50)], "k string")
-    merged = _bloom_dict(bloom_merge(
-        bloom_build(a, "k", 16, 4), bloom_build(b, "k", 16, 4)
-    ))
-    union = _bloom_dict(bloom_build(a.unionByName(b), "k", 16, 4))
-    assert merged == union and len(union) > 0
-
-
 def test_bloom_matches_duckdb_recomputation(spark, sf_dir):
     """Bit-identical cross-engine word array over the real events table —
     the q45 'bloom' arm's contract."""
@@ -301,18 +267,18 @@ def test_cms_estimate_rejects_larger_claimed_geometry(spark):
 
 
 def test_cms_merge_of_mixed_geometries_is_rejected_at_estimate(spark):
+    """Cells of sketches built with different geometries are not
+    summable: a frame holding two stamped geometries is refused."""
     import pytest as _pytest
 
     from pubmed_central_semantic_search_spark.operators.sketch import (
         cms_build,
         cms_estimate,
-        cms_merge,
     )
 
     df = spark.createDataFrame([("a",), ("b",)], "token string")
-    merged = cms_merge(
-        cms_build(df, "token", depth=4, width=64),
-        cms_build(df, "token", depth=4, width=128),
+    merged = cms_build(df, "token", depth=4, width=64).unionByName(
+        cms_build(df, "token", depth=4, width=128)
     )
     with _pytest.raises(ValueError, match="distinct"):
         cms_estimate(merged, ["a"])
@@ -362,32 +328,9 @@ def test_bloom_anti_join_prebuilt_words_amortized_path(spark):
     assert got == want and len(got) == 10
     with _pytest.raises(ValueError, match="geometry"):
         bloom_anti_join(new, hist, "k", n_words=32, words=words)
-
-
-def test_cms_merge_mixed_legacy_and_stamped_degrades_to_legacy(spark):
-    """A legacy 3-col sketch merged with a stamped one must NOT split
-    cells on a half-null geometry — the merge strips metadata and the
-    result validates with explicit args like any legacy sketch."""
-    from pubmed_central_semantic_search_spark.operators.sketch import (
-        cms_build,
-        cms_estimate,
-        cms_merge,
-    )
-
-    a = cms_build(
-        spark.createDataFrame([("hot",)] * 3, "token string"), "token", 4, 64
-    )
-    legacy = cms_build(
-        spark.createDataFrame([("hot",)] * 2 + [("cold",)], "token string"),
-        "token", 4, 64,
-    ).drop("depth", "width")
-    merged = cms_merge(a, legacy)
-    assert "depth" not in merged.columns
-    # no split cells: every (row, bucket) appears once
-    cells = merged.groupBy("row", "bucket").count().collect()
-    assert all(r["count"] == 1 for r in cells)
-    est = cms_estimate(merged, ["hot", "cold"], depth=4, width=64)
-    assert est == {"hot": 5, "cold": 1}
+    # densifying a stamped filter at another width is refused by name
+    with _pytest.raises(ValueError, match="n_words"):
+        bloom_literal(bloom_build(hist, "k", 16, 4), 32)
 
 
 # ---------------------------------------------------------------------------
@@ -459,10 +402,9 @@ def test_ihist_negative_input_raises(spark):
         ihist_build(df, "n").collect()
 
 
-def test_ihist_merge_equals_sketch_of_union_and_quantiles_match_python(spark):
+def test_ihist_quantiles_match_python(spark):
     from pubmed_central_semantic_search_spark.operators.sketch import (
         ihist_build,
-        ihist_merge,
         ihist_quantiles,
     )
 
@@ -473,19 +415,6 @@ def test_ihist_merge_equals_sketch_of_union_and_quantiles_match_python(spark):
     b = [rng.randrange(0, 3000) for _ in range(300)]
     df_a = spark.createDataFrame([(v,) for v in a], "n long")
     df_b = spark.createDataFrame([(v,) for v in b], "n long")
-    merged = {
-        r["bucket"]: r["cnt"]
-        for r in ihist_merge(
-            ihist_build(df_a, "n"), ihist_build(df_b, "n")
-        ).collect()
-    }
-    union = {
-        r["bucket"]: r["cnt"]
-        for r in ihist_build(
-            df_a.unionByName(df_b), "n"
-        ).collect()
-    }
-    assert merged == union
     qs = [0.5, 0.9, 0.99]
     got = {
         r["q"]: r["value"]
@@ -494,8 +423,6 @@ def test_ihist_merge_equals_sketch_of_union_and_quantiles_match_python(spark):
         ).collect()
     }
     both = a + b
-    import numpy as np
-
     for q in qs:
         want = _py_ihist_quantile(both, q)
         assert got[q] == want, q
@@ -820,34 +747,3 @@ def test_bloom_anti_join_table_equals_exact_and_validates_geometry(spark):
     with pytest.raises(Exception, match="word_idx"):
         bloom_anti_join_table(new, legacy, hist, "k", n_words=2, k=4).collect()
 
-
-def test_bloom_merge_geometry_validates_eagerly(spark):
-    """Round-10 (the hll_merge rule applied to the bloom): merging blooms
-    built with different n_words/k raises even when their word sets are
-    DISJOINT; legacy frames without metadata merge as unknown-geometry."""
-    import pytest
-
-    from pubmed_central_semantic_search_spark.operators.sketch import (
-        bloom_build,
-        bloom_literal,
-        bloom_merge,
-    )
-
-    a = spark.createDataFrame([("a",)], "k string")
-    b = spark.createDataFrame([("b",)], "k string")
-    with pytest.raises(Exception, match="geometry"):
-        bloom_merge(
-            bloom_build(a, "k", n_words=16, k=4),
-            bloom_build(b, "k", n_words=32, k=4),
-        ).collect()
-    with pytest.raises(Exception, match="geometry"):
-        bloom_merge(
-            bloom_build(a, "k", n_words=16, k=4),
-            bloom_build(b, "k", n_words=16, k=2),
-        ).collect()
-    # legacy (metadata-less) + stamped merge fine; literal validates too
-    legacy = bloom_build(a, "k", 16, 4).select("word_idx", "word")
-    merged = bloom_merge(legacy, bloom_build(b, "k", 16, 4))
-    assert len(bloom_literal(merged, 16)) == 16
-    with pytest.raises(ValueError, match="n_words"):
-        bloom_literal(bloom_build(a, "k", 16, 4), 32)

@@ -132,53 +132,6 @@ def test_streaming_ingest_available_now(spark, tmp_path):
     assert spark.read.parquet(chunks_path).count() == 4
 
 
-def test_stream_stateful_first_seen_dedup(spark, tmp_path):
-    """X1-on-a-stream via applyInPandasWithState: a key re-appearing in a
-    LATER micro-batch is suppressed by cross-batch state; each key's first
-    version survives."""
-    import os
-    import time
-
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        read_article_stream,
-        stream_first_seen_dedup,
-    )
-
-    src = tmp_path / "dedupzone"
-    src.mkdir()
-
-    def art(aid, abstract):
-        return {
-            "article_id": aid,
-            "section_names": ["Intro"],
-            "sections": [["p0"]],
-            "abstract_text": abstract,
-        }
-
-    with open(src / "b1.jsonl", "w") as f:
-        f.write(json.dumps(art("PMC1", "v1")) + "\n")
-        f.write(json.dumps(art("PMC2", "v1")) + "\n")
-    time.sleep(1.1)  # distinct mtimes → file order (oldest first) is fixed
-    with open(src / "b2.jsonl", "w") as f:
-        f.write(json.dumps(art("PMC1", "v2")) + "\n")  # cross-batch dup
-        f.write(json.dumps(art("PMC3", "v1")) + "\n")
-    os.utime(src / "b2.jsonl")
-
-    stream = read_article_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        stream_first_seen_dedup(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r.article_id: r for r in spark.sql("SELECT * FROM dedup_out").collect()}
-    assert set(rows) == {"PMC1", "PMC2", "PMC3"}
-    assert rows["PMC1"].abstract_text == "v1"  # the first occurrence won
-
-
 def test_multimodal_feature_extraction(spark):
     rows = [
         ("m1", "image", bytearray(b"\x89PNG fake bytes")),
@@ -227,118 +180,6 @@ def test_catalog_ddl(spark, tmp_path):
     assert spark.table(name).schema == schema1
     reset_table(spark, name)
     assert not spark.catalog.tableExists(name)
-
-
-def test_windowed_event_counts_matches_batch(spark, tmp_path):
-    """X6 — the watermarked streaming window agg produces EXACTLY the
-    batch tumbling-window result once the stream is drained (availableNow
-    + append mode emits finalized windows only after the watermark passes;
-    complete-equivalence is checked with a final batch run on the same
-    data)."""
-    import datetime as dt
-
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        windowed_event_counts,
-    )
-
-    rows = [
-        ("2026-01-01 10:05:00", "click", 1.0),
-        ("2026-01-01 10:55:00", "click", 2.0),
-        ("2026-01-01 11:10:00", "view", 3.0),
-        ("2026-01-01 10:20:00", "view", 4.0),   # late within watermark
-        ("2026-01-01 14:00:00", "click", 5.0),  # advances watermark far ahead
-    ]
-    src = tmp_path / "events_stream"
-    src.mkdir()
-    with open(src / "e1.jsonl", "w") as f:
-        for ts, et, v in rows:
-            f.write(json.dumps({"ts": ts, "event_type": et, "value": v}) + "\n")
-
-    schema = "ts timestamp, event_type string, value double"
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(src))
-    )
-    q = (
-        windowed_event_counts(stream, "1 hour", "2 hours")
-        .writeStream.format("memory")
-        .queryName("win_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_win"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM win_out").collect()
-    }
-    batch = spark.createDataFrame(
-        [(dt.datetime.fromisoformat(ts), et, v) for ts, et, v in rows], schema
-    )
-    expected = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in windowed_event_counts(batch, "1 hour", "2 hours").collect()
-        # append mode only emits windows the watermark has closed: the
-        # 14:00 event's own window stays open at drain time
-        if r["window_start"].hour < 13
-    }
-    assert got == expected
-
-
-def test_sessionize_stream_matches_batch(spark, tmp_path):
-    """X6 — streaming session_window (watermarked) equals the batch run
-    for every session the watermark has closed at drain time."""
-    import datetime as dt
-
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        sessionized_events,
-    )
-
-    rows = [  # user 1: two events 20min apart (one session), then a far one
-        (1, "2026-01-01 10:00:00", 1.0),
-        (1, "2026-01-01 10:20:00", 2.0),
-        (1, "2026-01-01 15:00:00", 4.0),  # advances watermark to 14:30
-        (2, "2026-01-01 10:05:00", 8.0),
-    ]
-    src = tmp_path / "sess_stream"
-    src.mkdir()
-    with open(src / "e1.jsonl", "w") as f:
-        for uid, ts, v in rows:
-            f.write(json.dumps({"user_id": uid, "ts": ts, "value": v}) + "\n")
-
-    schema = "user_id long, ts timestamp, value double"
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(src))
-    )
-    q = (
-        sessionized_events(stream, gap="1 hour", watermark_delay="30 minutes")
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["session_start"]): (
-            r["session_end"], r["n_events"], r["sum_value"]
-        )
-        for r in spark.sql("SELECT * FROM sess_out").collect()
-    }
-    batch = spark.createDataFrame(
-        [(uid, dt.datetime.fromisoformat(ts), v) for uid, ts, v in rows], schema
-    )
-    watermark_final = dt.datetime.fromisoformat("2026-01-01 14:30:00")
-    expected = {
-        (r["user_id"], r["session_start"]): (
-            r["session_end"], r["n_events"], r["sum_value"]
-        )
-        for r in sessionized_events(batch, gap="1 hour").collect()
-        if r["session_end"] < watermark_final  # only closed sessions emit
-    }
-    assert len(expected) == 2  # user1 first session + user2's session
-    assert got == expected
 
 
 def test_compact_parquet(spark, tmp_path):
@@ -541,138 +382,6 @@ def test_compact_parquet_rejects_hive_partitioned(spark, tmp_path):
         compact_parquet(spark, path)
 
 
-def test_stream_near_dup_candidates_matches_batch(spark, tmp_path):
-    """X2-on-a-stream — stream-static band-key join: incoming docs are
-    checked against a static corpus band-key table; draining the stream
-    yields exactly the batch join of the same frames, and the planted
-    near-duplicate is caught while the distinct doc matches nothing."""
-    from pubmed_central_semantic_search_spark.operators.dedup import (
-        minhash_band_keys,
-    )
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        stream_near_dup_candidates,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog near the river bank "
-        "while the sun sets slowly behind the old stone bridge"
-    )
-    corpus_rows = [
-        ("C1", base),
-        ("C2", "completely different corpus text about spark query engines "
-               "and distributed columnar storage formats"),
-    ]
-    corpus = spark.createDataFrame(corpus_rows, "article_id string, abstract_text string")
-    corpus_bands = minhash_band_keys(corpus, "article_id", "abstract_text")
-
-    incoming = [
-        # near-dup of C1: one word changed
-        {"article_id": "N1", "abstract_text": base.replace("lazy", "sleepy")},
-        # unrelated
-        {"article_id": "N2", "abstract_text": "unrelated incoming text with "
-         "no shared shingles at all in any window of three tokens"},
-    ]
-    src = tmp_path / "docs_stream"
-    src.mkdir()
-    with open(src / "d1.jsonl", "w") as f:
-        for r in incoming:
-            f.write(json.dumps(r) + "\n")
-
-    schema = "article_id string, abstract_text string"
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(src))
-    )
-    q = (
-        stream_near_dup_candidates(stream, corpus_bands)
-        .writeStream.format("memory")
-        .queryName("nd_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_nd"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["incoming_id"], r["corpus_id"], r["band"])
-        for r in spark.sql("SELECT * FROM nd_out").collect()
-    }
-
-    batch_docs = spark.createDataFrame(
-        [(r["article_id"], r["abstract_text"]) for r in incoming], schema
-    )
-    expected = {
-        (r["incoming_id"], r["corpus_id"], r["band"])
-        for r in stream_near_dup_candidates(batch_docs, corpus_bands).collect()
-    }
-    assert got == expected
-    matched = {i for i, _, _ in got}
-    assert "N1" in matched  # near-dup caught by >=1 intact band
-    assert "N2" not in matched
-    assert all(c == "C1" for i, c, _ in got if i == "N1")
-
-
-def test_stream_stream_click_attribution_matches_batch(spark, tmp_path):
-    """X6 — watermarked stream-stream interval join: the drained inner
-    join equals the batch join of the same frames (watermarks bound
-    state, not inner-join emission), and out-of-window clicks never
-    attribute."""
-    import datetime as dt
-
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        stream_stream_click_attribution,
-    )
-
-    clicks = [
-        (1, "2026-01-01 09:30:00", 1.0),   # within 1h of u1 purchase
-        (1, "2026-01-01 08:00:00", 2.0),   # too early -> no attribution
-        (2, "2026-01-01 11:55:00", 3.0),   # within 1h of u2 purchase
-        (3, "2026-01-01 10:00:00", 4.0),   # user with no purchase
-    ]
-    purchases = [
-        (1, "2026-01-01 10:00:00", 50.0),
-        (2, "2026-01-01 12:30:00", 70.0),
-    ]
-    schema = "user_id long, ts timestamp, value double"
-    for name, rows in (("clicks", clicks), ("purchases", purchases)):
-        d = tmp_path / name
-        d.mkdir()
-        with open(d / "part.jsonl", "w") as f:
-            for uid, ts, v in rows:
-                f.write(json.dumps({"user_id": uid, "ts": ts, "value": v}) + "\n")
-
-    cs = spark.readStream.schema(schema).json(str(tmp_path / "clicks"))
-    ps = spark.readStream.schema(schema).json(str(tmp_path / "purchases"))
-    q = (
-        stream_stream_click_attribution(cs, ps, max_lag="1 hour")
-        .writeStream.format("memory")
-        .queryName("attr_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_attr"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["purchase_ts"], r["click_ts"], r["click_value"])
-        for r in spark.sql("SELECT * FROM attr_out").collect()
-    }
-
-    to_rows = lambda rows: [  # noqa: E731
-        (u, dt.datetime.fromisoformat(ts), v) for u, ts, v in rows
-    ]
-    batch = stream_stream_click_attribution(
-        spark.createDataFrame(to_rows(clicks), schema),
-        spark.createDataFrame(to_rows(purchases), schema),
-        max_lag="1 hour",
-    )
-    expected = {
-        (r["user_id"], r["purchase_ts"], r["click_ts"], r["click_value"])
-        for r in batch.collect()
-    }
-    assert got == expected
-    assert {(u, cv) for u, _, _, cv in got} == {(1, 1.0), (2, 3.0)}
-
-
 def test_resize_images_stage(spark):
     """X5 resize: binary-in/binary-out Arrow round-trip, deterministic
     content-addressed output sized like a real thumbnail, non-images
@@ -748,113 +457,6 @@ def test_real_codec_seam_gated(spark):
              extract_features(df, dim=8, real_decode=True).collect()}
     assert feats["m1"]["error"] is None and len(feats["m1"]["feature"]) == 8
     assert feats["m2"]["error"] is not None
-
-
-def test_stream_ivf_append_matches_batch_build(spark, tmp_path):
-    """X3×X6 — streaming IVF maintenance: draining two vector tranches
-    through stream_ivf_append yields EXACTLY the batch ivf_assign table
-    (same rows, same list assignment), appends never disturb earlier
-    tranches, and probing the grown index is still partition pruning."""
-    import pyspark.sql.functions as SF
-
-    from pubmed_central_semantic_search_spark.operators.clustering import (
-        ivf_assign,
-        seed_centroids,
-    )
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        stream_ivf_append,
-    )
-
-    def vec(i):
-        # three well-separated directions + small id-dependent wobble
-        base = [[10.0, 0.0, 0.0], [0.0, 10.0, 0.0], [0.0, 0.0, 10.0]][i % 3]
-        return [x + 0.01 * ((i * 7) % 5) for x in base]
-
-    rows = [(i, vec(i)) for i in range(30)]
-    all_vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = seed_centroids(all_vecs, 3)
-
-    src = tmp_path / "vec_stream"
-    src.mkdir()
-    idx = str(tmp_path / "ivf_index")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "vec_id long, embedding array<double>"
-
-    # tranche 1 → drain, tranche 2 → drain (same checkpoint: exactly-once)
-    for lo, hi, fname in [(0, 15, "t1.jsonl"), (15, 30, "t2.jsonl")]:
-        with open(src / fname, "w") as f:
-            for i in range(lo, hi):
-                f.write(json.dumps({"vec_id": i, "embedding": vec(i)}) + "\n")
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = stream_ivf_append(stream, cents, idx, ckpt)
-        q.awaitTermination(120)
-
-    got = spark.read.parquet(idx)
-    want = ivf_assign(all_vecs, cents)
-    got_set = {(r["vec_id"], r["cluster_id"]) for r in got.collect()}
-    want_set = {(r["vec_id"], r["cluster_id"]) for r in want.collect()}
-    assert got_set == want_set and len(got_set) == 30  # no dupes, no drift
-
-    # re-draining with nothing new must be a no-op (manifest exactly-once)
-    q = stream_ivf_append(
-        spark.readStream.schema(schema).json(str(src)), cents, idx, ckpt
-    )
-    q.awaitTermination(120)
-    assert spark.read.parquet(idx).count() == 30
-
-    # probing the streamed index is partition pruning, as for batch builds
-    probe = spark.read.parquet(idx).filter(SF.col("cluster_id") == cents[0][0])
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cluster_id" in plan, plan
-
-
-def test_stream_cms_drain_equals_batch_sketch(spark, tmp_path):
-    """X6×sketch — the streamed (per-batch merged) CMS equals the batch
-    sketch of the full token stream, cell for cell."""
-    from pubmed_central_semantic_search_spark.operators.sketch import (
-        cms_build,
-        cms_estimate,
-    )
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        start_stream_cms,
-    )
-
-    src = tmp_path / "tok_stream"
-    src.mkdir()
-    batches = [
-        ["hot"] * 5 + ["warm"] * 2,
-        ["hot"] * 3 + ["cold"],
-    ]
-    for i, toks in enumerate(batches):
-        with open(src / f"b{i}.jsonl", "w") as f:
-            for t in toks:
-                f.write(json.dumps({"token": t}) + "\n")
-    sketch_dir = str(tmp_path / "sketch")
-    stream = (
-        spark.readStream.schema("token string")
-        .option("maxFilesPerTrigger", 1)  # force ≥2 micro-batches
-        .json(str(src))
-    )
-    q = start_stream_cms(stream, sketch_dir, str(tmp_path / "ckpt_cms"),
-                         depth=4, width=64)
-    q.awaitTermination(120)
-
-    got = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in spark.read.parquet(sketch_dir).collect()
-    }
-    all_toks = [t for b in batches for t in b]
-    want = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in cms_build(
-            spark.createDataFrame([(t,) for t in all_toks], "token string"),
-            "token", 4, 64,
-        ).collect()
-    }
-    assert got == want
-    est = cms_estimate(spark.read.parquet(sketch_dir), ["hot", "warm", "cold"],
-                       4, 64)
-    assert est == {"hot": 8, "warm": 2, "cold": 1}
 
 
 def test_snapshot_versioning_time_travel_and_vacuum(spark, tmp_path):
@@ -1029,113 +631,6 @@ def test_snapshot_vacuum_crash_leaves_every_listed_version_readable(
     assert sorted(
         (r["k"], r["v"]) for r in snapshot_read(spark, tdir).collect()
     ) == [(2, "b"), (3, "c")]
-
-
-def test_stream_cms_commit_survives_crash_between_renames(spark, tmp_path):
-    """The fold's commit is staging + rename; a crash between `live →
-    .cms.old` and `staging → live` leaves the live dir absent. The next
-    fold must RESTORE .cms.old before its existence check — otherwise the
-    accumulated counts silently reset to just the new batch."""
-    from pubmed_central_semantic_search_spark.operators.sketch import (
-        cms_build,
-        cms_estimate,
-    )
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        start_stream_cms,
-    )
-
-    src = tmp_path / "tok_stream"
-    src.mkdir()
-    with open(src / "b0.jsonl", "w") as f:
-        for t in ["hot"] * 5 + ["warm"] * 2:
-            f.write(json.dumps({"token": t}) + "\n")
-    sketch_dir = tmp_path / "sketch"
-
-    def run_drain():
-        stream = spark.readStream.schema("token string").json(str(src))
-        q = start_stream_cms(
-            stream, str(sketch_dir), str(tmp_path / "ckpt_cms"), depth=4, width=64
-        )
-        q.awaitTermination(120)
-
-    run_drain()
-    # simulate the crash window: live renamed away, second rename never ran
-    import os
-
-    os.rename(sketch_dir, tmp_path / "sketch.cms.old")
-    assert not sketch_dir.exists()
-    with open(src / "b1.jsonl", "w") as f:
-        for t in ["hot"] * 3 + ["cold"]:
-            f.write(json.dumps({"token": t}) + "\n")
-    run_drain()
-
-    est = cms_estimate(
-        spark.read.parquet(str(sketch_dir)), ["hot", "warm", "cold"], 4, 64
-    )
-    assert est == {"hot": 8, "warm": 2, "cold": 1}  # nothing was reset
-    got = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in spark.read.parquet(str(sketch_dir)).collect()
-    }
-    all_toks = ["hot"] * 8 + ["warm"] * 2 + ["cold"]
-    want = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in cms_build(
-            spark.createDataFrame([(t,) for t in all_toks], "token string"),
-            "token", 4, 64,
-        ).collect()
-    }
-    assert got == want
-
-
-def test_stream_bloom_drain_equals_batch_and_prefilters(spark, tmp_path):
-    """X6×bloom — the streamed (bit_or-folded) Bloom filter equals the
-    batch build of the full key stream word for word, and the durable
-    words drive bloom_anti_join for the next batch (the incremental
-    dedup-against-all-history shape with constant-size state)."""
-    from pubmed_central_semantic_search_spark.operators.sketch import (
-        bloom_anti_join,
-        bloom_build,
-        bloom_literal,
-        bloom_might_contain,
-    )
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        start_stream_bloom,
-    )
-
-    src = tmp_path / "key_stream"
-    src.mkdir()
-    batches = [[f"k{i}" for i in range(20)], [f"k{i}" for i in range(15, 40)]]
-    for i, keys in enumerate(batches):
-        with open(src / f"b{i}.jsonl", "w") as f:
-            for t in keys:
-                f.write(json.dumps({"key": t}) + "\n")
-    bloom_dir = str(tmp_path / "bloom")
-    stream = (
-        spark.readStream.schema("key string")
-        .option("maxFilesPerTrigger", 1)  # force >=2 micro-batches
-        .json(str(src))
-    )
-    q = start_stream_bloom(stream, bloom_dir, str(tmp_path / "ckpt_bloom"),
-                           n_words=16, k=4)
-    q.awaitTermination(120)
-
-    got = {
-        r["word_idx"]: r["word"] for r in spark.read.parquet(bloom_dir).collect()
-    }
-    all_keys = sorted({t for b in batches for t in b})
-    want = {
-        r["word_idx"]: r["word"]
-        for r in bloom_build(
-            spark.createDataFrame([(t,) for t in all_keys], "key string"),
-            "key", 16, 4,
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-    # the durable words answer membership: every streamed key hits
-    words = bloom_literal(spark.read.parquet(bloom_dir), 16)
-    seen = spark.createDataFrame([(t,) for t in all_keys], "key string")
-    assert seen.filter(bloom_might_contain("key", words, 4)).count() == len(all_keys)
 
 
 def test_parse_jats_inline_markup_matches_reference_formula(spark):
@@ -1352,101 +847,6 @@ def test_read_pdfs_extracts_text_gated(spark, tmp_path):
     assert out["bad.pdf"].error is not None  # poison row, job survived
 
 
-def test_stream_ihist_drain_equals_batch(spark, tmp_path):
-    """X6 quantile-sketch fold: draining micro-batches produces the SAME
-    histogram as one batch build over all records (cell addition is the
-    merge law), and quantiles off the folded table match the batch twin."""
-    import json
-
-    from pubmed_central_semantic_search_spark.operators.sketch import (
-        ihist_build,
-        ihist_quantiles,
-    )
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        start_stream_ihist,
-    )
-
-    src = tmp_path / "vals"
-    src.mkdir()
-    batches = [[5, 17, 17, 900], [17, 42, 100000], [0, 3, 900]]
-    for i, b in enumerate(batches):
-        with open(src / f"b{i}.jsonl", "w") as f:
-            for v in b:
-                f.write(json.dumps({"n": v}) + "\n")
-    stream = (
-        spark.readStream.schema("n long")
-        .option("maxFilesPerTrigger", 1)  # force >= 3 micro-batches
-        .json(str(src))
-    )
-    sketch_dir = str(tmp_path / "ihist")
-    q = start_stream_ihist(stream, sketch_dir, str(tmp_path / "ck_ihist"))
-    q.awaitTermination(120)
-
-    all_vals = [v for b in batches for v in b]
-    batch_df = spark.createDataFrame([(v,) for v in all_vals], "n long")
-    got = {
-        (r["bucket"],): r["cnt"]
-        for r in spark.read.parquet(sketch_dir).collect()
-    }
-    want = {
-        (r["bucket"],): r["cnt"] for r in ihist_build(batch_df, "n").collect()
-    }
-    assert got == want
-    folded_q = {
-        r["q"]: r["value"]
-        for r in ihist_quantiles(spark.read.parquet(sketch_dir), [0.5, 0.99]).collect()
-    }
-    batch_q = {
-        r["q"]: r["value"]
-        for r in ihist_quantiles(ihist_build(batch_df, "n"), [0.5, 0.99]).collect()
-    }
-    assert folded_q == batch_q
-
-
-def test_stream_ihist_grouped_fold(spark, tmp_path):
-    """Grouped streaming quantile sketch: per-group cells fold by cell
-    addition (ihist_merge groups on every non-cnt column)."""
-    import json
-
-    from pubmed_central_semantic_search_spark.operators.sketch import (
-        ihist_build,
-    )
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        start_stream_ihist,
-    )
-
-    src = tmp_path / "vals"
-    src.mkdir()
-    batches = [[("a", 5), ("b", 900)], [("a", 17), ("a", 900)], [("b", 5)]]
-    for i, b in enumerate(batches):
-        with open(src / f"b{i}.jsonl", "w") as f:
-            for g, v in b:
-                f.write(json.dumps({"g": g, "n": v}) + "\n")
-    stream = (
-        spark.readStream.schema("g string, n long")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    sketch_dir = str(tmp_path / "ihist")
-    q = start_stream_ihist(
-        stream, sketch_dir, str(tmp_path / "ck"), group_cols=("g",)
-    )
-    q.awaitTermination(120)
-    all_rows = [(g, v) for b in batches for g, v in b]
-    want = {
-        (r["g"], r["bucket"]): r["cnt"]
-        for r in ihist_build(
-            spark.createDataFrame(all_rows, "g string, n long"),
-            "n", group_cols=["g"],
-        ).collect()
-    }
-    got = {
-        (r["g"], r["bucket"]): r["cnt"]
-        for r in spark.read.parquet(sketch_dir).collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_stream_upsert_schema_evolution_passthrough(spark, tmp_path):
     """A stream whose sink table predates it with a NARROWER schema:
     allow_schema_evolution passes through foreachBatch to the merge, the
@@ -1499,25 +899,24 @@ def test_stream_upsert_schema_evolution_passthrough(spark, tmp_path):
 
 
 def test_stream_ivf_index_refuses_leaf_compaction_by_name(spark, tmp_path):
-    """The IVF streaming sink DOES accrete one file per touched list per
+    """An IVF index kept by a streaming file sink (each vector tagged
+    with its list id by ``nearest_centroid``, written
+    ``partitionBy(cluster_id)``) accretes one file per touched list per
     micro-batch — but its _spark_metadata manifest pins exact file names
     (it is the sink's exactly-once mechanism AND the authoritative file
     list for root reads), so compacting underneath it would orphan the
-    manifest and every later root read would throw FileNotFound (found
-    by test: the first draft of this test compacted the index and the
-    read-back died on a manifest-listed deleted file). The tool refuses
-    by name instead of corrupting; probing still prunes partitions."""
+    manifest and every later root read would throw FileNotFound. The
+    tool refuses by name instead of corrupting; probing still prunes
+    partitions."""
     import pyspark.sql.functions as SF
     import pytest as _pt
 
     from pubmed_central_semantic_search_spark.operators.clustering import (
+        nearest_centroid,
         seed_centroids,
     )
     from pubmed_central_semantic_search_spark.sources.catalog import (
         compact_partitioned_leaves,
-    )
-    from pubmed_central_semantic_search_spark.streaming.ingest import (
-        stream_ivf_append,
     )
 
     def vec(i):
@@ -1536,8 +935,14 @@ def test_stream_ivf_index_refuses_leaf_compaction_by_name(spark, tmp_path):
         with open(src / f"t{t}.jsonl", "w") as f:
             for i in range(lo, hi):
                 f.write(json.dumps({"vec_id": i, "embedding": vec(i)}) + "\n")
-        q = stream_ivf_append(
-            spark.readStream.schema(schema).json(str(src)), cents, idx, ckpt
+        q = (
+            spark.readStream.schema(schema).json(str(src))
+            .withColumn("cluster_id", nearest_centroid("embedding", cents))
+            .writeStream.format("parquet")
+            .option("checkpointLocation", ckpt)
+            .partitionBy("cluster_id")
+            .trigger(availableNow=True)
+            .start(idx)
         )
         q.awaitTermination(120)
 
@@ -1581,17 +986,24 @@ def test_parse_jats_and_stage_share_one_core(spark):
     assert staged["abstract_text"] == direct["abstract_text"]
 
 
-def test_stream_hll_drain_equals_batch(spark, tmp_path):
+def test_stream_hll_drain_equals_batch(spark, tmp_path, monkeypatch):
     """X6 distinct-count fold (round 9): draining micro-batches produces
     the SAME register table as one batch build (MAX is the merge law —
     idempotent, so replays are free), and the estimate off the folded
-    table matches the batch twin exactly."""
+    table matches the batch twin exactly.
+
+    Each fold commits through the log. A fold that dies after writing its
+    files but before publishing leaves the previous register table
+    readable through the log; the re-run drain replays the batch and
+    ends equal to the batch build, and VACUUM then leaves exactly the
+    live version's files on disk."""
     import json
 
     from pubmed_central_semantic_search_spark.operators.sketch import (
         hll_build,
         hll_estimate,
     )
+    from pubmed_central_semantic_search_spark.sources import catalog
     from pubmed_central_semantic_search_spark.streaming.ingest import (
         start_stream_hll,
     )
@@ -1607,29 +1019,58 @@ def test_stream_hll_drain_equals_batch(spark, tmp_path):
         with open(src / f"b{i}.jsonl", "w") as f:
             for k in b:
                 f.write(json.dumps({"key": k}) + "\n")
-    stream = (
-        spark.readStream.schema("key string")
-        .option("maxFilesPerTrigger", 1)  # force >= 3 micro-batches
-        .json(str(src))
-    )
     sketch_dir = str(tmp_path / "hll")
-    q = start_stream_hll(stream, sketch_dir, str(tmp_path / "ck_hll"))
-    q.awaitTermination(120)
 
+    def drain():
+        stream = (
+            spark.readStream.schema("key string")
+            .option("maxFilesPerTrigger", 1)  # force >= 3 micro-batches
+            .json(str(src))
+        )
+        q = start_stream_hll(stream, sketch_dir, str(tmp_path / "ck_hll"))
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
+
+    def registers(df):
+        return {r["register"]: r["rho"] for r in df.collect()}
+
+    def parquet_files():
+        return {f for f in os.listdir(sketch_dir) if f.endswith(".parquet")}
+
+    real = catalog.commit
+
+    def crash(*args):
+        base = args[2]
+        if args[3] == "FOLD" and base is not None and base["version"] == 1:
+            raise RuntimeError("injected crash before publish")
+        return real(*args)
+
+    monkeypatch.setattr(catalog, "commit", crash)
+    with pytest.raises(Exception, match="injected crash before publish"):
+        drain()
+    monkeypatch.setattr(catalog, "commit", real)
+    first = spark.createDataFrame([(k,) for k in batches[0]], "key string")
+    record = catalog.read_record(spark, sketch_dir)
+    assert record["version"] == 1
+    crashed = parquet_files() - {f["path"] for f in record["files"]}
+    assert crashed  # the second fold wrote its files, then died
+    assert registers(catalog.read_upsert_table(spark, sketch_dir)) == registers(
+        hll_build(first, "key")
+    )
+
+    drain()
     all_keys = sorted({k for b in batches for k in b})
     batch_df = spark.createDataFrame([(k,) for k in all_keys], "key string")
-    got = {
-        r["register"]: r["rho"]
-        for r in spark.read.parquet(sketch_dir).collect()
-    }
-    want = {
-        r["register"]: r["rho"]
-        for r in hll_build(batch_df, "key").collect()
-    }
-    assert got == want
-    folded_est = hll_estimate(spark.read.parquet(sketch_dir)).collect()[0][0]
+    folded = catalog.read_upsert_table(spark, sketch_dir)
+    assert registers(folded) == registers(hll_build(batch_df, "key"))
+    folded_est = hll_estimate(folded).collect()[0][0]
     batch_est = hll_estimate(hll_build(batch_df, "key")).collect()[0][0]
     assert folded_est == batch_est
+    catalog.snapshot_vacuum(spark, sketch_dir, keep_last=1)
+    live = {f["path"] for f in catalog.read_record(spark, sketch_dir)["files"]}
+    assert parquet_files() == live and not live & crashed
 
 
 def test_q42_media_decode_duckdb_parity_demoted(spark, sf_dir):

@@ -416,3 +416,33 @@ def test_width_mismatch_raises_by_name_on_both_arms(spark):
         for r in ok.select("id", nearest_centroid("embedding", cents).alias("c")).collect()
     }
     assert got == {2: None, 3: 1}
+
+
+def test_ivf_probes_evaluate_the_assignment_kernel_once(spark):
+    """At width 256 the assignment is the Arrow kernel, and the IVF
+    searches filter on its output: ``ivf_topk`` through its equi-join
+    (Catalyst infers ``isnotnull(cluster_id)``), ``ivfpq_topk`` through
+    its ``isin(probed)`` list filter. A filter pushed below the assigning
+    projection evaluates the kernel a second time when the projected id
+    is still read above it (``ivf_topk``'s join key); each plan holds
+    exactly one ``ArrowEvalPython``, and the search still answers."""
+    import random
+
+    from pubmed_central_semantic_search_spark.operators.clustering import ivf_topk
+    from pubmed_central_semantic_search_spark.operators.pq import ivfpq_topk, train_pq
+
+    dim = 256
+    rng = random.Random(3)
+    rows = [(i, [rng.random() for _ in range(dim)]) for i in range(48)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = seed_centroids(emb, k=4)
+    queries = spark.createDataFrame([(0, rows[5][1])], "query_id int, qvec array<double>")
+    ivf = ivf_topk(emb, queries, cents, k=3, nprobe=4)
+    books = train_pq(emb, m=8, ksub=4, dim=dim, n_iter=1)
+    ivfpq = ivfpq_topk(emb, rows[5][1], cents, books, k=3, nprobe=4, rerank=48)
+    for df in (ivf, ivfpq):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+    # every list probed: both searches find the query's own vector first
+    assert ivf.orderBy(F.desc("score")).first()["vec_id"] == 5
+    assert ivfpq.orderBy(F.desc("score")).first()["vec_id"] == 5
