@@ -22,6 +22,14 @@ At 100 TB: doc_vectors and chunks are scanned exactly once each; no
 shuffle of either big table (all joins broadcast the k-sized side);
 scoring is codegen'd JVM work; the only "wide" steps are the two top-k
 windows, which TakeOrderedAndProject-style heaps keep cheap.
+
+``semantic_search`` is that one plan, the form the oracle rows (q20,
+q21) run. The engine facade (``api.SemanticSearchEngine``) runs its
+stages one at a time instead: it brings the k×Q top documents to the
+driver (from a driver-held doc-vector tier under the broadcast fence,
+from ``score_documents`` over it), then hands them, as a small local
+frame, to ``highlight_with_context`` (or ``highlight_chunks`` +
+``render.render_hits``) over only the ranked articles' chunk buckets.
 """
 
 from __future__ import annotations

@@ -12,6 +12,9 @@ library-level rewrite is idiomatic and debuggable):
   ``ann.lsh_topk`` or IVF-flat ``clustering.ivf_topk`` (the scale tiers,
   the analog of the reference's HNSW, SURVEY §4 row 1), or the PQ/IVF-PQ
   compressed tiers (operators/pq.py).
+- ``fits_driver``: the one driver-tier fence — a table of vectors the
+  driver may hold (and score) itself, decided from its commit-log
+  record with no job.
 - ``explain_str`` / ``assert_plan``: plan introspection used by the
   plan-regression tests — the ".explain and iterate until it's the plan
   you'd want" loop, automated.
@@ -19,7 +22,7 @@ library-level rewrite is idiomatic and debuggable):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 # kernel='auto' crossover: the measured dim where the Arrow-batched BLAS
 # matmul overtakes the interpreted Catalyst HOF fold (measurements in
@@ -41,6 +44,20 @@ def resolve_kernel(dim: int) -> str:
     or below it (including dim 0 — an empty/unknown query side must not
     pay an Arrow stage)."""
     return "blas" if dim >= _KERNEL_CROSSOVER_DIM else "hof"
+
+
+def fits_driver(spark: SparkSession, record: dict | None, dim: int) -> bool:
+    """THE driver-tier fence: may the driver hold this table's vectors
+    itself? Its size — the log record's per-file row counts × ``dim``
+    float64s — is read with no job and compared with the session's
+    ``spark.sql.autoBroadcastJoinThreshold``: a table Spark would
+    broadcast to every executor anyway is one the driver can hold. A
+    table without a log (no record: no row counts) and a disabled
+    threshold (-1) are over the fence."""
+    if record is None:
+        return False
+    size = sum(f["rows"] for f in record["files"]) * dim * 8
+    return size <= spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

@@ -95,16 +95,6 @@ def bucket_expr(bucket_cols, n_buckets: int):
     return F.pmod(F.xxhash64(*cols), F.lit(int(n_buckets)))
 
 
-def _read_upsert_layout(spark: SparkSession, path: str):
-    """The stored layout of a bucket-partitioned table ({n_buckets,
-    bucket_cols, bucket_col_types, evolved}), or None for a flat table
-    or a directory without a commit log. Driver-side, no Spark job."""
-    record = read_record(spark, path)
-    if record is None or record["layout"]["n_buckets"] is None:
-        return None
-    return record["layout"]
-
-
 def _adoptable(spark, path, n_buckets):
     """The parquet files a directory without a commit log publishes as
     version 1 ([] when it is absent or holds none). Files a commit wrote

@@ -3,9 +3,12 @@
 overwrite → query with highlight + HTML), against parquet storage."""
 
 import os
+import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
+from pubmed_central_semantic_search_spark import api
 from pubmed_central_semantic_search_spark.api import SemanticSearchEngine
 from pubmed_central_semantic_search_spark.schemas import ARTICLES_SCHEMA
 from pubmed_central_semantic_search_spark.sources.pmc import (
@@ -54,13 +57,31 @@ def test_full_reference_workflow(spark, engine, tmp_path):
     assert "pmc.ncbi.nlm.nih.gov/articles/PMC200/" in html["article_link"]
 
     # re-upload with changed content overwrites, never duplicates
-    # (qdrant.py:137-139 idempotent upsert semantics)
+    # (qdrant.py:137-139 idempotent upsert semantics); a new article
+    # rides in the same upload
+    def doc_scores(eng, text):
+        out = eng.query(text, docs_per_query=5, highlight=False).collect()
+        return {r["article_id"]: r["doc_score"] for r in out}
+
+    before = doc_scores(engine, "updated text")  # the tier now holds v1
     v2 = spark.createDataFrame(
-        [("PMC100", ["Intro"], [["deep learning models", "updated text"]], "a1")],
+        [
+            ("PMC100", ["Intro"], [["deep learning models", "updated text"]], "a1"),
+            ("PMC300", ["Intro"], [["graph coloring heuristics"]], "a3"),
+        ],
         ARTICLES_SCHEMA,
     )
     engine.upload_articles(v2)
-    assert spark.read.parquet(engine.doc_vectors_path).count() == 2
+    assert spark.read.parquet(engine.doc_vectors_path).count() == 3
+    # the commit invalidates the driver-held doc vectors: the new article
+    # is found and the edited one is scored from its new vector
+    after = doc_scores(engine, "updated text")
+    assert set(after) == {"PMC100", "PMC200", "PMC300"}
+    assert after["PMC100"] != pytest.approx(before["PMC100"], abs=1e-6)
+    assert after["PMC200"] == pytest.approx(before["PMC200"], abs=1e-12)
+    new = engine.query("graph coloring heuristics", docs_per_query=1).collect()
+    assert new[0]["article_id"] == "PMC300"
+    assert new[0]["doc_score"] == pytest.approx(1.0, abs=1e-5)
     texts = {
         r["paragraph"]
         for r in spark.read.parquet(engine.chunks_path)
@@ -68,6 +89,17 @@ def test_full_reference_workflow(spark, engine, tmp_path):
         .collect()
     }
     assert texts == {"deep learning models", "updated text"}
+
+    # after a reset and a fresh upload no stale vector is served: the
+    # engine answers what an engine that never cached anything answers
+    engine.reset_database()
+    engine.upload_articles(spark.createDataFrame(
+        [("PMC100", ["Intro"], [["fresh start"]], "a1")], ARTICLES_SCHEMA
+    ))
+    fresh = SemanticSearchEngine(spark, engine.root)
+    for text in ("updated text", "fresh start"):
+        assert doc_scores(engine, text) == doc_scores(fresh, text)
+        assert list(doc_scores(engine, text)) == ["PMC100"]
 
 
 def test_pmcid_ingest_offline_path(spark, engine):
@@ -92,13 +124,25 @@ def test_pdf_stub_parity(engine):
         engine.upload_from_pdf("/nonexistent.pdf")
 
 
+def _jobs(spark, fn) -> int:
+    """The Spark jobs ``fn`` launches, counted in a job group of its own."""
+    sc = spark.sparkContext
+    group = f"test-api-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_engine_reference_width_uses_blas_kernel_same_ranks(spark, tmp_path):
     """At the reference's real dim (768, qdrant.py:74) the engine resolves
-    its query kernel to the Arrow/BLAS matmul at plan time; at narrow
-    dims it stays on the bit-exact fold. Both engines rank the same
-    articles for the same query — the kernel is a physical knob."""
-    from pyspark.sql import functions as F
-
+    its over-fence kernel to the Arrow/BLAS matmul at plan time; at narrow
+    dims it stays on the bit-exact fold. A store this small is under the
+    driver-tier fence at either width, so no Spark job scores documents:
+    the first query reads the doc vectors once (one job), a warm one runs
+    none. Both engines rank the same articles for the same query."""
     arts = spark.createDataFrame(
         [(aid, names, secs) for aid, names, secs, _ in ARTICLES],
         "article_id string, section_names array<string>, "
@@ -111,16 +155,128 @@ def test_engine_reference_width_uses_blas_kernel_same_ranks(spark, tmp_path):
         )
         assert eng._kernel() == ("blas" if dim == 768 else "hof")
         eng.upload_articles(arts)
-        out = eng.query("spark joins", docs_per_query=2, highlight=False)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        if dim == 768:
-            assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
-        else:
-            assert "ArrowEvalPython" not in plan
+
+        def top():
+            return eng.query("spark joins", docs_per_query=2, highlight=False).collect()
+
+        assert _jobs(spark, top) == 1  # the tier's one read of the doc vectors
+        assert _jobs(spark, top) == 0  # warm: no job at all
         ranks[dim] = [
-            r["article_id"]
-            for r in out.orderBy(F.desc("doc_score"), "article_id").collect()
+            r["article_id"] for r in sorted(top(), key=lambda r: (-r["doc_score"], r["article_id"]))
         ]
     # different encoders spaces (dim differs) — but both must return the
     # full candidate set, ranked deterministically
     assert sorted(ranks[16]) == sorted(ranks[768]) == ["PMC100", "PMC200"]
+
+
+def test_query_reads_only_ranked_articles_chunk_buckets(spark, tmp_path):
+    """On a 16-bucket store a 1-text query's chunk scan reads exactly the
+    live files of the ranked articles' buckets (the batch lookup's
+    driver-side prune), and still answers with the right article."""
+    from pubmed_central_semantic_search_spark.sources.catalog import (
+        bucket_expr,
+        read_record,
+    )
+
+    arts = spark.createDataFrame(
+        [
+            (f"PMC{i}", ["Intro"], [[f"topic {i} alpha", f"topic {i} beta"]], None)
+            for i in range(24)
+        ],
+        ARTICLES_SCHEMA,
+    )
+    eng = SemanticSearchEngine(spark, str(tmp_path / "db"), partition_buckets=16)
+    eng.upload_articles(arts)
+    out = eng.query("topic 7 beta", docs_per_query=2, paragraphs_per_document=1)
+    rows = out.collect()
+    assert len(rows) == 2
+    assert max(rows, key=lambda r: r["doc_score"])["article_id"] == "PMC7"
+    ranked = sorted({r["article_id"] for r in rows})
+    buckets = set(spark.range(1).select(*[
+        bucket_expr([F.lit(a).cast("string")], 16).alias(a) for a in ranked
+    ]).first())
+    files = read_record(spark, eng.chunks_path)["files"]
+    live = {f["path"] for f in files if f["bucket"] in buckets}
+    assert live and len(live) < len(files)
+    assert {f.split(eng.chunks_path + "/", 1)[1] for f in out.inputFiles()} == live
+
+
+def test_over_fence_arm_matches_driver_tier(spark, tmp_path, monkeypatch):
+    """Over the driver-tier fence (the broadcast threshold lowered below
+    the doc table's size) the same store's queries run through
+    ``score_documents`` on the cluster — at dim 768 its Arrow/BLAS kernel
+    — and return the tier's rows, ranks and scores (6 dp) for ``query``,
+    ``query(highlight=False)`` and ``query_html``. Degenerate stored
+    vectors follow the kernel's rules on both arms: NULL scores NULL and
+    ranks last, zero and NaN score 0.0."""
+    from pubmed_central_semantic_search_spark.sources.catalog import (
+        read_upsert_table,
+        upsert_parquet,
+    )
+
+    arts = spark.createDataFrame(
+        [(aid, names, secs, None) for aid, names, secs, _ in ARTICLES]
+        + [
+            ("PMC300", ["Intro"], [["graph coloring heuristics", "spark joins"]], None),
+            ("PMC400", ["Body"], [["protein assay", "folding kinetics", "gel"]], None),
+        ],
+        ARTICLES_SCHEMA,
+    )
+    eng = SemanticSearchEngine(spark, str(tmp_path / "db"), dim=768, partition_buckets=4)
+    eng.upload_articles(arts)
+    stored = read_upsert_table(spark, eng.doc_vectors_path)
+    degenerate = spark.createDataFrame(
+        [("PMC_NULL", None, 1), ("PMC_ZERO", [0.0] * 768, 2), ("PMC_NAN", [float("nan")] * 768, 3)],
+        stored.select("article_id", "embedding", "doc_pk").schema,
+    )
+    upsert_parquet(
+        spark, degenerate, eng.doc_vectors_path, key_cols=["article_id"], n_buckets=4
+    )
+    texts = ["spark joins shuffle", "protein folding", "wet lab assay"]
+
+    def answers():
+        def rows(df, order):
+            return [
+                tuple(round(v, 6) if isinstance(v, float) else v for v in r)
+                for r in sorted(df.collect(), key=order)
+            ]
+
+        def rank(r):
+            null = r["doc_score"] is None
+            return (r["query_id"], null, 0.0 if null else -r["doc_score"], r["article_id"])
+
+        hit = lambda r: (*rank(r), r["paragraph_id"])  # noqa: E731
+        return (
+            rows(eng.query(texts, docs_per_query=2, paragraphs_per_document=2), hit),
+            rows(eng.query(texts, docs_per_query=7, highlight=False), rank),
+            rows(eng.query_html(texts, docs_per_query=2), hit),
+        )
+
+    tier = answers()
+    plans = []
+    original = api.score_documents
+
+    def scoring(*args, **kwargs):
+        out = original(*args, **kwargs)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(api, "score_documents", scoring)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        over = answers()
+    finally:
+        spark.conf.set(key, saved)
+    assert len(plans) == 3
+    assert all("ArrowEvalPython" in p and "BatchEvalPython" not in p for p in plans)
+    assert over == tier
+    assert all(len(a) > 0 for a in tier)
+    # 7 of the 7 stored documents per query: the NULL vector ranks last
+    docs = tier[1]
+    assert len(docs) == 3 * 7
+    assert [r[1:3] for r in docs[6::7]] == [("PMC_NULL", None)] * 3
+    assert {r[1]: r[2] for r in docs if r[1] in ("PMC_ZERO", "PMC_NAN")} == {
+        "PMC_ZERO": 0.0, "PMC_NAN": 0.0
+    }

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from pubmed_central_semantic_search_spark.sources.catalog import (
     BUCKET_COL,
+    read_record,
     read_upsert_table,
     upsert_parquet,
 )
@@ -52,8 +53,6 @@ def _scanned(df, path):
 def _live_files(spark, path, buckets=None):
     """Table-relative paths of the latest version's live files (only the
     given buckets' when set)."""
-    from pubmed_central_semantic_search_spark.sources.catalog import read_record
-
     return {
         f["path"] for f in read_record(spark, path)["files"]
         if buckets is None or f["bucket"] in buckets
@@ -123,10 +122,7 @@ def test_existing_side_read_is_partition_pruned(spark, tmp_path):
     """The existing-side read takes only the touched buckets' files from
     the log record, so the scan reads exactly those buckets' live files
     (inputFiles) — pinned on the same read call upsert_parquet makes."""
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        read_files,
-        read_record,
-    )
+    from pubmed_central_semantic_search_spark.sources.catalog import read_files
 
     path = str(tmp_path / "t")
     upsert_parquet(
@@ -660,10 +656,6 @@ def test_concurrent_disjoint_bucket_upserts(spark, tmp_path):
     the layout survives."""
     import threading
 
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_upsert_layout,
-    )
-
     path = str(tmp_path / "t")
     n = 8
     keys = [f"PMC{i}" for i in range(200)]
@@ -718,7 +710,7 @@ def test_concurrent_disjoint_bucket_upserts(spark, tmp_path):
         if not any(d in p for d in touched_dirs)
     }
     assert before_un == after_un
-    layout = _read_upsert_layout(spark, path)
+    layout = read_record(spark, path)["layout"]
     assert int(layout["n_buckets"]) == n
 
 
@@ -730,7 +722,6 @@ def test_compact_partitioned_leaves(spark, tmp_path):
     import pytest as _pt
 
     from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_upsert_layout,
         compact_parquet,
         compact_partitioned_leaves,
     )
@@ -769,7 +760,7 @@ def test_compact_partitioned_leaves(spark, tmp_path):
     assert per_leaf and all(n == 1 for n in per_leaf.values()), per_leaf
     # data + layout unchanged; upserts still work afterwards
     assert _table_state(spark, path) == before_state
-    assert int(_read_upsert_layout(spark, path)["n_buckets"]) == 4
+    assert int(read_record(spark, path)["layout"]["n_buckets"]) == 4
     upsert_parquet(
         spark, _rows(spark, [("PMC1", "post")]), path,
         key_cols=["article_id"], n_buckets=4,
@@ -1195,10 +1186,7 @@ def test_rebucket_migrates_layout_and_content(spark, tmp_path):
     set is exactly the new layout's buckets."""
     import os
 
-    from pubmed_central_semantic_search_spark.sources.catalog import (
-        _read_upsert_layout,
-        rebucket,
-    )
+    from pubmed_central_semantic_search_spark.sources.catalog import rebucket
 
     path = str(tmp_path / "t")
     keys = [f"PMC{i}" for i in range(60)]
@@ -1211,7 +1199,7 @@ def test_rebucket_migrates_layout_and_content(spark, tmp_path):
     stats = rebucket(spark, path, 3)
     assert stats == {"old_n_buckets": 8, "new_n_buckets": 3, "rows": 60}
     assert _table_state(spark, path) == before
-    layout = _read_upsert_layout(spark, path)
+    layout = read_record(spark, path)["layout"]
     assert int(layout["n_buckets"]) == 3
     assert layout["bucket_cols"] == "article_id"
     assert layout.get("bucket_col_types") == ["string"]
