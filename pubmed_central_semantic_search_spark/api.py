@@ -35,7 +35,8 @@ no job):
   record's live file list — data files are immutable, so an equal list
   is equal data, and every commit (or ``reset_database`` plus a new
   upload) changes it; the version probe behind ``read_record`` is the
-  freshness check. A miss rebuilds it with one bounded collect.
+  freshness check. A miss rebuilds it with one bounded Arrow collect
+  (``session.to_pandas_bounded``).
 - over it (or for a table without a log), ``score_documents`` on the
   cluster, its k×Q rows collected.
 
@@ -74,7 +75,7 @@ from .sources.catalog import read_files, read_record, read_upsert_table, upsert_
 from .sources.jsonl import read_jsonl_splits
 from .sources.pmc import fetch_articles, to_article_rows
 from .schemas import ARTICLE_ID, ARTICLES_SCHEMA
-from .session import collect_bounded, local_df
+from .session import collect_bounded, local_df, to_pandas_bounded
 
 
 class SemanticSearchEngine:
@@ -270,25 +271,24 @@ class SemanticSearchEngine:
         ascending, and the rows of one float64 matrix as the kernel's
         input series (None for a NULL vector). Kept while the record's
         live file list is unchanged; rebuilt on a miss by one bounded
-        collect of exactly those files."""
+        Arrow collect of exactly those files."""
         key = [f["path"] for f in record["files"]]
         if self._tier is None or self._tier[0] != key:
-            rows = collect_bounded(
+            pdf = to_pandas_bounded(
                 read_files(self.spark, self.doc_vectors_path, record).select(
                     ARTICLE_ID, "embedding"
                 ),
                 sum(f["rows"] for f in record["files"]),
                 "doc-vector tier",
-            )
-            rows.sort(key=lambda r: r[0])
-            embs = [r[1] for r in rows]
-            width = next((len(e) for e in embs if e is not None), 0)
-            mat = np.array(
-                [e if e is not None else [0.0] * width for e in embs], dtype=np.float64
-            ).reshape(len(embs), width)
+            ).sort_values(ARTICLE_ID)
+            null = pdf["embedding"].isna().to_numpy()
+            embs = pdf["embedding"][~null].tolist()
+            mat = np.zeros((len(pdf), len(embs[0]) if embs else 0))
+            if embs:
+                mat[~null] = np.stack(embs)
             vecs = pd.Series(list(mat), dtype=object)
-            vecs[[e is None for e in embs]] = None
-            self._tier = (key, [r[0] for r in rows], vecs)
+            vecs[null] = None
+            self._tier = (key, pdf[ARTICLE_ID].tolist(), vecs)
         return self._tier[1], self._tier[2]
 
     def _ranked_chunks(self, ids: list) -> DataFrame:

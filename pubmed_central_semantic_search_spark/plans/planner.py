@@ -53,7 +53,15 @@ def fits_driver(spark: SparkSession, record: dict | None, dim: int) -> bool:
     ``spark.sql.autoBroadcastJoinThreshold``: a table Spark would
     broadcast to every executor anyway is one the driver can hold. A
     table without a log (no record: no row counts) and a disabled
-    threshold (-1) are over the fence."""
+    threshold (-1) are over the fence.
+
+    Measured at the default 64 MB (4-core host, 16-bucket dim-768 doc
+    table, a 1-text top-5, a two-row commit before each query so every
+    query pays the driver tier's rebuild): tier 0.39 / 0.44 / 0.66 /
+    1.08 s against ``score_documents`` 1.89 / 1.54 / 1.70 / 1.65 s at
+    1k / 3k / 6k / 10k docs (10k is 59 MB, just under the fence); warm,
+    0.05-0.09 s against 1.5-1.9 s. The rebuild's Python heap peaks at
+    about 3× the matrix (178 MB at 10k)."""
     if record is None:
         return False
     size = sum(f["rows"] for f in record["files"]) * dim * 8

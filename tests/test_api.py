@@ -201,11 +201,13 @@ def test_query_reads_only_ranked_articles_chunk_buckets(spark, tmp_path):
     assert {f.split(eng.chunks_path + "/", 1)[1] for f in out.inputFiles()} == live
 
 
-def test_over_fence_arm_matches_driver_tier(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("dim", [16, 768])
+def test_over_fence_arm_matches_driver_tier(spark, tmp_path, monkeypatch, dim):
     """Over the driver-tier fence (the broadcast threshold lowered below
     the doc table's size) the same store's queries run through
-    ``score_documents`` on the cluster — at dim 768 its Arrow/BLAS kernel
-    — and return the tier's rows, ranks and scores (6 dp) for ``query``,
+    ``score_documents`` on the cluster — its Arrow/BLAS kernel at dim 768,
+    the Catalyst fold (no Python stage) at dim 16 — and return the tier's
+    rows, ranks and scores (6 dp) for ``query``,
     ``query(highlight=False)`` and ``query_html``. Degenerate stored
     vectors follow the kernel's rules on both arms: NULL scores NULL and
     ranks last, zero and NaN score 0.0."""
@@ -222,11 +224,11 @@ def test_over_fence_arm_matches_driver_tier(spark, tmp_path, monkeypatch):
         ],
         ARTICLES_SCHEMA,
     )
-    eng = SemanticSearchEngine(spark, str(tmp_path / "db"), dim=768, partition_buckets=4)
+    eng = SemanticSearchEngine(spark, str(tmp_path / "db"), dim=dim, partition_buckets=4)
     eng.upload_articles(arts)
     stored = read_upsert_table(spark, eng.doc_vectors_path)
     degenerate = spark.createDataFrame(
-        [("PMC_NULL", None, 1), ("PMC_ZERO", [0.0] * 768, 2), ("PMC_NAN", [float("nan")] * 768, 3)],
+        [("PMC_NULL", None, 1), ("PMC_ZERO", [0.0] * dim, 2), ("PMC_NAN", [float("nan")] * dim, 3)],
         stored.select("article_id", "embedding", "doc_pk").schema,
     )
     upsert_parquet(
@@ -270,7 +272,8 @@ def test_over_fence_arm_matches_driver_tier(spark, tmp_path, monkeypatch):
     finally:
         spark.conf.set(key, saved)
     assert len(plans) == 3
-    assert all("ArrowEvalPython" in p and "BatchEvalPython" not in p for p in plans)
+    assert all("BatchEvalPython" not in p for p in plans)
+    assert all(("ArrowEvalPython" in p) == (dim == 768) for p in plans)
     assert over == tier
     assert all(len(a) > 0 for a in tier)
     # 7 of the 7 stored documents per query: the NULL vector ranks last

@@ -169,13 +169,16 @@ def test_collect_bounded_guard_and_call_sites(spark):
     (BPE vocab, DSIR model, k-means centroids, PQ codebook, CMS cells,
     MMR candidates, blas query sides) — a caller that silently scales a
     'k-row' side gets a NAMED error, never a driver OOM."""
-    from pubmed_central_semantic_search_spark.session import collect_bounded
+    from pubmed_central_semantic_search_spark.session import (
+        collect_bounded,
+        to_pandas_bounded,
+    )
 
     df = spark.range(100).selectExpr("id", "id * 2 AS v")
-    rows = collect_bounded(df, 100, "test")
-    assert len(rows) == 100
-    with pytest.raises(ValueError, match="max_rows=99"):
-        collect_bounded(df, 99, "test")
+    for collect in (collect_bounded, to_pandas_bounded):
+        assert len(collect(df, 100, "test")) == 100
+        with pytest.raises(ValueError, match="max_rows=99"):
+            collect(df, 99, "test")
     # a converted site: recompute_centroids fences per-row cluster ids
     from pubmed_central_semantic_search_spark.operators.clustering import (
         recompute_centroids,

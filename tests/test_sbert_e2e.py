@@ -20,6 +20,9 @@ pytest.importorskip("sentence_transformers")
 from pyspark.sql import functions as F  # noqa: E402
 
 from pubmed_central_semantic_search_spark.api import SemanticSearchEngine  # noqa: E402
+from pubmed_central_semantic_search_spark.sources.catalog import (  # noqa: E402
+    read_upsert_table,
+)
 
 ARTICLES = [
     (
@@ -59,7 +62,7 @@ def test_sbert_golden_pipeline_structural_invariants(spark, tmp_path):
     engine.upload_articles(arts)
 
     # shape + finiteness: every chunk embedding is a 768-wide finite vector
-    chunks = engine._read(engine.chunks_path)
+    chunks = read_upsert_table(spark, engine.chunks_path)
     dims = chunks.select(F.size("embedding").alias("d")).distinct().collect()
     assert [r["d"] for r in dims] == [768]
     bad = chunks.select(
